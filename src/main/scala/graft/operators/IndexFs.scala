@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 
 /** Shared filesystem discipline for the persisted-index family
-  * ([[IvfPqIndex]], [[KnnIndex]]): staged-sibling rewrites committed by
+  * ([[IvfPqIndex]], [[KnnIndex]]) and the parquet sink log's compaction
+  * ([[graft.sources.ParquetSink]]): staged-sibling rewrites committed by
   * atomic directory rename, with load-time repair of any interrupted
-  * swap — factored (r17) from [[IvfPqIndex]] so every index mutates
+  * swap — factored (r17) from [[IvfPqIndex]] so every rewrite mutates
   * durably through literally one definition.
   *
   * ASSUMES atomic directory rename — true on HDFS and local POSIX
@@ -15,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * an HDFS-semantics layer (e.g. a rename-atomic committer volume) or
   * swap via the store's native atomic pointer instead.
   */
-private[operators] object IndexFs {
+private[graft] object IndexFs {
 
   def hfs(spark: SparkSession, path: String)
       : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
@@ -62,12 +63,20 @@ private[operators] object IndexFs {
     * an already-promoted swap's debris — delete them, which rolls the
     * uncommitted retire/compact back to the intact previous index.
     */
-  def recoverSwap(spark: SparkSession, path: String): Unit = {
+  def recoverSwap(spark: SparkSession, path: String): Unit =
+    recoverSwap(spark, path, markerComplete(spark, stagedPath(path)))
+
+  /** [[recoverSwap]] for a rewrite that marks its staged copy complete
+    * its own way: `stagedComplete` is asked only when the live name is
+    * missing and a staged copy exists.
+    */
+  def recoverSwap(spark: SparkSession, path: String,
+      stagedComplete: => Boolean): Unit = {
     val (fs, p) = hfs(spark, path)
     val st = new org.apache.hadoop.fs.Path(stagedPath(path))
     val old = new org.apache.hadoop.fs.Path(path + ".old")
     if (!fs.exists(p)) {
-      if (fs.exists(st) && markerComplete(spark, stagedPath(path)))
+      if (fs.exists(st) && stagedComplete)
         fs.rename(st, p)
       else if (fs.exists(old)) fs.rename(old, p)
     }

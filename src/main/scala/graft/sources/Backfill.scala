@@ -50,7 +50,7 @@ final case class BackfillReport(
   *     modified time — a completed backfill re-run finds nothing to do.
   *   - Each batch's dump_id is deterministic (`"$runId-b$batchId"`), so
   *     even a re-run racing the gate (or re-delivering a half-landed
-  *     run) is dropped by the sink's dump-id anti-join.
+  *     run) is dropped by the sink's dump-id check.
   *   `force = true` bypasses the GATE (reference `--force` →
   *   `fetch_target_items(force_dump=True)` yields "Force is set");
   *   pair it with a fresh `runId` — same-id re-deliveries are still
@@ -81,7 +81,7 @@ object Backfill {
     *                     untouched, so the eligibility gate (which
     *                     reads the parent sink) re-selects the batch
     *                     on re-run; already-landed nested rows are
-    *                     deduped by the sink's dump-id anti-join.
+    *                     deduped by the sink's dump-id check.
     */
   def run(
       spark: SparkSession,
@@ -159,7 +159,7 @@ object Backfill {
           // parent never lands, the gate still sees the batch as
           // undumped, and a re-run retries it — nested rows that DID
           // land are re-delivered under the same dump_id and dropped by
-          // the sink's dump-id anti-join. (Parent-first would strand a
+          // the sink's dump-id check. (Parent-first would strand a
           // nested failure forever: the gate would skip the batch.)
           val nNested = nested.map { case (related, nsink) =>
             nsink.appendIdempotent(spark,
@@ -179,7 +179,7 @@ object Backfill {
             // going; a re-run with the same runId retries ONLY this
             // batch (its dump_id never reached the PARENT sink, so the
             // gate re-selects it; any nested rows that landed before
-            // the failure are deduped by the dump-id anti-join)
+            // the failure are deduped by the dump-id check)
             failed += batchId
         }
       }

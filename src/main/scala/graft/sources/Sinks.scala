@@ -1,11 +1,18 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import java.io.{FileNotFoundException, IOException}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Checkpoints
+import graft.operators.IndexFs
 
 /** Sink abstractions (SURVEY.md §4): the write-side twin of the
   * reference's `ModelBaseSink.send_item` / dump-id idempotency contract
@@ -17,7 +24,7 @@ import graft.Checkpoints
   * never see the log raw — they read the latest-state view (one row per
   * unique key, newest dump wins), exactly like ClickHouse
   * ReplacingMergeTree + FINAL. Idempotency is re-dump-safe appends:
-  * a dump_id that already reached the sink is dropped before writing,
+  * a dump_id that already reached the sink is dropped before it lands,
   * so retrying a failed/duplicated dump batch never duplicates rows —
   * the Spark twin of the reference tolerating Celery task re-delivery.
   */
@@ -35,7 +42,7 @@ object Sinks {
   /** Stable per-query-instance tag for streaming dump ids. Epoch numbers
     * restart at 0 whenever a query starts from a fresh checkpoint dir, so
     * a dump id derived from the epoch alone collides with a previous
-    * run's ids against the same sink log — and the idempotency anti-join
+    * run's ids against the same sink log — and the idempotency check
     * would silently drop the new run's batches. Deriving the tag from the
     * checkpoint dir gives exactly the right identity: restarts from the
     * SAME checkpoint keep the tag (their re-delivered epochs SHOULD
@@ -64,21 +71,21 @@ object Sinks {
   * [[ExternalSink]] — an external database over JDBC, the reference's
   * actual broker role).
   *
-  * Scale notes: the idempotency check reads ONLY the `dump_id` column of
-  * the existing log (a column-pruned scan — parquet prunes natively, the
-  * JDBC read pushes the projection to the database) and left-anti joins
-  * the incoming batch against its distinct ids — a broadcast join in
-  * practice (distinct dump ids are few). The latest-state view is one
-  * shuffle on the unique key and is the same plan as the
-  * `sink_latest_state` operator (A1).
+  * Scale notes: each backend answers "has this dump_id landed?" where
+  * it is cheapest. [[ParquetSink]] keeps a per-dump_id commit manifest
+  * beside its rows, so the check is one metadata lookup per dump_id in
+  * the batch — it reads none of the log's data files or footers, and
+  * its cost does not grow with the committed history; the append is
+  * one Spark job. [[ExternalSink]] pushes `SELECT DISTINCT dump_id` to
+  * the database and anti-joins the batch against the few ids it
+  * returns (a broadcast join). The latest-state view is one shuffle on
+  * the unique key and is the same plan as the `sink_latest_state`
+  * operator (A1).
   */
 trait SinkLog {
 
   /** Does the log exist yet (first append creates it)? */
   protected def exists(spark: SparkSession): Boolean
-
-  /** Backend append of an already-deduplicated batch. */
-  protected def append(df: DataFrame): Unit
 
   /** Read the raw append-only log. */
   def log(spark: SparkSession): DataFrame
@@ -89,30 +96,11 @@ trait SinkLog {
     */
   def initialized(spark: SparkSession): Boolean = exists(spark)
 
-  /** Distinct dump_ids already in the sink — subclasses may override
-    * with a cheaper pushed-down query than the full-log scan.
-    */
-  protected def seenDumpIds(spark: SparkSession): DataFrame =
-    log(spark).select(col("dump_id")).distinct()
-
-  /** Test hook: the idempotency pre-read, for plan/width assertions. */
-  private[graft] def seenForTest(spark: SparkSession): DataFrame =
-    seenDumpIds(spark)
-
   /** Append `batch` (already stamped with `dump_id`), dropping every row
     * whose dump_id already reached the sink. Returns the number of rows
     * actually appended.
     */
-  def appendIdempotent(spark: SparkSession, batch: DataFrame): Long = {
-    val fresh =
-      if (!exists(spark)) batch
-      else batch.join(broadcast(seenDumpIds(spark)), Seq("dump_id"), "left_anti")
-    // one pass: count and append without recomputing the anti-join
-    val materialized = Checkpoints.checkpoint(fresh)
-    val n = materialized.count()
-    if (n > 0) append(materialized)
-    n
-  }
+  def appendIdempotent(spark: SparkSession, batch: DataFrame): Long
 
   /** Latest-state view: one row per unique key, newest
     * `time_last_dumped_us` wins (ties broken by dump_id so replays of
@@ -121,8 +109,11 @@ trait SinkLog {
     * one row per key per map task and no per-key sort runs (see A1's
     * scaladoc in SinkOps for the 100 TB argument).
     */
-  def latestState(spark: SparkSession, keyCols: Seq[String]): DataFrame = {
-    val df = log(spark)
+  def latestState(spark: SparkSession, keyCols: Seq[String]): DataFrame =
+    latestOf(log(spark), keyCols)
+
+  /** [[latestState]] over a given snapshot of the log. */
+  protected final def latestOf(df: DataFrame, keyCols: Seq[String]): DataFrame = {
     val missing = keyCols.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"latestState key column(s) ${missing.mkString(", ")} not in log " +
@@ -142,19 +133,70 @@ trait SinkLog {
   }
 }
 
-/** Append-only parquet sink log — the lake-native [[SinkLog]]. A 100 TB
-  * deployment additionally partitions the log directory by dump date so
-  * the idempotency scan prunes to recent partitions.
+/** Append-only parquet sink log — the lake-native [[SinkLog]], with its
+  * own commit protocol so an append is one Spark job and its dump-id
+  * check never reads the log. Files, for a log at `path`:
+  *   - `path/part-*.parquet`: the committed rows, all a reader sees.
+  *   - `path/_manifest/<sha-256 of the dump_id>`: one marker per
+  *     committed dump_id, holding the id. Spark's file index skips
+  *     `_`-prefixed names, so the marker directory is invisible to reads.
+  *   - `path.pending/<txn>/`: one append's staged write, and
+  *     `path.pending/<txn>.commit`: its commit record (the dump_ids).
+  *   - `path.staged`, `path.old`: a compaction's swap siblings
+  *     ([[graft.operators.IndexFs]]).
+  *
+  * An append writes the batch once, unfiltered, into its staging
+  * directory; `Dataset.observe` on that write yields the row count and
+  * the dump_ids. The Spark driver then looks up each dump_id's marker
+  * and, under the log's lock, commits: the record (written aside, then
+  * renamed into place, so it is whole or absent), then the markers,
+  * then the staged part files renamed into the log. A dump already
+  * committed is dropped after its write, so a re-delivered streaming
+  * epoch still executes its plan once and its state-store version
+  * commits; an empty batch commits nothing.
+  *
+  * Every open rolls forward any commit record a crash left behind, so
+  * a crash at any step leaves a dump either absent (its retry lands it)
+  * or whole and marked (its retry appends nothing); only a reader that
+  * goes around `log` can see a half-moved dump before the next open.
+  * Opens repair an interrupted compaction swap too, in two strengths: a
+  * read (`log`, `initialized`, [[latestState]]) only promotes the
+  * compacted copy or restores the displaced log when the live log is
+  * missing, and never deletes, so a reader in another process cannot
+  * remove a compaction that is still running there; a write
+  * ([[appendIdempotent]], [[compact]]) also drops the swap's debris.
+  *
+  * A log written before the manifest existed has no `_manifest`; the
+  * first write to it marks the log's dump_ids from one scan, so its
+  * earlier dumps stay replay-safe.
+  *
+  * ASSUMES atomic rename of files and directories, like `IndexFs`:
+  * true on HDFS and local POSIX file systems, NOT on object stores (S3A
+  * rename is copy+delete, so a crash mid-move can tear a dump and a
+  * crash mid-swap can tear the log); an object-store deployment wants a
+  * table format's commit protocol instead. Commits and compaction swaps
+  * of one log are serialized per JVM, so one process writes a log;
+  * readers may live in any process.
   */
 final case class ParquetSink(path: String) extends SinkLog {
+  import ParquetSink._
+
+  private def root = new Path(path)
+  private def manifest = new Path(root, ManifestDir)
+  private def pending = new Path(path + ".pending")
+  private def stagedCompact = new Path(IndexFs.stagedPath(path))
+  private def record(txn: Path) = new Path(pending, txn.getName + ".commit")
+
+  private def fsOf(spark: SparkSession): FileSystem = IndexFs.hfs(spark, path)._1
+
+  private def stateOf(fs: FileSystem): LogState =
+    states.computeIfAbsent(fs.makeQualified(root).toString, _ => new LogState)
 
   protected def exists(spark: SparkSession): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val fs = fsOf(spark)
+    recover(spark, fs, writer = false)
+    fs.exists(root)
   }
-
-  protected def append(df: DataFrame): Unit =
-    df.write.mode("append").parquet(path)
 
   /** `mergeSchema` because an append-only log lives through producer
     * schema evolution: a batch that gains a column must not make the log
@@ -164,27 +206,226 @@ final case class ParquetSink(path: String) extends SinkLog {
     * partitions the log by dump date and prunes before the merge, or
     * pins the schema once evolution settles.
     */
-  def log(spark: SparkSession): DataFrame =
+  def log(spark: SparkSession): DataFrame = {
+    recover(spark, fsOf(spark), writer = false)
     spark.read.option("mergeSchema", "true").parquet(path)
+  }
+
+  def appendIdempotent(spark: SparkSession, batch: DataFrame): Long = {
+    val fs = fsOf(spark)
+    recover(spark, fs, writer = true)
+    val txn = new Path(pending, UUID.randomUUID().toString)
+    val fresh = new Path(txn.toString + "-fresh")
+    try {
+      val (n, ids) = stage(batch, txn)
+      failpoint(path, "staged")
+      stateOf(fs).synchronized {
+        val seen = ids.filter(id => fs.exists(marker(manifest, id)))
+        if (n == 0 || (seen.nonEmpty && seen.size == ids.size)) 0L
+        else if (seen.isEmpty) { commit(fs, txn, ids); n }
+        else {
+          // a batch mixing committed and new dumps restages its new rows
+          val (n2, ids2) = stage(spark.read.parquet(txn.toString)
+            .filter(!coalesce(col("dump_id").isin(seen: _*), lit(false))), fresh)
+          commit(fs, fresh, ids2)
+          n2
+        }
+      }
+    } finally {
+      // staging that never got a commit record is dropped; a recorded
+      // one is rolled forward by the next open
+      Seq(txn, fresh).foreach(d => if (!fs.exists(record(d))) fs.delete(d, true))
+    }
+  }
+
+  /** Write `df` to `dir` — the append's one Spark job — observing its
+    * row count and dump_ids on the same pass.
+    */
+  private def stage(df: DataFrame, dir: Path): (Long, Seq[String]) = {
+    val obs = Observation()
+    df.observe(obs, count(lit(1)).as("n"), collect_set(col("dump_id")).as("ids"))
+      .write.parquet(dir.toString)
+    val m = obs.get
+    (m("n").asInstanceOf[Long], m("ids").asInstanceOf[Seq[String]])
+  }
+
+  /** Commit a staged write: the record, atomically, then the roll-forward. */
+  private def commit(fs: FileSystem, txn: Path, dumpIds: Seq[String]): Unit = {
+    val tmp = new Path(txn, "_commit")
+    val out = fs.create(tmp, false)
+    try { out.writeInt(dumpIds.size); dumpIds.foreach(out.writeUTF) }
+    finally out.close()
+    if (!fs.rename(tmp, record(txn)))
+      throw new IOException(s"could not write commit record for $txn")
+    failpoint(path, "recorded")
+    rollForward(fs, txn, dumpIds)
+  }
+
+  /** Finish a recorded commit: markers, then the part files moved into
+    * the log, then the staging and the record dropped — only once every
+    * file is in. Idempotent, so a crash anywhere in it is repaired by
+    * running it again, and a reader in another process may run it
+    * alongside the writer: a part file already in the log counts as
+    * moved. A move that fails otherwise throws, leaving the record for
+    * the next open to retry.
+    */
+  private def rollForward(fs: FileSystem, txn: Path, dumpIds: Seq[String]): Unit = {
+    fs.mkdirs(manifest)
+    dumpIds.foreach { id =>
+      val m = marker(manifest, id)
+      if (!fs.exists(m)) writeMarker(fs, m, id)
+    }
+    failpoint(path, "marked")
+    dataFiles(fs, txn).foreach { f =>
+      val dst = new Path(root, f.getPath.getName)
+      val moved = try fs.rename(f.getPath, dst) catch { case _: FileNotFoundException => false }
+      if (!moved && !fs.exists(dst))
+        throw new IOException(s"could not move ${f.getPath} into $path")
+      failpoint(path, "moved")
+    }
+    fs.delete(txn, true)
+    fs.delete(record(txn), false)
+  }
+
+  /** Repair on open: an interrupted compaction swap first (unless this
+    * JVM is compacting the log right now), then every commit record a
+    * crashed append left behind, then — for a writer — the manifest of a
+    * log written before manifests existed. A reader only repairs a
+    * missing live log; dropping swap debris is left to writers, which
+    * know whether a compaction is running.
+    */
+  private def recover(spark: SparkSession, fs: FileSystem, writer: Boolean): Unit = {
+    val st = stateOf(fs)
+    st.synchronized {
+      if (!st.compacting && (writer || !fs.exists(root)))
+        IndexFs.recoverSwap(spark, path,
+          fs.exists(new Path(stagedCompact, CompactedMarker)))
+      if (fs.exists(pending))
+        fs.listStatus(pending).map(_.getPath)
+          .filter(_.getName.endsWith(".commit")).sortBy(_.getName)
+          .foreach { rec =>
+            // gone if a concurrent open finished it first
+            val ids = try {
+              val in = fs.open(rec)
+              try Some(Seq.fill(in.readInt())(in.readUTF())) finally in.close()
+            } catch { case _: FileNotFoundException => None }
+            ids.foreach(rollForward(fs, new Path(pending,
+              rec.getName.stripSuffix(".commit")), _))
+          }
+      if (writer && fs.exists(root) && !fs.exists(manifest)) markHistory(spark, fs)
+    }
+  }
+
+  /** Build the manifest of a log written before manifests existed, from
+    * one scan of its dump_ids. The markers are written aside and renamed
+    * in whole, so a crash leaves the log unmarked and the next write
+    * starts over.
+    */
+  private def markHistory(spark: SparkSession, fs: FileSystem): Unit = {
+    val tmp = new Path(pending, ManifestDir)
+    fs.delete(tmp, true)
+    fs.mkdirs(tmp)
+    spark.read.parquet(path).select("dump_id").distinct().collect()
+      .flatMap(r => Option(r.getString(0)))
+      .foreach(id => writeMarker(fs, marker(tmp, id), id))
+    if (!fs.rename(tmp, manifest))
+      throw new IOException(s"could not install the manifest of $path")
+  }
 
   /** Compaction — the scheduled twin of ClickHouse's background merge:
     * rewrite the append log down to its latest-state rows so reads stop
     * paying for superseded versions. Readers through [[latestState]]
     * see identical results before and after (the view is idempotent
-    * over compaction); dump-id idempotency keeps working because the
-    * surviving rows retain their dump_id. Write-temp-then-swap keeps a
-    * crash from destroying the log (a lake-format deployment would get
-    * this atomically from the table format's commit protocol).
+    * over compaction). Dump-id idempotency keeps working because the
+    * manifest is carried over whole: a replay of a dump whose every row
+    * was superseded is still a no-op.
+    *
+    * The rewrite reads a snapshot of the part files and writes the
+    * `path.staged` sibling, then copies the manifest beside it, all
+    * outside the log's lock. Under the lock it checks the copy is still
+    * whole, copies in the part files and markers that appends committed
+    * since, marks the copy complete and swaps it in through
+    * [[graft.operators.IndexFs.swapInto]], so an append committed
+    * during the rewrite survives it, the lock is held for work that
+    * grows with the appends of that window only, and a crash at any
+    * step leaves either the old log or the compacted one.
     */
   def compact(spark: SparkSession, keyCols: Seq[String]): Unit = {
+    val fs = fsOf(spark)
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact.tmp")
-    latestState(spark, keyCols).write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(p, true)
-    fs.rename(tmp, p)
+    val st = stateOf(fs)
+    recover(spark, fs, writer = true)
+    val snapshot = st.synchronized {
+      if (st.compacting)
+        throw new IllegalStateException(s"a compaction of $path is already running")
+      st.compacting = true
+      dataFiles(fs, root).map(_.getPath)
+    }
+    try {
+      require(snapshot.nonEmpty, s"nothing to compact at $path")
+      val stagedManifest = new Path(stagedCompact, ManifestDir)
+      latestOf(spark.read.option("mergeSchema", "true")
+          .parquet(snapshot.map(_.toString): _*), keyCols)
+        .write.parquet(stagedCompact.toString)
+      FileUtil.copy(fs, manifest, fs, stagedManifest, false, conf)
+      failpoint(path, "compact-staged")
+      st.synchronized {
+        // copying into a removed copy would recreate it without the
+        // compacted rows, and the swap would promote that
+        if (!fs.exists(new Path(stagedCompact, "_SUCCESS")) || !fs.exists(stagedManifest))
+          throw new IllegalStateException(
+            s"the compacted copy of $path was removed during the rewrite; the log is unchanged")
+        def copyIn(files: Seq[Path], to: Path): Unit = files.foreach(p =>
+          FileUtil.copy(fs, p, fs, new Path(to, p.getName), false, conf))
+        val read = snapshot.map(_.getName).toSet
+        copyIn(dataFiles(fs, root).map(_.getPath).filterNot(p => read(p.getName)),
+          stagedCompact)
+        val marked = fs.listStatus(stagedManifest).map(_.getPath.getName).toSet
+        copyIn(fs.listStatus(manifest).toSeq.map(_.getPath).filterNot(p => marked(p.getName)),
+          stagedManifest)
+        fs.create(new Path(stagedCompact, CompactedMarker), false).close()
+        failpoint(path, "compact-complete")
+        IndexFs.swapInto(spark, path)
+      }
+    } finally st.synchronized { st.compacting = false }
   }
+}
+
+object ParquetSink {
+  private val ManifestDir = "_manifest"
+  /** Written last into a compaction's staged copy: the copy is whole. */
+  private val CompactedMarker = "_COMPACTED"
+
+  /** Per-log commit lock and compaction flag, one per qualified path. */
+  private final class LogState { var compacting = false }
+  private val states = new ConcurrentHashMap[String, LogState]()
+
+  private def marker(dir: Path, dumpId: String): Path = new Path(dir,
+    MessageDigest.getInstance("SHA-256").digest(dumpId.getBytes(UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString)
+
+  private def writeMarker(fs: FileSystem, m: Path, dumpId: String): Unit = {
+    val out = fs.create(m, true)
+    try out.write(dumpId.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** The visible part files of a log directory (Spark's own rule:
+    * `_`- and `.`-prefixed names are not data); none if the directory
+    * is gone, also when a concurrent roll-forward just removed it.
+    */
+  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
+    } catch { case _: FileNotFoundException => Nil }
+
+  /** Fault-injection hook for the crash specs: called with (log path,
+    * step) after each commit step — "staged", "recorded", "marked",
+    * "moved" (per file), "compact-staged", "compact-complete". A throw
+    * leaves the log as a crash at that step would; only the unrecorded
+    * staging a crash leaves behind (invisible to reads) is dropped.
+    */
+  @volatile private[graft] var failpoint: (String, String) => Unit = (_, _) => ()
 }
 
 /** External-database sink over JDBC — the [[SinkLog]] twin of the
@@ -271,7 +512,22 @@ final case class ExternalSink(
   def log(spark: SparkSession): DataFrame =
     spark.read.jdbc(url, table, props)
 
-  override protected def seenDumpIds(spark: SparkSession): DataFrame = {
+  def appendIdempotent(spark: SparkSession, batch: DataFrame): Long = {
+    val fresh =
+      if (!exists(spark)) batch
+      else batch.join(broadcast(seenDumpIds(spark)), Seq("dump_id"), "left_anti")
+    // one pass: count and append without recomputing the anti-join
+    val materialized = Checkpoints.checkpoint(fresh)
+    val n = materialized.count()
+    if (n > 0) append(materialized)
+    n
+  }
+
+  /** Test hook: the idempotency pre-read, for plan/width assertions. */
+  private[graft] def seenForTest(spark: SparkSession): DataFrame =
+    seenDumpIds(spark)
+
+  private def seenDumpIds(spark: SparkSession): DataFrame = {
     // A subquery pushes the projection+distinct to the database: the
     // idempotency pre-read moves one column of few values over the
     // wire, not the log. Spark's JDBC writer creates columns with

@@ -38,7 +38,7 @@ import graft.sources.{ParquetSink, Sinks}
   * [[MgKernel]] pass (order-independent, so replays are
   * deterministic), and re-appended under an epoch-tagged dump_id
   * (at-least-once foreachBatch → exactly-once contents — a replayed
-  * epoch's append anti-joins away on dump_id). Late events need no
+  * epoch's append is dropped on its dump_id). Late events need no
   * watermark cutoff: an old window's summary simply gets one more
   * merge when a straggler arrives.
   */

@@ -138,7 +138,7 @@ object NearDupStream {
     // Per-query-instance tag (Sinks.runTag): epoch numbers restart at 0
     // on a fresh checkpoint dir, so an epoch-only dump id would collide
     // with a previous run's ids against the same pair log and the
-    // anti-join would silently drop the new run's batches. Wall-clock
+    // dump-id check would silently drop the new run's batches. Wall-clock
     // dump time keeps latest-state newest-wins across restarts.
     val tag = graft.sources.Sinks.runTag(checkpointDir)
     pipeline(docs, watermark)

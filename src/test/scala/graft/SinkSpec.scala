@@ -139,25 +139,24 @@ class SinkSpec extends SparkSpec {
 
   test("backfill executor: poisoned batch tolerated, re-run idempotent, force re-dumps") {
     import java.nio.file.Files
-    import graft.sources.{Backfill, SinkLog}
+    import graft.sources.{Backfill, ParquetSink, SinkLog}
     import org.apache.spark.sql.{DataFrame, SparkSession}
 
-    // a sink whose raw append can be poisoned per dump_id (a failing
+    // a parquet sink whose append can be poisoned per dump_id (a failing
     // bulk POST in the reference; any transient batch error here)
     class PoisonSink(path: String) extends SinkLog {
       @volatile var poison: Set[String] = Set.empty
-      protected def exists(spark: SparkSession): Boolean = {
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-      }
-      protected def append(df: DataFrame): Unit = {
-        val dumpIds = df.select("dump_id").distinct().collect()
+      private val inner = ParquetSink(path)
+      protected def exists(spark: SparkSession): Boolean =
+        inner.initialized(spark)
+      def appendIdempotent(spark: SparkSession, batch: DataFrame): Long = {
+        val dumpIds = batch.select("dump_id").distinct().collect()
           .map(_.getString(0)).toSet
         if ((dumpIds & poison).nonEmpty)
           throw new RuntimeException(s"poisoned: ${dumpIds & poison}")
-        df.write.mode("append").parquet(path)
+        inner.appendIdempotent(spark, batch)
       }
-      def log(spark: SparkSession): DataFrame = spark.read.parquet(path)
+      def log(spark: SparkSession): DataFrame = inner.log(spark)
     }
 
     val sink = new PoisonSink(
