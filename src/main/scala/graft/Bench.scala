@@ -13,15 +13,19 @@ package graft
   *    contention-free estimate on a shared box — min, not median, because
   *    external load only ever adds time). `first` reports run 1.
   *  - **scoped cache policy**: operator persist()s route through
-  *    [[Caches]], and the scope closes after each query's reps — so run 1
-  *    is the cold number (it pays the query's own artifact
-  *    materialization), runs 2-3 are warm (the artifact is cached), and
-  *    NOTHING leaks between queries: a per-query regression is
-  *    attributable to that query alone, independent of board order.
+  *    [[Caches]], and the scope closes after each query's reps; the
+  *    per-corpus memos (trained models, memo-built indexes —
+  *    [[graft.operators.Artifact.Memo]]) survive a scope by design, so
+  *    the board clears them before each query's first rep. Run 1 is the
+  *    cold number (it pays the query's own artifact materialization and
+  *    training), runs 2-3 are warm (frames cached, models memoized), and
+  *    nothing an earlier query built is reused: a per-query regression
+  *    is attributable to that query alone, independent of board order.
   *    `first - min` per query ≈ its artifact-materialization cost (plus
   *    any contention noise caught by run 1); the summed cost is reported
   *    as `materialization_total`. Set SPARK_GRAFT_ARTIFACT_MODE=1 for the
-  *    r7-style deployment model (artifacts survive across queries).
+  *    r7-style deployment model (frames and memos survive across
+  *    queries).
   *  - **calibration drift**: a fixed q1-shaped probe runs at board
   *    start/middle/end; `calibration.drift` (max/min of the three) says
   *    how loaded the host was DURING the run, so a cross-round comparison
@@ -31,7 +35,7 @@ object Bench {
   private val REPS = 3
 
   /** Projection-only / window-output queries whose compute `count()`
-    * can prune (the Scratch scaladoc gotcha, documented in BASELINE.md
+    * can prune (the count-pruning gotcha documented in BASELINE.md
     * since r12): for these the board emits BOTH numbers — `queries`
     * (count path, scan-bound, comparable with every earlier round) and
     * `forced` (the query's OWN physical plan via queryExecution.toRdd,
@@ -144,6 +148,7 @@ object Bench {
     val results = keys.zipWithIndex.map { case ((name, fn), i) =>
       if (i == keys.size / 2) calibMid = calibrate()
       var ok = true
+      if (!Caches.artifactMode) operators.Artifact.clearMemos()
       val runs = (1 to REPS).iterator.map { _ =>
         try Some(secs(fn(spark, sfDir).count()))
         catch {

@@ -31,10 +31,17 @@ import org.apache.spark.sql.Dataset
   * local checkpoint frees its blocks AND its lineage, so frames built on
   * it must not outlive the scope — true by construction for the
   * per-query scopes the harnesses close.
+  *
+  * Memo policy: the per-corpus driver-side memos (trained models and
+  * memo-built index paths, [[graft.operators.Artifact.Memo]]) are NOT
+  * cached frames and are not scoped here. A memo is an artifact keyed
+  * by the corpus fingerprint: it survives [[releaseScope]] in both
+  * modes and is dropped only by `Artifact.clearMemos()` — which
+  * [[Bench]] calls before each query's first rep, so `first` pays for
+  * the query's own training whatever ran before it.
   */
 object Caches {
   private val live = new ConcurrentLinkedQueue[Either[RDD[_], Dataset[_]]]()
-  private val scopeHooks = new ConcurrentLinkedQueue[Runnable]()
 
   /** Opt-in cross-query artifact reuse (deployment model). Off by
     * default so each harness scope is self-contained.
@@ -56,24 +63,10 @@ object Caches {
     */
   def trackRdd(rdd: RDD[_]): Unit = live.add(Left(rdd))
 
-  /** Register a hook that runs on every scoped [[releaseScope]] (r20,
-    * the pqCookMemo hygiene flag): driver-side model memos keyed on a
-    * corpus fingerprint live OUTSIDE the cached-frame registry, but the
-    * bench's attribution contract says nothing outlives a query scope —
-    * a memo owner registers its clear here ONCE and the scope close
-    * empties it with the frames. Artifact mode exempts hooks exactly
-    * like frames (a deployment keeps its trained models beside the
-    * table).
-    */
-  def registerScopeHook(hook: Runnable): Unit = scopeHooks.add(hook)
-
   /** End the current scope: unpersist every registered entry unless
     * [[artifactMode]] keeps them as cross-query artifacts.
     */
-  def releaseScope(): Unit = if (!artifactMode) {
-    releaseAll()
-    scopeHooks.forEach(_.run())
-  }
+  def releaseScope(): Unit = if (!artifactMode) releaseAll()
 
   /** Unconditionally unpersist every registered entry (non-blocking).
     * Entries whose plan another registered frame shared unpersist as

@@ -81,34 +81,20 @@ object AnnIndex {
     */
   def save(index: Index, path: String): Unit = {
     val spark = index.buckets.sparkSession
-    writeMarker(spark, path, complete = false, op = "save")
-    spark.range(0L, 1L, 1L, 1)
-      .select(lit(index.geometry.tables).as("tables"),
-        lit(index.geometry.planes).as("planes"))
-      .write.mode("overwrite").parquet(s"$path/geometry")
-    // repartition on the partition column before the partitioned write
-    // (r20, guide §6 small files — the KnnIndex.save finding): without
-    // it every compute task writes a slice of every tbl directory
-    index.buckets.repartition(col("tbl"))
-      .write.mode("overwrite").partitionBy("tbl")
-      .parquet(s"$path/buckets")
-    index.vectors.write.mode("overwrite").parquet(s"$path/vectors")
-    writeMarker(spark, path, complete = true, op = "save")
+    Artifact.save(spark, path) {
+      spark.range(0L, 1L, 1L, 1)
+        .select(lit(index.geometry.tables).as("tables"),
+          lit(index.geometry.planes).as("planes"))
+        .write.mode("overwrite").parquet(s"$path/geometry")
+      // repartition on the partition column before the partitioned write
+      // (r20, guide §6 small files — the KnnIndex.save finding): without
+      // it every compute task writes a slice of every tbl directory
+      index.buckets.repartition(col("tbl"))
+        .write.mode("overwrite").partitionBy("tbl")
+        .parquet(s"$path/buckets")
+      index.vectors.write.mode("overwrite").parquet(s"$path/vectors")
+    }
   }
-
-  /** The marker carries WHICH mutation was in flight (r12): a torn
-    * `save`/`retire`/`compact` overwrote the only copy of a frame and is
-    * unrecoverable in place, but a torn `append` only ADDED rows — the
-    * previous complete state is intact underneath, so replaying the
-    * interrupted batch repairs it ([[append]] reads through the false
-    * marker for exactly that op).
-    */
-  private def writeMarker(
-      spark: SparkSession, path: String, complete: Boolean,
-      op: String): Unit =
-    spark.range(0L, 1L, 1L, 1)
-      .select(lit(complete).as("complete"), lit(op).as("op"))
-      .write.mode("overwrite").parquet(s"$path/complete")
 
   def load(spark: SparkSession, path: String): Index =
     loadImpl(spark, path, tolerateTornAppend = false)
@@ -119,29 +105,18 @@ object AnnIndex {
     def readable(sub: String): Option[org.apache.spark.sql.Row] =
       try Some(spark.read.parquet(s"$path/$sub").head())
       catch { case _: org.apache.spark.sql.AnalysisException => None }
-    readable("complete") match {
-      case Some(m) =>
-        // pre-r12 markers have no `op` column: treat as an overwrite op
-        // (the conservative reading — refuse the torn state)
-        val op =
-          if (m.schema.fieldNames.contains("op")) m.getAs[String]("op")
-          else "save"
-        if (!m.getAs[Boolean]("complete") &&
-            !(tolerateTornAppend && op == "append"))
-          throw new IllegalStateException(
-            s"AnnIndex at $path is a partial $op (interrupted between " +
-              "marker and frames) — " +
-              (if (op == "append")
-                 "replay the interrupted append batch to repair it"
-               else "rebuild or re-save it"))
-      case None =>
-        // no marker: a pre-r10 layout. With a geometry frame (r9) the
-        // save order was buckets→vectors→geometry, so geometry-present
-        // implies the frames landed too; without one it is a pre-r9
-        // default-geometry index — the ONLY case the default fallback
-        // below is for.
-        ()
-    }
+    // the marker records WHICH mutation was in flight (r12): a torn
+    // append only ADDED rows, so [[append]] reads through it and the
+    // replayed batch repairs it. No marker at all is a pre-r10 layout:
+    // with a geometry frame (r9) the save order was
+    // buckets→vectors→geometry, so geometry-present implies the frames
+    // landed too; without one it is a pre-r9 default-geometry index —
+    // the ONLY case the default fallback below is for.
+    Artifact.open(spark, path, "AnnIndex",
+      tolerateTornAppend = tolerateTornAppend,
+      unmarkedLayout = {
+        val (fs, b) = IndexFs.hfs(spark, s"$path/buckets"); fs.exists(b)
+      })
     val g = readable("geometry") match {
       case Some(r) =>
         AnnOps.LshGeometry(r.getAs[Int]("tables"), r.getAs[Int]("planes"))
@@ -346,10 +321,10 @@ object AnnIndex {
       .select(col("vec_id"), col("tbl")).distinct()
     val freshB = Checkpoints.checkpoint(
       batchBuckets.join(broadcast(landed), Seq("vec_id", "tbl"), "left_anti"))
-    writeMarker(spark, path, complete = false, op = "append")
-    freshV.write.mode("append").parquet(s"$path/vectors")
-    freshB.write.mode("append").partitionBy("tbl").parquet(s"$path/buckets")
-    writeMarker(spark, path, complete = true, op = "append")
+    Artifact.save(spark, path, op = "append") {
+      freshV.write.mode("append").parquet(s"$path/vectors")
+      freshB.write.mode("append").partitionBy("tbl").parquet(s"$path/buckets")
+    }
   }
 
   /** Rewrite the accumulated append files into a bounded number of

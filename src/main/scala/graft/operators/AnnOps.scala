@@ -775,8 +775,8 @@ object AnnOps {
     * deterministic corpus slice and REFINED by `coarseRounds` Lloyd
     * rounds ([[ivfTrainMicros]]; 0 rounds ≡ the r14 slice-seeded
     * quantizer) — exposed so AnnSpec pins recall/candidate-fraction at
-    * a second cell count and IvfPqTune can difference trained vs
-    * slice-seeded at equal probe fraction.
+    * a second cell count and the trained-vs-slice-seeded comparison at
+    * equal probe fraction can run (records/IVFPQ_TUNE_coarse_r15.txt).
     */
   private[graft] def ivfTopK(
       s: SparkSession,
@@ -1245,24 +1245,10 @@ object AnnOps {
     * `rounds` corpus passes on every warm rep. Keys carry the corpus
     * fingerprint, so an in-session corpus rewrite invalidates (the r14
     * memo-invalidation doctrine); values are model-sized driver arrays,
-    * no executor memory.
+    * no executor memory. Like every [[Artifact.Memo]] it outlives the
+    * per-query cache scope.
     */
-  private val pqCookMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-  // r20 (the r19 verdict's hygiene flag): the memo is registered with
-  // the harness scope, so in default (scoped) mode nothing outlives a
-  // query — the first rep of each query trains, the warm reps reuse,
-  // and releaseScope() empties the map with the cached frames. Artifact
-  // mode keeps it, like every other cross-query artifact. Registering
-  // the clear also bounds the map: entries never accumulate past one
-  // scope's working set in default mode.
-  Caches.registerScopeHook(() => pqCookMemo.clear())
-
-  /** Drop memoized codebooks (tests). */
-  private[graft] def clearPqCookMemo(): Unit = pqCookMemo.clear()
-
-  /** Registered-codebook count (tests — the scope-clear pin). */
-  private[graft] def pqCookMemoSize: Int = pqCookMemo.size
+  private val pqCookMemo = new Artifact.Memo[Array[Long]]
 
   /** E10's body at an arbitrary (k, rounds, rerank) geometry — train,
     * encode, search over one corpus frame.
@@ -1274,10 +1260,9 @@ object AnnOps {
       rounds: Int = PQ_ROUNDS,
       rerank: Int = PQ_RERANK): DataFrame = {
       val e = withNorm(s, d)
-      val cook = pqCookMemo.computeIfAbsent(
+      val cook = pqCookMemo(
         s"${CorpusKey.key(d, "embeddings.parquet")}#pq#k$k#r$rounds" +
-          s"#m$PQ_M#s$PQ_SUBDIM",
-        _ => pqTrain(e, k, rounds))
+          s"#m$PQ_M#s$PQ_SUBDIM")(pqTrain(e, k, rounds))
       pqSearch(cook, k, rerank, TOP_K, pqEncodeDf(e, cook), e,
         e.filter(col("vec_id") < QUERY_MAX))
   }
@@ -1388,7 +1373,7 @@ object AnnOps {
       sub: Option[LshGeometry]): (DataFrame, DataFrame) = {
     // assignment is PRODUCED by the map-side cell_argmax kernel (r15:
     // one fused corpus pass, 3.6 s at 2M×353 cells vs 62 s for the r14
-    // crossJoin + max_by aggregate — KnnDecomp, records/) and
+    // crossJoin + max_by aggregate — records/KNN_DECOMP_sf100_r15.txt) and
     // MATERIALIZED once as the narrow id-width (vec_id, cell) frame;
     // consumers re-attach it by joining the corpus cache. Both caches
     // are hash-partitioned on vec_id (withNormDf repartitions; the
@@ -1614,8 +1599,9 @@ object AnnOps {
     * map-side combined, no embeddings shuffled.
     */
   /** Measured (cell, tbl, bucket, n) occupancy AFTER refinement — the
-    * evidence seam [[graft.KnnScale]] records and OccupancySpec pins
-    * (every n ≤ the trigger on any layout the splitter can separate).
+    * evidence seam behind records/KNN_CLUSTERED_r1*.txt, and what
+    * OccupancySpec pins (every n ≤ the trigger on any layout the
+    * splitter can separate).
     */
   private[graft] def refinedOccupancy(
       withCell: DataFrame, sub: Option[LshGeometry]): DataFrame =
@@ -1979,10 +1965,10 @@ object AnnOps {
     // memoized per-corpus RESIDUAL codebook (r19): same doctrine as the
     // coarse memo above — the key carries the coarse geometry too,
     // since the residual domain depends on it
-    val cook = pqCookMemo.computeIfAbsent(
+    val cook = pqCookMemo(
       s"${CorpusKey.key(d, "embeddings.parquet")}#ivfpq#c$cells" +
-        s"#cr$coarseRounds#k$k#r$rounds#m$PQ_M#s$PQ_SUBDIM",
-      _ => ivfPqTrain(res, k, rounds, ivfPqSeedBase(cells)))
+        s"#cr$coarseRounds#k$k#r$rounds#m$PQ_M#s$PQ_SUBDIM")(
+      ivfPqTrain(res, k, rounds, ivfPqSeedBase(cells)))
     val coded = res.select(col("vec_id"), col("cell"),
       call_function("pql_encode", col("rv"), typedLit(cook.toSeq),
         lit(PQ_SUBDIM)).as("codes"))

@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -27,9 +26,9 @@ import org.apache.spark.sql.functions._
   * micro, and that a warm consumer triggers ZERO training passes).
   * [[forCorpus]] memoizes per (corpus dir, embeddings fingerprint,
   * cells, rounds) — an in-session corpus rewrite invalidates the memo
-  * (the r14 QualityIndex memo-invalidation doctrine), and the memo
-  * holds only driver arrays, no executor memory, so the
-  * [[graft.Caches]] per-query scope discipline is unaffected.
+  * (the r14 QualityIndex memo-invalidation doctrine). The memo holds
+  * only driver arrays, no executor memory; like every [[Artifact.Memo]]
+  * it outlives the per-query [[graft.Caches]] scope.
   */
 object CentroidIndex {
 
@@ -51,12 +50,7 @@ object CentroidIndex {
     AnnOps.ivfTrainMicros(e, cells, rounds)
   }
 
-  // ---- persistence (the artifact contract) ----
-
-  private def writeMarker(
-      spark: SparkSession, path: String, complete: Boolean): Unit =
-    spark.range(0L, 1L, 1L, 1).select(lit(complete).as("complete"))
-      .write.mode("overwrite").parquet(s"$path/complete")
+  // ---- persistence (the artifact contract, [[Artifact]]) ----
 
   /** Persist the trained micros + the geometry that makes them
     * meaningful (cells, rounds, dim), bracketed by the standard
@@ -67,14 +61,14 @@ object CentroidIndex {
       spark: SparkSession, micros: Array[Array[Long]], rounds: Int,
       path: String): Unit = {
     val dim = micros.headOption.map(_.length).getOrElse(0)
-    writeMarker(spark, path, complete = false)
-    spark.range(0L, 1L, 1L, 1).select(
-      typedLit(micros.map(_.toSeq).toSeq).as("micros"),
-      lit(micros.length).as("cells"),
-      lit(rounds).as("rounds"),
-      lit(dim).as("dim"))
-      .write.mode("overwrite").parquet(s"$path/model")
-    writeMarker(spark, path, complete = true)
+    Artifact.save(spark, path) {
+      spark.range(0L, 1L, 1L, 1).select(
+        typedLit(micros.map(_.toSeq).toSeq).as("micros"),
+        lit(micros.length).as("cells"),
+        lit(rounds).as("rounds"),
+        lit(dim).as("dim"))
+        .write.mode("overwrite").parquet(s"$path/model")
+    }
   }
 
   /** Reopen saved micros. Refuses a partial save, and refuses a model
@@ -85,15 +79,7 @@ object CentroidIndex {
   def load(
       spark: SparkSession, path: String, cells: Int,
       rounds: Int = AnnOps.IVF_ROUNDS): Array[Array[Long]] = {
-    val marker = try spark.read.parquet(s"$path/complete").head()
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"no CentroidIndex at $path (missing completion marker)")
-    }
-    if (!marker.getAs[Boolean]("complete"))
-      throw new IllegalStateException(
-        s"CentroidIndex at $path is a partial save — retrain or re-save")
+    Artifact.open(spark, path, "CentroidIndex")
     val m = spark.read.parquet(s"$path/model").head()
     val (c, r, dm) = (m.getAs[Int]("cells"), m.getAs[Int]("rounds"),
       m.getAs[Int]("dim"))
@@ -113,7 +99,7 @@ object CentroidIndex {
 
   // ---- board consumption (train-once per corpus) ----
 
-  private val memo = new ConcurrentHashMap[String, Array[Array[Long]]]()
+  private val memo = new Artifact.Memo[Array[Array[Long]]]
 
   /** The corpus' trained micros at a geometry, derived at most once per
     * (directory, embeddings-fingerprint, cells, rounds) per session —
@@ -125,9 +111,8 @@ object CentroidIndex {
   def microsForCorpus(
       s: SparkSession, d: String, cells: Int,
       rounds: Int = AnnOps.IVF_ROUNDS): Array[Array[Long]] =
-    memo.computeIfAbsent(
-      s"${CorpusKey.key(d, "embeddings.parquet")}#c$cells#r$rounds",
-      _ => trainMicros(AnnOps.withNorm(s, d), cells, rounds))
+    memo(s"${CorpusKey.key(d, "embeddings.parquet")}#c$cells#r$rounds")(
+      trainMicros(AnnOps.withNorm(s, d), cells, rounds))
 
   /** The trained (c_id, c_emb, c_nm) centroid frame every downstream
     * stage speaks (assignment, probe, residuals, persistence) — the
@@ -138,7 +123,4 @@ object CentroidIndex {
       s: SparkSession, d: String, cells: Int,
       rounds: Int = AnnOps.IVF_ROUNDS): DataFrame =
     AnnOps.centroidFrame(s, microsForCorpus(s, d, cells, rounds))
-
-  /** Drop memoized models (tests). */
-  def clearMemo(): Unit = memo.clear()
 }

@@ -80,14 +80,16 @@ object DedupIndex {
     * silently missed near-duplicates, the worst failure mode a dedup
     * index can have).
     */
-  def save(index: DataFrame, path: String): Unit = {
-    writeMarker(index.sparkSession, path, complete = false, op = "save")
-    // repartition on the partition column before the partitioned write
-    // (r20, guide §6 small files — the KnnIndex.save finding)
-    index.repartition(org.apache.spark.sql.functions.col("band"))
-      .write.mode("overwrite").partitionBy("band").parquet(s"$path/sigs")
-    writeMarker(index.sparkSession, path, complete = true, op = "save")
-  }
+  def save(index: DataFrame, path: String): Unit =
+    Artifact.save(index.sparkSession, path) {
+      // repartition on the partition column before the partitioned write
+      // (r20, guide §6 small files — the KnnIndex.save finding)
+      index.repartition(col("band"))
+        .write.mode("overwrite").partitionBy("band").parquet(s"$path/sigs")
+    }
+
+  def load(spark: SparkSession, path: String): DataFrame =
+    loadImpl(spark, path, tolerateTornAppend = false)
 
   /** Like [[AnnIndex]]'s marker (r12), the marker records WHICH mutation
     * was in flight: a torn overwrite (save/retire/compact) destroyed the
@@ -95,41 +97,11 @@ object DedupIndex {
     * rows — the previous complete state is intact underneath, and
     * replaying the interrupted batch repairs it.
     */
-  private def writeMarker(
-      spark: SparkSession, path: String, complete: Boolean,
-      op: String): Unit =
-    spark.range(0L, 1L, 1L, 1)
-      .select(lit(complete).as("complete"), lit(op).as("op"))
-      .write.mode("overwrite").parquet(s"$path/complete")
-
-  def load(spark: SparkSession, path: String): DataFrame =
-    loadImpl(spark, path, tolerateTornAppend = false)
-
   private def loadImpl(
       spark: SparkSession, path: String,
       tolerateTornAppend: Boolean): DataFrame = {
-    val marker =
-      try spark.read.parquet(s"$path/complete").head()
-      catch {
-        case _: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalStateException(
-            s"DedupIndex at $path has no completion marker — not a " +
-              "saved index (or a pre-r11 root layout; re-save it)")
-      }
-    // pre-r12 markers have no `op` column: treat as an overwrite op
-    // (the conservative reading — refuse the torn state)
-    val op =
-      if (marker.schema.fieldNames.contains("op"))
-        marker.getAs[String]("op")
-      else "save"
-    if (!marker.getAs[Boolean]("complete") &&
-        !(tolerateTornAppend && op == "append"))
-      throw new IllegalStateException(
-        s"DedupIndex at $path is a partial $op (interrupted between " +
-          "marker and signature rows) — " +
-          (if (op == "append")
-             "replay the interrupted append batch to repair it"
-           else "rebuild or re-save it"))
+    Artifact.open(spark, path, "DedupIndex",
+      tolerateTornAppend = tolerateTornAppend)
     spark.read.parquet(s"$path/sigs")
   }
 
@@ -239,9 +211,9 @@ object DedupIndex {
   def retire(path: String, ids: DataFrame): Unit = {
     val spark = ids.sparkSession
     val retained = Checkpoints.checkpoint(retire(load(spark, path), ids))
-    writeMarker(spark, path, complete = false, op = "retire")
-    retained.write.mode("overwrite").partitionBy("band").parquet(s"$path/sigs")
-    writeMarker(spark, path, complete = true, op = "retire")
+    Artifact.save(spark, path, op = "retire") {
+      retained.write.mode("overwrite").partitionBy("band").parquet(s"$path/sigs")
+    }
   }
 
   /** Persist an ingest: append ONLY the batch's not-yet-indexed
@@ -263,9 +235,9 @@ object DedupIndex {
     val fresh = Checkpoints.checkpoint(
       freshSigs(loadImpl(spark, path, tolerateTornAppend = true),
         signatures(newDocs)))
-    writeMarker(spark, path, complete = false, op = "append")
-    fresh.write.mode("append").partitionBy("band").parquet(s"$path/sigs")
-    writeMarker(spark, path, complete = true, op = "append")
+    Artifact.save(spark, path, op = "append") {
+      fresh.write.mode("append").partitionBy("band").parquet(s"$path/sigs")
+    }
   }
 
   /** Rewrite the accumulated append files into a bounded number of

@@ -19,7 +19,7 @@ import graft.functions.Portable._
   * within the probed cells: against `ann_ivf` at the same nprobe it
   * scores only the vectors the graph walk actually visits instead of
   * every member of every probed cell — the recall-vs-scan-fraction
-  * dial [[graft.GraphTune]] measures.
+  * dial measured in records/GRAPH_TUNE_r17.txt–r19.
   *
   * Spark shape: every hop is a bounded relational round (the G13
   * iteration discipline) — frontier ⋈ edges is ≤ queries × beam × k
@@ -49,7 +49,8 @@ object GraphAnnOps {
   private[graft] val GRAPH_DEGREE = 8
 
   /** Beam search over a built index for the standard query subset —
-    * the seam [[graft.GraphTune]] drives at explicit dials.
+    * the seam the records/GRAPH_TUNE_r1*.txt measurements drove at
+    * explicit dials.
     */
   private[graft] def graphSearch(
       e: DataFrame,
@@ -61,8 +62,9 @@ object GraphAnnOps {
     graphSearchImpl(e, idx, beam, hops, topK, nprobe)._1
 
   /** [[graphSearch]] plus the distinct (q_id, vec_id) pairs the walk
-    * actually SCORED — the scan-fraction numerator [[graft.GraphTune]]
-    * prices against ann_ivf's full probed-cell scan. The op path never
+    * actually SCORED — the scan-fraction numerator the
+    * records/GRAPH_TUNE_r1*.txt measurements price against ann_ivf's
+    * full probed-cell scan. The op path never
     * materializes the second frame (laziness: unconsumed = unpaid).
     */
   private[graft] def graphSearchImpl(

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -226,7 +224,7 @@ object HnswOps {
 
   // ---- persisted hierarchy (build-once per corpus, the E19 pattern) ----
 
-  private val memo = new ConcurrentHashMap[String, String]()
+  private val memo = new Artifact.Memo[String]
 
   /** The corpus' hierarchy edges over its base [[KnnIndex]], built and
     * written AT MOST ONCE per (corpus, geometry) per session — the
@@ -239,13 +237,12 @@ object HnswOps {
     val levels = levelsFor(n)
     val key = s"${CorpusKey.key(d, "embeddings.parquet")}#hnsw" +
       s"#c${idx.cells}#l$levels#m$M_UP#r$R_BRIDGE"
-    val path = memo.computeIfAbsent(key, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_hnsw").toString + "/hier"
+    val path = memo(key) {
+      val p = Artifact.scratchDir("graft_hnsw") + "/hier"
       hierEdges(idx.vectors, idx.micros, levels)
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
     s.read.parquet(path)
   }
 

@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared filesystem discipline for the persisted-index family
-  * ([[IvfPqIndex]], [[KnnIndex]]) and the parquet sink log's compaction
+/** Shared filesystem discipline for the artifacts that rewrite in place
+  * ([[IvfPqIndex]], [[KnnIndex]], [[LmIndex]] — through
+  * [[Artifact.replace]]/[[Artifact.open]]) and the parquet sink log's compaction
   * ([[graft.sources.ParquetSink]]): staged-sibling rewrites committed by
   * atomic directory rename, with load-time repair of any interrupted
   * swap — factored (r17) from [[IvfPqIndex]] so every rewrite mutates
@@ -25,12 +26,6 @@ private[graft] object IndexFs {
   }
 
   def stagedPath(path: String): String = path + ".staged"
-
-  /** True iff the `complete` marker at `path` reads complete. */
-  def markerComplete(spark: SparkSession, path: String): Boolean =
-    try spark.read.parquet(s"$path/complete").head()
-      .getAs[Boolean]("complete")
-    catch { case _: Exception => false }
 
   /** Commit a fully-written sibling at `path`.staged over the live
     * index: displace the live directory to `path`.old, rename the
@@ -55,20 +50,16 @@ private[graft] object IndexFs {
   }
 
   /** Repair an interrupted [[swapInto]] — called by every load. If the
-    * live name is missing, promote the complete staged copy (crash
-    * between the two renames) or restore the displaced previous index
-    * (crash after displacing with a torn staged copy — cannot happen in
-    * swapInto's order, but cheap to cover). With the live name present,
-    * leftover `.staged`/`.old` siblings are an uncommitted mutation or
-    * an already-promoted swap's debris — delete them, which rolls the
-    * uncommitted retire/compact back to the intact previous index.
-    */
-  def recoverSwap(spark: SparkSession, path: String): Unit =
-    recoverSwap(spark, path, markerComplete(spark, stagedPath(path)))
-
-  /** [[recoverSwap]] for a rewrite that marks its staged copy complete
-    * its own way: `stagedComplete` is asked only when the live name is
-    * missing and a staged copy exists.
+    * live name is missing, promote the staged copy when `stagedComplete`
+    * (crash between the two renames) or restore the displaced previous
+    * index (crash after displacing with a torn staged copy — cannot
+    * happen in swapInto's order, but cheap to cover). With the live name
+    * present, leftover `.staged`/`.old` siblings are an uncommitted
+    * mutation or an already-promoted swap's debris — delete them, which
+    * rolls the uncommitted retire/compact back to the intact previous
+    * index. `stagedComplete` is asked only when the live name is missing
+    * and a staged copy exists; artifacts pass their completion marker
+    * ([[Artifact.open]]), the sink log its own test.
     */
   def recoverSwap(spark: SparkSession, path: String,
       stagedComplete: => Boolean): Unit = {

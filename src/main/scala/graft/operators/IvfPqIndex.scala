@@ -105,13 +105,6 @@ object IvfPqIndex {
       index.vectors, q, probeList = Some(probeLit))
   }
 
-  private def writeMarker(
-      spark: SparkSession, path: String, complete: Boolean,
-      op: String): Unit =
-    spark.range(0L, 1L, 1L, 1)
-      .select(lit(complete).as("complete"), lit(op).as("op"))
-      .write.mode("overwrite").parquet(s"$path/complete")
-
   /** Persist: marker bracket around meta (codebook + dials), centroids,
     * vectors, and the cell-partitioned codes — `complete=false` first,
     * so a crash mid-save refuses to load instead of probing codes under
@@ -119,53 +112,35 @@ object IvfPqIndex {
     */
   def save(index: Index, path: String): Unit = {
     val spark = index.codes.sparkSession
-    writeMarker(spark, path, complete = false, op = "save")
-    spark.range(0L, 1L, 1L, 1)
-      .select(lit(index.cells).as("cells"), lit(index.nprobe).as("nprobe"),
-        lit(index.k).as("k"), lit(index.rerank).as("rerank"),
-        typedLit(index.codebook.toSeq).as("codebook"))
-      .write.mode("overwrite").parquet(s"$path/meta")
-    index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    index.vectors.write.mode("overwrite").parquet(s"$path/vectors")
-    // the inverted file: one directory per coarse cell (cells ≤ 65536 by
-    // the ivfCellsFor clamp, so the partition count is bounded); cell
-    // values are ints on disk and widen back to the engine's long ids
-    // at load
-    index.codes
-      .withColumn("cell", col("cell").cast("int"))
-      // repartition on the partition column before the partitioned
-      // write (r20, guide §6 small files — the KnnIndex.save finding)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
-    writeMarker(spark, path, complete = true, op = "save")
+    Artifact.save(spark, path) {
+      spark.range(0L, 1L, 1L, 1)
+        .select(lit(index.cells).as("cells"), lit(index.nprobe).as("nprobe"),
+          lit(index.k).as("k"), lit(index.rerank).as("rerank"),
+          typedLit(index.codebook.toSeq).as("codebook"))
+        .write.mode("overwrite").parquet(s"$path/meta")
+      index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
+      index.vectors.write.mode("overwrite").parquet(s"$path/vectors")
+      // the inverted file: one directory per coarse cell (cells ≤ 65536
+      // by the ivfCellsFor clamp, so the partition count is bounded);
+      // cell values are ints on disk and widen back to the engine's long
+      // ids at load
+      index.codes
+        .withColumn("cell", col("cell").cast("int"))
+        // repartition on the partition column before the partitioned
+        // write (r20, guide §6 small files — the KnnIndex.save finding)
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
+    }
   }
 
   def load(spark: SparkSession, path: String): Index =
     loadImpl(spark, path, tolerateTornAppend = false)
 
-  private def stagedPath(path: String): String = IndexFs.stagedPath(path)
-
-  // staged-sibling swap + crash repair live in [[IndexFs]] (r17 —
-  // shared with KnnIndex)
-  private def swapInto(spark: SparkSession, path: String): Unit =
-    IndexFs.swapInto(spark, path)
-
-  private def recoverSwap(spark: SparkSession, path: String): Unit =
-    IndexFs.recoverSwap(spark, path)
-
   private def loadImpl(
       spark: SparkSession, path: String,
       tolerateTornAppend: Boolean): Index = {
-    recoverSwap(spark, path)
-    val m = spark.read.parquet(s"$path/complete").head()
-    val op = m.getAs[String]("op")
-    if (!m.getAs[Boolean]("complete") &&
-        !(tolerateTornAppend && op == "append"))
-      throw new IllegalStateException(
-        s"IvfPqIndex at $path is a partial $op — " +
-          (if (op == "append")
-             "replay the interrupted append batch to repair it"
-           else "rebuild or re-save it"))
+    Artifact.open(spark, path, "IvfPqIndex", swaps = true,
+      tolerateTornAppend = tolerateTornAppend)
     val meta = spark.read.parquet(s"$path/meta").head()
     Index(
       spark.read.parquet(s"$path/codes")
@@ -207,11 +182,11 @@ object IvfPqIndex {
         call_function("pql_encode", col("rv"),
           typedLit(idx.codebook.toSeq), lit(AnnOps.PQ_SUBDIM)).as("codes"))
         .join(broadcast(landedC), Seq("vec_id"), "left_anti"))
-    writeMarker(spark, path, complete = false, op = "append")
-    freshV.write.mode("append").parquet(s"$path/vectors")
-    freshC.withColumn("cell", col("cell").cast("int"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
-    writeMarker(spark, path, complete = true, op = "append")
+    Artifact.save(spark, path, op = "append") {
+      freshV.write.mode("append").parquet(s"$path/vectors")
+      freshC.withColumn("cell", col("cell").cast("int"))
+        .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
+    }
   }
 
   /** Drop retired ids in-session — codes and vectors anti-join the
@@ -235,8 +210,7 @@ object IvfPqIndex {
   def retire(path: String, ids: DataFrame): Unit = {
     val spark = ids.sparkSession
     val idx = retire(load(spark, path), ids)
-    save(idx, stagedPath(path))
-    swapInto(spark, path)
+    Artifact.replace(spark, path)(save(idx, _))
   }
 
   /** Small-file compaction of the accumulated append files: clustering
@@ -249,10 +223,8 @@ object IvfPqIndex {
   def compact(path: String, partitions: Int = 8): Unit = {
     val spark = SparkSession.active
     val idx = load(spark, path)
-    save(idx.copy(
+    Artifact.replace(spark, path)(save(idx.copy(
       codes = idx.codes.repartition(partitions, col("cell")),
-      vectors = idx.vectors.repartition(partitions, col("vec_id"))),
-      stagedPath(path))
-    swapInto(spark, path)
+      vectors = idx.vectors.repartition(partitions, col("vec_id"))), _))
   }
 }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -157,60 +155,43 @@ object KnnIndex {
       s"(n=$n, min=$mn, max=$mx, digest=${dig.getOrElse("-")})"
   }
 
-  private def writeMarker(
-      spark: SparkSession, path: String, complete: Boolean,
-      op: String, fp: Option[BatchFp] = None): Unit =
-    spark.range(0L, 1L, 1L, 1)
-      .select(lit(complete).as("complete"), lit(op).as("op"),
-        lit(fp.map(_.n).getOrElse(-1L)).as("batch_n"),
-        lit(fp.map(_.mn).getOrElse(-1L)).as("batch_min"),
-        lit(fp.map(_.mx).getOrElse(-1L)).as("batch_max"),
-        lit(fp.flatMap(_.dig).getOrElse(0L)).as("batch_dig"))
-      .write.mode("overwrite").parquet(s"$path/complete")
-
   /** Persist: marker bracket around meta (pinned quantizer + dials),
     * the cell-partitioned member and edge frames, and the seed table.
     */
   def save(index: Index, path: String): Unit = {
     val spark = index.edges.sparkSession
-    writeMarker(spark, path, complete = false, op = "save")
-    spark.range(0L, 1L, 1L, 1).select(
-      lit(index.cells).as("cells"), lit(index.rounds).as("rounds"),
-      lit(index.k).as("k"), lit(SEEDS).as("seeds_per_cell"),
-      lit(index.sub.map(_.tables).getOrElse(0)).as("sub_tables"),
-      lit(index.sub.map(_.planes).getOrElse(0)).as("sub_planes"),
-      lit(index.div).as("div"),
-      lit(index.micros.headOption.map(_.length).getOrElse(0)).as("dim"),
-      typedLit(index.micros.map(_.toSeq).toSeq).as("micros"))
-      .write.mode("overwrite").parquet(s"$path/meta")
-    // repartition on the partition column before the partitioned write
-    // (r20, guide §6 small files): the member/edge frames arrive on the
-    // engine's compute partitioning, so every task held a slice of
-    // every cell — 518 parquet files for a 2000-row gate index, and
-    // commit overhead dominated the save (5.8 s measured). Keyed on
-    // cell, each cell's rows land in one task (locally: one file per
-    // cell; at scale the same hash spread across the conf width).
-    //
-    // The three data writes between the markers are INDEPENDENT, so
-    // they overlap from driver threads (guide §2.6) — the save prices
-    // as the slowest write instead of their sum. The marker bracket
-    // stays sequential: incomplete strictly before any data write,
-    // complete strictly after all three.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val writes = Seq(
-      Future(index.vectors.withColumn("cell", col("cell").cast("int"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$path/vectors")),
-      Future(index.edges.withColumn("cell", col("cell").cast("int"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$path/edges")),
-      Future(index.seeds.write.mode("overwrite").parquet(s"$path/seeds")))
-    writes.foreach(Await.result(_, Duration.Inf))
-    writeMarker(spark, path, complete = true, op = "save")
+    Artifact.save(spark, path) {
+      spark.range(0L, 1L, 1L, 1).select(
+        lit(index.cells).as("cells"), lit(index.rounds).as("rounds"),
+        lit(index.k).as("k"), lit(SEEDS).as("seeds_per_cell"),
+        lit(index.sub.map(_.tables).getOrElse(0)).as("sub_tables"),
+        lit(index.sub.map(_.planes).getOrElse(0)).as("sub_planes"),
+        lit(index.div).as("div"),
+        lit(index.micros.headOption.map(_.length).getOrElse(0)).as("dim"),
+        typedLit(index.micros.map(_.toSeq).toSeq).as("micros"))
+        .write.mode("overwrite").parquet(s"$path/meta")
+      // repartition on the partition column before the partitioned write
+      // (r20, guide §6 small files): the member/edge frames arrive on the
+      // engine's compute partitioning, so every task held a slice of
+      // every cell — 518 parquet files for a 2000-row gate index, and
+      // commit overhead dominated the save (5.8 s measured). Keyed on
+      // cell, each cell's rows land in one task (locally: one file per
+      // cell; at scale the same hash spread across the conf width).
+      //
+      // The three data writes are INDEPENDENT, so they overlap (guide
+      // §2.6) — the save prices as the slowest write instead of their
+      // sum, inside the strictly ordered marker bracket.
+      Artifact.inParallel(
+        () => index.vectors.withColumn("cell", col("cell").cast("int"))
+          .repartition(col("cell"))
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$path/vectors"),
+        () => index.edges.withColumn("cell", col("cell").cast("int"))
+          .repartition(col("cell"))
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(s"$path/edges"),
+        () => index.seeds.write.mode("overwrite").parquet(s"$path/seeds"))
+    }
   }
 
   def load(spark: SparkSession, path: String): Index =
@@ -223,33 +204,19 @@ object KnnIndex {
   private def loadImpl(
       spark: SparkSession, path: String,
       tolerateTornAppend: Boolean): (Index, Option[BatchFp]) = {
-    IndexFs.recoverSwap(spark, path)
-    val mDf = try spark.read.parquet(s"$path/complete")
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"no KnnIndex at $path (missing completion marker)")
-    }
-    val m = mDf.head()
-    val mHas = mDf.schema.fieldNames.toSet
-    val op = m.getAs[String]("op")
-    val torn = !m.getAs[Boolean]("complete")
-    if (torn && !(tolerateTornAppend && op == "append"))
-      throw new IllegalStateException(
-        s"KnnIndex at $path is a partial $op — " +
-          (if (op == "append")
-             "replay the interrupted append batch to repair it"
-           else "rebuild or re-save it"))
     // pre-r18 markers carry no fingerprint fields (r18 advisory: don't
     // refuse to load an old artifact) — a torn pre-r18 append falls
     // back to the original "replay the batch" contract, unchecked
     val tornFp: Option[BatchFp] =
-      if (torn && op == "append" && mHas("batch_n"))
-        Some(BatchFp(m.getAs[Long]("batch_n"),
-          m.getAs[Long]("batch_min"), m.getAs[Long]("batch_max"),
-          if (mHas("batch_dig")) Some(m.getAs[Long]("batch_dig"))
-          else None))
-      else None
+      Artifact.open(spark, path, "KnnIndex", swaps = true,
+        tolerateTornAppend = tolerateTornAppend).collect {
+        case m if m.schema.fieldNames.contains("batch_n") =>
+          BatchFp(m.getAs[Long]("batch_n"),
+            m.getAs[Long]("batch_min"), m.getAs[Long]("batch_max"),
+            if (m.schema.fieldNames.contains("batch_dig"))
+              Some(m.getAs[Long]("batch_dig"))
+            else None)
+      }
     val metaDf = spark.read.parquet(s"$path/meta")
     val meta = metaDf.head()
     val dim = meta.getAs[Int]("dim")
@@ -334,17 +301,18 @@ object KnnIndex {
     val seedsAll = Checkpoints.checkpoint(
       idx.seeds.filter(!col("cell").isin(affected: _*))
         .unionByName(seedRanks(members)))
-    writeMarker(spark, path, complete = false, op = "append",
-      fp = Some(fp))
     val dyn = Map("partitionOverwriteMode" -> "dynamic")
-    members.withColumn("cell", col("cell").cast("int"))
-      .write.mode("overwrite").options(dyn).partitionBy("cell")
-      .parquet(s"$path/vectors")
-    edges2.withColumn("cell", col("cell").cast("int"))
-      .write.mode("overwrite").options(dyn).partitionBy("cell")
-      .parquet(s"$path/edges")
-    seedsAll.write.mode("overwrite").parquet(s"$path/seeds")
-    writeMarker(spark, path, complete = true, op = "append")
+    Artifact.save(spark, path, op = "append", extra = Seq(
+      lit(fp.n).as("batch_n"), lit(fp.mn).as("batch_min"),
+      lit(fp.mx).as("batch_max"), lit(fp.dig.getOrElse(0L)).as("batch_dig"))) {
+      members.withColumn("cell", col("cell").cast("int"))
+        .write.mode("overwrite").options(dyn).partitionBy("cell")
+        .parquet(s"$path/vectors")
+      edges2.withColumn("cell", col("cell").cast("int"))
+        .write.mode("overwrite").options(dyn).partitionBy("cell")
+        .parquet(s"$path/edges")
+      seedsAll.write.mode("overwrite").parquet(s"$path/seeds")
+    }
   }
 
   /** Drop retired ids in-session: members, seeds, and every edge
@@ -384,13 +352,12 @@ object KnnIndex {
     */
   def retire(path: String, ids: DataFrame): Unit = {
     val spark = ids.sparkSession
-    save(retire(load(spark, path), ids), IndexFs.stagedPath(path))
-    IndexFs.swapInto(spark, path)
+    Artifact.replace(spark, path)(save(retire(load(spark, path), ids), _))
   }
 
   // ---- board consumption (build-once per corpus) ----
 
-  private val memo = new ConcurrentHashMap[String, String]()
+  private val memo = new Artifact.Memo[String]
 
   /** The corpus' saved index at a geometry, built and persisted AT MOST
     * ONCE per (corpus fingerprint, geometry) per session; every later
@@ -411,18 +378,14 @@ object KnnIndex {
     val subKey = sub.map(g => s"${g.tables}x${g.planes}").getOrElse("none")
     val key = s"${CorpusKey.key(d, "embeddings.parquet")}#c$cells" +
       s"#r$rounds#k$k#s$subKey#p$SEEDS#d$div"
-    val path = memo.computeIfAbsent(key, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_knn_idx").toString + "/knn"
+    val path = memo(key) {
+      val p = Artifact.scratchDir("graft_knn_idx") + "/knn"
       val e = Caches.persist(AnnOps.withNormDf(Tables.embeddings(s, d)))
       save(buildFrom(e,
         CentroidIndex.microsForCorpus(s, d, cells, rounds),
         cells, rounds, sub, k, div), p)
       p
-    })
+    }
     load(s, path)
   }
-
-  /** Drop memoized index paths (tests). */
-  def clearMemo(): Unit = memo.clear()
 }

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -77,12 +75,7 @@ object LangIndex {
       TextOps.langArgmax("p_").as("learned_lang"): _*)
   }
 
-  // ---- persistence (the artifact contract) ----
-
-  private def writeMarker(
-      spark: SparkSession, path: String, complete: Boolean): Unit =
-    spark.range(0L, 1L, 1L, 1).select(lit(complete).as("complete"))
-      .write.mode("overwrite").parquet(s"$path/complete")
+  // ---- persistence (the artifact contract, [[Artifact]]) ----
 
   /** Persist the per-language weight vectors + biases plus the
     * feature/training config that makes them meaningful (bucket count,
@@ -91,22 +84,22 @@ object LangIndex {
     * the artifact is self-describing about its own argmax order.
     */
   def save(spark: SparkSession, model: Model, path: String): Unit = {
-    writeMarker(spark, path, complete = false)
     import spark.implicits._
-    langs.zipWithIndex.map { case (l, i) =>
-      (i, l, model.weights(i).toSeq, model.bias(i))
-    }.toDF("lang_idx", "lang", "weights", "bias")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/model")
-    spark.range(0L, 1L, 1L, 1).select(
-      lit(QualityClassifier.NumBuckets).as("num_buckets"),
-      lit(QualityClassifier.Epochs).as("epochs"),
-      lit(LangClassifier.EtaDen).as("eta_den"),
-      lit(QualityClassifier.BetaNum).as("beta_num"),
-      lit(QualityClassifier.BetaDen).as("beta_den"),
-      typedLit(langs).as("langs"))
-      .write.mode("overwrite").parquet(s"$path/config")
-    writeMarker(spark, path, complete = true)
+    Artifact.save(spark, path) {
+      langs.zipWithIndex.map { case (l, i) =>
+        (i, l, model.weights(i).toSeq, model.bias(i))
+      }.toDF("lang_idx", "lang", "weights", "bias")
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$path/model")
+      spark.range(0L, 1L, 1L, 1).select(
+        lit(QualityClassifier.NumBuckets).as("num_buckets"),
+        lit(QualityClassifier.Epochs).as("epochs"),
+        lit(LangClassifier.EtaDen).as("eta_den"),
+        lit(QualityClassifier.BetaNum).as("beta_num"),
+        lit(QualityClassifier.BetaDen).as("beta_den"),
+        typedLit(langs).as("langs"))
+        .write.mode("overwrite").parquet(s"$path/config")
+    }
   }
 
   /** Reopen a saved model. Refuses a partial save, a model whose
@@ -116,15 +109,7 @@ object LangIndex {
     * not fail.
     */
   def load(spark: SparkSession, path: String): Model = {
-    val marker = try spark.read.parquet(s"$path/complete").head()
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"no LangIndex at $path (missing completion marker)")
-    }
-    if (!marker.getAs[Boolean]("complete"))
-      throw new IllegalStateException(
-        s"LangIndex at $path is a partial save — retrain or re-save")
+    Artifact.open(spark, path, "LangIndex")
     val cfg = spark.read.parquet(s"$path/config").head()
     val nb = cfg.getAs[Int]("num_buckets")
     if (nb != QualityClassifier.NumBuckets)
@@ -150,7 +135,7 @@ object LangIndex {
 
   // ---- board consumption (train-once per corpus) ----
 
-  private val memo = new ConcurrentHashMap[String, Model]()
+  private val memo = new Artifact.Memo[Model]
 
   /** The corpus' trained model, derived at most once per (directory,
     * documents-fingerprint) per session — the board-harness stand-in
@@ -161,9 +146,5 @@ object LangIndex {
     * returns the bit-identical model an inline retrain would.
     */
   def forCorpus(s: SparkSession, d: String): Model =
-    memo.computeIfAbsent(QualityIndex.corpusKey(d),
-      _ => train(graft.Tables.documents(s, d)))
-
-  /** Drop memoized models (tests). */
-  def clearMemo(): Unit = memo.clear()
+    memo(QualityIndex.corpusKey(d))(train(graft.Tables.documents(s, d)))
 }

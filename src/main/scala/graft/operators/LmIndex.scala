@@ -231,21 +231,15 @@ object LmIndex {
   /** Persist a trigram model marker-bracketed (the [[save]] contract,
     * one more frame).
     */
-  def save3(spark: SparkSession, ref: Ref3, path: String): Unit = {
-    writeMarker(spark, path, complete = false)
-    // the three data writes are independent — overlap them from driver
-    // threads (r20, guide §2.6, the KnnIndex.save recipe); the marker
-    // bracket stays strictly sequential
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    Seq(
-      Future(ref.trigrams.write.mode("overwrite").parquet(s"$path/trigrams")),
-      Future(ref.bigrams.write.mode("overwrite").parquet(s"$path/bigrams")),
-      Future(ref.vocab.write.mode("overwrite").parquet(s"$path/vocab")))
-      .foreach(Await.result(_, Duration.Inf))
-    writeMarker(spark, path, complete = true)
-  }
+  def save3(spark: SparkSession, ref: Ref3, path: String): Unit =
+    // the three data writes are independent — overlapped (r20, guide
+    // §2.6, the KnnIndex.save recipe) inside the ordered marker bracket
+    Artifact.save(spark, path) {
+      Artifact.inParallel(
+        () => ref.trigrams.write.mode("overwrite").parquet(s"$path/trigrams"),
+        () => ref.bigrams.write.mode("overwrite").parquet(s"$path/bigrams"),
+        () => ref.vocab.write.mode("overwrite").parquet(s"$path/vocab"))
+    }
 
   /** Reopen a saved trigram model. Refuses partial saves, a vocab that
     * disagrees with the bigram frame, and a trigram frame whose
@@ -255,16 +249,7 @@ object LmIndex {
     * corpora and the interpolation would mix incompatible models.
     */
   def load3(spark: SparkSession, path: String): Ref3 = {
-    recoverSwap(spark, path)
-    val marker = try spark.read.parquet(s"$path/complete").head()
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"no LmIndex(3) at $path (missing completion marker)")
-    }
-    if (!marker.getAs[Boolean]("complete"))
-      throw new IllegalStateException(
-        s"LmIndex(3) at $path is a partial save — retrain or re-save")
+    Artifact.open(spark, path, "LmIndex(3)", swaps = true)
     val tg = spark.read.parquet(s"$path/trigrams")
     val bg = spark.read.parquet(s"$path/bigrams")
     val vocab = spark.read.parquet(s"$path/vocab")
@@ -289,8 +274,7 @@ object LmIndex {
 
   // ---- board consumption (train-once per corpus, the E19 pattern) ----
 
-  private val memo3 =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val memo3 = new Artifact.Memo[String]
 
   /** The corpus' even-doc_id-half [[Ref3]] as a persisted artifact,
     * trained and saved AT MOST ONCE per corpus fingerprint per session
@@ -307,18 +291,14 @@ object LmIndex {
     */
   def forCorpusRefHalf(s: SparkSession, d: String): Ref3 = {
     val key = s"${CorpusKey.key(d, "documents.parquet")}#ref3half"
-    val path = memo3.computeIfAbsent(key, _ => {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_lm3").toString + "/lm3"
+    val path = memo3(key) {
+      val p = Artifact.scratchDir("graft_lm3") + "/lm3"
       save3(s, train3(graft.Tables.documents(s, d)
         .filter(col("doc_id") % 2 === 0)), p)
       p
-    })
+    }
     load3(s, path)
   }
-
-  /** Drop memoized model paths (tests). */
-  def clearMemo3(): Unit = memo3.clear()
 
   /** Fold new reference documents into a saved trigram model — both
     * count frames merge by summed union ([[append]]'s discipline,
@@ -334,29 +314,21 @@ object LmIndex {
     val mbg = Checkpoints.checkpoint(
       live.bigrams.unionByName(add.bigrams)
         .groupBy("w1", "w2").agg(sum(col("cnt")).as("cnt")))
-    save3(spark,
-      Ref3(mtg, mbg, mbg.select(countDistinct(col("w2")).as("v"))),
-      stagedPath(path))
-    swapInto(spark, path)
+    Artifact.replace(spark, path)(save3(spark,
+      Ref3(mtg, mbg, mbg.select(countDistinct(col("w2")).as("v"))), _))
   }
 
-  // ---- persistence (the artifact contract) ----
-
-  private def writeMarker(
-      spark: SparkSession, path: String, complete: Boolean): Unit =
-    spark.range(0L, 1L, 1L, 1).select(lit(complete).as("complete"))
-      .write.mode("overwrite").parquet(s"$path/complete")
+  // ---- persistence (the artifact contract, [[Artifact]]) ----
 
   /** Persist the model marker-bracketed: `complete=false`, the bigram
     * frame, the 1-row vocab meta, `complete=true`. A crash mid-save
     * refuses to load rather than scoring under half a model.
     */
-  def save(spark: SparkSession, ref: Ref, path: String): Unit = {
-    writeMarker(spark, path, complete = false)
-    ref.bigrams.write.mode("overwrite").parquet(s"$path/bigrams")
-    ref.vocab.write.mode("overwrite").parquet(s"$path/vocab")
-    writeMarker(spark, path, complete = true)
-  }
+  def save(spark: SparkSession, ref: Ref, path: String): Unit =
+    Artifact.save(spark, path) {
+      ref.bigrams.write.mode("overwrite").parquet(s"$path/bigrams")
+      ref.vocab.write.mode("overwrite").parquet(s"$path/vocab")
+    }
 
   /** Reopen a saved model (repairing an interrupted [[append]] swap
     * first). Refuses a partial save, and refuses a vocab meta that
@@ -365,16 +337,7 @@ object LmIndex {
     * garbage, not fail.
     */
   def load(spark: SparkSession, path: String): Ref = {
-    recoverSwap(spark, path)
-    val marker = try spark.read.parquet(s"$path/complete").head()
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"no LmIndex at $path (missing completion marker)")
-    }
-    if (!marker.getAs[Boolean]("complete"))
-      throw new IllegalStateException(
-        s"LmIndex at $path is a partial save — retrain or re-save")
+    Artifact.open(spark, path, "LmIndex", swaps = true)
     val bg = spark.read.parquet(s"$path/bigrams")
     val vocab = spark.read.parquet(s"$path/vocab")
     val v = vocab.head().getAs[Long]("v")
@@ -387,56 +350,6 @@ object LmIndex {
   }
 
   // ---- incremental maintenance ----
-
-  private def stagedPath(path: String): String = path + ".staged"
-
-  private def hfs(spark: SparkSession, path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def markerComplete(spark: SparkSession, path: String): Boolean =
-    try spark.read.parquet(s"$path/complete").head().getAs[Boolean]("complete")
-    catch { case _: Exception => false }
-
-  /** Commit `path`.staged over the live model by displace + rename —
-    * the [[IvfPqIndex]] swap discipline: every crash window leaves a
-    * COMPLETE model on disk for [[recoverSwap]]. Assumes atomic
-    * directory rename (HDFS/local POSIX — NOT object stores, where
-    * rename is copy+delete; see the IvfPqIndex.swapInto scaladoc).
-    */
-  private def swapInto(spark: SparkSession, path: String): Unit = {
-    val (fs, p) = hfs(spark, path)
-    val st = new org.apache.hadoop.fs.Path(stagedPath(path))
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    fs.delete(old, true)
-    if (fs.exists(p) && !fs.rename(p, old))
-      throw new IllegalStateException(s"could not displace live model $path")
-    if (!fs.rename(st, p))
-      throw new IllegalStateException(
-        s"could not promote staged model ${stagedPath(path)}")
-    fs.delete(old, true)
-    ()
-  }
-
-  /** Repair an interrupted [[swapInto]]: promote a complete staged
-    * copy, restore a displaced previous model, and clear leftover
-    * siblings (rolling an uncommitted append back to the intact
-    * previous model).
-    */
-  private def recoverSwap(spark: SparkSession, path: String): Unit = {
-    val (fs, p) = hfs(spark, path)
-    val st = new org.apache.hadoop.fs.Path(stagedPath(path))
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    if (!fs.exists(p)) {
-      if (fs.exists(st) && markerComplete(spark, stagedPath(path)))
-        fs.rename(st, p)
-      else if (fs.exists(old)) fs.rename(old, p)
-    }
-    if (fs.exists(p)) { fs.delete(st, true); fs.delete(old, true) }
-    ()
-  }
 
   /** Fold new reference documents into a saved model: bigram counts
     * are mergeable (summed union), the vocabulary re-derives from the
@@ -452,9 +365,7 @@ object LmIndex {
     val merged = Checkpoints.checkpoint(
       live.bigrams.unionByName(add.bigrams)
         .groupBy("w1", "w2").agg(sum(col("cnt")).as("cnt")))
-    save(spark,
-      Ref(merged, merged.select(countDistinct(col("w2")).as("v"))),
-      stagedPath(path))
-    swapInto(spark, path)
+    Artifact.replace(spark, path)(save(spark,
+      Ref(merged, merged.select(countDistinct(col("w2")).as("v"))), _))
   }
 }

@@ -69,13 +69,6 @@ object PqIndex {
     AnnOps.pqSearch(index.codebook, index.k, index.rerank, topK,
       index.codes, index.vectors, AnnOps.withNormDf(queries))
 
-  private def writeMarker(
-      spark: SparkSession, path: String, complete: Boolean,
-      op: String): Unit =
-    spark.range(0L, 1L, 1L, 1)
-      .select(lit(complete).as("complete"), lit(op).as("op"))
-      .write.mode("overwrite").parquet(s"$path/complete")
-
   /** Persist: marker bracket around meta (codebook + dials), vectors,
     * codes — `complete=false` first, so a crash mid-save refuses to
     * load instead of probing stored codes under a half-written
@@ -83,14 +76,14 @@ object PqIndex {
     */
   def save(index: Index, path: String): Unit = {
     val spark = index.codes.sparkSession
-    writeMarker(spark, path, complete = false, op = "save")
-    spark.range(0L, 1L, 1L, 1)
-      .select(lit(index.k).as("k"), lit(index.rerank).as("rerank"),
-        typedLit(index.codebook.toSeq).as("codebook"))
-      .write.mode("overwrite").parquet(s"$path/meta")
-    index.vectors.write.mode("overwrite").parquet(s"$path/vectors")
-    index.codes.write.mode("overwrite").parquet(s"$path/codes")
-    writeMarker(spark, path, complete = true, op = "save")
+    Artifact.save(spark, path) {
+      spark.range(0L, 1L, 1L, 1)
+        .select(lit(index.k).as("k"), lit(index.rerank).as("rerank"),
+          typedLit(index.codebook.toSeq).as("codebook"))
+        .write.mode("overwrite").parquet(s"$path/meta")
+      index.vectors.write.mode("overwrite").parquet(s"$path/vectors")
+      index.codes.write.mode("overwrite").parquet(s"$path/codes")
+    }
   }
 
   def load(spark: SparkSession, path: String): Index =
@@ -99,15 +92,8 @@ object PqIndex {
   private def loadImpl(
       spark: SparkSession, path: String,
       tolerateTornAppend: Boolean): Index = {
-    val m = spark.read.parquet(s"$path/complete").head()
-    val op = m.getAs[String]("op")
-    if (!m.getAs[Boolean]("complete") &&
-        !(tolerateTornAppend && op == "append"))
-      throw new IllegalStateException(
-        s"PqIndex at $path is a partial $op — " +
-          (if (op == "append")
-             "replay the interrupted append batch to repair it"
-           else "rebuild or re-save it"))
+    Artifact.open(spark, path, "PqIndex",
+      tolerateTornAppend = tolerateTornAppend)
     val meta = spark.read.parquet(s"$path/meta").head()
     Index(spark.read.parquet(s"$path/codes"),
       spark.read.parquet(s"$path/vectors"),
@@ -142,10 +128,10 @@ object PqIndex {
     val freshC = Checkpoints.checkpoint(
       AnnOps.pqEncodeDf(e, idx.codebook)
         .join(broadcast(landedC), Seq("vec_id"), "left_anti"))
-    writeMarker(spark, path, complete = false, op = "append")
-    freshV.write.mode("append").parquet(s"$path/vectors")
-    freshC.write.mode("append").parquet(s"$path/codes")
-    writeMarker(spark, path, complete = true, op = "append")
+    Artifact.save(spark, path, op = "append") {
+      freshV.write.mode("append").parquet(s"$path/vectors")
+      freshC.write.mode("append").parquet(s"$path/codes")
+    }
   }
 
   /** Drop retired ids in-session — both frames anti-join the broadcast

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -81,31 +79,25 @@ object QualityIndex {
         (p >= lit(QualityClassifier.PredThreshold)).as("is_quality_pred"): _*)
   }
 
-  // ---- persistence (the artifact contract) ----
-
-  private def writeMarker(
-      spark: SparkSession, path: String, complete: Boolean): Unit =
-    spark.range(0L, 1L, 1L, 1).select(lit(complete).as("complete"))
-      .write.mode("overwrite").parquet(s"$path/complete")
+  // ---- persistence (the artifact contract, [[Artifact]]) ----
 
   /** Persist weights + bias + the feature/training config that makes
     * the weights meaningful (bucket count, epoch/step dials, decision
     * threshold), bracketed by the standard completion marker.
     */
-  def save(spark: SparkSession, model: Model, path: String): Unit = {
-    writeMarker(spark, path, complete = false)
-    spark.range(0L, 1L, 1L, 1).select(
-      typedLit(model.weights.toSeq).as("weights"),
-      lit(model.bias).as("bias"),
-      lit(QualityClassifier.NumBuckets).as("num_buckets"),
-      lit(QualityClassifier.Epochs).as("epochs"),
-      lit(QualityClassifier.EtaDen).as("eta_den"),
-      lit(QualityClassifier.BetaNum).as("beta_num"),
-      lit(QualityClassifier.BetaDen).as("beta_den"),
-      lit(QualityClassifier.PredThreshold).as("pred_threshold"))
-      .write.mode("overwrite").parquet(s"$path/model")
-    writeMarker(spark, path, complete = true)
-  }
+  def save(spark: SparkSession, model: Model, path: String): Unit =
+    Artifact.save(spark, path) {
+      spark.range(0L, 1L, 1L, 1).select(
+        typedLit(model.weights.toSeq).as("weights"),
+        lit(model.bias).as("bias"),
+        lit(QualityClassifier.NumBuckets).as("num_buckets"),
+        lit(QualityClassifier.Epochs).as("epochs"),
+        lit(QualityClassifier.EtaDen).as("eta_den"),
+        lit(QualityClassifier.BetaNum).as("beta_num"),
+        lit(QualityClassifier.BetaDen).as("beta_den"),
+        lit(QualityClassifier.PredThreshold).as("pred_threshold"))
+        .write.mode("overwrite").parquet(s"$path/model")
+    }
 
   /** Reopen a saved model. Refuses a partial save, and refuses a model
     * whose feature space disagrees with this engine's hasher — weights
@@ -113,15 +105,7 @@ object QualityIndex {
     * fail.
     */
   def load(spark: SparkSession, path: String): Model = {
-    val marker = try spark.read.parquet(s"$path/complete").head()
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"no QualityIndex at $path (missing completion marker)")
-    }
-    if (!marker.getAs[Boolean]("complete"))
-      throw new IllegalStateException(
-        s"QualityIndex at $path is a partial save — retrain or re-save")
+    Artifact.open(spark, path, "QualityIndex")
     val m = spark.read.parquet(s"$path/model").head()
     val nb = m.getAs[Int]("num_buckets")
     if (nb != QualityClassifier.NumBuckets)
@@ -135,7 +119,7 @@ object QualityIndex {
 
   // ---- board consumption (train-once per corpus) ----
 
-  private val memo = new ConcurrentHashMap[String, Model]()
+  private val memo = new Artifact.Memo[Model]
 
   /** Memo key for a corpus directory: [[CorpusKey.key]]'s canonical
     * path + MD5 metadata fingerprint of documents.parquet (r16 — the
@@ -154,8 +138,5 @@ object QualityIndex {
     * the bit-identical model an inline retrain would.
     */
   def forCorpus(s: SparkSession, d: String): Model =
-    memo.computeIfAbsent(corpusKey(d), _ => train(Tables.documents(s, d)))
-
-  /** Drop memoized models (tests). */
-  def clearMemo(): Unit = memo.clear()
+    memo(corpusKey(d))(train(Tables.documents(s, d)))
 }

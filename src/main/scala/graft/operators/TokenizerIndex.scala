@@ -469,7 +469,7 @@ object TokenizerIndex {
     Learned(merges.result(), vocab, base)
   }
 
-  // ---- persistence (the artifact contract) ----
+  // ---- persistence (the artifact contract, [[Artifact]]) ----
 
   /** Persist the artifact: merge table + vocab frame, bracketed by the
     * same completion marker as [[AnnIndex.save]] (complete=false lands
@@ -478,32 +478,19 @@ object TokenizerIndex {
     */
   def save(learned: Learned, path: String): Unit = {
     val spark = learned.vocab.sparkSession
-    writeMarker(spark, path, complete = false)
-    learned.mergesDf(spark).write.mode("overwrite").parquet(s"$path/merges")
-    learned.vocab.write.mode("overwrite").parquet(s"$path/vocab")
-    spark.range(0L, 1L, 1L, 1).select(lit(learned.base).as("base"))
-      .write.mode("overwrite").parquet(s"$path/config")
-    writeMarker(spark, path, complete = true)
+    Artifact.save(spark, path) {
+      learned.mergesDf(spark).write.mode("overwrite").parquet(s"$path/merges")
+      learned.vocab.write.mode("overwrite").parquet(s"$path/vocab")
+      spark.range(0L, 1L, 1L, 1).select(lit(learned.base).as("base"))
+        .write.mode("overwrite").parquet(s"$path/config")
+    }
   }
-
-  private def writeMarker(
-      spark: SparkSession, path: String, complete: Boolean): Unit =
-    spark.range(0L, 1L, 1L, 1).select(lit(complete).as("complete"))
-      .write.mode("overwrite").parquet(s"$path/complete")
 
   /** Reopen a saved artifact: the merge table collects (k rows), the
     * vocab stays a frame. Refuses a partial save.
     */
   def load(spark: SparkSession, path: String): Learned = {
-    val marker = try spark.read.parquet(s"$path/complete").head()
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"no TokenizerIndex at $path (missing completion marker)")
-    }
-    if (!marker.getAs[Boolean]("complete"))
-      throw new IllegalStateException(
-        s"TokenizerIndex at $path is a partial save — retrain or re-save")
+    Artifact.open(spark, path, "TokenizerIndex")
     val merges = spark.read.parquet(s"$path/merges")
       .orderBy(col("rank")).collect()
       .map(r => (r.getAs[Long]("rank"), r.getAs[String]("a"),

@@ -165,7 +165,7 @@ object UnigramLm {
     * word — so the scale discipline is bounding the work per round
     * (|words| · MaxWordLen · MaxPiece map probes + |candidates| cost
     * derivations, both driver-local) and MEASURING the ladder
-    * ([[graft.BenchUnigram]] → records/): a 32k-piece vocabulary over
+    * (records/BENCH_unigram_r18.txt): a 32k-piece vocabulary over
     * a 256k-word head prices in driver minutes at any corpus size,
     * because the corpus only ever pays the one word-count shuffle.
     */
@@ -258,8 +258,7 @@ object UnigramLm {
 
   def train(docs: DataFrame): Model = trainFromCounts(cappedWordCounts(docs))
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Model]()
+  private val memo = new Artifact.Memo[Model]
 
   /** Train-once-per-corpus memo (the [[CorpusKey]] doctrine — C35's
     * consumer path must not re-run the EM loop per query). Training is
@@ -268,11 +267,8 @@ object UnigramLm {
     * fingerprint and retrains.
     */
   def forCorpus(s: SparkSession, d: String): Model =
-    memo.computeIfAbsent(CorpusKey.key(d, "documents.parquet"),
-      _ => train(graft.Tables.documents(s, d)))
-
-  /** Drop memoized models (tests). */
-  def clearMemo(): Unit = memo.clear()
+    memo(CorpusKey.key(d, "documents.parquet"))(
+      train(graft.Tables.documents(s, d)))
 
   /** The board output frame: top-[[OutK]] pieces by (final usage desc,
     * piece) with usage + final cost.
@@ -316,28 +312,23 @@ object UnigramLm {
       .orderBy(col("doc_id"))
   }
 
-  // ---- persistence (the artifact contract) ----
-
-  private def writeMarker(
-      spark: SparkSession, path: String, complete: Boolean): Unit =
-    spark.range(0L, 1L, 1L, 1).select(lit(complete).as("complete"))
-      .write.mode("overwrite").parquet(s"$path/complete")
+  // ---- persistence (the artifact contract, [[Artifact]]) ----
 
   /** Persist pieces + vocabulary segmentations + the config that makes
     * them meaningful, marker-bracketed.
     */
   def save(spark: SparkSession, model: Model, path: String): Unit = {
     import spark.implicits._
-    writeMarker(spark, path, complete = false)
-    model.pieces.toDF("piece", "usage", "cost_q16")
-      .write.mode("overwrite").parquet(s"$path/pieces")
-    model.vocab.map { case (w, seg) => (w, seg.mkString(Sep.toString)) }
-      .toDF("w", "seg")
-      .write.mode("overwrite").parquet(s"$path/vocab")
-    spark.range(0L, 1L, 1L, 1).select(lit(model.tot).as("tot"), lit(model.v).as("v"),
-      lit(MaxPiece).as("max_piece"), lit(Rounds).as("rounds"))
-      .write.mode("overwrite").parquet(s"$path/config")
-    writeMarker(spark, path, complete = true)
+    Artifact.save(spark, path) {
+      model.pieces.toDF("piece", "usage", "cost_q16")
+        .write.mode("overwrite").parquet(s"$path/pieces")
+      model.vocab.map { case (w, seg) => (w, seg.mkString(Sep.toString)) }
+        .toDF("w", "seg")
+        .write.mode("overwrite").parquet(s"$path/vocab")
+      spark.range(0L, 1L, 1L, 1).select(lit(model.tot).as("tot"), lit(model.v).as("v"),
+        lit(MaxPiece).as("max_piece"), lit(Rounds).as("rounds"))
+        .write.mode("overwrite").parquet(s"$path/config")
+    }
   }
 
   /** Reopen a saved model. Refuses a partial save and a config whose
@@ -345,15 +336,7 @@ object UnigramLm {
     * segmentations under a different MaxPiece are a different model.
     */
   def load(spark: SparkSession, path: String): Model = {
-    val marker = try spark.read.parquet(s"$path/complete").head()
-    catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        throw new IllegalStateException(
-          s"no UnigramLm at $path (missing completion marker)")
-    }
-    if (!marker.getAs[Boolean]("complete"))
-      throw new IllegalStateException(
-        s"UnigramLm at $path is a partial save — retrain or re-save")
+    Artifact.open(spark, path, "UnigramLm")
     val cfg = spark.read.parquet(s"$path/config").head()
     val mp = cfg.getAs[Int]("max_piece")
     if (mp != MaxPiece)

@@ -5,7 +5,8 @@ package graft
   * Verify do), no registered entries and no persisted RDDs remain — the
   * session cache is bounded by ONE query's working set, never the
   * board's. Also pins the artifact-mode opt-in (entries survive
-  * releaseScope, end with releaseAll).
+  * releaseScope, end with releaseAll) and the memo policy (per-corpus
+  * memos survive every scope; only Artifact.clearMemos drops them).
   */
 class CacheLifecycleSpec extends SparkSpec {
 
@@ -31,28 +32,36 @@ class CacheLifecycleSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
-  test("pq codebook memo is scope-registered: cleared per query in " +
-      "default mode, kept in artifact mode") {
-    import graft.operators.AnnOps
-    // default (scoped) mode — the bench's attribution contract: nothing,
-    // including driver-side model memos, outlives a query scope
+  test("per-corpus memos are artifacts: they survive releaseScope in " +
+      "both modes and only clearMemos empties them") {
+    import graft.operators.{Artifact, CentroidIndex}
+    Artifact.clearMemos()
+    assert(Artifact.memoEntries == 0)
     SparkEntry.queries("ann_pq")(spark, sf).count()
-    assert(AnnOps.pqCookMemoSize > 0, "the first rep trains the codebook")
+    val trained = Artifact.memoEntries
+    assert(trained > 0, "the first rep trains the codebook")
     Caches.releaseScope()
-    assert(AnnOps.pqCookMemoSize == 0,
-      "scoped release must clear the codebook memo with the frames")
-    // artifact mode — the deployment model keeps trained models
+    assert(Artifact.memoEntries == trained,
+      "a scoped release must keep the memos")
+    // a warm rep after the scope close reuses the trained quantizer
+    SparkEntry.queries("ann_ivf")(spark, sf).count()
+    Caches.releaseScope()
+    val runs = CentroidIndex.trainRuns.get()
+    SparkEntry.queries("ann_ivf")(spark, sf).count()
+    Caches.releaseScope()
+    assert(CentroidIndex.trainRuns.get() == runs,
+      "the warm ann_ivf rep must not retrain across releaseScope")
+    val all = Artifact.memoEntries
     Caches.artifactMode = true
     try {
-      SparkEntry.queries("ann_pq")(spark, sf).count()
       Caches.releaseScope()
-      assert(AnnOps.pqCookMemoSize > 0,
-        "artifact mode keeps the codebook across scopes")
+      assert(Artifact.memoEntries == all, "artifact mode keeps them too")
     } finally {
       Caches.artifactMode = false
       Caches.releaseAll()
-      AnnOps.clearPqCookMemo()
     }
+    Artifact.clearMemos()
+    assert(Artifact.memoEntries == 0, "clearMemos empties every memo")
   }
 
   test("artifact mode keeps entries across scopes until releaseAll") {

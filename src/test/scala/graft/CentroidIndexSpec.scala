@@ -42,7 +42,7 @@ class CentroidIndexSpec extends SparkSpec {
 
   test("forCorpus memoizes: second lookup trains zero times and " +
       "returns the bit-identical model") {
-    CentroidIndex.clearMemo()
+    operators.Artifact.clearMemos()
     val m1 = CentroidIndex.microsForCorpus(spark, sf, cells = 16)
     val runs = CentroidIndex.trainRuns.get()
     val m2 = CentroidIndex.microsForCorpus(spark, sf, cells = 16)

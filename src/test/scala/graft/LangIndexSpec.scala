@@ -85,7 +85,7 @@ class LangIndexSpec extends SparkSpec {
 
   test("forCorpus trains at most once per corpus fingerprint and the " +
       "board op scores under exactly the memoized model") {
-    LangIndex.clearMemo()
+    operators.Artifact.clearMemos()
     val m1 = LangIndex.forCorpus(spark, sf)
     Caches.releaseScope()
     val m2 = LangIndex.forCorpus(spark, sf)

@@ -223,6 +223,39 @@ class LmIndexSpec extends SparkSpec {
     Caches.releaseScope()
   }
 
+  test("an interrupted append swap always leaves a COMPLETE model: " +
+      "load promotes a finished staged copy over a displaced live one, " +
+      "and restores the displaced live copy when the staged one is torn") {
+    import org.apache.hadoop.fs.Path
+    val dir = tmp("swap")
+    val base = LmIndex.train(docs.filter(col("doc_id") % 2 === 0))
+    val grown = LmIndex.train(docs)
+    LmIndex.save(spark, base, dir)
+    val before = LmIndex.load(spark, dir).bigrams.count()
+    val after = grown.bigrams.count()
+    assert(after > before, "the staged model must be distinguishable")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // window A: staged copy fully written, live displaced, crash before
+    // the promotion rename — load must finish the swap
+    LmIndex.save(spark, grown, dir + ".staged")
+    assert(fs.rename(new Path(dir), new Path(dir + ".old")))
+    assert(LmIndex.load(spark, dir).bigrams.count() == after,
+      "a complete staged copy must be promoted")
+    assert(!fs.exists(new Path(dir + ".staged")) &&
+      !fs.exists(new Path(dir + ".old")), "recovery must clear siblings")
+    // window C: live displaced AND staged torn — load restores the
+    // displaced previous model rather than promoting a partial one
+    LmIndex.save(spark, base, dir + ".staged")
+    spark.range(1).select(lit(false).as("complete"))
+      .write.mode("overwrite").parquet(s"$dir.staged/complete")
+    assert(fs.rename(new Path(dir), new Path(dir + ".old")))
+    assert(LmIndex.load(spark, dir).bigrams.count() == after,
+      "a torn staged copy must restore the displaced live model")
+    assert(!fs.exists(new Path(dir + ".staged")) &&
+      !fs.exists(new Path(dir + ".old")), "recovery must clear siblings")
+    Caches.releaseScope()
+  }
+
   // ---- interpolated Kneser-Ney scoring (r16, C29) ----
 
   test("lm_trigram_kn: the San-Francisco property — a word frequent " +
@@ -280,7 +313,7 @@ class LmIndexSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val d = sf
     val docs = Tables.documents(spark, d)
-    operators.LmIndex.clearMemo3()
+    operators.Artifact.clearMemos()
     val loaded = operators.LmIndex.forCorpusRefHalf(spark, d)
     def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
       df.orderBy(col("doc_id")).collect().map(_.toSeq.toSeq).toSeq

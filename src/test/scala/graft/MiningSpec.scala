@@ -43,7 +43,7 @@ class MiningSpec extends SparkSpec {
 
   test("emb_bitext_mine: margin demotes the hub — the genuine isolated " +
       "pair out-margins every hub pairing despite a LOWER raw cosine") {
-    operators.CentroidIndex.clearMemo()
+    operators.Artifact.clearMemos()
     val out = operators.BitextOps.mineAt(spark, hubDir, 1, None).collect()
     assert(out.nonEmpty && out.length <= 6, s"rows ${out.length}")
     // forward mining: one target per source, even -> odd only

@@ -74,7 +74,7 @@ class QualityIndexSpec extends SparkSpec {
 
   test("forCorpus trains at most once per corpus directory and every " +
       "board consumer sees the identical model") {
-    QualityIndex.clearMemo()
+    operators.Artifact.clearMemos()
     val m1 = QualityIndex.forCorpus(spark, sf)
     Caches.releaseScope()
     val m2 = QualityIndex.forCorpus(spark, sf)

@@ -96,7 +96,7 @@ class UnigramLmSpec extends SparkSpec {
   test("text_unigram_count: per-doc price equals the model's own " +
       "segmentation lengths (OOV + residual included) and a warm " +
       "re-run trains zero times") {
-    UnigramLm.clearMemo()
+    operators.Artifact.clearMemos()
     val rows = run("text_unigram_count").collect()
     assert(rows.length == Tables.documents(spark, sf).count())
     // internal consistency: recompute each doc's price from the
