@@ -172,7 +172,7 @@ object GeometryCheck {
         k = operators.GraphAnnOps.GRAPH_DEGREE)
       operators.HnswOps.hnswSearch(
         operators.AnnOps.withNorm(spark, sfDir), idx,
-        operators.HnswOps.hierFor(spark, sfDir, idx))._1
+        operators.HnswOps.hierFor(spark, sfDir, idx, n), n)._1
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/ann_hnsw")
       Caches.releaseScope()

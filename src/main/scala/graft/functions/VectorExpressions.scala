@@ -13,26 +13,32 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** Native codegen'd vector kernels.
+/** Native vector and text kernels, registered on every graft session
+  * via [[registerAll]] (SparkSessionExtensions.injectFunction) and
+  * callable from SQL as `dot_micros(a, b)`, `proj_micros(v, w)`, ….
   *
-  * The portable exact-micros dot product ([[Portable.dotMicros]] semantics:
-  * Σ floor(a_i·1e6+0.5)·floor(b_i·1e6+0.5) as a long) sits on the hot path
-  * of every similarity op (ANN top-k, embedding dedup, LSH bucketing).
-  * Expressed with `zip_with` + `aggregate` it runs as an INTERPRETED
-  * higher-order function — per-element lambda dispatch and array
-  * allocation per row pair. These expressions generate the tight Java
-  * loop instead (whole-stage-codegen'd, no allocation), ~5-10× faster on
-  * the similarity joins, with bit-identical results (same IEEE ops in the
-  * same order — the DuckDB oracle twins are unchanged).
-  *
-  * Registered on every graft session via [[registerAll]]
-  * (SparkSessionExtensions.injectFunction), callable from SQL as
-  * `dot_micros(a, b)` / `proj_micros(v, weights)`.
+  * The exact-micros vector kernels sit on the hot path of every
+  * similarity op (ANN top-k, embedding dedup, LSH bucketing, PQ).
+  * Spelled with `zip_with`/`aggregate`/`transform` they would run as
+  * INTERPRETED higher-order functions — per-element lambda dispatch and
+  * an allocation per row pair. Each of them instead evaluates AND
+  * generates code as one call into [[Kernels]], where its arithmetic is
+  * written once: `eval`, the generated code and the driver-local
+  * engines cannot disagree, and the DuckDB oracle twins replay the
+  * same IEEE ops in the same order. The text kernels (minhash16,
+  * phash63, …) run one call per DOCUMENT, so they stay
+  * CodegenFallback.
   */
 object VectorExpressions {
 
-  private def quantLoop(arr: String, i: String): String =
-    s"(long) java.lang.Math.floor(((double) $arr.getFloat($i)) * 1000000.0 + 0.5)"
+  private val K = Kernels.getClass.getName.stripSuffix("$")
+
+  /** A per-partition `long[64]` the generated code lends to a kernel as
+    * its quantize buffer (see [[Kernels]]).
+    */
+  private def scratch(ctx: CodegenContext): String =
+    ctx.addMutableState("long[]", "kernelScratch",
+      v => s"$v = new long[${Kernels.CellStride}];")
 
   /** `dot_micros(a: array<float>, b: array<float>): long` — exact integer
     * dot product in micro units (both sides quantized).
@@ -44,34 +50,11 @@ object VectorExpressions {
     override def dataType: DataType = LongType
     override def prettyName: String = "dot_micros"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
-      var acc = 0L
-      var i = 0
-      while (i < n) {
-        val qa = math.floor(x.getFloat(i).toDouble * 1e6 + 0.5).toLong
-        val qb = math.floor(y.getFloat(i).toDouble * 1e6 + 0.5).toLong
-        acc += qa * qb
-        i += 1
-      }
-      acc
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      Kernels.dotMicros(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val acc = ctx.freshName("acc")
-        s"""
-        long $acc = 0L;
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        for (int $i = 0; $i < $n; $i++) {
-          $acc += ${quantLoop(a, i)} * ${quantLoop(b, i)};
-        }
-        ${ev.value} = $acc;"""
-      })
+      defineCodeGen(ctx, ev, (a, b) => s"$K.dotMicros($a, $b)")
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -88,32 +71,11 @@ object VectorExpressions {
     override def dataType: DataType = LongType
     override def prettyName: String = "proj_micros"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val w = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), w.numElements())
-      var acc = 0L
-      var i = 0
-      while (i < n) {
-        acc += math.floor(x.getFloat(i).toDouble * 1e6 + 0.5).toLong * w.getLong(i)
-        i += 1
-      }
-      acc
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      Kernels.projMicros(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val acc = ctx.freshName("acc")
-        s"""
-        long $acc = 0L;
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        for (int $i = 0; $i < $n; $i++) {
-          $acc += ${quantLoop(a, i)} * $b.getLong($i);
-        }
-        ${ev.value} = $acc;"""
-      })
+      defineCodeGen(ctx, ev, (a, b) => s"$K.projMicros($a, $b)")
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -149,71 +111,14 @@ object VectorExpressions {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "lsh_buckets"
 
-    override def nullSafeEval(a: Any, wAny: Any, pAny: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val w = wAny.asInstanceOf[ArrayData]
-      val planes = pAny.asInstanceOf[Int]
-      val dims = math.min(v.numElements(), 64)
-      val tables = w.numElements() / (planes * 64)
-      val q = new Array[Long](dims)
-      var i = 0
-      while (i < dims) {
-        q(i) = math.floor(v.getFloat(i).toDouble * 1e6 + 0.5).toLong
-        i += 1
-      }
-      val out = new Array[Long](tables)
-      var t = 0
-      while (t < tables) {
-        var bucket = 0L
-        var k = 0
-        while (k < planes) {
-          val base = (t * planes + k) * 64
-          var acc = 0L
-          i = 0
-          while (i < dims) { acc += q(i) * w.getLong(base + i); i += 1 }
-          if (acc > 0) bucket |= (1L << k)
-          k += 1
-        }
-        out(t) = bucket
-        t += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(a: Any, w: Any, p: Any): Any =
+      Kernels.lshBuckets(a.asInstanceOf[ArrayData], w.asInstanceOf[ArrayData],
+        p.asInstanceOf[Int], null)
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, w, p) => {
-        val qbuf = ctx.addMutableState("long[]", "lshQbuf",
-          v => s"$v = new long[64];")
-        val dims = ctx.freshName("dims")
-        val tables = ctx.freshName("tables")
-        val out = ctx.freshName("out")
-        val i = ctx.freshName("i")
-        val t = ctx.freshName("t")
-        val k = ctx.freshName("k")
-        val acc = ctx.freshName("acc")
-        val base = ctx.freshName("base")
-        val bucket = ctx.freshName("bucket")
-        s"""
-        int $dims = java.lang.Math.min($a.numElements(), 64);
-        int $tables = $w.numElements() / (($p) * 64);
-        for (int $i = 0; $i < $dims; $i++) {
-          $qbuf[$i] = ${quantLoop(a, i)};
-        }
-        long[] $out = new long[$tables];
-        for (int $t = 0; $t < $tables; $t++) {
-          long $bucket = 0L;
-          for (int $k = 0; $k < $p; $k++) {
-            int $base = ($t * ($p) + $k) * 64;
-            long $acc = 0L;
-            for (int $i = 0; $i < $dims; $i++) {
-              $acc += $qbuf[$i] * $w.getLong($base + $i);
-            }
-            if ($acc > 0) $bucket |= (1L << $k);
-          }
-          $out[$t] = $bucket;
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);"""
-      })
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val buf = scratch(ctx)
+      defineCodeGen(ctx, ev, (a, w, p) => s"$K.lshBuckets($a, $w, $p, $buf)")
+    }
 
     override protected def withNewChildrenInternal(
         newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
@@ -224,8 +129,8 @@ object VectorExpressions {
     * nm: long): array<long>` — the product-quantization distance table
     * of one UNIT-NORMALIZED embedding against a flattened per-subspace
     * codebook, in exact integer micros. Each component quantizes as
-    * floor(q(v_i)/√nm · 1e6 + 0.5) with q(v_i) = floor(v_i·1e6+0.5) and
-    * nm the exact-micros self-dot — on the unit sphere squared-L2 is
+    * floor(q(v_i)/√nm·1e6+0.5), with q = [[Kernels.q]] and nm the
+    * exact-micros self-dot — on the unit sphere squared-L2 is
     * monotone in cosine (‖u−w‖² = 2−2cos), so ADC ordering tracks the
     * engine's cosine ranking; the double divide/multiply chain is IEEE
     * correctly-rounded in both engines (the G10c sqrt argument), so the
@@ -235,15 +140,13 @@ object VectorExpressions {
     * subspaces and k = len(cent)/len(emb) centroids are derived from the
     * operand shapes. Output index s·k + c holds the squared L2 distance
     * of the vector's s-th normalized sub-vector to centroid (s, c) —
-    * both the ENCODE input (argmin over each subspace's k slots) and the
-    * query-side ADC lookup table are this one array.
+    * the query-side ADC lookup table.
     *
     * Why native: this is PQ's only corpus-sized arithmetic (m·k·subDim =
     * 1024 multiply-adds per row at the board geometry); the HOF spelling
     * would run interpreted per-element like the pre-kernel minhash did.
-    * One fused loop quantizes the 64 floats once and streams the
-    * codebook linearly. Bounds: |qu| ≤ ~1e6+ε, diff² ≤ ~4.4e12, ×64 dims
-    * ≪ Long.MaxValue even summed over all subspaces.
+    * Bounds: |qu| ≤ ~1e6+ε, diff² ≤ ~4.4e12, ×64 dims ≪ Long.MaxValue
+    * even summed over all subspaces.
     */
   case class PqDistsExpr(first: Expression, second: Expression,
       third: Expression, fourth: Expression)
@@ -253,83 +156,15 @@ object VectorExpressions {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "pq_dists"
 
-    override def nullSafeEval(a: Any, cAny: Any, sdAny: Any, nmAny: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val cent = cAny.asInstanceOf[ArrayData]
-      val subDim = sdAny.asInstanceOf[Int]
-      val nm = nmAny.asInstanceOf[Long]
-      val dims = v.numElements()
-      val m = dims / subDim
-      val k = cent.numElements() / dims
-      val rt = math.sqrt(nm.toDouble)
-      val q = new Array[Long](dims)
-      var i = 0
-      while (i < dims) {
-        val qraw = math.floor(v.getFloat(i).toDouble * 1e6 + 0.5)
-        q(i) = if (nm == 0L) 0L
-          else math.floor(qraw / rt * 1e6 + 0.5).toLong
-        i += 1
-      }
-      val out = new Array[Long](m * k)
-      var s = 0
-      while (s < m) {
-        var c = 0
-        while (c < k) {
-          val base = (s * k + c) * subDim
-          var acc = 0L
-          var j = 0
-          while (j < subDim) {
-            val d = q(s * subDim + j) - cent.getLong(base + j)
-            acc += d * d
-            j += 1
-          }
-          out(s * k + c) = acc
-          c += 1
-        }
-        s += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(a: Any, cent: Any, sd: Any, nm: Any): Any =
+      Kernels.pqDists(a.asInstanceOf[ArrayData], cent.asInstanceOf[ArrayData],
+        sd.asInstanceOf[Int], nm.asInstanceOf[Long], null)
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, cent, sd, nm) => {
-        val qbuf = ctx.addMutableState("long[]", "pqQbuf",
-          v => s"$v = new long[64];")
-        val dims = ctx.freshName("dims")
-        val m = ctx.freshName("m")
-        val k = ctx.freshName("k")
-        val rt = ctx.freshName("rt")
-        val out = ctx.freshName("out")
-        val i = ctx.freshName("i")
-        val s = ctx.freshName("s")
-        val c = ctx.freshName("c")
-        val j = ctx.freshName("j")
-        val base = ctx.freshName("base")
-        val acc = ctx.freshName("acc")
-        val d = ctx.freshName("d")
-        s"""
-        int $dims = $a.numElements();
-        int $m = $dims / ($sd);
-        int $k = $cent.numElements() / $dims;
-        double $rt = java.lang.Math.sqrt((double) $nm);
-        for (int $i = 0; $i < $dims; $i++) {
-          $qbuf[$i] = ($nm == 0L) ? 0L : (long) java.lang.Math.floor(
-            ((double) ${quantLoop(a, i)}) / $rt * 1000000.0 + 0.5);
-        }
-        long[] $out = new long[$m * $k];
-        for (int $s = 0; $s < $m; $s++) {
-          for (int $c = 0; $c < $k; $c++) {
-            int $base = ($s * $k + $c) * ($sd);
-            long $acc = 0L;
-            for (int $j = 0; $j < ($sd); $j++) {
-              long $d = $qbuf[$s * ($sd) + $j] - $cent.getLong($base + $j);
-              $acc += $d * $d;
-            }
-            $out[$s * $k + $c] = $acc;
-          }
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);"""
-      })
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val buf = scratch(ctx)
+      defineCodeGen(ctx, ev,
+        (a, cent, sd, nm) => s"$K.pqDists($a, $cent, $sd, $nm, $buf)")
+    }
 
     override protected def withNewChildrenInternal(
         newFirst: Expression, newSecond: Expression, newThird: Expression,
@@ -362,91 +197,15 @@ object VectorExpressions {
       ArrayType(IntegerType, containsNull = false)
     override def prettyName: String = "pq_encode"
 
-    override def nullSafeEval(a: Any, cAny: Any, sdAny: Any, nmAny: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val cent = cAny.asInstanceOf[ArrayData]
-      val subDim = sdAny.asInstanceOf[Int]
-      val nm = nmAny.asInstanceOf[Long]
-      val dims = v.numElements()
-      val m = dims / subDim
-      val k = cent.numElements() / dims
-      val rt = math.sqrt(nm.toDouble)
-      val q = new Array[Long](dims)
-      var i = 0
-      while (i < dims) {
-        val qraw = math.floor(v.getFloat(i).toDouble * 1e6 + 0.5)
-        q(i) = if (nm == 0L) 0L
-          else math.floor(qraw / rt * 1e6 + 0.5).toLong
-        i += 1
-      }
-      val out = new Array[Int](m)
-      var s = 0
-      while (s < m) {
-        var best = Long.MaxValue
-        var bc = 0
-        var c = 0
-        while (c < k) {
-          val base = (s * k + c) * subDim
-          var acc = 0L
-          var j = 0
-          while (j < subDim) {
-            val d = q(s * subDim + j) - cent.getLong(base + j)
-            acc += d * d
-            j += 1
-          }
-          if (acc < best) { best = acc; bc = c }
-          c += 1
-        }
-        out(s) = bc
-        s += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(a: Any, cent: Any, sd: Any, nm: Any): Any =
+      Kernels.pqEncode(a.asInstanceOf[ArrayData], cent.asInstanceOf[ArrayData],
+        sd.asInstanceOf[Int], nm.asInstanceOf[Long], null)
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, cent, sd, nm) => {
-        val qbuf = ctx.addMutableState("long[]", "pqeQbuf",
-          v => s"$v = new long[64];")
-        val dims = ctx.freshName("dims")
-        val m = ctx.freshName("m")
-        val k = ctx.freshName("k")
-        val rt = ctx.freshName("rt")
-        val out = ctx.freshName("out")
-        val i = ctx.freshName("i")
-        val s = ctx.freshName("s")
-        val c = ctx.freshName("c")
-        val j = ctx.freshName("j")
-        val base = ctx.freshName("base")
-        val acc = ctx.freshName("acc")
-        val d = ctx.freshName("d")
-        val best = ctx.freshName("best")
-        val bc = ctx.freshName("bc")
-        s"""
-        int $dims = $a.numElements();
-        int $m = $dims / ($sd);
-        int $k = $cent.numElements() / $dims;
-        double $rt = java.lang.Math.sqrt((double) $nm);
-        for (int $i = 0; $i < $dims; $i++) {
-          $qbuf[$i] = ($nm == 0L) ? 0L : (long) java.lang.Math.floor(
-            ((double) ${quantLoop(a, i)}) / $rt * 1000000.0 + 0.5);
-        }
-        int[] $out = new int[$m];
-        for (int $s = 0; $s < $m; $s++) {
-          long $best = Long.MAX_VALUE;
-          int $bc = 0;
-          for (int $c = 0; $c < $k; $c++) {
-            int $base = ($s * $k + $c) * ($sd);
-            long $acc = 0L;
-            for (int $j = 0; $j < ($sd); $j++) {
-              long $d = $qbuf[$s * ($sd) + $j] - $cent.getLong($base + $j);
-              $acc += $d * $d;
-            }
-            if ($acc < $best) { $best = $acc; $bc = $c; }
-          }
-          $out[$s] = $bc;
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);"""
-      })
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val buf = scratch(ctx)
+      defineCodeGen(ctx, ev,
+        (a, cent, sd, nm) => s"$K.pqEncode($a, $cent, $sd, $nm, $buf)")
+    }
 
     override protected def withNewChildrenInternal(
         newFirst: Expression, newSecond: Expression, newThird: Expression,
@@ -457,11 +216,11 @@ object VectorExpressions {
 
   /** `qnorm_micros(emb: array<float>, nm: long): array<long>` — the
     * unit-sphere quantization [[PqDistsExpr]] applies internally,
-    * exposed as a column: out[i] = floor(q(v_i)/√nm · 1e6 + 0.5) with
-    * q(v_i) = floor(v_i·1e6+0.5), 0 when nm = 0. One codegen loop per
-    * row — the HOF spelling (a transform lambda per element with a
-    * floor/divide chain inside) runs interpreted and dominated E10's
-    * Lloyd pass at sf100 (64 interpreted evals × corpus rows per round).
+    * exposed as a column: out[i] = floor(q(v_i)/√nm·1e6+0.5), 0 when
+    * nm = 0, with q = [[Kernels.q]]. The HOF spelling (a
+    * transform lambda per element with a floor/divide chain inside)
+    * runs interpreted and dominated E10's Lloyd pass at sf100 (64
+    * interpreted evals × corpus rows per round).
     */
   case class QnormMicrosExpr(left: Expression, right: Expression)
       extends BinaryExpression {
@@ -469,38 +228,11 @@ object VectorExpressions {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "qnorm_micros"
 
-    override def nullSafeEval(a: Any, nmAny: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val nm = nmAny.asInstanceOf[Long]
-      val dims = v.numElements()
-      val rt = math.sqrt(nm.toDouble)
-      val out = new Array[Long](dims)
-      var i = 0
-      while (i < dims) {
-        val qraw = math.floor(v.getFloat(i).toDouble * 1e6 + 0.5)
-        out(i) = if (nm == 0L) 0L
-          else math.floor(qraw / rt * 1e6 + 0.5).toLong
-        i += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(a: Any, nm: Any): Any =
+      Kernels.qnormMicros(a.asInstanceOf[ArrayData], nm.asInstanceOf[Long])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, nm) => {
-        val dims = ctx.freshName("dims")
-        val rt = ctx.freshName("rt")
-        val out = ctx.freshName("out")
-        val i = ctx.freshName("i")
-        s"""
-        int $dims = $a.numElements();
-        double $rt = java.lang.Math.sqrt((double) $nm);
-        long[] $out = new long[$dims];
-        for (int $i = 0; $i < $dims; $i++) {
-          $out[$i] = ($nm == 0L) ? 0L : (long) java.lang.Math.floor(
-            ((double) ${quantLoop(a, i)}) / $rt * 1000000.0 + 0.5);
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);"""
-      })
+      defineCodeGen(ctx, ev, (a, nm) => s"$K.qnormMicros($a, $nm)")
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -512,20 +244,12 @@ object VectorExpressions {
     * sn: array<double>>): long` — the id of the max-cosine coarse
     * centroid for one corpus row, computed entirely map-side. `flat`
     * holds every centroid's RAW quantized micros
-    * (floor(c_emb_i·1e6+0.5) — `qnorm_micros(c_emb, 1e12)`)
-    * zero-padded to a fixed stride of 64 (the engine's embedding
-    * width), and `sn` the PRE-COMPUTED `sqrt(cast(c_nm as double))`
-    * (IEEE sqrt is deterministic, so hoisting it to pack time is
-    * bit-free), so the per-cell score replays the composed
-    * `cosineFromMicros(dotMicros(emb, c_emb), nm, c_nm)` doubles
-    * bit-for-bit: Σ q(emb_i)·flat[c·64+i] as a long, then one
-    * dot/(√nm·√c_nm) double chain in the same IEEE op order. The
-    * winner replays `max_by(c_id, struct(ccos, -c_id))` exactly —
-    * Spark's SQL double ordering (x == y is a tie even for ±0.0;
-    * otherwise Double.compare, NaN above all) then lowest c_id — and
-    * is ARRAY-ORDER-INDEPENDENT, so the packed frame needs no sort.
-    * Empty `ids` returns Long.MinValue (call sites guarantee ≥ 1
-    * cell).
+    * (`qnorm_micros(c_emb, 1e12)`) zero-padded to a fixed stride of 64
+    * (the engine's embedding width), and `sn` the PRE-COMPUTED
+    * `sqrt(cast(c_nm as double))`, so the per-cell score is the
+    * composed `cosineFromMicros(dotMicros(emb, c_emb), nm, c_nm)`
+    * double. The winner is the cell `max_by(c_id, struct(ccos, -c_id))`
+    * picks (see [[Kernels.cellArgmax]]); call sites guarantee ≥ 1 cell.
     *
     * Why native: this replaces the corpus×cells crossJoin +
     * `groupBy(vec_id).agg(max_by(...))` assignment shape — same
@@ -567,97 +291,15 @@ object VectorExpressions {
           s"${second.dataType.sql}, ${third.dataType.sql})")
     }
 
-    override def nullSafeEval(a: Any, nmAny: Any, cAny: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val nm = nmAny.asInstanceOf[Long]
-      val packed = cAny.asInstanceOf[InternalRow]
-      val ids = packed.getArray(0)
-      val flat = packed.getArray(1)
-      val snc = packed.getArray(2)
-      // 64-dim cap mirrors the codegen path's fixed scratch buffer
-      // (the LshBucketsExpr convention — the engine's embedding width)
-      val dims = math.min(v.numElements(), 64)
-      val q = new Array[Long](dims)
-      var i = 0
-      while (i < dims) {
-        q(i) = math.floor(v.getFloat(i).toDouble * 1e6 + 0.5).toLong
-        i += 1
-      }
-      val sn = math.sqrt(nm.toDouble)
-      var bestId = Long.MinValue
-      var bestCos = 0.0
-      var first0 = true
-      var c = 0
-      val nc = ids.numElements()
-      while (c < nc) {
-        val base = c * 64
-        var acc = 0L
-        i = 0
-        while (i < dims) { acc += q(i) * flat.getLong(base + i); i += 1 }
-        val ccos = acc.toDouble / (sn * snc.getDouble(c))
-        val cmp =
-          if (first0) 1
-          else if (ccos == bestCos) 0
-          else java.lang.Double.compare(ccos, bestCos)
-        val cid = ids.getLong(c)
-        if (cmp > 0 || (cmp == 0 && cid < bestId)) {
-          bestId = cid; bestCos = ccos; first0 = false
-        }
-        c += 1
-      }
-      bestId
-    }
+    override def nullSafeEval(a: Any, nm: Any, cents: Any): Any =
+      Kernels.cellArgmax(a.asInstanceOf[ArrayData], nm.asInstanceOf[Long],
+        cents.asInstanceOf[InternalRow], null)
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, nm, packed) => {
-        val qbuf = ctx.addMutableState("long[]", "caQbuf",
-          v => s"$v = new long[64];")
-        val dims = ctx.freshName("dims")
-        val sn = ctx.freshName("sn")
-        val bestId = ctx.freshName("bestId")
-        val bestCos = ctx.freshName("bestCos")
-        val first0 = ctx.freshName("first")
-        val i = ctx.freshName("i")
-        val c = ctx.freshName("c")
-        val nc = ctx.freshName("nc")
-        val ids = ctx.freshName("ids")
-        val flat = ctx.freshName("flat")
-        val snc = ctx.freshName("snc")
-        val base = ctx.freshName("base")
-        val acc = ctx.freshName("acc")
-        val ccos = ctx.freshName("ccos")
-        val cmp = ctx.freshName("cmp")
-        val cid = ctx.freshName("cid")
-        val ad = "org.apache.spark.sql.catalyst.util.ArrayData"
-        s"""
-        int $dims = java.lang.Math.min($a.numElements(), 64);
-        for (int $i = 0; $i < $dims; $i++) {
-          $qbuf[$i] = ${quantLoop(a, i)};
-        }
-        double $sn = java.lang.Math.sqrt((double) $nm);
-        $ad $ids = $packed.getArray(0);
-        $ad $flat = $packed.getArray(1);
-        $ad $snc = $packed.getArray(2);
-        long $bestId = java.lang.Long.MIN_VALUE;
-        double $bestCos = 0.0;
-        boolean $first0 = true;
-        int $nc = $ids.numElements();
-        for (int $c = 0; $c < $nc; $c++) {
-          int $base = $c * 64;
-          long $acc = 0L;
-          for (int $i = 0; $i < $dims; $i++) {
-            $acc += $qbuf[$i] * $flat.getLong($base + $i);
-          }
-          double $ccos = ((double) $acc) / ($sn * $snc.getDouble($c));
-          int $cmp = $first0 ? 1 : ($ccos == $bestCos ? 0
-            : java.lang.Double.compare($ccos, $bestCos));
-          long $cid = $ids.getLong($c);
-          if ($cmp > 0 || ($cmp == 0 && $cid < $bestId)) {
-            $bestId = $cid; $bestCos = $ccos; $first0 = false;
-          }
-        }
-        ${ev.value} = $bestId;"""
-      })
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val buf = scratch(ctx)
+      defineCodeGen(ctx, ev,
+        (a, nm, cents) => s"$K.cellArgmax($a, $nm, $cents, $buf)")
+    }
 
     override protected def withNewChildrenInternal(
         newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
@@ -668,7 +310,7 @@ object VectorExpressions {
     * element-wise long subtraction, the RESIDUAL step of IVFPQ encoding
     * (r = qnorm(v) − qnorm(centroid), both already in normalized
     * micros). A `zip_with` lambda would run interpreted per element on
-    * every corpus row of every Lloyd round; this is one codegen loop.
+    * every corpus row of every Lloyd round.
     */
   case class LsubMicrosExpr(left: Expression, right: Expression)
       extends BinaryExpression {
@@ -676,29 +318,11 @@ object VectorExpressions {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "lsub_micros"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
-      val out = new Array[Long](n)
-      var i = 0
-      while (i < n) { out(i) = x.getLong(i) - y.getLong(i); i += 1 }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(a: Any, b: Any): Any =
+      Kernels.lsubMicros(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        val out = ctx.freshName("out")
-        s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        long[] $out = new long[$n];
-        for (int $i = 0; $i < $n; $i++) {
-          $out[$i] = $a.getLong($i) - $b.getLong($i);
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);"""
-      })
+      defineCodeGen(ctx, ev, (a, b) => s"$K.lsubMicros($a, $b)")
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -719,64 +343,14 @@ object VectorExpressions {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "pql_dists"
 
-    override def nullSafeEval(a: Any, cAny: Any, sdAny: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val cent = cAny.asInstanceOf[ArrayData]
-      val subDim = sdAny.asInstanceOf[Int]
-      val dims = v.numElements()
-      val m = dims / subDim
-      val k = cent.numElements() / dims
-      val out = new Array[Long](m * k)
-      var s = 0
-      while (s < m) {
-        var c = 0
-        while (c < k) {
-          val base = (s * k + c) * subDim
-          var acc = 0L
-          var j = 0
-          while (j < subDim) {
-            val d = v.getLong(s * subDim + j) - cent.getLong(base + j)
-            acc += d * d
-            j += 1
-          }
-          out(s * k + c) = acc
-          c += 1
-        }
-        s += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(a: Any, cent: Any, sd: Any): Any =
+      Kernels.pqlDists(a.asInstanceOf[ArrayData], cent.asInstanceOf[ArrayData],
+        sd.asInstanceOf[Int], null)
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, cent, sd) => {
-        val dims = ctx.freshName("dims")
-        val m = ctx.freshName("m")
-        val k = ctx.freshName("k")
-        val out = ctx.freshName("out")
-        val s = ctx.freshName("s")
-        val c = ctx.freshName("c")
-        val j = ctx.freshName("j")
-        val base = ctx.freshName("base")
-        val acc = ctx.freshName("acc")
-        val d = ctx.freshName("d")
-        s"""
-        int $dims = $a.numElements();
-        int $m = $dims / ($sd);
-        int $k = $cent.numElements() / $dims;
-        long[] $out = new long[$m * $k];
-        for (int $s = 0; $s < $m; $s++) {
-          for (int $c = 0; $c < $k; $c++) {
-            int $base = ($s * $k + $c) * ($sd);
-            long $acc = 0L;
-            for (int $j = 0; $j < ($sd); $j++) {
-              long $d = $a.getLong($s * ($sd) + $j) - $cent.getLong($base + $j);
-              $acc += $d * $d;
-            }
-            $out[$s * $k + $c] = $acc;
-          }
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);"""
-      })
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val buf = scratch(ctx)
+      defineCodeGen(ctx, ev, (a, cent, sd) => s"$K.pqlDists($a, $cent, $sd, $buf)")
+    }
 
     override protected def withNewChildrenInternal(
         newFirst: Expression, newSecond: Expression,
@@ -797,72 +371,14 @@ object VectorExpressions {
       ArrayType(IntegerType, containsNull = false)
     override def prettyName: String = "pql_encode"
 
-    override def nullSafeEval(a: Any, cAny: Any, sdAny: Any): Any = {
-      val v = a.asInstanceOf[ArrayData]
-      val cent = cAny.asInstanceOf[ArrayData]
-      val subDim = sdAny.asInstanceOf[Int]
-      val dims = v.numElements()
-      val m = dims / subDim
-      val k = cent.numElements() / dims
-      val out = new Array[Int](m)
-      var s = 0
-      while (s < m) {
-        var best = Long.MaxValue
-        var bc = 0
-        var c = 0
-        while (c < k) {
-          val base = (s * k + c) * subDim
-          var acc = 0L
-          var j = 0
-          while (j < subDim) {
-            val d = v.getLong(s * subDim + j) - cent.getLong(base + j)
-            acc += d * d
-            j += 1
-          }
-          if (acc < best) { best = acc; bc = c }
-          c += 1
-        }
-        out(s) = bc
-        s += 1
-      }
-      new GenericArrayData(out)
-    }
+    override def nullSafeEval(a: Any, cent: Any, sd: Any): Any =
+      Kernels.pqlEncode(a.asInstanceOf[ArrayData], cent.asInstanceOf[ArrayData],
+        sd.asInstanceOf[Int], null)
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, cent, sd) => {
-        val dims = ctx.freshName("dims")
-        val m = ctx.freshName("m")
-        val k = ctx.freshName("k")
-        val out = ctx.freshName("out")
-        val s = ctx.freshName("s")
-        val c = ctx.freshName("c")
-        val j = ctx.freshName("j")
-        val base = ctx.freshName("base")
-        val acc = ctx.freshName("acc")
-        val d = ctx.freshName("d")
-        val best = ctx.freshName("best")
-        val bc = ctx.freshName("bc")
-        s"""
-        int $dims = $a.numElements();
-        int $m = $dims / ($sd);
-        int $k = $cent.numElements() / $dims;
-        int[] $out = new int[$m];
-        for (int $s = 0; $s < $m; $s++) {
-          long $best = Long.MAX_VALUE;
-          int $bc = 0;
-          for (int $c = 0; $c < $k; $c++) {
-            int $base = ($s * $k + $c) * ($sd);
-            long $acc = 0L;
-            for (int $j = 0; $j < ($sd); $j++) {
-              long $d = $a.getLong($s * ($sd) + $j) - $cent.getLong($base + $j);
-              $acc += $d * $d;
-            }
-            if ($acc < $best) { $best = $acc; $bc = $c; }
-          }
-          $out[$s] = $bc;
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);"""
-      })
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val buf = scratch(ctx)
+      defineCodeGen(ctx, ev, (a, cent, sd) => s"$K.pqlEncode($a, $cent, $sd, $buf)")
+    }
 
     override protected def withNewChildrenInternal(
         newFirst: Expression, newSecond: Expression,
@@ -1028,37 +544,13 @@ object VectorExpressions {
       copy(child = newChild)
   }
 
-  /** The Q16 log2 recipe of [[Log2Q16Expr]] as a plain static — one
-    * definition for every interpreted caller ([[CpEntropyExpr]] runs it
-    * per DISTINCT code point inside its per-row pass; the expression's
-    * own eval delegates here). Contract num ≥ den ≥ 1.
-    */
-  private[graft] def log2q16(num: Long, den: Long): Long = {
-    val blenN = 64 - java.lang.Long.numberOfLeadingZeros(num)
-    val blenD = 64 - java.lang.Long.numberOfLeadingZeros(den)
-    val n2 = if (blenN <= 33) num << (33 - blenN) else num >> (blenN - 33)
-    val d2 = if (blenD <= 33) den << (33 - blenD) else den >> (blenD - 33)
-    val e0 = if (n2 >= d2) 0 else -1
-    val e = (blenN - blenD) + e0
-    var v = if (e0 == 0) (n2 << 30) / d2 else ((n2 << 30) / d2) << 1
-    var acc = 0L
-    var i = 0
-    while (i < 16) {
-      val u = v * v
-      if (u >= (1L << 61)) { acc = acc * 2 + 1; v = u >> 31 }
-      else { acc = acc * 2; v = u >> 30 }
-      i += 1
-    }
-    (e.toLong << 16) + acc
-  }
-
   /** `cp_entropy(text: string): struct<n_cp, n_distinct_cp, ent_q16>` —
     * C21's code-point unigram entropy in ONE pass per document:
     * count code points into a hash map, then
     * `ent_q16 = log2_q16(n, 1) − (Σ_c k_c · log2_q16(k_c, 1)) div n`
     * (the − Σ p log2 p identity rearranged so every term is an integer;
     * the divide truncates, both operands non-negative). All arithmetic
-    * is the [[log2q16]] recipe, so the DuckDB oracle reproduces the
+    * is the [[Kernels.log2q16]] recipe, so the DuckDB oracle reproduces the
     * BIGINT bit-for-bit from an unnest+group replay — no
     * transcendentals. Per-row dispatch is one call per document
     * (CodegenFallback costs nothing — the minhash16 argument); the op
@@ -1089,9 +581,9 @@ object VectorExpressions {
       val it = counts.values().iterator()
       while (it.hasNext) {
         val k = it.next()(0)
-        if (k > 1L) sumBits += k * log2q16(k, 1L)
+        if (k > 1L) sumBits += k * Kernels.log2q16(k, 1L)
       }
-      val ent = if (n == 0L) 0L else log2q16(n, 1L) - sumBits / n
+      val ent = if (n == 0L) 0L else Kernels.log2q16(n, 1L) - sumBits / n
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
         Array[Any](n, counts.size().toLong, ent))
     }
@@ -1386,34 +878,10 @@ object VectorExpressions {
     override def prettyName: String = "log2_q16"
 
     override def nullSafeEval(a: Any, b: Any): Any =
-      log2q16(a.asInstanceOf[Long], b.asInstanceOf[Long])
+      Kernels.log2q16(a.asInstanceOf[Long], b.asInstanceOf[Long])
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val bn = ctx.freshName("bn")
-        val bd = ctx.freshName("bd")
-        val n2 = ctx.freshName("n2")
-        val d2 = ctx.freshName("d2")
-        val e = ctx.freshName("e")
-        val v = ctx.freshName("v")
-        val u = ctx.freshName("u")
-        val acc = ctx.freshName("acc")
-        val i = ctx.freshName("i")
-        s"""
-        int $bn = 64 - java.lang.Long.numberOfLeadingZeros($a);
-        int $bd = 64 - java.lang.Long.numberOfLeadingZeros($b);
-        long $n2 = ($bn <= 33) ? ($a << (33 - $bn)) : ($a >> ($bn - 33));
-        long $d2 = ($bd <= 33) ? ($b << (33 - $bd)) : ($b >> ($bd - 33));
-        int $e = ($bn - $bd) + (($n2 >= $d2) ? 0 : -1);
-        long $v = ($n2 >= $d2) ? (($n2 << 30) / $d2) : ((($n2 << 30) / $d2) << 1);
-        long $acc = 0L;
-        for (int $i = 0; $i < 16; $i++) {
-          long $u = $v * $v;
-          if ($u >= (1L << 61)) { $acc = $acc * 2 + 1; $v = $u >> 31; }
-          else { $acc = $acc * 2; $v = $u >> 30; }
-        }
-        ${ev.value} = (((long) $e) << 16) + $acc;"""
-      })
+      defineCodeGen(ctx, ev, (a, b) => s"$K.log2q16($a, $b)")
 
     override protected def withNewChildrenInternal(
         newLeft: Expression, newRight: Expression): Expression =
@@ -1533,7 +1001,7 @@ object VectorExpressions {
     }
   }
 
-  /** Injects both kernels into a session's function registry. */
+  /** Injects every kernel into a session's function registry. */
   def registerAll(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction((
       new FunctionIdentifier("log2_q16"),

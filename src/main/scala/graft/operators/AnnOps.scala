@@ -4,11 +4,14 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.{Caches, Op, Tables}
+import graft.functions.Kernels
 import graft.functions.Portable._
 
 /** Approximate-nearest-neighbor search over the embeddings table
@@ -537,7 +540,10 @@ object AnnOps {
     * floor(v·1e6+0.5) and no separate raw-quantize kernel is needed.
     */
   private def qrawCol: Column =
-    call_function("qnorm_micros", col("embedding"), lit(1000000000000L))
+    call_function("qnorm_micros", col("embedding"), lit(RAW_NM))
+
+  /** The nm at which qnorm_micros is the raw quantizer. */
+  private final val RAW_NM = 1000000000000L
 
   /** Train the coarse centroid set over a (vec_id, embedding, nm)
     * frame: seed from the deterministic corpus slice, then `rounds`
@@ -558,9 +564,9 @@ object AnnOps {
     // measured 3.3 s for 2 rounds over 2000 vectors at sf0.1. Below a
     // WORK budget (rows × cells dot products per round, plus a row cap
     // so the collect stays tens of MB) the loop runs driver-local over
-    // the collected (vec_id, embedding, nm) frame with kernels that
-    // replicate the distributed operators' arithmetic bit for bit
-    // (TrainLocalSpec pins local ≡ distributed micros). Above the
+    // the collected (vec_id, embedding, nm) frame, calling the kernels
+    // the distributed plan runs (CentroidIndexSpec pins local ≡
+    // distributed micros). Above the
     // budget the distributed loop below runs unchanged — the path real
     // scale takes.
     val lmax = e.sparkSession.conf.getOption(TrainLocalMaxKey)
@@ -575,8 +581,7 @@ object AnnOps {
       .select(col("vec_id"), col("embedding"))
       .collect()
       .map(r => r.getAs[Long]("vec_id") ->
-        r.getAs[scala.collection.Seq[Float]]("embedding")
-          .map(f => math.floor(f.toDouble * 1e6 + 0.5).toLong).toArray)
+        r.getAs[scala.collection.Seq[Float]]("embedding").map(Kernels.q).toArray)
       .toMap
     // an incomplete seed slice must fail HERE with the contract named,
     // not as a bare key-not-found inside Array.tabulate (r15 advisory:
@@ -622,20 +627,13 @@ object AnnOps {
   private[graft] val TrainLocalMaxKey = "graft.train.localMax"
   private[graft] val TRAIN_LOCAL_MAX_DEFAULT: Long = 1L << 22
 
-  /** The driver-local Lloyd engine. Bit-identical to the distributed
-    * loop by construction:
-    *  - assignment replays [[graft.functions.VectorExpressions.CellArgmaxExpr]]'s
-    *    eval exactly — quantize q_i = floor(f_i·1e6+0.5) over
-    *    min(dims, [[CELL_STRIDE]]), integer dot against the round's RAW
-    *    centroid micros, ccos = acc / (√nm · √c_nm) in the same IEEE op
-    *    order, winner by (ccos == best ? 0 : Double.compare) then
-    *    lowest id — including the packed frame's √c_nm being computed
-    *    ONCE per round from the Long m·m sum ([[microCentroidArray]]).
-    *  - accumulation replays sum(element_at(qnorm_micros(emb, 1e12), j))
-    *    — an exact Long sum of floor(floor(f·1e6+0.5)/√1e12·1e6+0.5),
-    *    order-insensitive — and the truncating Long mean `sum / n`,
-    *    with empty cells keeping their previous value.
-    * Seed and require() are the distributed loop's own lines verbatim.
+  /** The driver-local Lloyd engine: the distributed rounds over the
+    * collected frame, through the same kernels — assignment is
+    * [[Kernels.cellArgmax]] against the round's centroids packed once by
+    * [[packCells]], accumulation sums [[Kernels.qnormMicros]] at
+    * [[RAW_NM]] (the distributed loop's `qrawCol`), then the truncating
+    * Long mean `sum / n`, with empty cells keeping their previous value.
+    * Seed and require() are the distributed loop's own.
     */
   private def ivfTrainMicrosLocal(
       e: DataFrame, cells: Int, rounds: Int): Array[Array[Long]] = {
@@ -646,100 +644,58 @@ object AnnOps {
         r.getAs[Long]("nm")))
     val seed = rows.iterator
       .filter(t => t._1 >= QUERY_MAX && t._1 < QUERY_MAX + cells)
-      .map(t => t._1 ->
-        t._2.map(f => math.floor(f.toDouble * 1e6 + 0.5).toLong))
+      .map(t => t._1 -> t._2.map(Kernels.q))
       .toMap
     require(seed.size == cells,
       s"coarse seed slice [vec_id $QUERY_MAX, ${QUERY_MAX + cells}) " +
         s"incomplete: ${seed.size} of $cells rows present")
     var cent: Array[Array[Long]] =
       Array.tabulate(cells)(c => seed(QUERY_MAX.toLong + c))
-    val rt = math.sqrt(1000000000000L.toDouble) // qnorm_micros(·, 1e12)
+    val vecs = rows.map(t => (UnsafeArrayData.fromPrimitiveArray(t._2), t._3))
+    val scratch = new Array[Long](Kernels.CellStride)
     for (_ <- 1 to rounds) {
-      // pack exactly like microCentroidArray: flat raw micros at the
-      // CELL_STRIDE, √c_nm from the exact Long Σ m·m
-      val flat = new Array[Long](cells * CELL_STRIDE)
-      val snc = new Array[Double](cells)
-      var c = 0
-      while (c < cells) {
-        val v = cent(c)
-        var i = 0
-        while (i < v.length && i < CELL_STRIDE) {
-          flat(c * CELL_STRIDE + i) = v(i); i += 1
-        }
-        snc(c) = math.sqrt(v.map(m => m * m).sum.toDouble)
-        c += 1
-      }
+      val (ids, flat, sn) = packCells(cent)
+      val cents = InternalRow(UnsafeArrayData.fromPrimitiveArray(ids),
+        UnsafeArrayData.fromPrimitiveArray(flat),
+        UnsafeArrayData.fromPrimitiveArray(sn))
       val sums = Array.ofDim[Long](cells, FULL_DIM)
       val cnt = new Array[Long](cells)
-      rows.foreach { case (_, emb, nm) =>
-        // CellArgmaxExpr.nullSafeEval, verbatim semantics
-        val dims = math.min(emb.length, CELL_STRIDE)
-        val q = new Array[Long](dims)
-        var i = 0
-        while (i < dims) {
-          q(i) = math.floor(emb(i).toDouble * 1e6 + 0.5).toLong; i += 1
-        }
-        val sn = math.sqrt(nm.toDouble)
-        var bestId = Long.MinValue
-        var bestCos = 0.0
-        var first0 = true
-        c = 0
-        while (c < cells) {
-          val base = c * CELL_STRIDE
-          var acc = 0L
-          i = 0
-          while (i < dims) { acc += q(i) * flat(base + i); i += 1 }
-          val ccos = acc.toDouble / (sn * snc(c))
-          val cmp =
-            if (first0) 1
-            else if (ccos == bestCos) 0
-            else java.lang.Double.compare(ccos, bestCos)
-          val cid = QUERY_MAX.toLong + c
-          if (cmp > 0 || (cmp == 0 && cid < bestId)) {
-            bestId = cid; bestCos = ccos; first0 = false
-          }
-          c += 1
-        }
-        val cell = (bestId - QUERY_MAX).toInt
+      vecs.foreach { case (emb, nm) =>
+        val cell = (Kernels.cellArgmax(emb, nm, cents, scratch) - QUERY_MAX).toInt
         cnt(cell) += 1
-        // QnormMicrosExpr at nm = 1e12, verbatim double chain
+        val qr = Kernels.qnormMicros(emb, RAW_NM)
         var j = 0
-        val jmax = math.min(emb.length, FULL_DIM)
-        while (j < jmax) {
-          val qraw = math.floor(emb(j).toDouble * 1e6 + 0.5)
-          sums(cell)(j) += math.floor(qraw / rt * 1e6 + 0.5).toLong
-          j += 1
+        while (j < math.min(qr.numElements(), FULL_DIM)) {
+          sums(cell)(j) += qr.getLong(j); j += 1
         }
       }
       val next = cent.map(_.clone())
-      c = 0
-      while (c < cells) {
-        if (cnt(c) > 0) {
-          var j = 0
-          while (j < FULL_DIM) {
-            next(c)(j) = sums(c)(j) / cnt(c); j += 1
-          }
-        }
-        c += 1
-      }
+      for (c <- 0 until cells if cnt(c) > 0; j <- 0 until FULL_DIM)
+        next(c)(j) = sums(c)(j) / cnt(c)
       cent = next
     }
     cent
   }
 
-  /** The one-row packed micro-domain centroid frame the training loop
-    * scores against ([[packedCents]] shape, built driver-side from the
-    * round's micro vectors). c_id keeps the slice ids (QUERY_MAX + c)
-    * so tie-breaks order identically to the r14 slice frame.
+  /** A round's micro centroids in `cell_argmax`'s packed operand
+    * layout ([[packedCents]] shape): slice ids (QUERY_MAX + c, so
+    * tie-breaks order identically to the r14 slice frame), RAW micros
+    * zero-padded to [[Kernels.CellStride]], and √c_nm from the exact Long Σ m·m.
+    */
+  private def packCells(
+      cent: Array[Array[Long]]): (Array[Long], Array[Long], Array[Double]) =
+    (Array.tabulate(cent.length)(c => QUERY_MAX.toLong + c),
+      cent.flatMap(_.padTo(Kernels.CellStride, 0L)),
+      cent.map(v => math.sqrt(v.map(m => m * m).sum.toDouble)))
+
+  /** The one-row packed micro-domain centroid frame the distributed
+    * training loop scores against ([[packCells]] as a frame).
     */
   private def microCentroidArray(
       s: SparkSession, cent: Array[Array[Long]]): DataFrame = {
     import s.implicits._
-    val ids = cent.indices.map(c => QUERY_MAX.toLong + c)
-    val flat = cent.toSeq.flatMap(v => v.toSeq.padTo(CELL_STRIDE, 0L))
-    val sn = cent.toSeq.map(v => math.sqrt(v.map(m => m * m).sum.toDouble))
-    Seq((ids, flat, sn)).toDF("ids", "flat", "sn")
+    val (ids, flat, sn) = packCells(cent)
+    Seq((ids.toSeq, flat.toSeq, sn.toSeq)).toDF("ids", "flat", "sn")
       .select(struct(col("ids"), col("flat"), col("sn")).as("cents"))
   }
 
@@ -748,7 +704,7 @@ object AnnOps {
     * speaks (assignment, probe, residuals, [[IvfPqIndex]] persistence).
     * c_emb_j = cm_j / 1e6 as the nearest float: |cm| ≤ ~2e6 sits far
     * under the 0.5-quantum float bound (relative error 2⁻²⁴ → absolute
-    * ≤ 0.13 ≪ 0.5), so `floor(c_emb_j·1e6 + 0.5)` — what dot_micros
+    * ≤ 0.13 ≪ 0.5), so the quantizer [[Kernels.q]] — what dot_micros
     * and qnorm_micros compute — recovers EXACTLY the trained micros,
     * and c_nm ≡ dot_micros(c_emb, c_emb). The round-trip is pinned in
     * AnnSpec.
@@ -1047,20 +1003,7 @@ object AnnOps {
           AND i.ccos = iamx.mc
         GROUP BY i.vec_id)"""
 
-  /** JVM twin of the kernel's NORMALIZED quantizer (seed codebooks are
-    * built driver-side in the same unit-sphere micro units the kernel
-    * compares against): qn_i = floor(q(v_i)/√nm · 1e6 + 0.5) with
-    * nm = Σ q(v_i)².
-    */
-  private def qNormJvm(emb: scala.collection.Seq[Float]): Array[Long] = {
-    val qraw = emb.map(f => math.floor(f.toDouble * 1e6 + 0.5).toLong).toArray
-    val nm = qraw.map(q => q * q).sum
-    val rt = math.sqrt(nm.toDouble)
-    qraw.map(q =>
-      if (nm == 0L) 0L else math.floor(q.toDouble / rt * 1e6 + 0.5).toLong)
-  }
-
-  /** Column twin of the same normalized quantizer, for the refinement
+  /** Column twin of the normalized quantizer, for the refinement
     * pass's sub-vector sums (element `idx` of `embedding` under the
     * row's `nm`).
     */
@@ -1116,8 +1059,12 @@ object AnnOps {
           col("vec_id") < QUERY_MAX + k)
         .select(col("vec_id"), col("embedding"))
         .collect()
-        .map(r => r.getAs[Long]("vec_id") ->
-          qNormJvm(r.getAs[scala.collection.Seq[Float]]("embedding")))
+        .map { r =>
+          val v = UnsafeArrayData.fromPrimitiveArray(
+            r.getAs[scala.collection.Seq[Float]]("embedding").toArray)
+          r.getAs[Long]("vec_id") ->
+            Kernels.qnormMicros(v, Kernels.dotMicros(v, v)).toLongArray()
+        }
         .toMap
       val seedCent = new Array[Long](PQ_M * k * PQ_SUBDIM)
       for (sc <- 0 until PQ_M; c <- 0 until k; j <- 0 until PQ_SUBDIM)
@@ -1673,7 +1620,7 @@ object AnnOps {
           cents.toSeq.sortBy(_._1).map { case (parent, subs) =>
             (parent,
               subs.map(_._1).toSeq,
-              subs.flatMap(_._2.padTo(CELL_STRIDE, 0L)).toSeq,
+              subs.flatMap(_._2.padTo(Kernels.CellStride, 0L)).toSeq,
               subs.map(v =>
                 math.sqrt(v._2.map(m => m.toDouble * m).sum)).toSeq)
           }.toDF("cell", "ids", "flat", "sn")
@@ -1826,22 +1773,17 @@ object AnnOps {
     */
   private[operators] def packedCents(cent: DataFrame): DataFrame =
     cent.agg(collect_list(struct(col("c_id"),
-        call_function("qnorm_micros", col("c_emb"), lit(1000000000000L))
+        call_function("qnorm_micros", col("c_emb"), lit(RAW_NM))
           .as("cqr"),
         col("c_nm"))).as("cs"))
       .select(struct(
         transform(col("cs"), x => x("c_id")).as("ids"),
         flatten(transform(col("cs"), x => concat(
-          slice(x("cqr"), 1, CELL_STRIDE),
-          array_repeat(lit(0L), lit(CELL_STRIDE) - size(x("cqr"))))))
+          slice(x("cqr"), 1, Kernels.CellStride),
+          array_repeat(lit(0L), lit(Kernels.CellStride) - size(x("cqr"))))))
           .as("flat"),
         transform(col("cs"), x => sqrt(x("c_nm").cast("double"))).as("sn")
       ).as("cents"))
-
-  /** cell_argmax's fixed per-centroid stride (= the engine's embedding
-    * width — the same 64 the kernel's scratch buffer caps at).
-    */
-  private[operators] val CELL_STRIDE = 64
 
   /** Map-side cell assignment over a corpus frame carrying a packed
     * `cents` column ([[packedCents]]) — replays the crossJoin +

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.{Caches, Op, Tables}
+import graft.functions.Kernels
 import graft.functions.Portable._
 
 /** Embedding-corpus statistics (SURVEY.md §2 part E extensions): the
@@ -350,10 +351,7 @@ object EmbeddingOps {
           val emb = row.getSeq[Float](0)
           val q = new Array[Long](64)
           var i = 0
-          while (i < 64) {
-            q(i) = math.floor(emb(i).toDouble * 1e6 + 0.5).toLong
-            i += 1
-          }
+          while (i < 64) { q(i) = Kernels.q(emb(i)); i += 1 }
           i = 0
           while (i < 64) {
             val qi = q(i)

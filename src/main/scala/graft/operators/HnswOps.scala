@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Caches, Checkpoints, Op, Tables}
+import graft.functions.Kernels
 import graft.functions.Portable._
 
 /** E18c — the HNSW HIERARCHY (r19, the r18 verdict's ask #1): the
@@ -144,9 +145,7 @@ object HnswOps {
         while (j < micros(a).length) {
           dot += micros(a)(j) * micros(b)(j); j += 1
         }
-        val cos = dot.toDouble /
-          (math.sqrt(norms(a).toDouble) * math.sqrt(norms(b).toDouble))
-        (cos, ids(b))
+        (Kernels.cos(dot, norms(a), norms(b)), ids(b))
       }.sortBy { case (cos, id) => (-cos, id) }
       ranked.take(R_BRIDGE).map { case (_, cb) => (ids(a), cb) }
     }
@@ -229,11 +228,10 @@ object HnswOps {
   /** The corpus' hierarchy edges over its base [[KnnIndex]], built and
     * written AT MOST ONCE per (corpus, geometry) per session — the
     * frame is ≤ n/7 × (M_UP + R_BRIDGE) rows, so the artifact is a
-    * small parquet read on every warm query.
+    * small parquet read on every warm query. `n` is the corpus size.
     */
   private[graft] def hierFor(
-      s: SparkSession, d: String, idx: KnnIndex.Index): DataFrame = {
-    val n = Tables.embeddings(s, d).count()
+      s: SparkSession, d: String, idx: KnnIndex.Index, n: Long): DataFrame = {
     val levels = levelsFor(n)
     val key = s"${CorpusKey.key(d, "embeddings.parquet")}#hnsw" +
       s"#c${idx.cells}#l$levels#m$M_UP#r$R_BRIDGE"
@@ -251,17 +249,18 @@ object HnswOps {
     * node is a layer-1 member by nesting); the base walk's world is
     * the DESCENT WINNERS' cells — partition-pruned artifact reads,
     * exactly [[GraphAnnOps.graphSearchImpl]]'s shape with the
-    * hierarchy standing in for the quantizer probe.
+    * hierarchy standing in for the quantizer probe. `n` is the corpus
+    * size (the rows of `idx.vectors`).
     */
   private[graft] def hnswSearch(
       e: DataFrame,
       idx: KnnIndex.Index,
       hier: DataFrame,
+      n: Long,
       beam: Int = HNSW_BEAM,
       hops: Int = GraphAnnOps.GRAPH_HOPS,
       topK: Int = GraphAnnOps.GRAPH_TOP_K): (DataFrame, DataFrame) = {
     val s = e.sparkSession
-    val n = idx.vectors.count()
     val levels = levelsFor(n)
     val queries = e.filter(col("vec_id") < AnnOps.QUERY_MAX)
     val qF = queries.select(col("vec_id").as("q_id"),
@@ -270,13 +269,13 @@ object HnswOps {
     // doctrine): the descent is levels × H_UP synchronous hop rounds
     // whose frontiers are ≤ queries × EF_UP rows — at gate scale the
     // round latency IS the query (~2.4 s warm, the r19 board's most
-    // expensive). Below the threshold (n is already counted) the
+    // expensive). Below the threshold the
     // hierarchy, the upper world and the walk run driver-local with
     // bit-identical kernels; parity is pinned local≡distributed in
     // HnswSpec and the sf1 GeometryCheck replay. Above it, the
     // distributed loop below is unchanged.
     if (LocalWalk.localMax(s) > 0 && n <= LocalWalk.localMax(s)) {
-      return hnswSearchLocal(s, idx, hier, qF, n, levels, beam, hops, topK)
+      return hnswSearchLocal(s, idx, hier, qF, levels, beam, hops, topK)
     }
     // the upper world: layer-1+ members (n/8), cached once — both
     // frames pre-partitioned on vec_id, their join key in every
@@ -381,7 +380,6 @@ object HnswOps {
       idx: KnnIndex.Index,
       hier: DataFrame,
       qF: DataFrame,
-      n: Long,
       levels: Int,
       beam: Int,
       hops: Int,
@@ -636,7 +634,7 @@ object HnswOps {
       val idx = KnnIndex.forCorpus(s, d, cells,
         EmbeddingOps.knnSubGeometry(n, cells),
         k = GraphAnnOps.GRAPH_DEGREE)
-      hnswSearch(AnnOps.withNorm(s, d), idx, hierFor(s, d, idx))._1
+      hnswSearch(AnnOps.withNorm(s, d), idx, hierFor(s, d, idx, n), n)._1
     },
     Some(sqlHnsw(AnnOps.CENTROIDS, None, GATE_LEVELS)))
 

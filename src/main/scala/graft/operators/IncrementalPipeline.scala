@@ -21,8 +21,9 @@ import graft.functions.Portable.{hash60, normText}
   * the exact-dedup anti-join, the signature scan DedupIndex.append
   * probes — both with the batch side broadcast). Nothing corpus-sized
   * ever shuffles for a batch, so per-batch cost tracks the batch.
-  * graft.BenchPipeline measures exactly this (full vs half batch at
-  * the same base), and PipelineDrillSpec pins that REPLAYING a batch
+  * records/BENCH_pipeline_sf10_r15.json measured exactly this (full vs
+  * half batch at the same base), and PipelineDrillSpec pins that
+  * REPLAYING a batch
   * is a no-op end to end (every append dedupes on ids; the
   * gate/dedup/pricing stages are deterministic).
   */

@@ -3,8 +3,12 @@ package graft.operators
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+
+import graft.functions.Kernels
 
 /** Driver-local engine for the graph-ANN beam walks (r20) — the
   * size-adaptive engine-chooser doctrine ([[TokenizerIndex.train]]'s
@@ -23,15 +27,15 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType, S
   * above it the distributed loop runs unchanged, so the 100 TB shape is
   * untouched (the sf100 probes exercise it).
   *
-  * Equivalence is EXACT, not approximate: the kernels below replicate
-  * the distributed operators' arithmetic bit for bit —
-  * [[graft.functions.VectorExpressions.DotMicrosExpr]]'s quantize-and-
-  * accumulate loop, `cosineFromMicros`'s single double division, and
-  * the `topk_min` aggregate's struct ordering
+  * Equivalence is EXACT, not approximate: candidates score through
+  * [[graft.functions.Kernels]] — `dotMicros`, the function the
+  * distributed plan's `dot_micros` runs, and `cos`, the single double
+  * division `cosineFromMicros` spells as a Column in the same IEEE op
+  * order — and the beam cut uses the `topk_min` aggregate's struct ordering
   * (java.lang.Double.compare on the negated cosine, then the id
   * tie-break — the same total order Spark's struct comparator applies,
-  * including NaN-greatest and -0.0 < 0.0). Parity is pinned by
-  * local≡distributed tests (GraphAnnSpec/HnswSpec) and the oracle gate.
+  * including NaN-greatest and -0.0 < 0.0). GraphAnnSpec/HnswSpec pin
+  * local ≡ distributed end to end.
   */
 private[graft] object LocalWalk {
 
@@ -46,30 +50,10 @@ private[graft] object LocalWalk {
   def localMax(s: SparkSession): Long =
     s.conf.getOption(LocalMaxKey).map(_.toLong).getOrElse(LOCAL_MAX_DEFAULT)
 
-  /** A collected (embedding, nm) vector. */
-  final case class V(emb: Array[Float], nm: Long)
-
-  /** Exactly [[graft.functions.VectorExpressions.DotMicrosExpr]]:
-    * Σ floor(a_i·1e6+0.5)·floor(b_i·1e6+0.5) over the common prefix.
+  /** A collected (embedding, nm) vector; the embedding is kept in the
+    * kernels' operand form, packed once at collect.
     */
-  def dotMicros(a: Array[Float], b: Array[Float]): Long = {
-    val n = math.min(a.length, b.length)
-    var acc = 0L
-    var i = 0
-    while (i < n) {
-      val qa = math.floor(a(i).toDouble * 1e6 + 0.5).toLong
-      val qb = math.floor(b(i).toDouble * 1e6 + 0.5).toLong
-      acc += qa * qb
-      i += 1
-    }
-    acc
-  }
-
-  /** Exactly `Portable.cosineFromMicros`: one double division over the
-    * integer dot and the two integer self-dots, same IEEE op order.
-    */
-  def cos(dot: Long, na: Long, nb: Long): Double =
-    dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
+  final case class V(emb: ArrayData, nm: Long)
 
   /** The `topk_min(struct(-cos AS negc, vec_id), k)` order: negc
     * ascending by java.lang.Double.compare (Spark's double ordering —
@@ -105,7 +89,8 @@ private[graft] object LocalWalk {
       members.get(v).foreach { mv =>
         queries.get(q).foreach { qv =>
           out.getOrElseUpdate(q, mutable.LongMap.empty[Double])
-            .getOrElseUpdate(v, cos(dotMicros(qv.emb, mv.emb), qv.nm, mv.nm))
+            .getOrElseUpdate(v,
+              Kernels.cos(Kernels.dotMicros(qv.emb, mv.emb), qv.nm, mv.nm))
         }
       }
     }
@@ -212,7 +197,7 @@ private[graft] object LocalWalk {
     val out = mutable.LongMap.empty[V]
     df.select(col("vec_id"), col("embedding"), col("nm")).collect()
       .foreach { r =>
-        out(r.getLong(0)) = V(floatArray(r, 1), r.getLong(2))
+        out(r.getLong(0)) = V(packEmb(r, 1), r.getLong(2))
       }
     out
   }
@@ -238,7 +223,7 @@ private[graft] object LocalWalk {
     df.select(col("vec_id"), col("embedding"), col("nm"), col("cell"))
       .collect().foreach { r =>
         val id = r.getLong(0)
-        vs(id) = V(floatArray(r, 1), r.getLong(2))
+        vs(id) = V(packEmb(r, 1), r.getLong(2))
         cells(id) = r.getLong(3)
       }
     (vs, cells)
@@ -246,11 +231,11 @@ private[graft] object LocalWalk {
 
   def collectQueries(qF: DataFrame): Map[Long, V] =
     qF.select(col("q_id"), col("q_emb"), col("q_nm")).collect()
-      .map(r => r.getLong(0) -> V(floatArray(r, 1), r.getLong(2))).toMap
+      .map(r => r.getLong(0) -> V(packEmb(r, 1), r.getLong(2))).toMap
 
   def collectPairs(df: DataFrame): Seq[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
-  private def floatArray(r: Row, i: Int): Array[Float] =
-    r.getSeq[Float](i).toArray
+  private def packEmb(r: Row, i: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(r.getSeq[Float](i).toArray)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.functions.VectorExpressions.log2q16
+import graft.functions.Kernels.log2q16
 import graft.operators.TokenizerIndex.utf8Less
 
 /** Unigram-LM (SentencePiece-family) tokenizer TRAINING — the other

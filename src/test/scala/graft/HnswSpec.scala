@@ -1,5 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.SpecBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AnnOps, GraphAnnOps, HnswOps, KnnIndex}
@@ -115,11 +120,12 @@ class HnswSpec extends SparkSpec {
     val e = AnnOps.withNorm(spark, sf)
     val idx = KnnIndex.forCorpus(spark, sf, AnnOps.CENTROIDS, None,
       k = GraphAnnOps.GRAPH_DEGREE)
-    val hier = HnswOps.hierFor(spark, sf, idx)
-    val (res1, scanned) = HnswOps.hnswSearch(e, idx, hier)
+    val n = e.count()
+    val hier = HnswOps.hierFor(spark, sf, idx, n)
+    val (res1, scanned) = HnswOps.hnswSearch(e, idx, hier, n)
     val rows1 = res1.collect().map(r => (r.getLong(0), r.getLong(1),
       r.getLong(2), r.getDouble(3)))
-    val rows2 = HnswOps.hnswSearch(e, idx, hier)._1.collect()
+    val rows2 = HnswOps.hnswSearch(e, idx, hier, n)._1.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(rows1.toSeq == rows2.toSeq, "descent must be deterministic")
     val perQ = rows1.groupBy(_._1)
@@ -153,7 +159,7 @@ class HnswSpec extends SparkSpec {
         graft.operators.EmbeddingOps.knnSubGeometry(n, cells),
         k = GraphAnnOps.GRAPH_DEGREE)
       val (res, scanned) = HnswOps.hnswSearch(
-        e, idx, HnswOps.hierFor(spark, dir, idx))
+        e, idx, HnswOps.hierFor(spark, dir, idx, n), n)
       val rows = res.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getLong(2), java.lang.Double.doubleToLongBits(r.getDouble(3))))
         .toSeq
@@ -171,5 +177,29 @@ class HnswSpec extends SparkSpec {
       spark.conf.unset(LocalWalk.LocalMaxKey)
       Caches.releaseScope()
     }
+  }
+
+  test("a warm ann_hnsw rep counts the corpus once") {
+    HnswOps.annHnsw.fn(spark, sf).collect()
+    Caches.releaseScope()
+    val counts = new ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart
+            if x.description.startsWith("count at") =>
+          counts.add(x.description)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    SpecBus.drain(sc)
+    sc.addSparkListener(l)
+    try HnswOps.annHnsw.fn(spark, sf).collect()
+    finally {
+      SpecBus.drain(sc)
+      sc.removeSparkListener(l)
+      Caches.releaseScope()
+    }
+    assert(counts.size == 1, s"count actions: $counts")
   }
 }

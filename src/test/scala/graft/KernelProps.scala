@@ -1,8 +1,17 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.propBoolean
+
+import graft.functions.VectorExpressions._
 
 /** Property-based checks for the engine's custom kernels: the native
   * expressions must agree with their spec (or their portable-SQL
@@ -318,5 +327,135 @@ object KernelProps extends Properties("kernels") {
           .collect().head.getLong(0)
         got == want
       }
+    }
+
+  // ---- eval ≡ generated code for every codegen'd kernel ----
+
+  private val AF = ArrayType(FloatType, containsNull = false)
+  private val AL = ArrayType(LongType, containsNull = false)
+  private val Cents = StructType(Seq(StructField("ids", AL), StructField("flat", AL),
+    StructField("sn", ArrayType(DoubleType, containsNull = false))))
+
+  /** A kernel applied to bound references of `types`. */
+  private final case class Kernel(types: Seq[DataType], mk: Seq[Expression] => Expression) {
+    val expr: Expression =
+      mk(types.zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = true) })
+  }
+
+  private val dotK = Kernel(Seq(AF, AF), a => DotMicrosExpr(a(0), a(1)))
+  private val projK = Kernel(Seq(AF, AL), a => ProjMicrosExpr(a(0), a(1)))
+  private val lshK = Kernel(Seq(AF, AL, IntegerType), a => LshBucketsExpr(a(0), a(1), a(2)))
+  private val qnormK = Kernel(Seq(AF, LongType), a => QnormMicrosExpr(a(0), a(1)))
+  private val pqDistsK = Kernel(Seq(AF, AL, IntegerType, LongType),
+    a => PqDistsExpr(a(0), a(1), a(2), a(3)))
+  private val pqEncodeK = Kernel(Seq(AF, AL, IntegerType, LongType),
+    a => PqEncodeExpr(a(0), a(1), a(2), a(3)))
+  private val cellK = Kernel(Seq(AF, LongType, Cents), a => CellArgmaxExpr(a(0), a(1), a(2)))
+  private val lsubK = Kernel(Seq(AL, AL), a => LsubMicrosExpr(a(0), a(1)))
+  private val pqlDistsK = Kernel(Seq(AL, AL, IntegerType), a => PqlDistsExpr(a(0), a(1), a(2)))
+  private val pqlEncodeK = Kernel(Seq(AL, AL, IntegerType), a => PqlEncodeExpr(a(0), a(1), a(2)))
+  private val log2K = Kernel(Seq(LongType, LongType), a => Log2Q16Expr(a(0), a(1)))
+
+  private def fa(v: Seq[Float]): ArrayData = UnsafeArrayData.fromPrimitiveArray(v.toArray)
+  private def la(v: Seq[Long]): ArrayData = UnsafeArrayData.fromPrimitiveArray(v.toArray)
+  private def selfDot(v: Seq[Float]): Long = v.map { f =>
+    val q = math.floor(f.toDouble * 1e6 + 0.5).toLong; q * q }.sum
+  /** The packed cell_argmax operand over raw centroid micros (stride 64). */
+  private def cents(ids: Seq[Long], cs: Seq[Seq[Long]]): InternalRow =
+    InternalRow(la(ids), la(cs.flatMap(_.padTo(64, 0L))),
+      UnsafeArrayData.fromPrimitiveArray(
+        cs.map(c => math.sqrt(c.map(m => m * m).sum.toDouble)).toArray))
+
+  private val anyFloat: Gen[Float] = Gen.frequency(
+    8 -> Gen.choose(-1.5f, 1.5f),
+    2 -> Gen.oneOf(0.0f, -0.0f, Float.NaN, 0.5f, -0.5f, 1.0f))
+  private def floats(maxLen: Int): Gen[List[Float]] =
+    Gen.choose(0, maxLen).flatMap(Gen.listOfN(_, anyFloat))
+  private val micros: Gen[Long] = Gen.choose(-2000000L, 2000000L)
+  private def nmFor(v: Seq[Float]): Gen[Long] =
+    Gen.oneOf(Gen.const(0L), Gen.const(selfDot(v)), Gen.choose(1L, 10000000000000L))
+  // (dims, subDim, k) of a PQ codebook; 128 dims is twice the engine width
+  private val pqShape: Gen[(Int, Int, Int)] = for {
+    dims <- Gen.oneOf(8, 16, 64, 128); sd <- Gen.oneOf(4, 8); k <- Gen.choose(1, 4)
+  } yield (dims, sd, k)
+  // centroids from a two-vector pool, so exact cosine ties are common
+  private val gridMicros: Gen[List[Long]] = Gen.listOfN(64,
+    Gen.oneOf(-1000000L, -500000L, 0L, 250000L, 500000L, 1000000L))
+
+  private val kernelCases: Gen[List[(Kernel, Seq[Any])]] = Gen.sequence[List[(Kernel, Seq[Any])], (Kernel, Seq[Any])](Seq(
+    for { a <- floats(70); b <- floats(70) } yield dotK -> Seq(fa(a), fa(b)),
+    for { v <- floats(70); w <- Gen.listOf(micros) } yield projK -> Seq(fa(v), la(w)),
+    for {
+      v <- floats(80); planes <- Gen.choose(1, 4); tables <- Gen.choose(1, 3)
+      w <- Gen.listOfN(tables * planes * 64, Gen.choose(-1000L, 1000L))
+    } yield lshK -> Seq(fa(v), la(w), planes),
+    for { v <- floats(130); nm <- nmFor(v) } yield qnormK -> Seq(fa(v), nm),
+    for {
+      (dims, sd, k) <- pqShape; v <- Gen.listOfN(dims, anyFloat); nm <- nmFor(v)
+      cent <- Gen.listOfN(k * dims, micros); kern <- Gen.oneOf(pqDistsK, pqEncodeK)
+    } yield kern -> Seq(fa(v), la(cent), sd, nm),
+    for {
+      v <- floats(70); nm <- nmFor(v); pool <- Gen.listOfN(2, gridMicros)
+      nc <- Gen.choose(1, 6); cs <- Gen.listOfN(nc, Gen.oneOf(pool))
+      ids <- Gen.pick(nc, 100L to 120L)
+    } yield cellK -> Seq(fa(v), nm, cents(ids.toSeq, cs)),
+    for { a <- Gen.listOf(micros); b <- Gen.listOf(micros) } yield lsubK -> Seq(la(a), la(b)),
+    for {
+      (dims, sd, k) <- pqShape; v <- Gen.listOfN(dims, micros)
+      cent <- Gen.listOfN(k * dims, micros); kern <- Gen.oneOf(pqlDistsK, pqlEncodeK)
+    } yield kern -> Seq(la(v), la(cent), sd),
+    for {
+      den <- Gen.choose(1L, 1000000000000L); extra <- Gen.choose(0L, 1000000L)
+    } yield log2K -> Seq(den + extra, den)))
+
+  private val edgeCases: Seq[(Kernel, Seq[Any])] = {
+    val v128 = Seq.tabulate(128)(i => ((i % 7) - 3) / 4.0f)
+    val cent128 = Seq.tabulate(2 * 128)(i => (i % 11 - 5) * 100000L)
+    val signed = Seq(0.0f, -0.0f, Float.NaN, 0.5f)
+    val tie = Seq.fill(64)(500000L)
+    Seq(
+      dotK -> Seq(fa(Nil), fa(Nil)),
+      projK -> Seq(fa(Nil), la(Nil)),
+      lshK -> Seq(fa(Nil), la(Seq.fill(64)(1L)), 1),
+      qnormK -> Seq(fa(Nil), 0L),
+      qnormK -> Seq(fa(signed), 0L),
+      pqDistsK -> Seq(fa(v128), la(cent128), 8, selfDot(v128)),
+      pqEncodeK -> Seq(fa(v128), la(cent128), 8, selfDot(v128)),
+      pqDistsK -> Seq(fa(v128), la(cent128), 8, 0L),
+      pqDistsK -> Seq(fa(Nil), la(Nil), 8, 0L),
+      cellK -> Seq(fa(signed), selfDot(signed), cents(Seq(7L, 3L, 5L), Seq(tie, tie, tie))),
+      cellK -> Seq(fa(Nil), 0L, cents(Seq(4L, 2L), Seq(tie, tie))),
+      lsubK -> Seq(la(Nil), la(Seq(1L))),
+      pqlDistsK -> Seq(la(cent128.take(128)), la(cent128), 8),
+      pqlEncodeK -> Seq(la(cent128.take(128)), la(cent128), 8),
+      log2K -> Seq(1L, 1L))
+  }
+
+  private def scalaValue(v: Any, dt: DataType): Any = (v, dt) match {
+    case (a: ArrayData, ArrayType(LongType, _)) => a.toLongArray().toSeq
+    case (a: ArrayData, ArrayType(IntegerType, _)) => a.toIntArray().toSeq
+    case _ => v
+  }
+
+  /** eval and the generated projection return the same value, or both
+    * fail on the same arithmetic error (a zero divisor in the shape).
+    */
+  private def evalMatchesCodegen(k: Kernel, vals: Seq[Any]): Boolean = {
+    val row = InternalRow(vals: _*)
+    val dt = k.expr.dataType
+    val interpreted = Try(scalaValue(k.expr.eval(row), dt))
+    val generated = Try(scalaValue(
+      GenerateUnsafeProjection.generate(Seq(k.expr)).apply(row).get(0, dt), dt))
+    (interpreted, generated) match {
+      case (Success(a), Success(b)) => a == b
+      case (Failure(a: ArithmeticException), Failure(b: ArithmeticException)) => true
+      case _ => false
+    }
+  }
+
+  property("every codegen'd kernel: eval == generated code, edge cases included") =
+    Prop.forAll(kernelCases) { cases =>
+      val bad = (cases ++ edgeCases).filterNot { case (k, v) => evalMatchesCodegen(k, v) }
+      bad.isEmpty :| s"eval != codegen: ${bad.map(_._1.expr.prettyName)}"
     }
 }
