@@ -63,6 +63,15 @@ object Caches {
     */
   def trackRdd(rdd: RDD[_]): Unit = live.add(Left(rdd))
 
+  /** Unpersist one registered RDD now and drop it from the scope — for
+    * a caller that owns the entry (a write path's local checkpoint) and
+    * has run its last action on it.
+    */
+  def releaseRdd(rdd: RDD[_]): Unit = {
+    live.remove(Left(rdd))
+    rdd.unpersist(false)
+  }
+
   /** End the current scope: unpersist every registered entry unless
     * [[artifactMode]] keeps them as cross-query artifacts.
     */

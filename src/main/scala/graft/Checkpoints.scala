@@ -28,12 +28,20 @@ object Checkpoints {
       // with the scope's cached frames instead of waiting for the
       // ContextCleaner's GC pass. (Reliable checkpoints live on the
       // durable FS and need no block release.)
-      out.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          Caches.trackRdd(lr.rdd)
-        case _ => ()
-      }
+      localRdd(out).foreach(Caches.trackRdd)
       out
     }
+  }
+
+  /** Free the blocks of a frame [[checkpoint]] returned now, rather than
+    * at the scope's end — for a caller that has run its last action on
+    * it and keeps no frame built on it. A no-op for a reliable
+    * checkpoint, whose files live on the durable FS.
+    */
+  def release(df: DataFrame): Unit = localRdd(df).foreach(Caches.releaseRdd)
+
+  private def localRdd(df: DataFrame) = df.queryExecution.analyzed match {
+    case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
+    case _ => None
   }
 }

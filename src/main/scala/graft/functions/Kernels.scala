@@ -46,6 +46,12 @@ object Kernels {
   private def cosRooted(dot: Long, ra: Double, rb: Double): Double =
     dot.toDouble / (ra * rb)
 
+  /** A shape argument the kernel divides by: a non-positive one is a
+    * caller error, reported by SQL function and argument name.
+    */
+  private def positive(fn: String, arg: String, v: Int): Unit =
+    if (v <= 0) throw new IllegalArgumentException(s"$fn: $arg must be positive, got $v")
+
   private def buffer(scratch: Array[Long], n: Int): Array[Long] =
     if (scratch != null && scratch.length >= n) scratch else new Array[Long](n)
 
@@ -96,6 +102,7 @@ object Kernels {
     */
   def lshBuckets(v: ArrayData, w: ArrayData, planes: Int,
       scratch: Array[Long]): ArrayData = {
+    positive("lsh_buckets", "planes", planes)
     val dims = math.min(v.numElements(), 64)
     val tables = w.numElements() / (planes * 64)
     val qv = quantize(v, dims, scratch)
@@ -135,12 +142,14 @@ object Kernels {
   }
 
   /** The m×k distance table of a dims-long vector against the
-    * subspace-major codebook (cent[(s·k+c)·subDim + j]).
+    * subspace-major codebook (cent[(s·k+c)·subDim + j]); empty for an
+    * empty vector.
     */
-  private def distTable(qv: Array[Long], dims: Int, cent: ArrayData,
+  private def distTable(fn: String, qv: Array[Long], dims: Int, cent: ArrayData,
       subDim: Int): ArrayData = {
+    positive(fn, "subDim", subDim)
     val m = dims / subDim
-    val k = cent.numElements() / dims
+    val k = if (dims == 0) 0 else cent.numElements() / dims
     val out = new Array[Long](m * k)
     var s = 0
     while (s < m) {
@@ -157,10 +166,11 @@ object Kernels {
   /** Per subspace, the first centroid of least distance (the oracle's
     * ORDER BY dist, c) — [[distTable]]'s argmin without the table.
     */
-  private def nearest(qv: Array[Long], dims: Int, cent: ArrayData,
+  private def nearest(fn: String, qv: Array[Long], dims: Int, cent: ArrayData,
       subDim: Int): ArrayData = {
+    positive(fn, "subDim", subDim)
     val m = dims / subDim
-    val k = cent.numElements() / dims
+    val k = if (dims == 0) 0 else cent.numElements() / dims
     val out = new Array[Int](m)
     var s = 0
     while (s < m) {
@@ -189,24 +199,24 @@ object Kernels {
   /** `pq_dists`: [[pqlDists]] of the unit-sphere quantized vector. */
   def pqDists(v: ArrayData, cent: ArrayData, subDim: Int, nm: Long,
       scratch: Array[Long]): ArrayData =
-    distTable(qnorm(v, nm, scratch), v.numElements(), cent, subDim)
+    distTable("pq_dists", qnorm(v, nm, scratch), v.numElements(), cent, subDim)
 
   /** `pql_dists`: the distance table of an already-normalized vector. */
   def pqlDists(v: ArrayData, cent: ArrayData, subDim: Int,
       scratch: Array[Long]): ArrayData =
-    distTable(longs(v, scratch), v.numElements(), cent, subDim)
+    distTable("pql_dists", longs(v, scratch), v.numElements(), cent, subDim)
 
   /** `pq_encode`: [[pqlEncode]] of the unit-sphere quantized vector. */
   def pqEncode(v: ArrayData, cent: ArrayData, subDim: Int, nm: Long,
       scratch: Array[Long]): ArrayData =
-    nearest(qnorm(v, nm, scratch), v.numElements(), cent, subDim)
+    nearest("pq_encode", qnorm(v, nm, scratch), v.numElements(), cent, subDim)
 
   /** `pql_encode`: per-subspace nearest centroid of an
     * already-normalized vector.
     */
   def pqlEncode(v: ArrayData, cent: ArrayData, subDim: Int,
       scratch: Array[Long]): ArrayData =
-    nearest(longs(v, scratch), v.numElements(), cent, subDim)
+    nearest("pql_encode", longs(v, scratch), v.numElements(), cent, subDim)
 
   /** `cell_argmax`: the id of the max-cosine centroid in the packed
     * struct (ids: array<long>, flat: array<long> raw centroid micros at

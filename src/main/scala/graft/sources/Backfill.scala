@@ -129,64 +129,69 @@ object Backfill {
       .withColumn("__batch",
         expr(s"($pkCol - pmod($pkCol, $batchSize)) div $batchSize")))
 
-    val skippedCount = planned.filter(!col("__dump")).count()
-    val eligible = planned.filter(col("__dump"))
+    // planned is released once the report's last count has run: a
+    // backfill is one call, and its blocks must not wait for the
+    // caller's scope to end
+    try {
+      val skippedCount = planned.filter(!col("__dump")).count()
+      val eligible = planned.filter(col("__dump"))
 
-    // Driver sees batch ids + sizes only — O(items/batchSize) rows.
-    val batches = eligible.groupBy(col("__batch"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("__batch"))
-      .collect()
-      .map(r => r.getAs[Long]("__batch") -> r.getAs[Long]("n"))
+      // Driver sees batch ids + sizes only — O(items/batchSize) rows.
+      val batches = eligible.groupBy(col("__batch"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy(col("__batch"))
+        .collect()
+        .map(r => r.getAs[Long]("__batch") -> r.getAs[Long]("n"))
 
-    var submitted = 0L
-    var appended = 0L
-    var nestedAppended = 0L
-    val landed = Seq.newBuilder[Long]
-    val failed = Seq.newBuilder[Long]
-    val run = Seq.newBuilder[Long]
+      var submitted = 0L
+      var appended = 0L
+      var nestedAppended = 0L
+      val landed = Seq.newBuilder[Long]
+      val failed = Seq.newBuilder[Long]
+      val run = Seq.newBuilder[Long]
 
-    batches.foreach { case (batchId, n) =>
-      if (!limit.exists(submitted >= _)) {
-        run += batchId
-        val dumpId = s"$runId-b$batchId"
-        val batchRows = eligible.filter(col("__batch") === batchId)
-          .drop("__dump", "__batch")
-        Try {
-          // Nested sinks land FIRST: the eligibility gate reads only the
-          // PARENT sink's latest state, so the parent append must be the
-          // commit point it observes. If a nested append fails here the
-          // parent never lands, the gate still sees the batch as
-          // undumped, and a re-run retries it — nested rows that DID
-          // land are re-delivered under the same dump_id and dropped by
-          // the sink's dump-id check. (Parent-first would strand a
-          // nested failure forever: the gate would skip the batch.)
-          val nNested = nested.map { case (related, nsink) =>
-            nsink.appendIdempotent(spark,
-              Sinks.stamped(related(batchRows), dumpId, dumpTimeUs))
-          }.sum
-          val nParent = sink.appendIdempotent(spark,
-            Sinks.stamped(batchRows, dumpId, dumpTimeUs))
-          (nParent, nNested)
-        } match {
-          case Success((nParent, nNested)) =>
-            landed += batchId
-            appended += nParent
-            nestedAppended += nNested
-            submitted += n
-          case Failure(_) =>
-            // the reference tolerates a failing batch: report it, keep
-            // going; a re-run with the same runId retries ONLY this
-            // batch (its dump_id never reached the PARENT sink, so the
-            // gate re-selects it; any nested rows that landed before
-            // the failure are deduped by the dump-id check)
-            failed += batchId
+      batches.foreach { case (batchId, n) =>
+        if (!limit.exists(submitted >= _)) {
+          run += batchId
+          val dumpId = s"$runId-b$batchId"
+          val batchRows = eligible.filter(col("__batch") === batchId)
+            .drop("__dump", "__batch")
+          Try {
+            // Nested sinks land FIRST: the eligibility gate reads only the
+            // PARENT sink's latest state, so the parent append must be the
+            // commit point it observes. If a nested append fails here the
+            // parent never lands, the gate still sees the batch as
+            // undumped, and a re-run retries it — nested rows that DID
+            // land are re-delivered under the same dump_id and dropped by
+            // the sink's dump-id check. (Parent-first would strand a
+            // nested failure forever: the gate would skip the batch.)
+            val nNested = nested.map { case (related, nsink) =>
+              nsink.appendIdempotent(spark,
+                Sinks.stamped(related(batchRows), dumpId, dumpTimeUs))
+            }.sum
+            val nParent = sink.appendIdempotent(spark,
+              Sinks.stamped(batchRows, dumpId, dumpTimeUs))
+            (nParent, nNested)
+          } match {
+            case Success((nParent, nNested)) =>
+              landed += batchId
+              appended += nParent
+              nestedAppended += nNested
+              submitted += n
+            case Failure(_) =>
+              // the reference tolerates a failing batch: report it, keep
+              // going; a re-run with the same runId retries ONLY this
+              // batch (its dump_id never reached the PARENT sink, so the
+              // gate re-selects it; any nested rows that landed before
+              // the failure are deduped by the dump-id check)
+              failed += batchId
+          }
         }
       }
-    }
 
-    BackfillReport(run.result(), landed.result(), failed.result(),
-      eligible.count(), skippedCount, appended, nestedAppended)
+      BackfillReport(run.result(), landed.result(), failed.result(),
+        eligible.count(), skippedCount, appended, nestedAppended)
+    } finally Checkpoints.release(planned)
   }
 
   /** The FULL command twin: registry → sink → batched dump — what

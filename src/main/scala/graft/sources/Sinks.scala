@@ -516,11 +516,15 @@ final case class ExternalSink(
     val fresh =
       if (!exists(spark)) batch
       else batch.join(broadcast(seenDumpIds(spark)), Seq("dump_id"), "left_anti")
-    // one pass: count and append without recomputing the anti-join
+    // one pass: count and append without recomputing the anti-join;
+    // the checkpoint is freed here, not at the scope's end, so a stream
+    // of appends holds no more than one
     val materialized = Checkpoints.checkpoint(fresh)
-    val n = materialized.count()
-    if (n > 0) append(materialized)
-    n
+    try {
+      val n = materialized.count()
+      if (n > 0) append(materialized)
+      n
+    } finally Checkpoints.release(materialized)
   }
 
   /** Test hook: the idempotency pre-read, for plan/width assertions. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.Portable._
-import graft.sources.{ParquetSink, SinkLog, Sinks}
+import graft.sources.{ParquetSink, SinkLog}
 
 /** Structured-Streaming ingest twin of the reference's event-driven path
   * (signals.py:1-82 — change event fires; tasks.py:1-59 — async dump into
@@ -19,6 +19,15 @@ import graft.sources.{ParquetSink, SinkLog, Sinks}
   * dump_id + ReplacingMergeTree, and the standard Spark recipe for
   * exactly-once foreachBatch sinks. The authoritative current state is
   * the sink's latest-state view (newest epoch wins per window key).
+  *
+  * One micro-batch per arrival: the query starts through
+  * [[UpdateStream]], without Spark's eviction-only "no-data" batch after
+  * each data batch (it emits nothing in update mode but pays a full
+  * epoch), and with late rows filtered against the single current
+  * watermark, so a straggler past the watermark is still dropped. The
+  * trade: the windows a batch touched stay in state until the next
+  * batch evicts them — bounded by one batch's windows plus the 2 h
+  * watermark.
   *
   * At scale: the window agg shuffles once on (window, event_type) with
   * map-side partial aggregation; the watermark bounds state; the sink
@@ -40,9 +49,12 @@ object EventIngest {
         col("event_type"), col("n_events"), col("sum_value"))
 
   /** Start the ingest on a streaming events frame (must have columns
-    * ts: timestamp, event_type: string, value: double). Each micro-batch
-    * appends its (possibly updated) window rows through the idempotent
-    * sink, dump_id = (query-instance tag, epoch id).
+    * ts: timestamp, event_type: string, value: double). Each arrival
+    * runs one micro-batch, which appends its (possibly updated) window
+    * rows through the idempotent sink, dump_id = (query-instance tag,
+    * epoch id). The two settings [[UpdateStream]] scopes to the query
+    * are set on the session only while this call runs; another thread
+    * starting a stream on the same session meanwhile sees them too.
     */
   def start(
       events: DataFrame,
@@ -58,29 +70,9 @@ object EventIngest {
   def start(
       events: DataFrame,
       sink: SinkLog,
-      checkpointDir: String): StreamingQuery = {
-    // Dump ids carry a per-query-instance tag (Sinks.runTag): a restart
-    // from the SAME checkpoint re-delivers epochs under their original
-    // ids (deduped, as intended), while a fresh-checkpoint restart or a
-    // second query against the same log cannot collide with prior runs'
-    // ids. The dump time is wall-clock micros, not the epoch number, so
-    // the latest-state view stays newest-wins ACROSS query restarts
-    // (epoch numbers reset to 0 on a fresh checkpoint; wall clock does
-    // not). The zero-padded epoch keeps the dump_id tie-break ordered
-    // like the epochs themselves.
-    val tag = Sinks.runTag(checkpointDir)
-    windowedAgg(events.withWatermark("ts", "2 hours"))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        sink.appendIdempotent(batch.sparkSession,
-          Sinks.stamped(batch, f"ingest-$tag-epoch-$epochId%09d",
-            System.currentTimeMillis() * 1000L))
-        ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    UpdateStream.start(windowedAgg(events.withWatermark("ts", "2 hours")),
+      sink, checkpointDir, "ingest")
 
   /** The authoritative current state of the sink: latest epoch wins per
     * (hour_start, event_type) — the ReplacingMergeTree-FINAL view.

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.LongType
 
-import graft.sources.{ParquetSink, Sinks}
+import graft.sources.ParquetSink
 
 /** Streaming per-window quantiles — G17's boundary-bucket technique at
   * the ingest edge (the A10 family's missing percentile monitor): the
@@ -27,11 +27,13 @@ import graft.sources.{ParquetSink, Sinks}
   * histogram over the same prefix (exact), and readout bucket ≡
   * floor(exact per-window quantile · 1000).
   *
-  * Delivery follows the [[EventIngest]] recipe: update-mode windowed
-  * aggregation with a watermark (bounded state, late data folds in),
-  * epoch-stamped idempotent sink appends (at-least-once foreachBatch →
-  * exactly-once contents), authoritative histogram = newest dump per
-  * (window, type, bucket) key.
+  * Delivery follows the [[EventIngest]] recipe through the same
+  * [[UpdateStream]] start: update-mode windowed aggregation with a
+  * watermark (bounded state, late data folds in), one micro-batch per
+  * arrival (no eviction-only batch; touched windows stay in state until
+  * the next batch), epoch-stamped idempotent sink appends (at-least-once
+  * foreachBatch → exactly-once contents), authoritative histogram =
+  * newest dump per (window, type, bucket) key.
   */
 object QuantilesStream {
 
@@ -51,27 +53,16 @@ object QuantilesStream {
         col("event_type"), col("b"), col("c"))
 
   /** Start the monitor on a streaming events frame (ts, event_type,
-    * value). Each epoch appends the updated histogram rows through the
-    * idempotent sink under an epoch-tagged dump_id.
+    * value). Each arrival runs one epoch, which appends the updated
+    * histogram rows through the idempotent sink under an epoch-tagged
+    * dump_id.
     */
   def start(
       events: DataFrame,
       sinkDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val tag = Sinks.runTag(checkpointDir)
-    val sink = ParquetSink(sinkDir)
-    bucketCounts(events.withWatermark("ts", "2 hours"))
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        sink.appendIdempotent(batch.sparkSession,
-          Sinks.stamped(batch, f"quant-$tag-epoch-$epochId%09d",
-            System.currentTimeMillis() * 1000L))
-        ()
-      }
-      .start()
-  }
+      checkpointDir: String): StreamingQuery =
+    UpdateStream.start(bucketCounts(events.withWatermark("ts", "2 hours")),
+      ParquetSink(sinkDir), checkpointDir, "quant")
 
   /** The authoritative histogram: newest dump wins per (hour_start,
     * event_type, b).

@@ -437,25 +437,63 @@ object KernelProps extends Properties("kernels") {
     case _ => v
   }
 
-  /** eval and the generated projection return the same value, or both
-    * fail on the same arithmetic error (a zero divisor in the shape).
-    */
-  private def evalMatchesCodegen(k: Kernel, vals: Seq[Any]): Boolean = {
+  /** `k` on `vals` through eval and through the generated projection. */
+  private def bothSides(k: Kernel, vals: Seq[Any]): (Try[Any], Try[Any]) = {
     val row = InternalRow(vals: _*)
     val dt = k.expr.dataType
-    val interpreted = Try(scalaValue(k.expr.eval(row), dt))
-    val generated = Try(scalaValue(
-      GenerateUnsafeProjection.generate(Seq(k.expr)).apply(row).get(0, dt), dt))
-    (interpreted, generated) match {
+    (Try(scalaValue(k.expr.eval(row), dt)),
+      Try(scalaValue(
+        GenerateUnsafeProjection.generate(Seq(k.expr)).apply(row).get(0, dt), dt)))
+  }
+
+  /** eval and the generated projection return the same value, or both
+    * fail with the same exception class.
+    */
+  private def evalMatchesCodegen(k: Kernel, vals: Seq[Any]): Boolean =
+    bothSides(k, vals) match {
       case (Success(a), Success(b)) => a == b
-      case (Failure(a: ArithmeticException), Failure(b: ArithmeticException)) => true
+      case (Failure(a), Failure(b)) => a.getClass == b.getClass
       case _ => false
     }
-  }
 
   property("every codegen'd kernel: eval == generated code, edge cases included") =
     Prop.forAll(kernelCases) { cases =>
       val bad = (cases ++ edgeCases).filterNot { case (k, v) => evalMatchesCodegen(k, v) }
       bad.isEmpty :| s"eval != codegen: ${bad.map(_._1.expr.prettyName)}"
+    }
+
+  property("kernel shapes: an empty embedding gives an empty array; subDim or " +
+      "planes <= 0 fails naming the function and the argument, eval and codegen alike") =
+    Prop.secure {
+      val v16 = Seq.tabulate(16)(i => ((i % 5) - 2) / 4.0f)
+      val c16 = Seq.tabulate(2 * 16)(i => (i % 7 - 3) * 100000L)
+      val empty = Seq(
+        pqDistsK -> Seq(fa(Nil), la(c16), 8, 0L),
+        pqEncodeK -> Seq(fa(Nil), la(c16), 8, 0L),
+        pqlDistsK -> Seq(la(Nil), la(c16), 8),
+        pqlEncodeK -> Seq(la(Nil), la(c16), 8))
+      val guarded = Seq(
+        (pqDistsK -> Seq(fa(v16), la(c16), 0, selfDot(v16)), "pq_dists: subDim"),
+        (pqEncodeK -> Seq(fa(v16), la(c16), -4, selfDot(v16)), "pq_encode: subDim"),
+        (pqlDistsK -> Seq(la(c16.take(16)), la(c16), 0), "pql_dists: subDim"),
+        (pqlEncodeK -> Seq(la(c16.take(16)), la(c16), 0), "pql_encode: subDim"),
+        (pqDistsK -> Seq(fa(Nil), la(Nil), 0, 0L), "pq_dists: subDim"),
+        (lshK -> Seq(fa(v16), la(Seq.fill(64)(1L)), 0), "lsh_buckets: planes"),
+        (lshK -> Seq(fa(Nil), la(Nil), -1), "lsh_buckets: planes"))
+      val notEmpty = empty.filterNot { case (k, v) =>
+        bothSides(k, v) match {
+          case (Success(a: Seq[_]), Success(b: Seq[_])) => a.isEmpty && b.isEmpty
+          case _ => false
+        }
+      }
+      val unguarded = guarded.filterNot { case ((k, v), msg) =>
+        bothSides(k, v) match {
+          case (Failure(a: IllegalArgumentException), Failure(b: IllegalArgumentException)) =>
+            a.getMessage.startsWith(msg) && b.getMessage.startsWith(msg)
+          case _ => false
+        }
+      }
+      (notEmpty.isEmpty :| s"not an empty array: ${notEmpty.map(_._1.expr.prettyName)}") &&
+        (unguarded.isEmpty :| s"no IllegalArgumentException: ${unguarded.map(_._2)}")
     }
 }

@@ -311,4 +311,47 @@ class SinkCommitSpec extends SparkSpec {
     assert(got.map(_.toString).sorted.toSeq == expected.map(_.toString).sorted.toSeq,
       s"view ${got.toSeq} != batch ${expected.toSeq}")
   }
+
+  test("Backfill.run releases its planned checkpoint, with and without a failing batch") {
+    val items = spark.range(0, 600)
+      .select(col("id").as("pk"), lit(1000L).as("modified_us"))
+    val inner = newSink()
+    /** Delegates to the parquet sink; batch 1's dump fails. */
+    val flaky = new SinkLog {
+      protected def exists(s: SparkSession): Boolean = inner.initialized(s)
+      def log(s: SparkSession): DataFrame = inner.log(s)
+      def appendIdempotent(s: SparkSession, b: DataFrame): Long =
+        if (b.select("dump_id").distinct().collect().exists(_.getString(0).endsWith("-b1")))
+          throw new IllegalStateException("batch 1 fails")
+        else inner.appendIdempotent(s, b)
+    }
+    val live = Caches.liveCount
+    val r1 = graft.sources.Backfill.run(spark, items, "pk", "modified_us", flaky,
+      runId = "r1", dumpTimeUs = 2000L, batchSize = 200L)
+    assert(r1.batchesFailed == Seq(1L) && r1.rowsAppended == 400L, s"got $r1")
+    assert(Caches.liveCount == live, s"${Caches.liveCount - live} entries leaked")
+    val r2 = graft.sources.Backfill.run(spark, items, "pk", "modified_us", newSink(),
+      runId = "r2", dumpTimeUs = 2000L, batchSize = 200L)
+    assert(r2.ok && r2.rowsAppended == 600L, s"got $r2")
+    assert(Caches.liveCount == live, s"${Caches.liveCount - live} entries leaked")
+  }
+
+  test("EventIngest epochs into ExternalSink register no cache entries") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_commit_jdbc").toString
+    val sink = graft.sources.ExternalSink(s"jdbc:derby:$dir/db;create=true", "event_log",
+      Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver"))
+    val src = MemoryStream[Ev]
+    val live = Caches.liveCount
+    val query = EventIngest.start(src.toDS().toDF(), sink, s"$dir/ckpt")
+    try {
+      Seq("10:05", "11:10", "12:20").foreach { hhmm =>
+        src.addData(Ev(t(hhmm), "click", 1.0))
+        query.processAllAvailable()
+      }
+    } finally query.stop()
+    assert(Caches.liveCount == live, s"${Caches.liveCount - live} entries leaked")
+    assert(sink.latestState(spark, Seq("hour_start", "event_type")).count() == 3)
+  }
 }

@@ -1151,4 +1151,78 @@ class StreamingSpec extends SparkSpec {
     assert(batchKept.contains(0L) && !batchKept.contains(1L) &&
       !batchKept.contains(3L), s"dial drift: batch kept $batchKept")
   }
+
+  // ---- one micro-batch per arrival (update-mode streams) ----
+
+  /** Ids of the batches the query ran — progress events that carry an
+    * `addBatch` time (idle-trigger events carry none).
+    */
+  private def batchesRun(q: org.apache.spark.sql.streaming.StreamingQuery): Seq[Long] =
+    q.recentProgress.toSeq.filter(_.durationMs.containsKey("addBatch")).map(_.batchId)
+
+  private val arrivals: Seq[Seq[Ev]] = Seq(
+    Seq(Ev(t("10:05"), "click", 1.0), Ev(t("10:40"), "click", 2.0),
+      Ev(t("11:10"), "view", 5.0)),
+    // late rows inside the 2 h watermark update open windows
+    Seq(Ev(t("10:55"), "click", 4.0), Ev(t("12:30"), "view", 1.0)),
+    Seq(Ev(t("13:15"), "click", 3.0), Ev(t("11:45"), "view", 2.0)),
+    Seq(Ev(t("14:00"), "click", 1.0), Ev(t("12:10"), "click", 6.0)))
+
+  test("update-mode ingest: one micro-batch per arrival, view equals the batch agg") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_onebatch").toString
+    val src = MemoryStream[Ev]
+    val query = EventIngest.start(src.toDS().toDF(), s"$dir/sink", s"$dir/ckpt")
+    try arrivals.foreach { rows => src.addData(rows: _*); query.processAllAvailable() }
+    finally query.stop()
+    assert(batchesRun(query) == arrivals.indices.map(_.toLong),
+      s"one batch per arrival, ran ${batchesRun(query)}")
+    val got = EventIngest.latestState(spark, s"$dir/sink").collect()
+      .map(_.toString).sorted.toSeq
+    val want = EventIngest.windowedAgg(arrivals.flatten.toDF()).collect()
+      .map(_.toString).sorted.toSeq
+    assert(got == want, s"view $got != batch $want")
+  }
+
+  test("update-mode quantiles: one micro-batch per arrival") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.QuantilesStream
+    val dir = Files.createTempDirectory("graft_onebatch_q").toString
+    val src = MemoryStream[Ev]
+    val query = QuantilesStream.start(src.toDS().toDF(), s"$dir/sink", s"$dir/ckpt")
+    try arrivals.foreach { rows => src.addData(rows: _*); query.processAllAvailable() }
+    finally query.stop()
+    assert(batchesRun(query) == arrivals.indices.map(_.toLong),
+      s"one batch per arrival, ran ${batchesRun(query)}")
+    val got = QuantilesStream.latestHistogram(spark, s"$dir/sink").collect()
+      .map(_.toString).sorted.toSeq
+    val want = QuantilesStream.bucketCounts(arrivals.flatten.toDF()).collect()
+      .map(_.toString).sorted.toSeq
+    assert(got == want, s"histogram $got != batch $want")
+  }
+
+  test("update-mode start scopes its settings to the query: the session keeps its own") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.UpdateStream
+    val Seq(noData, allowMultiple) = UpdateStream.OneBatchConfs.map(_._1)
+    val saved = spark.conf.getAll
+    def restore(k: String): Unit = saved.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    val dir = Files.createTempDirectory("graft_onebatch_conf").toString
+    spark.conf.set(noData, "true") // a sentinel the start must leave in place
+    spark.conf.unset(allowMultiple)
+    try {
+      val src = MemoryStream[Ev]
+      val query = EventIngest.start(src.toDS().toDF(), s"$dir/sink", s"$dir/ckpt")
+      assert(spark.conf.getAll.get(noData).contains("true"))
+      assert(!spark.conf.getAll.contains(allowMultiple),
+        s"$allowMultiple was unset and must stay so")
+      // the query still runs with its own settings
+      try arrivals.take(2).foreach { rows => src.addData(rows: _*); query.processAllAvailable() }
+      finally query.stop()
+      assert(batchesRun(query) == Seq(0L, 1L), s"ran ${batchesRun(query)}")
+    } finally Seq(noData, allowMultiple).foreach(restore)
+  }
 }
