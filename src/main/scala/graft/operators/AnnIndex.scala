@@ -214,12 +214,14 @@ object AnnIndex {
       .orderBy(col("vec_id"), col("new_id"))
   }
 
-  /** The batch's normed vectors that are NOT already indexed (ids
-    * broadcast into a semi-prune of the corpus scan, then an anti-join
-    * on the batch), so replayed batches fold in as no-ops.
+  /** The batch's normed vectors that are NOT already in a vector store
+    * (ids broadcast into a semi-prune of the corpus scan, then an
+    * anti-join on the batch), so replayed batches fold in as no-ops —
+    * the one definition for every vector index ([[PqIndex]],
+    * [[IvfPqIndex]] too).
     */
-  private def freshVecs(index: Index, e: DataFrame): DataFrame = {
-    val present = index.vectors
+  private[operators] def freshVecs(vectors: DataFrame, e: DataFrame): DataFrame = {
+    val present = vectors
       .join(broadcast(e.select(col("vec_id")).distinct()),
         Seq("vec_id"), "left_semi")
       .select(col("vec_id")).distinct()
@@ -242,7 +244,7 @@ object AnnIndex {
       k: Int = 5,
       maxBucket: Int = MaxBucket): (DataFrame, Index) = {
     val e = Caches.persist(AnnOps.withNormDf(newVecs))
-    val fresh = Caches.persist(freshVecs(index, e))
+    val fresh = Caches.persist(freshVecs(index.vectors, e))
     (probeWithNorm(index, e, k, maxBucket),
       Index(
         index.buckets.unionByName(AnnOps.bucketIndex(fresh, index.geometry)),
@@ -263,18 +265,17 @@ object AnnIndex {
       index.vectors.join(r, Seq("vec_id"), "left_anti"), index.geometry)
   }
 
-  /** Retire ids from a SAVED index: anti-join rewrite of both frames,
-    * checkpoint-materialized first (the save overwrites the directories
-    * being read), geometry preserved, completion-marker-bracketed like
-    * every save. A rewrite prices at one pass over the index — at lake
-    * scale, batch retirements per compaction window (the reference's
-    * retirement is itself a periodic batch task), not per request.
+  /** Retire ids from a SAVED index: the anti-join rewrite of both
+    * frames, geometry preserved, is written to a staged sibling and
+    * swapped in ([[Artifact.replace]]), so a crash leaves the previous
+    * or the rewritten index, never a partial one. A rewrite prices at
+    * one pass over the index — at lake scale, batch retirements per
+    * compaction window (the reference's retirement is itself a periodic
+    * batch task), not per request.
     */
   def retire(path: String, ids: DataFrame): Unit = {
     val spark = ids.sparkSession
-    val idx = retire(load(spark, path), ids)
-    save(Index(Checkpoints.checkpoint(idx.buckets),
-      Checkpoints.checkpoint(idx.vectors), idx.geometry), path)
+    Artifact.replace(spark, path)(save(retire(load(spark, path), ids), _))
   }
 
   /** Persist an ingest: append ONLY the batch's not-yet-indexed bucket
@@ -302,14 +303,13 @@ object AnnIndex {
     *    missing and the result is row-identical to a never-crashed
     *    append — convergent, not merely refusing.
     * append() itself reads through a `complete=false, op=append` marker
-    * (the base state underneath an interrupted append is intact; only
-    * overwrite ops — save/retire/compact — are unrecoverable in place).
+    * (the base state underneath an interrupted append is intact).
     */
   def append(path: String, newVecs: DataFrame): Unit = {
     val spark = newVecs.sparkSession
     val idx = loadImpl(spark, path, tolerateTornAppend = true)
     val e = AnnOps.withNormDf(newVecs)
-    val freshV = Checkpoints.checkpoint(freshVecs(idx, e))
+    val freshV = Checkpoints.checkpoint(freshVecs(idx.vectors, e))
     // bucket freshness keyed on the BUCKETS frame itself, per (vec_id,
     // tbl) row: batch ids broadcast-semi-prune the index scan (tiny
     // output), which broadcast-anti-joins the batch's recomputed bucket
@@ -331,9 +331,8 @@ object AnnIndex {
     * target-sized files — the lakehouse small-file compaction every
     * long-running ingest loop needs: [[append]] adds files per batch
     * forever, and a thousand-batch index is a thousand-file scan. The
-    * rewrite is checkpoint-materialized (the save overwrites the
-    * directories being read), marker-bracketed via [[save]], idempotent,
-    * and probe-identical before/after (AnnIndexSpec). File-count bound:
+    * rewrite swaps in like [[retire]], is idempotent, and is
+    * probe-identical before/after (AnnIndexSpec). File-count bound:
     * `partitions` files under vectors and per-tbl bucket directory
     * (buckets repartition on (tbl, bucket) so one output file holds
     * whole buckets — a probe of one bucket reads one file's row
@@ -343,11 +342,8 @@ object AnnIndex {
   def compact(path: String, partitions: Int = 8): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     val idx = load(spark, path)
-    save(Index(
-      Checkpoints.checkpoint(
-        idx.buckets.repartition(partitions, col("tbl"), col("bucket"))),
-      Checkpoints.checkpoint(
-        idx.vectors.repartition(partitions, col("vec_id"))),
-      idx.geometry), path)
+    Artifact.replace(spark, path)(save(Index(
+      idx.buckets.repartition(partitions, col("tbl"), col("bucket")),
+      idx.vectors.repartition(partitions, col("vec_id")), idx.geometry), _))
   }
 }

@@ -14,20 +14,23 @@ import org.apache.spark.sql.functions.lit
   * [[KnnIndex]], [[LangIndex]], [[LmIndex]], [[PqIndex]],
   * [[QualityIndex]], [[TokenizerIndex]], [[UnigramLm]]) saves, opens
   * and memoizes through it; [[IndexFs]] below it owns the staged-sibling
-  * rename discipline.
+  * rename discipline. Every rewrite of a saved artifact (retire,
+  * compact, a model merge) stages and swaps through [[replace]]; only
+  * `save` and `append` write the live directory.
   *
   *  - **The save bracket** ([[save]]): a one-row `complete` marker lands
   *    with `complete=false` and the mutation's `op` FIRST, invalidating
   *    any previous state before a byte of it is touched, then the
   *    caller's frames, then `complete=true`. A crash anywhere inside
   *    leaves `complete=false` on disk.
-  *  - **The open check** ([[open]]): repair an interrupted swap where the
-  *    writer swaps, then refuse a directory with no marker or with a
-  *    partial one. A torn `save`/`retire`/`compact` overwrote the only
-  *    copy of a frame and is unrecoverable in place; a torn `append`
-  *    only added rows, so a caller that replays the batch may read
-  *    through it. A marker without an `op` column (written before ops
-  *    were recorded) reads as `save`, the conservative reading.
+  *  - **The open check** ([[open]]): repair an interrupted swap
+  *    (reader strength: only a missing live directory, see
+  *    [[IndexFs.recoverSwap]]), then refuse a directory with no marker or
+  *    with a partial one. A torn `save` must be re-saved; a torn rewrite
+  *    never reaches the live directory; a torn `append` only added
+  *    rows, so a caller that replays the batch may read through it. A
+  *    marker without an `op` column (written before ops were recorded)
+  *    reads as `save`, the conservative reading.
   *  - **Per-corpus memos** ([[Memo]]): a trained model or saved path
   *    keyed by the corpus fingerprint ([[CorpusKey]]). A memo is an
   *    artifact: it survives [[graft.Caches.releaseScope]] and is dropped
@@ -57,8 +60,12 @@ private[graft] object Artifact {
   /** Write a rewritten artifact to `path`'s staged sibling, then commit
     * it by [[IndexFs.swapInto]]: a crash at any point leaves a complete
     * artifact (the previous or the rewritten one) for [[open]] to serve.
+    * `write` may read the live directory lazily — it writes elsewhere.
+    * Stale siblings of an earlier torn rewrite are dropped first
+    * (writer-strength repair).
     */
   def replace(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    IndexFs.dropSwapDebris(spark, path)
     write(IndexFs.stagedPath(path))
     IndexFs.swapInto(spark, path)
   }
@@ -76,13 +83,16 @@ private[graft] object Artifact {
     }))
 
   /** Run independent writes of one save concurrently and return when
-    * all have finished (rethrowing the first failure): the save prices
-    * as its slowest write instead of their sum. Call it inside the
-    * [[save]] bracket, which stays strictly ordered around it.
+    * all have finished, then rethrow the first failure — a failed save
+    * leaves no write running behind its caller. The save prices as its
+    * slowest write instead of their sum. Call it inside the [[save]]
+    * bracket, which stays strictly ordered around it.
     */
-  def inParallel(writes: (() => Unit)*): Unit =
-    writes.map(w => Future(w())(writers))
-      .foreach(Await.result(_, Duration.Inf))
+  def inParallel(writes: (() => Unit)*): Unit = {
+    val running = writes.map(w => Future(w())(writers))
+    running.foreach(Await.ready(_, Duration.Inf))
+    running.foreach(Await.result(_, Duration.Inf))
+  }
 
   // ---- the open check ----
 
@@ -92,8 +102,7 @@ private[graft] object Artifact {
     catch { case _: Exception => false }
 
   /** Check the marker of the `kind` artifact at `path` before its frames
-    * are read. `swaps`: the writer commits rewrites through
-    * [[replace]], so an interrupted swap is repaired first.
+    * are read, after repairing an interrupted [[replace]] swap.
     * `tolerateTornAppend`: the caller replays an append and may read
     * through its incomplete marker. `unmarkedLayout`: asked only when
     * there is no marker at all — true accepts a pre-marker layout the
@@ -103,10 +112,9 @@ private[graft] object Artifact {
     * describe the interrupted batch), else None.
     */
   def open(spark: SparkSession, path: String, kind: String,
-      swaps: Boolean = false, tolerateTornAppend: Boolean = false,
+      tolerateTornAppend: Boolean = false,
       unmarkedLayout: => Boolean = false): Option[Row] = {
-    if (swaps)
-      IndexFs.recoverSwap(spark, path, isComplete(spark, IndexFs.stagedPath(path)))
+    IndexFs.recoverSwap(spark, path, isComplete(spark, IndexFs.stagedPath(path)))
     val marker =
       try Some(spark.read.parquet(s"$path/complete").head())
       catch { case _: org.apache.spark.sql.AnalysisException => None }

@@ -92,8 +92,8 @@ object DedupIndex {
     loadImpl(spark, path, tolerateTornAppend = false)
 
   /** Like [[AnnIndex]]'s marker (r12), the marker records WHICH mutation
-    * was in flight: a torn overwrite (save/retire/compact) destroyed the
-    * only copy and is unrecoverable in place; a torn `append` only added
+    * was in flight: a torn save must be re-saved (retire/compact never
+    * write the live directory — they swap); a torn `append` only added
     * rows — the previous complete state is intact underneath, and
     * replaying the interrupted batch repairs it.
     */
@@ -196,24 +196,17 @@ object DedupIndex {
     index.join(broadcast(ids.select(col("doc_id")).distinct()),
       Seq("doc_id"), "left_anti")
 
-  /** Retire ids from a SAVED index: anti-join rewrite, checkpoint-
-    * materialized first (the overwrite reads its own path). One pass
-    * over the index per retirement batch — at lake scale, batch
-    * retirements per compaction window (the reference's retirement is
-    * itself a periodic batch task), not per request.
-    *
-    * The rewrite is the riskiest mutation — it overwrites the ONLY copy
-    * of the signature store — so the marker bracket matters most here:
-    * the retired frame is fully materialized to a checkpoint BEFORE
-    * `complete=false` lands, and a crash mid-rewrite leaves a load-
-    * refused partial instead of a silently-truncated index.
+  /** Retire ids from a SAVED index: the anti-join rewrite is written to
+    * a staged sibling and swapped in ([[Artifact.replace]]), so a crash
+    * mid-rewrite leaves the previous signature store whole instead of a
+    * silently-truncated one. One pass over the index per retirement
+    * batch — at lake scale, batch retirements per compaction window (the
+    * reference's retirement is itself a periodic batch task), not per
+    * request.
     */
   def retire(path: String, ids: DataFrame): Unit = {
     val spark = ids.sparkSession
-    val retained = Checkpoints.checkpoint(retire(load(spark, path), ids))
-    Artifact.save(spark, path, op = "retire") {
-      retained.write.mode("overwrite").partitionBy("band").parquet(s"$path/sigs")
-    }
+    Artifact.replace(spark, path)(save(retire(load(spark, path), ids), _))
   }
 
   /** Persist an ingest: append ONLY the batch's not-yet-indexed
@@ -243,10 +236,9 @@ object DedupIndex {
   /** Rewrite the accumulated append files into a bounded number of
     * target-sized files — [[append]] adds files per batch forever (the
     * lakehouse small-file problem; the reference's batched bulk insert
-    * exists for the same reason, base_sink.py:251-282). The rewrite is
-    * checkpoint-materialized (the save overwrites the directory being
-    * read), marker-bracketed via [[save]], idempotent, and
-    * probe-identical before/after (DedupIndexSpec). File-count bound:
+    * exists for the same reason, base_sink.py:251-282). The rewrite
+    * swaps in like [[retire]], is idempotent, and is probe-identical
+    * before/after (DedupIndexSpec). File-count bound:
     * ≤ `partitions` files per band directory (rows repartition on
     * (band, bkey) so one output file holds whole buckets). Size
     * `partitions` so files land near the FS block size at the
@@ -254,8 +246,7 @@ object DedupIndex {
     */
   def compact(path: String, partitions: Int = 8): Unit = {
     val spark = SparkSession.active
-    save(Checkpoints.checkpoint(
-      load(spark, path).repartition(partitions, col("band"), col("bkey"))),
-      path)
+    Artifact.replace(spark, path)(save(
+      load(spark, path).repartition(partitions, col("band"), col("bkey")), _))
   }
 }

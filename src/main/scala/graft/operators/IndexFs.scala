@@ -2,13 +2,18 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared filesystem discipline for the artifacts that rewrite in place
-  * ([[IvfPqIndex]], [[KnnIndex]], [[LmIndex]] — through
-  * [[Artifact.replace]]/[[Artifact.open]]) and the parquet sink log's compaction
-  * ([[graft.sources.ParquetSink]]): staged-sibling rewrites committed by
-  * atomic directory rename, with load-time repair of any interrupted
-  * swap — factored (r17) from [[IvfPqIndex]] so every rewrite mutates
-  * durably through literally one definition.
+/** Shared filesystem discipline for every rewrite of a saved artifact
+  * (the indexes, through [[Artifact.replace]]/[[Artifact.open]]) and the
+  * parquet sink log's compaction ([[graft.sources.ParquetSink]]):
+  * staged-sibling rewrites committed by atomic directory rename, with
+  * open-time repair of any interrupted swap, through literally one
+  * definition.
+  *
+  * Repair comes in two strengths. A reader ([[recoverSwap]]) acts only
+  * when the live directory is missing, so it never removes a staged copy
+  * that a writer elsewhere is still filling. A writer
+  * ([[dropSwapDebris]]) also drops the `.staged`/`.old` siblings a torn
+  * or finished rewrite left beside an intact live directory.
   *
   * ASSUMES atomic directory rename — true on HDFS and local POSIX
   * filesystems, NOT on object stores (S3A rename is copy+delete, so a
@@ -27,6 +32,10 @@ private[graft] object IndexFs {
 
   def stagedPath(path: String): String = path + ".staged"
 
+  private def siblings(path: String) =
+    (new org.apache.hadoop.fs.Path(stagedPath(path)),
+      new org.apache.hadoop.fs.Path(path + ".old"))
+
   /** Commit a fully-written sibling at `path`.staged over the live
     * index: displace the live directory to `path`.old, rename the
     * staged copy in, drop the displaced one. Directory renames are
@@ -37,8 +46,7 @@ private[graft] object IndexFs {
     */
   def swapInto(spark: SparkSession, path: String): Unit = {
     val (fs, p) = hfs(spark, path)
-    val st = new org.apache.hadoop.fs.Path(stagedPath(path))
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
+    val (st, old) = siblings(path)
     fs.delete(old, true)
     if (fs.exists(p) && !fs.rename(p, old))
       throw new IllegalStateException(s"could not displace live index $path")
@@ -49,28 +57,36 @@ private[graft] object IndexFs {
     ()
   }
 
-  /** Repair an interrupted [[swapInto]] — called by every load. If the
-    * live name is missing, promote the staged copy when `stagedComplete`
-    * (crash between the two renames) or restore the displaced previous
-    * index (crash after displacing with a torn staged copy — cannot
-    * happen in swapInto's order, but cheap to cover). With the live name
-    * present, leftover `.staged`/`.old` siblings are an uncommitted
-    * mutation or an already-promoted swap's debris — delete them, which
-    * rolls the uncommitted retire/compact back to the intact previous
-    * index. `stagedComplete` is asked only when the live name is missing
-    * and a staged copy exists; artifacts pass their completion marker
+  /** Reader-strength repair of an interrupted [[swapInto]], run by every
+    * open. Only a missing live directory is repaired: promote the staged
+    * copy when `stagedComplete` (crash between the two renames), else
+    * restore the displaced previous index, then drop the swap's other
+    * sibling. With the live directory present nothing is touched — a
+    * staged copy beside it may be a rewrite still being written.
+    * `stagedComplete` is asked only when the live name is missing and a
+    * staged copy exists; artifacts pass their completion marker
     * ([[Artifact.open]]), the sink log its own test.
     */
   def recoverSwap(spark: SparkSession, path: String,
       stagedComplete: => Boolean): Unit = {
     val (fs, p) = hfs(spark, path)
-    val st = new org.apache.hadoop.fs.Path(stagedPath(path))
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
     if (!fs.exists(p)) {
-      if (fs.exists(st) && stagedComplete)
-        fs.rename(st, p)
+      val (st, old) = siblings(path)
+      if (fs.exists(st) && stagedComplete) fs.rename(st, p)
       else if (fs.exists(old)) fs.rename(old, p)
+      dropSwapDebris(spark, path)
     }
+  }
+
+  /** Writer-strength cleanup: beside an intact live directory, leftover
+    * `.staged`/`.old` siblings are an uncommitted rewrite or a finished
+    * swap's debris — delete them, which rolls an uncommitted
+    * retire/compact back to the intact previous index. Only a writer
+    * calls it, as the one process rewriting `path`.
+    */
+  def dropSwapDebris(spark: SparkSession, path: String): Unit = {
+    val (fs, p) = hfs(spark, path)
+    val (st, old) = siblings(path)
     if (fs.exists(p)) { fs.delete(st, true); fs.delete(old, true) }
     ()
   }

@@ -27,15 +27,14 @@ import graft.{Caches, Checkpoints}
   * batches under BOTH pinned models (coarse centroids + residual
   * codebook) — the FAISS operational posture: retrain is a rebuild.
   *
-  * Durability mirrors [[PqIndex]] r12 semantics: marker-bracketed
-  * multi-frame mutations; a torn overwrite refuses to load; a torn
-  * append is repairable by replaying the batch (vectors land first —
-  * an orphan vector row is inert — and each frame anti-joins its own
-  * landed rows, so replay converges to the never-crashed state).
-  * Index-rewriting mutations ([[retire]]/[[compact]]) additionally
-  * write to a staged sibling and commit by atomic directory rename,
-  * so a crash mid-rewrite can never destroy the only durable copy —
-  * [[load]] repairs or rolls back any interrupted swap it finds.
+  * Durability is [[PqIndex]]'s: marker-bracketed multi-frame
+  * mutations; a torn save refuses to load; a torn append is repairable
+  * by replaying the batch (vectors land first — an orphan vector row is
+  * inert — and each frame anti-joins its own landed rows, so replay
+  * converges to the never-crashed state); [[retire]]/[[compact]] write
+  * a staged sibling and commit by atomic directory rename
+  * ([[Artifact.replace]]), so a crash mid-rewrite leaves a complete
+  * index, and [[load]] finishes any swap a crash interrupted.
   */
 object IvfPqIndex {
 
@@ -139,7 +138,7 @@ object IvfPqIndex {
   private def loadImpl(
       spark: SparkSession, path: String,
       tolerateTornAppend: Boolean): Index = {
-    Artifact.open(spark, path, "IvfPqIndex", swaps = true,
+    Artifact.open(spark, path, "IvfPqIndex",
       tolerateTornAppend = tolerateTornAppend)
     val meta = spark.read.parquet(s"$path/meta").head()
     Index(
@@ -150,14 +149,6 @@ object IvfPqIndex {
       meta.getAs[scala.collection.Seq[Long]]("codebook").toArray,
       meta.getAs[Int]("cells"), meta.getAs[Int]("nprobe"),
       meta.getAs[Int]("k"), meta.getAs[Int]("rerank"))
-  }
-
-  private def freshVecs(index: Index, e: DataFrame): DataFrame = {
-    val present = index.vectors
-      .join(broadcast(e.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_semi")
-      .select(col("vec_id")).distinct()
-    e.join(broadcast(present), Seq("vec_id"), "left_anti")
   }
 
   /** Append a batch to a saved index under the PINNED coarse centroids
@@ -171,7 +162,7 @@ object IvfPqIndex {
     val spark = newVecs.sparkSession
     val idx = loadImpl(spark, path, tolerateTornAppend = true)
     val e = AnnOps.withNormDf(newVecs)
-    val freshV = Checkpoints.checkpoint(freshVecs(idx, e))
+    val freshV = Checkpoints.checkpoint(AnnIndex.freshVecs(idx.vectors, e))
     val landedC = idx.codes
       .join(broadcast(e.select(col("vec_id")).distinct()),
         Seq("vec_id"), "left_semi")

@@ -208,7 +208,7 @@ object KnnIndex {
     // refuse to load an old artifact) — a torn pre-r18 append falls
     // back to the original "replay the batch" contract, unchecked
     val tornFp: Option[BatchFp] =
-      Artifact.open(spark, path, "KnnIndex", swaps = true,
+      Artifact.open(spark, path, "KnnIndex",
         tolerateTornAppend = tolerateTornAppend).collect {
         case m if m.schema.fieldNames.contains("batch_n") =>
           BatchFp(m.getAs[Long]("batch_n"),

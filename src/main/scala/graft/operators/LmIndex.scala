@@ -249,7 +249,7 @@ object LmIndex {
     * corpora and the interpolation would mix incompatible models.
     */
   def load3(spark: SparkSession, path: String): Ref3 = {
-    Artifact.open(spark, path, "LmIndex(3)", swaps = true)
+    Artifact.open(spark, path, "LmIndex(3)")
     val tg = spark.read.parquet(s"$path/trigrams")
     val bg = spark.read.parquet(s"$path/bigrams")
     val vocab = spark.read.parquet(s"$path/vocab")
@@ -337,7 +337,7 @@ object LmIndex {
     * garbage, not fail.
     */
   def load(spark: SparkSession, path: String): Ref = {
-    Artifact.open(spark, path, "LmIndex", swaps = true)
+    Artifact.open(spark, path, "LmIndex")
     val bg = spark.read.parquet(s"$path/bigrams")
     val vocab = spark.read.parquet(s"$path/vocab")
     val v = vocab.head().getAs[Long]("v")

@@ -26,8 +26,9 @@ import graft.{Caches, Checkpoints}
   * rebuild time).
   *
   * Durability mirrors AnnIndex r12 semantics: every multi-frame
-  * mutation is completion-marker-bracketed; a torn overwrite
-  * (save/retire/compact) refuses to load; a torn APPEND is repairable —
+  * mutation is completion-marker-bracketed; a torn save refuses to
+  * load; retire/compact stage and swap ([[Artifact.replace]]), so a
+  * torn rewrite leaves the previous index; a torn APPEND is repairable —
   * vectors land first (an orphan vector row is inert: nothing nominates
   * it until its codes row exists) and codes second (an orphan codes row
   * would burn shortlist slots on a candidate the refine join then
@@ -101,14 +102,6 @@ object PqIndex {
       meta.getAs[Int]("k"), meta.getAs[Int]("rerank"))
   }
 
-  private def freshVecs(index: Index, e: DataFrame): DataFrame = {
-    val present = index.vectors
-      .join(broadcast(e.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_semi")
-      .select(col("vec_id")).distinct()
-    e.join(broadcast(present), Seq("vec_id"), "left_anti")
-  }
-
   /** Append a batch to a saved index under the PINNED codebook:
     * replayed ids fold in as no-ops (each frame anti-joins its own
     * landed rows), vectors land before codes (see object note on which
@@ -120,7 +113,7 @@ object PqIndex {
     val spark = newVecs.sparkSession
     val idx = loadImpl(spark, path, tolerateTornAppend = true)
     val e = AnnOps.withNormDf(newVecs)
-    val freshV = Checkpoints.checkpoint(freshVecs(idx, e))
+    val freshV = Checkpoints.checkpoint(AnnIndex.freshVecs(idx.vectors, e))
     val landedC = idx.codes
       .join(broadcast(e.select(col("vec_id")).distinct()),
         Seq("vec_id"), "left_semi")
@@ -144,30 +137,23 @@ object PqIndex {
       index.codebook, index.k, index.rerank)
   }
 
-  /** Retire ids on a saved path: checkpoint-materialized rewrite
-    * (the save overwrites the directories being read), codebook
-    * preserved, marker-bracketed via [[save]].
+  /** Retire ids on a saved path: the rewrite, codebook preserved, is
+    * staged and swapped in ([[Artifact.replace]]).
     */
   def retire(path: String, ids: DataFrame): Unit = {
     val spark = ids.sparkSession
-    val idx = retire(load(spark, path), ids)
-    save(Index(Checkpoints.checkpoint(idx.codes),
-      Checkpoints.checkpoint(idx.vectors),
-      idx.codebook, idx.k, idx.rerank), path)
+    Artifact.replace(spark, path)(save(retire(load(spark, path), ids), _))
   }
 
   /** Small-file compaction of the accumulated append files — bounded
-    * file count, probe-identical before/after, marker-bracketed via
-    * [[save]] (the AnnIndex/DedupIndex compaction contract).
+    * file count, probe-identical before/after, staged and swapped like
+    * [[retire]] (the AnnIndex/DedupIndex compaction contract).
     */
   def compact(path: String, partitions: Int = 8): Unit = {
     val spark = SparkSession.active
     val idx = load(spark, path)
-    save(Index(
-      Checkpoints.checkpoint(
-        idx.codes.repartition(partitions, col("vec_id"))),
-      Checkpoints.checkpoint(
-        idx.vectors.repartition(partitions, col("vec_id"))),
-      idx.codebook, idx.k, idx.rerank), path)
+    Artifact.replace(spark, path)(save(idx.copy(
+      codes = idx.codes.repartition(partitions, col("vec_id")),
+      vectors = idx.vectors.repartition(partitions, col("vec_id"))), _))
   }
 }

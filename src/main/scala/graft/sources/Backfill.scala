@@ -198,12 +198,10 @@ object Backfill {
     * `dump_data_to_clickhouse` actually does for a model name
     * (dump_data_to_clickhouse.py:29-100 resolving the sink via
     * `get_sink_by_model_name`, then paging + dumping through it).
-    * Resolves the [[SinkRegistry]] spec, honors the enable gate (a
-    * disabled model runs nothing and reports zero), resolves EVERY
-    * nested sink up front (a missing one fails before any row lands,
-    * as the reference's `__init__`-time nested instantiation does),
-    * serializes the model, and drives [[run]] with the per-batch
-    * nested cascade wired to the spec's related serializers.
+    * Resolves the model through [[SinkRegistry.resolve]] (a disabled
+    * model runs nothing and reports zero), serializes the model, and
+    * drives [[run]] with the per-batch nested cascade wired to the
+    * spec's related serializers.
     *
     * The gate column is synthesized as modified-at-epoch-0: a pk the
     * sink has EVER dumped is skipped, so the first run dumps the
@@ -224,15 +222,8 @@ object Backfill {
       skipIds: Option[Seq[Long]] = None,
       limit: Option[Long] = None,
       nestedSinks: Map[String, SinkLog] = Map.empty): BackfillReport = {
-    val spec = SinkRegistry.byModelName(model).getOrElse(
-      throw new IllegalArgumentException(s"unknown model '$model'"))
-    if (!spec.isEnabled) BackfillReport(Nil, Nil, Nil, 0L, 0L, 0L)
-    else {
-      val resolved = spec.nested.map { ns =>
-        ns -> nestedSinks.getOrElse(ns.name,
-          throw new IllegalArgumentException(
-            s"no sink provided for nested '${ns.name}' of model '$model'"))
-      }
+    val disabled = BackfillReport(Nil, Nil, Nil, 0L, 0L, 0L)
+    SinkRegistry.resolve(model, nestedSinks).fold(disabled) { case (spec, resolved) =>
       val nested = resolved.map { case (ns, nsink) =>
         ((batch: DataFrame) => ns.serializeRelated(spark, sfDir,
           batch.select(col(spec.serializedKey).as("parent_id")))) -> nsink

@@ -63,6 +63,23 @@ object Sinks {
       .digest(canon.getBytes("UTF-8"))
     d.take(6).map(b => f"${b & 0xff}%02x").mkString
   }
+
+  /** The stamp of a streaming query's per-epoch sink appends, bound to
+    * its checkpoint: dump id `"<prefix>-<runTag>-epoch-<epoch>"`, so a
+    * restart from the SAME checkpoint re-delivers epochs under their
+    * original ids (deduped, as intended) while a fresh-checkpoint
+    * restart or a second query against the same log cannot collide with
+    * prior runs' ids. The zero-padded epoch keeps the dump_id tie-break
+    * ordered like the epochs. The dump time is wall-clock micros, not
+    * the epoch number, so the latest-state view stays newest-wins ACROSS
+    * query restarts (epoch numbers reset to 0 on a fresh checkpoint;
+    * wall clock does not).
+    */
+  def epochStamp(checkpointDir: String, prefix: String): (DataFrame, Long) => DataFrame = {
+    val tag = runTag(checkpointDir)
+    (batch, epochId) => stamped(batch, f"$prefix-$tag-epoch-$epochId%09d",
+      System.currentTimeMillis() * 1000L)
+  }
 }
 
 /** The sink contract every backend shares: an append-only log with
@@ -297,9 +314,11 @@ final case class ParquetSink(path: String) extends SinkLog {
   private def recover(spark: SparkSession, fs: FileSystem, writer: Boolean): Unit = {
     val st = stateOf(fs)
     st.synchronized {
-      if (!st.compacting && (writer || !fs.exists(root)))
+      if (!st.compacting) {
         IndexFs.recoverSwap(spark, path,
           fs.exists(new Path(stagedCompact, CompactedMarker)))
+        if (writer) IndexFs.dropSwapDebris(spark, path)
+      }
       if (fs.exists(pending))
         fs.listStatus(pending).map(_.getPath)
           .filter(_.getName.endsWith(".commit")).sortBy(_.getName)
@@ -722,18 +741,36 @@ object SinkRegistry {
   /** `get_sink_by_model_name` twin: None for an unregistered model. */
   def byModelName(model: String): Option[ModelSinkSpec] = specs.get(model)
 
-  /** The generic dump task (`dump_data_to_clickhouse` twin): resolve
-    * the sink by model name, honor the enable gate (a disabled sink is
-    * never invoked — zero reads of its table), serialize the ONE object
-    * named by `objectId` (the task's `object_id`), stamp it, append
+  /** Resolve a model sink for a dump, the steps [[dumpModel]] and
+    * [[Backfill.runModel]] share: the spec by model name (an unknown
+    * model throws, listing the registered ones — the analog of the
+    * task's import/getattr failure on a bad sink path), the enable gate
+    * (None for a disabled model, which is never invoked — zero reads of
+    * its table), and EVERY nested sink up front. The reference
+    * instantiates nested_sinks in __init__, so a missing nested sink
+    * (its NotImplementedError for an unimplemented dump_related) fails
+    * before the parent row lands, never between the parent append and
+    * the cascade.
+    */
+  def resolve(model: String, nestedSinks: Map[String, SinkLog])
+      : Option[(ModelSinkSpec, Seq[(NestedSinkSpec, SinkLog)])] = {
+    val spec = byModelName(model).getOrElse(throw new IllegalArgumentException(
+      s"unknown model '$model'; registered: ${specs.keys.toSeq.sorted.mkString(", ")}"))
+    Option.when(spec.isEnabled)(spec -> spec.nested.map { ns =>
+      ns -> nestedSinks.getOrElse(ns.name,
+        throw new IllegalArgumentException(
+          s"no sink provided for nested '${ns.name}' of model '$model'"))
+    })
+  }
+
+  /** The generic dump task (`dump_data_to_clickhouse` twin): [[resolve]]
+    * the sink by model name, serialize the ONE object named by
+    * `objectId` (the task's `object_id`), stamp it, append
     * idempotently, then cascade to the spec's nested sinks — each
     * related frame lands under the PARENT's dump_id/time (the
     * `dump` → `nested_sink.dump_related` loop, base_sink.py:184-203).
     * Returns total rows appended, parent + nested (0 for a disabled
-    * sink or a fully-replayed dump id). An unknown model throws — the
-    * analog of the task's import/getattr failure on a bad sink path; a
-    * nested sink with no provided log likewise (the reference's
-    * NotImplementedError for an unimplemented dump_related).
+    * sink or a fully-replayed dump id).
     */
   def dumpModel(
       spark: SparkSession,
@@ -744,19 +781,7 @@ object SinkRegistry {
       dumpId: String,
       dumpTimeUs: Long,
       nestedSinks: Map[String, SinkLog] = Map.empty): Long = {
-    val spec = byModelName(model).getOrElse(throw new IllegalArgumentException(
-      s"unknown model '$model'; registered: ${specs.keys.toSeq.sorted.mkString(", ")}"))
-    if (!spec.isEnabled) 0L
-    else {
-      // resolve EVERY nested sink before anything dumps — the reference
-      // instantiates nested_sinks in __init__, so a missing/broken
-      // nested sink fails BEFORE the parent row lands, never between
-      // the parent append and the cascade
-      val resolved = spec.nested.map { ns =>
-        ns -> nestedSinks.getOrElse(ns.name,
-          throw new IllegalArgumentException(
-            s"no sink provided for nested '${ns.name}' of model '$model'"))
-      }
+    resolve(model, nestedSinks).fold(0L) { case (spec, resolved) =>
       val nParent = sink.appendIdempotent(spark,
         Sinks.stamped(
           spec.serialize(spark, sfDir)

@@ -80,7 +80,7 @@ object AttributionStream {
       events: DataFrame,
       sinkDir: String,
       checkpointDir: String): StreamingQuery = {
-    val tag = Sinks.runTag(checkpointDir)
+    val stamp = Sinks.epochStamp(checkpointDir, "attr")
     val clicks = events.filter(col("event_type") === "click")
       .withWatermark("ts", s"$LATE_MIN minutes")
     val purchases = events.filter(col("event_type") === "purchase")
@@ -91,8 +91,7 @@ object AttributionStream {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         ParquetSink(sinkDir).appendIdempotent(batch.sparkSession,
-          Sinks.stamped(batch, f"attr-$tag-epoch-$epochId%09d",
-            System.currentTimeMillis() * 1000L))
+          stamp(batch, epochId))
         ()
       }
       .start()

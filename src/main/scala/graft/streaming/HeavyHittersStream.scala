@@ -69,7 +69,7 @@ object HeavyHittersStream {
       events: DataFrame,
       sinkDir: String,
       checkpointDir: String): StreamingQuery = {
-    val tag = Sinks.runTag(checkpointDir)
+    val stamp = Sinks.epochStamp(checkpointDir, "hh")
     events.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -102,9 +102,7 @@ object HeavyHittersStream {
             WinSummary(hs, n,
               buf.toSeq.sortBy(_._1).map { case (k, c) => Entry(k, c) })
           }
-        sink.appendIdempotent(s, Sinks.stamped(merged.toDF(),
-          f"hh-$tag-epoch-$epochId%09d",
-          System.currentTimeMillis() * 1000L))
+        sink.appendIdempotent(s, stamp(merged.toDF(), epochId))
         ()
       }
       .start()

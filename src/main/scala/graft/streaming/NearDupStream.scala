@@ -135,12 +135,7 @@ object NearDupStream {
       sink: graft.sources.SinkLog,
       checkpointDir: String,
       watermark: String = "1 hour"): org.apache.spark.sql.streaming.StreamingQuery = {
-    // Per-query-instance tag (Sinks.runTag): epoch numbers restart at 0
-    // on a fresh checkpoint dir, so an epoch-only dump id would collide
-    // with a previous run's ids against the same pair log and the
-    // dump-id check would silently drop the new run's batches. Wall-clock
-    // dump time keeps latest-state newest-wins across restarts.
-    val tag = graft.sources.Sinks.runTag(checkpointDir)
+    val stamp = graft.sources.Sinks.epochStamp(checkpointDir, "neardup")
     pipeline(docs, watermark)
       .writeStream
       .outputMode("append")
@@ -149,10 +144,7 @@ object NearDupStream {
         val pairs = batch.toDF()
           .groupBy(col("first_id"), col("dup_id"))
           .agg(max(col("est_jaccard")).as("est_jaccard"))
-        sink.appendIdempotent(pairs.sparkSession,
-          graft.sources.Sinks.stamped(pairs,
-            f"neardup-$tag-epoch-$epochId%09d",
-            System.currentTimeMillis() * 1000L))
+        sink.appendIdempotent(pairs.sparkSession, stamp(pairs, epochId))
         ()
       }
       .start()

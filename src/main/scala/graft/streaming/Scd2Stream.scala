@@ -43,7 +43,7 @@ object Scd2Stream {
       events: DataFrame,
       sinkDir: String,
       checkpointDir: String): StreamingQuery = {
-    val tag = Sinks.runTag(checkpointDir)
+    val stamp = Sinks.epochStamp(checkpointDir, "scd2")
     events.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -81,9 +81,7 @@ object Scd2Stream {
         val versions = existing.unionByName(fresh)
         val rebuilt =
           graft.operators.SinkOps.scd2Intervals(versions)
-        sink.appendIdempotent(s, Sinks.stamped(rebuilt,
-          f"scd2-$tag-epoch-$epochId%09d",
-          System.currentTimeMillis() * 1000L))
+        sink.appendIdempotent(s, stamp(rebuilt, epochId))
         existing.unpersist(false)
         ()
       }

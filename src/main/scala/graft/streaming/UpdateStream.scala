@@ -58,23 +58,12 @@ object UpdateStream {
       sink: SinkLog,
       checkpointDir: String,
       dumpPrefix: String): StreamingQuery = {
-    // Dump ids carry a per-query-instance tag (Sinks.runTag): a restart
-    // from the SAME checkpoint re-delivers epochs under their original
-    // ids (deduped, as intended), while a fresh-checkpoint restart or a
-    // second query against the same log cannot collide with prior runs'
-    // ids. The dump time is wall-clock micros, not the epoch number, so
-    // the latest-state view stays newest-wins ACROSS query restarts
-    // (epoch numbers reset to 0 on a fresh checkpoint; wall clock does
-    // not). The zero-padded epoch keeps the dump_id tie-break ordered
-    // like the epochs themselves.
-    val tag = Sinks.runTag(checkpointDir)
+    val stamp = Sinks.epochStamp(checkpointDir, dumpPrefix)
     val writer = frame.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        sink.appendIdempotent(batch.sparkSession,
-          Sinks.stamped(batch, f"$dumpPrefix-$tag-epoch-$epochId%09d",
-            System.currentTimeMillis() * 1000L))
+        sink.appendIdempotent(batch.sparkSession, stamp(batch, epochId))
         ()
       }
     // set for the query's construction only, then put back what was

@@ -219,7 +219,9 @@ class IvfPqIndexSpec extends SparkSpec {
     assert(!fs.exists(new Path(dir + ".staged")) &&
       !fs.exists(new Path(dir + ".old")), "recovery must clear siblings")
     // window B: staged copy TORN (its save died mid-write), live intact —
-    // load rolls the mutation back and serves the untouched live index
+    // load serves the untouched live index and leaves the staged copy
+    // (beside a live index it may be a rewrite still being written);
+    // the next write drops it
     IvfPqIndex.save(IvfPqIndex.load(spark, dir), dir + ".staged")
     spark.range(1)
       .select(org.apache.spark.sql.functions.lit(false).as("complete"),
@@ -227,7 +229,11 @@ class IvfPqIndexSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir.staged/complete")
     assert(probeRows(IvfPqIndex.probe(IvfPqIndex.load(spark, dir), q))
       == before, "torn staged copy must roll back to the live index")
-    assert(!fs.exists(new Path(dir + ".staged")))
+    assert(fs.exists(new Path(dir + ".staged")), "a load must not delete it")
+    IvfPqIndex.compact(dir)
+    assert(!fs.exists(new Path(dir + ".staged")), "the next write drops it")
+    assert(probeRows(IvfPqIndex.probe(IvfPqIndex.load(spark, dir), q))
+      == before)
     // window C: live displaced AND staged torn — load restores the
     // displaced previous index rather than promoting garbage
     IvfPqIndex.save(IvfPqIndex.load(spark, dir), dir + ".staged")

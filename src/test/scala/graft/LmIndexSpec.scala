@@ -208,8 +208,9 @@ class LmIndexSpec extends SparkSpec {
     spark.read.parquet(s"$dir/bigrams")
       .agg(countDistinct(col("w2")).as("v"))
       .write.mode("overwrite").parquet(s"$dir/vocab")
-    // uncommitted append debris: a torn staged sibling must roll back
-    // to the intact live model on the next load
+    // uncommitted append debris: the next load serves the intact live
+    // model and leaves the torn staged sibling (beside a live model it
+    // may be an append still being written); the next append drops it
     LmIndex.save(spark, ref, dir + ".staged")
     spark.range(1).select(lit(false).as("complete"))
       .write.mode("overwrite").parquet(s"$dir.staged/complete")
@@ -218,8 +219,12 @@ class LmIndexSpec extends SparkSpec {
       "interrupted append must leave the previous complete model")
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + ".staged")),
-      "recovery must clear the uncommitted staged sibling")
+    val stagedDir = new org.apache.hadoop.fs.Path(dir + ".staged")
+    assert(fs.exists(stagedDir), "a load must not delete the staged sibling")
+    LmIndex.append(spark, dir, docs.filter(col("doc_id") % 2 === 1))
+    assert(!fs.exists(stagedDir), "the next append drops the staged sibling")
+    assert(LmIndex.load(spark, dir).bigrams.count() > before,
+      "the next append lands")
     Caches.releaseScope()
   }
 

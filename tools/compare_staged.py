@@ -1,19 +1,23 @@
 #!/usr/bin/env python3
-"""compare.py's verdict for oracle replays too big for one DuckDB
-pipeline: the oracle's WITH-chain is split into its top-level CTEs and
-each is materialized as its OWN temp table, statement by statement —
-DuckDB frees pipeline memory between statements, and its untracked
+"""compare.py's verdict for oracle replays too big for a default DuckDB
+session, computed columnar inside DuckDB — sorted column sets, row
+counts, then a two-sided EXCEPT ALL instead of pandas sorts — under an
+explicit memory limit, thread count and spill directory, so a
+100M-row replay degrades to disk instead of the OOM killer.
+
+The oracle's WITH-chain is split into its top-level CTEs and each is
+materialized as its OWN temp table, statement by statement — DuckDB
+frees pipeline memory between statements, and its untracked
 allocations (list-heavy expressions inside deep CTE chains) no longer
-stack across the whole query until the OOM killer fires (observed at
-sf100's 2M-vector k-NN oracle, which compare.py/compare_big.py both
-lost at >75 GB RSS under a 60 GB memory_limit). Semantics are
-unchanged: the statements are the SAME SQL text the engine emits in
-oracle_sql.json, executed in CTE order; the verdict is the same sorted
-column set + row count + two-sided EXCEPT ALL as compare_big.py.
+stack across the whole query (observed at sf100's 2M-vector k-NN
+oracle, lost at >75 GB RSS under a 60 GB memory_limit when run as one
+statement). An oracle without a top-level WITH is its one final
+statement. The statements are the SAME SQL text the engine emits in
+oracle_sql.json, executed in CTE order.
 
 Usage: python3 tools/compare_staged.py <sfdir> <verify_out_dir> [keys]
 """
-import json, sys, glob, os
+import json, sys, glob, os, re
 import duckdb
 
 
@@ -43,9 +47,10 @@ def strip_comments(sql):
 def split_ctes(sql):
     """Parse 'WITH [RECURSIVE] name AS [MATERIALIZED] (body), ... final'
     into ([(name, body)...], final_select). Balanced-paren scan; string
-    literals respected."""
+    literals respected. A query without a top-level WITH has no CTEs."""
     s = strip_comments(sql).strip()
-    assert s.upper().startswith("WITH")
+    if not re.match(r"WITH\b", s, re.IGNORECASE):
+        return [], s
     s = s[4:].lstrip()
     if s.upper().startswith("RECURSIVE"):
         s = s[len("RECURSIVE"):].lstrip()
