@@ -341,9 +341,11 @@ object AnnIndex {
     */
   def compact(path: String, partitions: Int = 8): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val idx = load(spark, path)
-    Artifact.replace(spark, path)(save(Index(
-      idx.buckets.repartition(partitions, col("tbl"), col("bucket")),
-      idx.vectors.repartition(partitions, col("vec_id")), idx.geometry), _))
+    Artifact.replace(spark, path) { staged =>
+      val idx = load(spark, path)
+      save(Index(
+        idx.buckets.repartition(partitions, col("tbl"), col("bucket")),
+        idx.vectors.repartition(partitions, col("vec_id")), idx.geometry), staged)
+    }
   }
 }

@@ -63,12 +63,21 @@ private[graft] object Artifact {
     * `write` may read the live directory lazily — it writes elsewhere.
     * Stale siblings of an earlier torn rewrite are dropped first
     * (writer-strength repair).
+    * Rewrites of one path are serialized per JVM, so callers load the
+    * live index inside `write`: a second rewrite starts from the first's
+    * result and never drops its staged copy.
     */
   def replace(spark: SparkSession, path: String)(write: String => Unit): Unit = {
-    IndexFs.dropSwapDebris(spark, path)
-    write(IndexFs.stagedPath(path))
-    IndexFs.swapInto(spark, path)
+    val (fs, p) = IndexFs.hfs(spark, path)
+    rewriteLocks.computeIfAbsent(fs.makeQualified(p).toString, _ => new Object).synchronized {
+      IndexFs.dropSwapDebris(spark, path)
+      write(IndexFs.stagedPath(path))
+      IndexFs.swapInto(spark, path)
+    }
   }
+
+  /** One [[replace]] lock per qualified path. */
+  private val rewriteLocks = new ConcurrentHashMap[String, AnyRef]()
 
   /** Pool for [[inParallel]]: a constant size, daemon threads that
     * inherit no thread-locals (a write never runs under the Spark job

@@ -2,12 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared filesystem discipline for every rewrite of a saved artifact
-  * (the indexes, through [[Artifact.replace]]/[[Artifact.open]]) and the
-  * parquet sink log's compaction ([[graft.sources.ParquetSink]]):
-  * staged-sibling rewrites committed by atomic directory rename, with
-  * open-time repair of any interrupted swap, through literally one
-  * definition.
+/** Filesystem discipline for every rewrite of a saved index (through
+  * [[Artifact.replace]]/[[Artifact.open]]): staged-sibling rewrites
+  * committed by atomic directory rename, with open-time repair of any
+  * interrupted swap. The parquet sink log ([[graft.sources.ParquetSink]])
+  * compacts through its own commit records and never swaps; it calls
+  * the two repairs only to open a log that an earlier build's
+  * compaction swap left interrupted.
   *
   * Repair comes in two strengths. A reader ([[recoverSwap]]) acts only
   * when the live directory is missing, so it never removes a staged copy

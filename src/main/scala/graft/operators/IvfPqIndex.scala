@@ -191,17 +191,12 @@ object IvfPqIndex {
       vectors = index.vectors.join(r, Seq("vec_id"), "left_anti"))
   }
 
-  /** Retire ids on a saved path: the rewritten index is fully written
-    * to a staged SIBLING directory (reading the live one lazily — no
-    * checkpoint materialization needed, the read and write targets
-    * never collide) and then atomically renamed over it, so a crash at
-    * any point leaves a complete index on disk — either the previous
-    * one (uncommitted) or the rewritten one.
+  /** Retire ids on a saved path: the rewrite, centroids preserved, is
+    * staged and swapped in ([[Artifact.replace]]).
     */
   def retire(path: String, ids: DataFrame): Unit = {
     val spark = ids.sparkSession
-    val idx = retire(load(spark, path), ids)
-    Artifact.replace(spark, path)(save(idx, _))
+    Artifact.replace(spark, path)(save(retire(load(spark, path), ids), _))
   }
 
   /** Small-file compaction of the accumulated append files: clustering
@@ -213,9 +208,11 @@ object IvfPqIndex {
     */
   def compact(path: String, partitions: Int = 8): Unit = {
     val spark = SparkSession.active
-    val idx = load(spark, path)
-    Artifact.replace(spark, path)(save(idx.copy(
-      codes = idx.codes.repartition(partitions, col("cell")),
-      vectors = idx.vectors.repartition(partitions, col("vec_id"))), _))
+    Artifact.replace(spark, path) { staged =>
+      val idx = load(spark, path)
+      save(idx.copy(
+        codes = idx.codes.repartition(partitions, col("cell")),
+        vectors = idx.vectors.repartition(partitions, col("vec_id"))), staged)
+    }
   }
 }

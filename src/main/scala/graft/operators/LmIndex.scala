@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Checkpoints
+import graft.Caches
 
 /** Persistent reference bigram-LM artifact — the [[QualityIndex]]
   * pattern applied to C19b/C20's held-out language model. The board
@@ -306,16 +306,16 @@ object LmIndex {
     * LmIndexSpec-pinned for the trigram frame too).
     */
   def append3(spark: SparkSession, path: String, newDocs: DataFrame): Unit = {
-    val live = load3(spark, path)
     val add = train3(newDocs)
-    val mtg = Checkpoints.checkpoint(
-      live.trigrams.unionByName(add.trigrams)
-        .groupBy("w1", "w2", "w3").agg(sum(col("cnt")).as("cnt")))
-    val mbg = Checkpoints.checkpoint(
-      live.bigrams.unionByName(add.bigrams)
+    Artifact.replace(spark, path) { staged =>
+      val live = load3(spark, path)
+      val mtg = live.trigrams.unionByName(add.trigrams)
+        .groupBy("w1", "w2", "w3").agg(sum(col("cnt")).as("cnt"))
+      val mbg = Caches.persist(live.bigrams.unionByName(add.bigrams)
         .groupBy("w1", "w2").agg(sum(col("cnt")).as("cnt")))
-    Artifact.replace(spark, path)(save3(spark,
-      Ref3(mtg, mbg, mbg.select(countDistinct(col("w2")).as("v"))), _))
+      try save3(spark, Ref3(mtg, mbg, mbg.select(countDistinct(col("w2")).as("v"))), staged)
+      finally mbg.unpersist(false)
+    }
   }
 
   // ---- persistence (the artifact contract, [[Artifact]]) ----
@@ -353,19 +353,20 @@ object LmIndex {
 
   /** Fold new reference documents into a saved model: bigram counts
     * are mergeable (summed union), the vocabulary re-derives from the
-    * merged frame. The merged model is checkpointed session-locally
-    * (the read side of the swap must not lazily depend on the
-    * directory being replaced), written to the staged sibling, and
-    * atomically renamed in — append ≡ retraining on the union, which
-    * LmIndexSpec pins frame-exact.
+    * merged frame, and the merge is staged and swapped in
+    * ([[Artifact.replace]]) — append ≡ retraining on the union, which
+    * LmIndexSpec pins frame-exact. The merge is cached for the bigram
+    * and vocab writes, then uncached: a later query over the swapped
+    * path would match a stale entry.
     */
   def append(spark: SparkSession, path: String, newDocs: DataFrame): Unit = {
-    val live = load(spark, path)
     val add = train(newDocs)
-    val merged = Checkpoints.checkpoint(
-      live.bigrams.unionByName(add.bigrams)
+    Artifact.replace(spark, path) { staged =>
+      val live = load(spark, path)
+      val merged = Caches.persist(live.bigrams.unionByName(add.bigrams)
         .groupBy("w1", "w2").agg(sum(col("cnt")).as("cnt")))
-    Artifact.replace(spark, path)(save(spark,
-      Ref(merged, merged.select(countDistinct(col("w2")).as("v"))), _))
+      try save(spark, Ref(merged, merged.select(countDistinct(col("w2")).as("v"))), staged)
+      finally merged.unpersist(false)
+    }
   }
 }

@@ -151,9 +151,11 @@ object PqIndex {
     */
   def compact(path: String, partitions: Int = 8): Unit = {
     val spark = SparkSession.active
-    val idx = load(spark, path)
-    Artifact.replace(spark, path)(save(idx.copy(
-      codes = idx.codes.repartition(partitions, col("vec_id")),
-      vectors = idx.vectors.repartition(partitions, col("vec_id"))), _))
+    Artifact.replace(spark, path) { staged =>
+      val idx = load(spark, path)
+      save(idx.copy(
+        codes = idx.codes.repartition(partitions, col("vec_id")),
+        vectors = idx.vectors.repartition(partitions, col("vec_id"))), staged)
+    }
   }
 }

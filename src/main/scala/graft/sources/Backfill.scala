@@ -129,19 +129,18 @@ object Backfill {
       .withColumn("__batch",
         expr(s"($pkCol - pmod($pkCol, $batchSize)) div $batchSize")))
 
-    // planned is released once the report's last count has run: a
+    // planned is released once the last batch has run: a
     // backfill is one call, and its blocks must not wait for the
     // caller's scope to end
     try {
-      val skippedCount = planned.filter(!col("__dump")).count()
-      val eligible = planned.filter(col("__dump"))
-
-      // Driver sees batch ids + sizes only — O(items/batchSize) rows.
-      val batches = eligible.groupBy(col("__batch"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("__batch"))
+      // One aggregate counts every batch's eligible and skipped items (a null
+      // gate counts as neither); the Spark driver sees batch ids + counts
+      // only — O(items/batchSize) rows.
+      val counts = planned.groupBy(col("__batch"))
+        .agg(count_if(col("__dump")).as("n"), count_if(!col("__dump")).as("skipped"))
         .collect()
-        .map(r => r.getAs[Long]("__batch") -> r.getAs[Long]("n"))
+        .map(r => (r.getAs[Long]("__batch"), r.getAs[Long]("n"), r.getAs[Long]("skipped")))
+      val batches = counts.collect { case (b, n, _) if n > 0 => b -> n }.sortBy(_._1)
 
       var submitted = 0L
       var appended = 0L
@@ -154,7 +153,7 @@ object Backfill {
         if (!limit.exists(submitted >= _)) {
           run += batchId
           val dumpId = s"$runId-b$batchId"
-          val batchRows = eligible.filter(col("__batch") === batchId)
+          val batchRows = planned.filter(col("__dump") && col("__batch") === batchId)
             .drop("__dump", "__batch")
           Try {
             // Nested sinks land FIRST: the eligibility gate reads only the
@@ -190,7 +189,7 @@ object Backfill {
       }
 
       BackfillReport(run.result(), landed.result(), failed.result(),
-        eligible.count(), skippedCount, appended, nestedAppended)
+        counts.map(_._2).sum, counts.map(_._3).sum, appended, nestedAppended)
     } finally Checkpoints.release(planned)
   }
 

@@ -1,12 +1,12 @@
 package graft.sources
 
-import java.io.{FileNotFoundException, IOException}
+import java.io.{EOFException, FileNotFoundException, IOException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -93,7 +93,8 @@ object Sinks {
   * beside its rows, so the check is one metadata lookup per dump_id in
   * the batch — it reads none of the log's data files or footers, and
   * its cost does not grow with the committed history; the append is
-  * one Spark job. [[ExternalSink]] pushes `SELECT DISTINCT dump_id` to
+  * one Spark job, and compaction rewrites the part files only, never
+  * the manifest. [[ExternalSink]] pushes `SELECT DISTINCT dump_id` to
   * the database and anti-joins the batch against the few ids it
   * returns (a broadcast join). The latest-state view is one shuffle on
   * the unique key and is the same plan as the `sink_latest_state`
@@ -157,10 +158,9 @@ trait SinkLog {
   *   - `path/_manifest/<sha-256 of the dump_id>`: one marker per
   *     committed dump_id, holding the id. Spark's file index skips
   *     `_`-prefixed names, so the marker directory is invisible to reads.
-  *   - `path.pending/<txn>/`: one append's staged write, and
-  *     `path.pending/<txn>.commit`: its commit record (the dump_ids).
-  *   - `path.staged`, `path.old`: a compaction's swap siblings
-  *     ([[graft.operators.IndexFs]]).
+  *   - `path.pending/<txn>/`: one commit's staged write, and
+  *     `path.pending/<txn>.commit`: its commit record (the dump_ids to
+  *     mark; for a compaction, the part files it replaces).
   *
   * An append writes the batch once, unfiltered, into its staging
   * directory; `Dataset.observe` on that write yields the row count and
@@ -170,18 +170,17 @@ trait SinkLog {
   * then the staged part files renamed into the log. A dump already
   * committed is dropped after its write, so a re-delivered streaming
   * epoch still executes its plan once and its state-store version
-  * commits; an empty batch commits nothing.
+  * commits; an empty batch commits nothing. [[compact]] is one more
+  * commit: its record removes the part files it rewrote.
   *
   * Every open rolls forward any commit record a crash left behind, so
   * a crash at any step leaves a dump either absent (its retry lands it)
   * or whole and marked (its retry appends nothing); only a reader that
   * goes around `log` can see a half-moved dump before the next open.
-  * Opens repair an interrupted compaction swap too, in two strengths: a
-  * read (`log`, `initialized`, [[latestState]]) only promotes the
-  * compacted copy or restores the displaced log when the live log is
-  * missing, and never deletes, so a reader in another process cannot
-  * remove a compaction that is still running there; a write
-  * ([[appendIdempotent]], [[compact]]) also drops the swap's debris.
+  * Earlier builds compacted by swapping a `path.staged` copy in through
+  * `path.old`; opens still repair such a swap ([[graft.operators.IndexFs]]):
+  * a read only when the live log is missing, and never deleting; a
+  * write ([[appendIdempotent]], [[compact]]) also drops the debris.
   *
   * A log written before the manifest existed has no `_manifest`; the
   * first write to it marks the log's dump_ids from one scan, so its
@@ -189,11 +188,10 @@ trait SinkLog {
   *
   * ASSUMES atomic rename of files and directories, like `IndexFs`:
   * true on HDFS and local POSIX file systems, NOT on object stores (S3A
-  * rename is copy+delete, so a crash mid-move can tear a dump and a
-  * crash mid-swap can tear the log); an object-store deployment wants a
-  * table format's commit protocol instead. Commits and compaction swaps
-  * of one log are serialized per JVM, so one process writes a log;
-  * readers may live in any process.
+  * rename is copy+delete, so a crash mid-move can tear a dump); an
+  * object-store deployment wants a table format's commit protocol
+  * instead. Commits of one log are serialized per JVM, so one process
+  * writes a log; readers may live in any process.
   */
 final case class ParquetSink(path: String) extends SinkLog {
   import ParquetSink._
@@ -201,13 +199,12 @@ final case class ParquetSink(path: String) extends SinkLog {
   private def root = new Path(path)
   private def manifest = new Path(root, ManifestDir)
   private def pending = new Path(path + ".pending")
-  private def stagedCompact = new Path(IndexFs.stagedPath(path))
   private def record(txn: Path) = new Path(pending, txn.getName + ".commit")
 
   private def fsOf(spark: SparkSession): FileSystem = IndexFs.hfs(spark, path)._1
 
-  private def stateOf(fs: FileSystem): LogState =
-    states.computeIfAbsent(fs.makeQualified(root).toString, _ => new LogState)
+  private def lockOf(fs: FileSystem): AnyRef =
+    locks.computeIfAbsent(fs.makeQualified(root).toString, _ => new Object)
 
   protected def exists(spark: SparkSession): Boolean = {
     val fs = fsOf(spark)
@@ -236,7 +233,7 @@ final case class ParquetSink(path: String) extends SinkLog {
     try {
       val (n, ids) = stage(batch, txn)
       failpoint(path, "staged")
-      stateOf(fs).synchronized {
+      lockOf(fs).synchronized {
         val seen = ids.filter(id => fs.exists(marker(manifest, id)))
         if (n == 0 || (seen.nonEmpty && seen.size == ids.size)) 0L
         else if (seen.isEmpty) { commit(fs, txn, ids); n }
@@ -266,27 +263,36 @@ final case class ParquetSink(path: String) extends SinkLog {
     (m("n").asInstanceOf[Long], m("ids").asInstanceOf[Seq[String]])
   }
 
-  /** Commit a staged write: the record, atomically, then the roll-forward. */
-  private def commit(fs: FileSystem, txn: Path, dumpIds: Seq[String]): Unit = {
+  /** Commit a staged write: the record, atomically, then the
+    * roll-forward. The record is the dump_ids to mark (`int n`, then `n`
+    * UTF ids), then, for a compaction only, the part files to remove in
+    * the same form.
+    */
+  private def commit(fs: FileSystem, txn: Path, dumpIds: Seq[String],
+      removals: Seq[String] = Nil): Unit = {
     val tmp = new Path(txn, "_commit")
     val out = fs.create(tmp, false)
-    try { out.writeInt(dumpIds.size); dumpIds.foreach(out.writeUTF) }
-    finally out.close()
+    try {
+      out.writeInt(dumpIds.size); dumpIds.foreach(out.writeUTF)
+      if (removals.nonEmpty) { out.writeInt(removals.size); removals.foreach(out.writeUTF) }
+    } finally out.close()
     if (!fs.rename(tmp, record(txn)))
       throw new IOException(s"could not write commit record for $txn")
     failpoint(path, "recorded")
-    rollForward(fs, txn, dumpIds)
+    rollForward(fs, txn, dumpIds, removals)
   }
 
   /** Finish a recorded commit: markers, then the part files moved into
-    * the log, then the staging and the record dropped — only once every
-    * file is in. Idempotent, so a crash anywhere in it is repaired by
-    * running it again, and a reader in another process may run it
-    * alongside the writer: a part file already in the log counts as
-    * moved. A move that fails otherwise throws, leaving the record for
-    * the next open to retry.
+    * the log, then the removed part files deleted, then the staging and
+    * the record dropped — only once every file is in. Idempotent, so a
+    * crash anywhere in it is repaired by running it again, and a reader
+    * in another process may run it alongside the writer: a part file
+    * already in the log counts as moved, one already gone as removed. A
+    * move that fails otherwise throws, leaving the record for the next
+    * open to retry.
     */
-  private def rollForward(fs: FileSystem, txn: Path, dumpIds: Seq[String]): Unit = {
+  private def rollForward(fs: FileSystem, txn: Path, dumpIds: Seq[String],
+      removals: Seq[String]): Unit = {
     fs.mkdirs(manifest)
     dumpIds.foreach { id =>
       val m = marker(manifest, id)
@@ -300,40 +306,41 @@ final case class ParquetSink(path: String) extends SinkLog {
         throw new IOException(s"could not move ${f.getPath} into $path")
       failpoint(path, "moved")
     }
+    removals.foreach { name =>
+      fs.delete(new Path(root, name), false)
+      failpoint(path, "removed")
+    }
     fs.delete(txn, true)
     fs.delete(record(txn), false)
   }
 
-  /** Repair on open: an interrupted compaction swap first (unless this
-    * JVM is compacting the log right now), then every commit record a
-    * crashed append left behind, then — for a writer — the manifest of a
-    * log written before manifests existed. A reader only repairs a
-    * missing live log; dropping swap debris is left to writers, which
-    * know whether a compaction is running.
+  /** Repair on open: a compaction swap that a build before compactions
+    * committed through records left interrupted, then every commit
+    * record a crash left behind, then — for a writer — the manifest of
+    * a log written before manifests existed. A reader only repairs a
+    * missing live log; dropping swap debris is left to writers.
     */
-  private def recover(spark: SparkSession, fs: FileSystem, writer: Boolean): Unit = {
-    val st = stateOf(fs)
-    st.synchronized {
-      if (!st.compacting) {
-        IndexFs.recoverSwap(spark, path,
-          fs.exists(new Path(stagedCompact, CompactedMarker)))
-        if (writer) IndexFs.dropSwapDebris(spark, path)
-      }
+  private def recover(spark: SparkSession, fs: FileSystem, writer: Boolean): Unit =
+    lockOf(fs).synchronized {
+      IndexFs.recoverSwap(spark, path,
+        fs.exists(new Path(IndexFs.stagedPath(path), CompactedMarker)))
+      if (writer) IndexFs.dropSwapDebris(spark, path)
       if (fs.exists(pending))
         fs.listStatus(pending).map(_.getPath)
           .filter(_.getName.endsWith(".commit")).sortBy(_.getName)
           .foreach { rec =>
             // gone if a concurrent open finished it first
-            val ids = try {
+            val parsed = try {
               val in = fs.open(rec)
-              try Some(Seq.fill(in.readInt())(in.readUTF())) finally in.close()
+              def strings() = Seq.fill(in.readInt())(in.readUTF())
+              try Some((strings(), try strings() catch { case _: EOFException => Nil }))
+              finally in.close()
             } catch { case _: FileNotFoundException => None }
-            ids.foreach(rollForward(fs, new Path(pending,
-              rec.getName.stripSuffix(".commit")), _))
+            parsed.foreach { case (ids, removals) => rollForward(fs,
+              new Path(pending, rec.getName.stripSuffix(".commit")), ids, removals) }
           }
       if (writer && fs.exists(root) && !fs.exists(manifest)) markHistory(spark, fs)
     }
-  }
 
   /** Build the manifest of a log written before manifests existed, from
     * one scan of its dump_ids. The markers are written aside and renamed
@@ -356,68 +363,46 @@ final case class ParquetSink(path: String) extends SinkLog {
     * paying for superseded versions. Readers through [[latestState]]
     * see identical results before and after (the view is idempotent
     * over compaction). Dump-id idempotency keeps working because the
-    * manifest is carried over whole: a replay of a dump whose every row
-    * was superseded is still a no-op.
+    * manifest is left alone: a replay of a dump whose every row was
+    * superseded is still a no-op.
     *
-    * The rewrite reads a snapshot of the part files and writes the
-    * `path.staged` sibling, then copies the manifest beside it, all
-    * outside the log's lock. Under the lock it checks the copy is still
-    * whole, copies in the part files and markers that appends committed
-    * since, marks the copy complete and swaps it in through
-    * [[graft.operators.IndexFs.swapInto]], so an append committed
-    * during the rewrite survives it, the lock is held for work that
-    * grows with the appends of that window only, and a crash at any
-    * step leaves either the old log or the compacted one.
+    * Compaction is one more commit: the rewrite of a snapshot of the
+    * part files is staged outside the lock, and its record lists the
+    * snapshot as removals, which the roll-forward deletes only after
+    * moving the rewrite in. So every crash window shows the compacted
+    * view (a latest row held twice resolves to itself), the next open
+    * finishes a recorded compaction, an append committed meanwhile
+    * survives, and the log directory exists throughout. A compaction
+    * whose snapshot another one removed first is refused.
     */
   def compact(spark: SparkSession, keyCols: Seq[String]): Unit = {
     val fs = fsOf(spark)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val st = stateOf(fs)
     recover(spark, fs, writer = true)
-    val snapshot = st.synchronized {
-      if (st.compacting)
-        throw new IllegalStateException(s"a compaction of $path is already running")
-      st.compacting = true
-      dataFiles(fs, root).map(_.getPath)
-    }
+    val snapshot = dataFiles(fs, root).map(_.getPath)
+    require(snapshot.nonEmpty, s"nothing to compact at $path")
+    val txn = new Path(pending, UUID.randomUUID().toString)
     try {
-      require(snapshot.nonEmpty, s"nothing to compact at $path")
-      val stagedManifest = new Path(stagedCompact, ManifestDir)
       latestOf(spark.read.option("mergeSchema", "true")
           .parquet(snapshot.map(_.toString): _*), keyCols)
-        .write.parquet(stagedCompact.toString)
-      FileUtil.copy(fs, manifest, fs, stagedManifest, false, conf)
+        .write.parquet(txn.toString)
       failpoint(path, "compact-staged")
-      st.synchronized {
-        // copying into a removed copy would recreate it without the
-        // compacted rows, and the swap would promote that
-        if (!fs.exists(new Path(stagedCompact, "_SUCCESS")) || !fs.exists(stagedManifest))
+      lockOf(fs).synchronized {
+        if (!snapshot.forall(fs.exists))
           throw new IllegalStateException(
-            s"the compacted copy of $path was removed during the rewrite; the log is unchanged")
-        def copyIn(files: Seq[Path], to: Path): Unit = files.foreach(p =>
-          FileUtil.copy(fs, p, fs, new Path(to, p.getName), false, conf))
-        val read = snapshot.map(_.getName).toSet
-        copyIn(dataFiles(fs, root).map(_.getPath).filterNot(p => read(p.getName)),
-          stagedCompact)
-        val marked = fs.listStatus(stagedManifest).map(_.getPath.getName).toSet
-        copyIn(fs.listStatus(manifest).toSeq.map(_.getPath).filterNot(p => marked(p.getName)),
-          stagedManifest)
-        fs.create(new Path(stagedCompact, CompactedMarker), false).close()
-        failpoint(path, "compact-complete")
-        IndexFs.swapInto(spark, path)
+            s"another compaction of $path committed first; the log is unchanged")
+        commit(fs, txn, Nil, snapshot.map(_.getName))
       }
-    } finally st.synchronized { st.compacting = false }
+    } finally if (!fs.exists(record(txn))) fs.delete(txn, true)
   }
 }
 
 object ParquetSink {
   private val ManifestDir = "_manifest"
-  /** Written last into a compaction's staged copy: the copy is whole. */
+  /** Written last into an earlier build's compaction copy: it is whole. */
   private val CompactedMarker = "_COMPACTED"
 
-  /** Per-log commit lock and compaction flag, one per qualified path. */
-  private final class LogState { var compacting = false }
-  private val states = new ConcurrentHashMap[String, LogState]()
+  /** Per-log commit lock, one per qualified path. */
+  private val locks = new ConcurrentHashMap[String, AnyRef]()
 
   private def marker(dir: Path, dumpId: String): Path = new Path(dir,
     MessageDigest.getInstance("SHA-256").digest(dumpId.getBytes(UTF_8))
@@ -440,7 +425,7 @@ object ParquetSink {
 
   /** Fault-injection hook for the crash specs: called with (log path,
     * step) after each commit step — "staged", "recorded", "marked",
-    * "moved" (per file), "compact-staged", "compact-complete". A throw
+    * "moved" (per file), "removed" (per file), "compact-staged". A throw
     * leaves the log as a crash at that step would; only the unrecorded
     * staging a crash leaves behind (invisible to reads) is dropped.
     */

@@ -40,6 +40,8 @@ class IndexRewriteSpec extends SparkSpec {
     spark.createDataFrame(rows).toDF("doc_id", "text")
   private val textA = (1 to 40).map(i => s"idx$i").mkString(" ")
   private val textB = (1 to 40).map(i => s"oth$i").mkString(" ")
+  // never probed: retiring both probed documents leaves a non-empty index
+  private val textC = (1 to 40).map(i => s"unp$i").mkString(" ")
 
   /** One rewrite-capable index: save a fresh one at a path, probe the
     * saved one (`hit` names the column holding indexed ids), retire ids
@@ -68,7 +70,7 @@ class IndexRewriteSpec extends SparkSpec {
       p => IvfPqIndex.probe(IvfPqIndex.load(spark, p), queries),
       IvfPqIndex.retire, Some(IvfPqIndex.compact(_, 2))),
     Rewritable("DedupIndex", "doc_id", "first_id",
-      DedupIndex.save(DedupIndex.build(docs(0L -> textA, 1L -> textB)), _),
+      DedupIndex.save(DedupIndex.build(docs(0L -> textA, 1L -> textB, 2L -> textC)), _),
       p => DedupIndex.probe(DedupIndex.load(spark, p),
         docs(9L -> textA, 8L -> textB)),
       DedupIndex.retire, Some(DedupIndex.compact(_, 2))),
@@ -103,6 +105,14 @@ class IndexRewriteSpec extends SparkSpec {
     }.asNondeterministic()
     spark.range(1).select(gate(lit(victim)).as(ix.id))
   }
+
+  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
+    Files.walk(from).forEach(p => Files.copy(p, to.resolve(from.relativize(p))))
+
+  /** `t` is blocked entering an index rewrite another thread holds. */
+  private def waitsOnRewrite(t: Thread): Boolean =
+    t.getState == Thread.State.BLOCKED &&
+      t.getStackTrace.exists(_.getClassName.startsWith("graft.operators.Artifact"))
 
   private def ids(ix: Rewritable, victim: Long): DataFrame =
     spark.range(1).select(lit(victim).as(ix.id))
@@ -169,6 +179,48 @@ class IndexRewriteSpec extends SparkSpec {
       Await.result(retire, 1.second)
       assert(!staged(path) && !hits(ix, path).contains(victim),
         "the rewrite lands whole after the concurrent load")
+    }
+
+    test(s"${ix.name}: two retires of one path both land, as if run in turn") {
+      val (path, _, _) = saved(ix)
+      val Seq(v1, v2) = hits(ix, path).toSeq.sorted.take(2)
+      val inTurn = {
+        val copy = Files.createTempDirectory("graft_rewrite").toString + "/index"
+        copyTree(Paths.get(path), Paths.get(copy))
+        ix.retire(copy, ids(ix, v1))
+        ix.retire(copy, ids(ix, v2))
+        rows(ix.probe(copy))
+      }
+      val writing = new CountDownLatch(1)
+      val release = new CountDownLatch(1)
+      val held = new AtomicBoolean(false)
+      RewriteFault.action = () =>
+        if (held.compareAndSet(false, true)) {
+          writing.countDown()
+          release.await(1, TimeUnit.MINUTES)
+          ()
+        }
+      val first = Future(ix.retire(path, faulty(ix, path, v1)))(ExecutionContext.global)
+      @volatile var second: Try[Unit] = null
+      val racer = new Thread(() => second = Try(ix.retire(path, ids(ix, v2))))
+      try {
+        assert(writing.await(1, TimeUnit.MINUTES), "the first retire never reached its staged copy")
+        racer.start()
+        // hold the first retire until the second one waits for it (or,
+        // were rewrites not serialized, has run)
+        val deadline = System.nanoTime + 2.minutes.toNanos
+        while (racer.isAlive && !waitsOnRewrite(racer) && System.nanoTime < deadline)
+          Thread.sleep(20)
+      } finally {
+        release.countDown()
+        Try(Await.result(first, 5.minutes))
+        racer.join(5.minutes.toMillis)
+        RewriteFault.action = () => ()
+      }
+      Await.result(first, 1.second)
+      second.get
+      assert(!staged(path), "both rewrites swapped in")
+      assert(rows(ix.probe(path)) == inTurn, "the second retire starts from the first's result")
     }
   }
 }

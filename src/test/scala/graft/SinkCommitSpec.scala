@@ -112,27 +112,47 @@ class SinkCommitSpec extends SparkSpec {
     assert(spark.read.parquet(sink.path).count() == 3)
   }
 
-  Seq("compact-staged", "compact-complete").foreach { step =>
-    test(s"compaction crash after '$step' rolls back to the intact log") {
+  private def noStaging(sink: ParquetSink): Boolean = !exists(sink.path + ".pending") ||
+    Files.list(java.nio.file.Paths.get(sink.path + ".pending")).count() == 0
+
+  /** The latest-state view of the part files as they lie on disk, read
+    * around the log's open-time repair.
+    */
+  private def rawView(sink: ParquetSink): Map[Long, String] =
+    spark.read.parquet(sink.path).groupBy("pk")
+      .agg(max_by(col("status"), struct(col("time_last_dumped_us"), col("dump_id"))))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  Seq("compact-staged", "recorded", "moved", "removed").foreach { step =>
+    test(s"compaction crash after '$step': the view stays compacted, a recorded one finishes") {
       val sink = compactable()
       crashAt(sink, step)(sink.compact(spark, Seq("pk")))
+      val recorded = step != "compact-staged"
+      assert(recorded || noStaging(sink), "an unrecorded rewrite is dropped")
+      assert(rawView(sink) == compacted, "every crash window shows the compacted view")
       assert(view(sink) == compacted)
-      assert(sink.log(spark).count() == 4, "the log is not compacted")
+      assert(sink.log(spark).count() == (if (recorded) 3 else 4),
+        "the next open finishes a recorded compaction; before the record the log is unchanged")
+      assert(noStaging(sink), "no staging or record left behind")
       assertReplaysNoop(sink)
-      assert(!exists(sink.path + ".staged"), "the next write drops the uncommitted copy")
       sink.compact(spark, Seq("pk"))
       assert(sink.log(spark).count() == 3)
     }
   }
 
-  test("compaction crash inside the swap: the complete copy is promoted, debris dropped") {
+  test("a log an earlier build left mid-swap opens: the complete copy is promoted, debris dropped") {
     val sink = compactable()
     val live = java.nio.file.Paths.get(sink.path)
     val old = java.nio.file.Paths.get(sink.path + ".old")
-    // between the swap's two renames: the live log displaced, the
-    // complete staged copy not yet promoted
-    crashAt(sink, "compact-complete")(sink.compact(spark, Seq("pk")))
-    assert(exists(sink.path + ".staged"), "the complete copy is on disk")
+    // that build's swap, between its two renames: the live log displaced
+    // to .old, the complete compacted copy (latest rows, the manifest,
+    // the _COMPACTED marker) not yet promoted
+    val staged = java.nio.file.Paths.get(sink.path + ".staged")
+    spark.read.parquet(sink.path).filter(col("dump_id") === "d2").write.parquet(staged.toString)
+    Files.createDirectories(staged.resolve("_manifest"))
+    Files.list(live.resolve("_manifest")).forEach(m =>
+      Files.copy(m, staged.resolve("_manifest").resolve(m.getFileName)))
+    Files.createFile(staged.resolve("_COMPACTED"))
     Files.move(live, old)
     assert(view(sink) == compacted)
     assert(sink.log(spark).count() == 3, "the compacted copy is live")
@@ -146,19 +166,24 @@ class SinkCommitSpec extends SparkSpec {
     assert(!exists(sink.path + ".old"))
   }
 
-  test("a compaction whose rewrite is removed fails and leaves the log intact") {
+  test("a compaction whose snapshot another compaction committed first fails") {
     val sink = compactable()
+    def listing() = Files.list(java.nio.file.Paths.get(sink.path)).toArray.map(_.toString).toSet
+    val rewrites = new AtomicInteger(0)
+    var left = Set.empty[String]
+    // the other compaction runs while this one's rewrite waits for its commit
     ParquetSink.failpoint = (p, s) =>
-      if (p == sink.path && s == "compact-staged")
-        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(sink.path + ".staged"))
+      if (p == sink.path && s == "compact-staged" && rewrites.incrementAndGet() == 1) {
+        sink.compact(spark, Seq("pk"))
+        left = listing()
+      }
     try intercept[IllegalStateException](sink.compact(spark, Seq("pk")))
     finally ParquetSink.failpoint = (_, _) => ()
-    assert(!exists(sink.path + ".staged"), "nothing recreated the removed copy")
+    assert(left.nonEmpty && listing() == left, "the log is as the other compaction left it")
+    assert(noStaging(sink), "the refused rewrite is dropped")
     assert(view(sink) == compacted)
-    assert(sink.log(spark).count() == 4, "the log is not compacted")
-    assertReplaysNoop(sink)
-    sink.compact(spark, Seq("pk"))
     assert(sink.log(spark).count() == 3)
+    assertReplaysNoop(sink)
   }
 
   test("reads never remove a compaction's staged copy; the next write drops it") {
@@ -171,6 +196,36 @@ class SinkCommitSpec extends SparkSpec {
     assert(exists(sink.path + ".staged"), "a read must not delete a running rewrite")
     assertReplaysNoop(sink)
     assert(!exists(sink.path + ".staged"))
+  }
+
+  Seq(1, 200).foreach { dumps =>
+    test(s"compaction at $dumps committed dumps keeps the log in place and the manifest untouched") {
+      val sink = newSink()
+      // one append commits every dump; dump i rewrites keys 0-2 at time i
+      val rows = for (i <- 0 until dumps; k <- 0L to 2L) yield (k, s"v$i", f"d$i%03d", 1000L + i)
+      sink.appendIdempotent(spark,
+        spark.createDataFrame(rows).toDF("pk", "status", "dump_id", "time_last_dumped_us"))
+      val manifest = java.nio.file.Paths.get(sink.path, "_manifest")
+      def markers() = Files.list(manifest).toArray.map { case m: java.nio.file.Path =>
+        m.getFileName.toString -> Files.getLastModifiedTime(m) }.toMap
+      val before = markers()
+      assert(before.keys.count(!_.startsWith(".")) == dumps)
+      val steps = scala.collection.mutable.Set[String]()
+      ParquetSink.failpoint = (p, s) =>
+        if (p == sink.path) {
+          steps += s
+          assert(exists(sink.path), s"the log directory is gone at '$s'")
+          assert(!exists(sink.path + ".staged") && !exists(sink.path + ".old"),
+            s"a swap sibling exists at '$s'")
+        }
+      try sink.compact(spark, Seq("pk"))
+      finally ParquetSink.failpoint = (_, _) => ()
+      assert(Set("compact-staged", "recorded", "marked", "moved", "removed").subsetOf(steps),
+        s"steps seen: $steps")
+      assert(markers() == before, "compaction must not touch the manifest")
+      assert(view(sink) == (0L to 2L).map(_ -> s"v${dumps - 1}").toMap)
+      assert(sink.log(spark).count() == 3)
+    }
   }
 
   test("a log written before the manifest stays replay-safe") {
@@ -186,7 +241,7 @@ class SinkCommitSpec extends SparkSpec {
     assert(sink.log(spark).count() == 5)
   }
 
-  test("an append committed while compaction rewrites survives the swap") {
+  test("an append committed while compaction rewrites survives the compaction") {
     val sink = compactable()
     var racer: Option[Long] = None
     ParquetSink.failpoint = (p, s) =>

@@ -1,11 +1,11 @@
 #!/usr/bin/env python3
-"""Checkpointed variant of compare_staged for ONE key: each top-level
+"""Checkpointed variant of compare.py for ONE key: each top-level
 CTE materializes to parquet under CKDIR and reloads on retry, so an
 OOM-killed replay resumes at the dying statement instead of re-paying
 the earlier CTEs (the r16-s4 mining replay paid its ~25 min of
 Lloyd-training CTEs once across three OOM retries, and the checkpoint
 isolated the dying statement to the struct-max assignment aggregate).
-Semantics identical to compare_staged: the same SQL text, executed in
+Semantics identical to compare.py: the same SQL text, executed in
 CTE order, same sorted-columns + row-count + two-sided EXCEPT ALL
 verdict.
 
@@ -16,7 +16,7 @@ invalidates it and everything downstream automatically — a resumed run
 can never silently reuse stale parquet for changed oracle text."""
 import hashlib, json, sys, glob, os, time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from compare_staged import split_ctes
+from compare import split_ctes
 import duckdb
 
 sfdir, outdir, key, ck = sys.argv[1], sys.argv[2], sys.argv[3], sys.argv[4]
