@@ -96,24 +96,16 @@ object AnnIndex {
     }
   }
 
-  def load(spark: SparkSession, path: String): Index =
-    loadImpl(spark, path, tolerateTornAppend = false)
-
-  private def loadImpl(
-      spark: SparkSession, path: String,
-      tolerateTornAppend: Boolean): Index = {
+  def load(spark: SparkSession, path: String): Index = {
     def readable(sub: String): Option[org.apache.spark.sql.Row] =
       try Some(spark.read.parquet(s"$path/$sub").head())
       catch { case _: org.apache.spark.sql.AnalysisException => None }
-    // the marker records WHICH mutation was in flight (r12): a torn
-    // append only ADDED rows, so [[append]] reads through it and the
-    // replayed batch repairs it. No marker at all is a pre-r10 layout:
-    // with a geometry frame (r9) the save order was
-    // buckets→vectors→geometry, so geometry-present implies the frames
-    // landed too; without one it is a pre-r9 default-geometry index —
-    // the ONLY case the default fallback below is for.
+    // No marker at all is a pre-r10 layout: with a geometry frame (r9)
+    // the save order was buckets→vectors→geometry, so geometry-present
+    // implies the frames landed too; without one it is a pre-r9
+    // default-geometry index — the ONLY case the default fallback below
+    // is for.
     Artifact.open(spark, path, "AnnIndex",
-      tolerateTornAppend = tolerateTornAppend,
       unmarkedLayout = {
         val (fs, b) = IndexFs.hfs(spark, s"$path/buckets"); fs.exists(b)
       })
@@ -278,52 +270,25 @@ object AnnIndex {
     Artifact.replace(spark, path)(save(retire(load(spark, path), ids), _))
   }
 
-  /** Persist an ingest: append ONLY the batch's not-yet-indexed bucket
-    * and vector rows to a saved index path, checkpoint-materialized
-    * first so the append jobs never read the directories they write.
-    * (A plain save() of ingest's returned union over a load()ed index
-    * would fail — Spark refuses to overwrite a path being read.)
-    *
-    * Crash-safe (r12 advisory): the pre-r12 append was unbracketed and
-    * keyed the whole batch's freshness on `vectors` — a crash between
-    * the buckets append and the vectors append left orphan bucket rows,
-    * and the REPLAYED append re-appended them (duplicate bucket entries
-    * inflate the occupancy probe/probePairs count before distinct,
-    * silently saturating healthy buckets). Now:
-    *  - the marker brackets the append (`complete=false, op=append`
-    *    first), so [[load]] refuses the torn state to probes;
-    *  - `vectors` land FIRST, `buckets` SECOND: an orphan VECTOR row is
-    *    inert (it only scores once bucket rows nominate it as a
-    *    candidate, and it never counts toward occupancy), whereas an
-    *    orphan bucket row is the poison — so the harmless frame is the
-    *    one a crash can orphan;
-    *  - EACH frame anti-joins the batch against its OWN landed rows
-    *    (vectors on vec_id, buckets on (vec_id, tbl)), so a replay
-    *    after ANY crash point appends exactly the rows that are
-    *    missing and the result is row-identical to a never-crashed
-    *    append — convergent, not merely refusing.
-    * append() itself reads through a `complete=false, op=append` marker
-    * (the base state underneath an interrupted append is intact).
+  /** Persist an ingest: append ONLY the batch's not-yet-indexed vector
+    * rows, and the bucket rows hashed from them, to a saved index path,
+    * as one commit ([[Artifact.append]]): both frames are staged, then
+    * the commit record moves them in, so a crash leaves either the
+    * previous index or, after the next load, the whole append — never
+    * orphan bucket rows, which would inflate the occupancy count of
+    * probe/probePairs. A replayed batch stages no rows. (A plain save()
+    * of ingest's returned union over a load()ed index would fail —
+    * Spark refuses to overwrite a path being read.)
     */
   def append(path: String, newVecs: DataFrame): Unit = {
     val spark = newVecs.sparkSession
-    val idx = loadImpl(spark, path, tolerateTornAppend = true)
-    val e = AnnOps.withNormDf(newVecs)
-    val freshV = Checkpoints.checkpoint(freshVecs(idx.vectors, e))
-    // bucket freshness keyed on the BUCKETS frame itself, per (vec_id,
-    // tbl) row: batch ids broadcast-semi-prune the index scan (tiny
-    // output), which broadcast-anti-joins the batch's recomputed bucket
-    // rows — the corpus side never shuffles, same shape as freshVecs
-    val batchBuckets = AnnOps.bucketIndex(e, idx.geometry)
-    val landed = idx.buckets
-      .join(broadcast(e.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_semi")
-      .select(col("vec_id"), col("tbl")).distinct()
-    val freshB = Checkpoints.checkpoint(
-      batchBuckets.join(broadcast(landed), Seq("vec_id", "tbl"), "left_anti"))
-    Artifact.save(spark, path, op = "append") {
-      freshV.write.mode("append").parquet(s"$path/vectors")
-      freshB.write.mode("append").partitionBy("tbl").parquet(s"$path/buckets")
+    Artifact.append(spark, path) { staged =>
+      val idx = load(spark, path)
+      // feeds both writes: the corpus-side semi-join runs once
+      val freshV = Checkpoints.checkpoint(freshVecs(idx.vectors, AnnOps.withNormDf(newVecs)))
+      freshV.write.parquet(s"$staged/vectors")
+      AnnOps.bucketIndex(freshV, idx.geometry)
+        .write.partitionBy("tbl").parquet(s"$staged/buckets")
     }
   }
 

@@ -554,10 +554,13 @@ object AnnOps {
     * (empty cells keep their previous value). Returns cells × dim
     * micro vectors — model-sized driver traffic, the C14/C18/pqTrain
     * loop shape: each round is one corpus pass whose shuffle carries
-    * ≤ cells groups × dim partial sums.
+    * ≤ cells groups × dim partial sums. `localMax` gates the
+    * driver-local engine: max rows × cells per round (the work unit is
+    * one integer dot); 0 forces the distributed loop.
     */
   private[graft] def ivfTrainMicros(
-      e: DataFrame, cells: Int, rounds: Int): Array[Array[Long]] = {
+      e: DataFrame, cells: Int, rounds: Int,
+      localMax: Long = TRAIN_LOCAL_MAX_DEFAULT): Array[Array[Long]] = {
     // Size-adaptive engine (r20, the clusterPairs/LocalWalk doctrine):
     // each distributed Lloyd round is one wide-plan job (a 65-column
     // aggregate) whose cost at gate scale is ROUND LATENCY, not data —
@@ -569,11 +572,9 @@ object AnnOps {
     // distributed micros). Above the
     // budget the distributed loop below runs unchanged — the path real
     // scale takes.
-    val lmax = e.sparkSession.conf.getOption(TrainLocalMaxKey)
-      .map(_.toLong).getOrElse(TRAIN_LOCAL_MAX_DEFAULT)
-    if (lmax > 0) {
+    if (localMax > 0) {
       val n = e.count()
-      if (n <= (1L << 20) && n * cells <= lmax)
+      if (n <= (1L << 20) && n * cells <= localMax)
         return ivfTrainMicrosLocal(e, cells, rounds)
     }
     val seed = e
@@ -620,11 +621,7 @@ object AnnOps {
     cent
   }
 
-  /** Conf key gating the driver-local Lloyd engine: max rows × cells
-    * per round (the work unit is one integer dot). 0 disables it
-    * (tests and paired measurements force the distributed loop).
-    */
-  private[graft] val TrainLocalMaxKey = "graft.train.localMax"
+  /** [[ivfTrainMicros]]'s default driver-local work budget. */
   private[graft] val TRAIN_LOCAL_MAX_DEFAULT: Long = 1L << 22
 
   /** The driver-local Lloyd engine: the distributed rounds over the

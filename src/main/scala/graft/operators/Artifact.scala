@@ -6,31 +6,34 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue,
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.{Column, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
 
 /** The persisted-artifact contract, in one place. Every artifact writer
   * ([[AnnIndex]], [[CentroidIndex]], [[DedupIndex]], [[IvfPqIndex]],
   * [[KnnIndex]], [[LangIndex]], [[LmIndex]], [[PqIndex]],
   * [[QualityIndex]], [[TokenizerIndex]], [[UnigramLm]]) saves, opens
-  * and memoizes through it; [[IndexFs]] below it owns the staged-sibling
-  * rename discipline. Every rewrite of a saved artifact (retire,
-  * compact, a model merge) stages and swaps through [[replace]]; only
-  * `save` and `append` write the live directory.
+  * and memoizes through it. A saved artifact changes in place in one of
+  * two ways, both under one per-path lock ([[Commits.lockOf]]): a
+  * rewrite (retire, compact, a model merge) stages a whole copy and
+  * swaps it in ([[replace]], [[IndexFs]]); an append stages only its new
+  * files and commits them through the sink log's commit protocol
+  * ([[append]], [[Commits]]). Only `save` and a commit's roll-forward
+  * write the live directory.
   *
   *  - **The save bracket** ([[save]]): a one-row `complete` marker lands
-  *    with `complete=false` and the mutation's `op` FIRST, invalidating
-  *    any previous state before a byte of it is touched, then the
-  *    caller's frames, then `complete=true`. A crash anywhere inside
-  *    leaves `complete=false` on disk.
+  *    with `complete=false` FIRST, invalidating any previous state
+  *    before a byte of it is touched, then the caller's frames, then
+  *    `complete=true`. A crash anywhere inside leaves `complete=false`
+  *    on disk.
   *  - **The open check** ([[open]]): repair an interrupted swap
   *    (reader strength: only a missing live directory, see
-  *    [[IndexFs.recoverSwap]]), then refuse a directory with no marker or
-  *    with a partial one. A torn `save` must be re-saved; a torn rewrite
-  *    never reaches the live directory; a torn `append` only added
-  *    rows, so a caller that replays the batch may read through it. A
-  *    marker without an `op` column (written before ops were recorded)
-  *    reads as `save`, the conservative reading.
+  *    [[IndexFs.recoverSwap]]), roll forward an append a crash left
+  *    recorded, then refuse a directory with no marker or with a
+  *    partial one: a torn save must be rebuilt or re-saved. A marker
+  *    an earlier build left at `op=append` (it wrote appends in place)
+  *    is refused the same way.
   *  - **Per-corpus memos** ([[Memo]]): a trained model or saved path
   *    keyed by the corpus fingerprint ([[CorpusKey]]). A memo is an
   *    artifact: it survives [[graft.Caches.releaseScope]] and is dropped
@@ -40,21 +43,15 @@ private[graft] object Artifact {
 
   // ---- the save bracket ----
 
-  private def mark(spark: SparkSession, path: String, complete: Boolean,
-      op: String, extra: Seq[Column]): Unit =
-    spark.range(0L, 1L, 1L, 1)
-      .select(Seq(lit(complete).as("complete"), lit(op).as("op")) ++ extra: _*)
+  private def mark(spark: SparkSession, path: String, complete: Boolean): Unit =
+    spark.range(0L, 1L, 1L, 1).select(lit(complete).as("complete"))
       .write.mode("overwrite").parquet(s"$path/complete")
 
-  /** Bracket `writes` with the completion marker. `extra` columns ride
-    * the opening (incomplete) marker, describing the in-flight mutation
-    * to a later repair ([[KnnIndex]]'s batch fingerprint).
-    */
-  def save(spark: SparkSession, path: String, op: String = "save",
-      extra: Seq[Column] = Nil)(writes: => Unit): Unit = {
-    mark(spark, path, complete = false, op, extra)
+  /** Bracket `writes` with the completion marker. */
+  def save(spark: SparkSession, path: String)(writes: => Unit): Unit = {
+    mark(spark, path, complete = false)
     writes
-    mark(spark, path, complete = true, op, Nil)
+    mark(spark, path, complete = true)
   }
 
   /** Write a rewritten artifact to `path`'s staged sibling, then commit
@@ -63,21 +60,45 @@ private[graft] object Artifact {
     * `write` may read the live directory lazily — it writes elsewhere.
     * Stale siblings of an earlier torn rewrite are dropped first
     * (writer-strength repair).
-    * Rewrites of one path are serialized per JVM, so callers load the
-    * live index inside `write`: a second rewrite starts from the first's
-    * result and never drops its staged copy.
+    * Rewrites and appends of one path are serialized per JVM, so callers
+    * load the live index inside `write`: a second rewrite starts from
+    * the first's result and never drops its staged copy.
     */
   def replace(spark: SparkSession, path: String)(write: String => Unit): Unit = {
     val (fs, p) = IndexFs.hfs(spark, path)
-    rewriteLocks.computeIfAbsent(fs.makeQualified(p).toString, _ => new Object).synchronized {
+    Commits.lockOf(fs, p).synchronized {
       IndexFs.dropSwapDebris(spark, path)
       write(IndexFs.stagedPath(path))
       IndexFs.swapInto(spark, path)
     }
   }
 
-  /** One [[replace]] lock per qualified path. */
-  private val rewriteLocks = new ConcurrentHashMap[String, AnyRef]()
+  /** Add files to the saved artifact at `path` as one commit
+    * ([[Commits]]): under the path's lock, `stage` loads the live
+    * artifact and writes its new frames, laid out as under `path`, into
+    * the staging directory it is given; the commit record then moves
+    * them in. Each live directory that a staged file of a `replacing`
+    * frame lands in is replaced whole — the record removes its live
+    * files (a dynamic partition overwrite). A crash before the record
+    * leaves the artifact as it was; from the record on, the next
+    * [[open]] finishes the commit.
+    */
+  def append(spark: SparkSession, path: String, replacing: Seq[String] = Nil)(
+      stage: String => Unit): Unit = {
+    val (fs, p) = IndexFs.hfs(spark, path)
+    Commits.lockOf(fs, p).synchronized {
+      val txn = Commits.newTxn(p)
+      try {
+        stage(txn.toString)
+        Commits.failpoint(p.toString, "staged")
+        val replaced = Commits.dataFiles(fs, txn)
+          .filter(f => replacing.exists(r => f.startsWith(r + "/")))
+          .map(f => f.substring(0, f.lastIndexOf('/'))).distinct
+        Commits.commit(fs, p, txn, Nil, replaced.flatMap(d =>
+          Commits.dataFiles(fs, new Path(p, d)).map(d + "/" + _)))
+      } finally Commits.dropUnrecorded(fs, txn)
+    }
+  }
 
   /** Pool for [[inParallel]]: a constant size, daemon threads that
     * inherit no thread-locals (a write never runs under the Spark job
@@ -111,38 +132,33 @@ private[graft] object Artifact {
     catch { case _: Exception => false }
 
   /** Check the marker of the `kind` artifact at `path` before its frames
-    * are read, after repairing an interrupted [[replace]] swap.
-    * `tolerateTornAppend`: the caller replays an append and may read
-    * through its incomplete marker. `unmarkedLayout`: asked only when
-    * there is no marker at all — true accepts a pre-marker layout the
-    * caller still reads ([[AnnIndex]]).
-    *
-    * Returns the marker of a tolerated torn append (its extra columns
-    * describe the interrupted batch), else None.
+    * are read, after repairing an interrupted [[replace]] swap and
+    * rolling forward a recorded [[append]] (one `exists` call when
+    * none is pending). `unmarkedLayout`: asked only when there is no
+    * marker at all — true accepts a pre-marker layout the caller still
+    * reads ([[AnnIndex]]).
     */
   def open(spark: SparkSession, path: String, kind: String,
-      tolerateTornAppend: Boolean = false,
-      unmarkedLayout: => Boolean = false): Option[Row] = {
+      unmarkedLayout: => Boolean = false): Unit = {
+    val (fs, p) = IndexFs.hfs(spark, path)
     IndexFs.recoverSwap(spark, path, isComplete(spark, IndexFs.stagedPath(path)))
+    Commits.recover(fs, p)
     val marker =
       try Some(spark.read.parquet(s"$path/complete").head())
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     marker match {
-      case None if unmarkedLayout => None
+      case None if unmarkedLayout => ()
       case None =>
         throw new IllegalStateException(
           s"$kind at $path has no completion marker — not a saved $kind")
-      case Some(m) if m.getAs[Boolean]("complete") => None
+      case Some(m) if m.getAs[Boolean]("complete") => ()
       case Some(m) =>
+        // a marker without an `op` column is this build's save bracket
         val op =
           if (m.schema.fieldNames.contains("op")) m.getAs[String]("op")
           else "save"
-        if (tolerateTornAppend && op == "append") Some(m)
-        else throw new IllegalStateException(
-          s"$kind at $path is a partial $op — " +
-            (if (op == "append")
-               "replay the interrupted append batch to repair it"
-             else "rebuild or re-save it"))
+        throw new IllegalStateException(
+          s"$kind at $path is a partial $op — rebuild or re-save it")
     }
   }
 

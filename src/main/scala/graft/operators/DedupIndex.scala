@@ -3,8 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.{Caches, Checkpoints}
+import graft.Caches
 
 /** Persistent MinHash-LSH index for INCREMENTAL near-duplicate
   * detection — the operational shape of D3 at 100 TB. A lake-scale
@@ -71,7 +72,7 @@ object DedupIndex {
     * directories, and one band's buckets co-locate.
     *
     * Saves are not atomic (a band-partitioned multi-file write), so —
-    * like [[AnnIndex.save]] — every mutation brackets the data with a
+    * like [[AnnIndex.save]] — every save brackets the data with a
     * completion marker: `complete=false` lands FIRST, invalidating the
     * previous save before a byte of it is touched, then the signature
     * rows, then `complete=true`. A crash inside the bracket leaves
@@ -88,22 +89,18 @@ object DedupIndex {
         .write.mode("overwrite").partitionBy("band").parquet(s"$path/sigs")
     }
 
-  def load(spark: SparkSession, path: String): DataFrame =
-    loadImpl(spark, path, tolerateTornAppend = false)
-
-  /** Like [[AnnIndex]]'s marker (r12), the marker records WHICH mutation
-    * was in flight: a torn save must be re-saved (retire/compact never
-    * write the live directory — they swap); a torn `append` only added
-    * rows — the previous complete state is intact underneath, and
-    * replaying the interrupted batch repairs it.
+  /** The stored signature rows, read with their schema: a retire of
+    * every document leaves a `sigs` directory without part files, whose
+    * schema Spark could not infer.
     */
-  private def loadImpl(
-      spark: SparkSession, path: String,
-      tolerateTornAppend: Boolean): DataFrame = {
-    Artifact.open(spark, path, "DedupIndex",
-      tolerateTornAppend = tolerateTornAppend)
-    spark.read.parquet(s"$path/sigs")
+  def load(spark: SparkSession, path: String): DataFrame = {
+    Artifact.open(spark, path, "DedupIndex")
+    spark.read.schema(SigSchema).parquet(s"$path/sigs")
   }
+
+  private val SigSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("bkey", StringType),
+    StructField("mh", ArrayType(LongType)), StructField("band", IntegerType)))
 
   /** Near-dup pairs between a NEW batch and the indexed corpus:
     * (first_id — the indexed doc, new_id, est_jaccard ≥ tau). Pairs
@@ -154,14 +151,8 @@ object DedupIndex {
     val present = index
       .join(broadcast(sigs.select(col("doc_id")).distinct()),
         Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("band")).distinct()
-    // per-(doc_id, band) ROW granularity (r12): a crash mid-append can
-    // commit some band partitions and not others, and a per-doc key
-    // would then read the doc as "already indexed" and skip its missing
-    // bands forever. Per-row, a replayed append lands exactly the rows
-    // that are missing — convergent from any crash point. On a clean
-    // index a doc has all bands or none, so the semantics are unchanged.
-    sigs.join(broadcast(present), Seq("doc_id", "band"), "left_anti")
+      .select(col("doc_id")).distinct()
+    sigs.join(broadcast(present), Seq("doc_id"), "left_anti")
   }
 
   /** The incremental step: probe, then fold the batch into the index.
@@ -210,26 +201,18 @@ object DedupIndex {
   }
 
   /** Persist an ingest: append ONLY the batch's not-yet-indexed
-    * signature rows to a saved index path. The fresh rows are
-    * checkpoint-materialized first so the append job never reads the
-    * directory it writes. (A plain save() of ingest's returned union
-    * over a load()ed index would fail — Spark refuses to overwrite a
-    * path that is also being read.)
+    * signature rows to a saved index path, as one commit
+    * ([[Artifact.append]]): the band-partitioned rows are staged, then
+    * moved in, so probes never see a document with some of its bands
+    * missing (silently missed near-duplicates). (A plain save() of
+    * ingest's returned union over a load()ed index would fail — Spark
+    * refuses to overwrite a path that is also being read.)
     */
   def append(path: String, newDocs: DataFrame): Unit = {
     val spark = newDocs.sparkSession
-    // reads through a `complete=false, op=append` marker: the base
-    // state under an interrupted append is intact (appends only add),
-    // and freshSigs' per-(doc_id, band) anti-join lands exactly the
-    // rows the crash lost — so replaying the batch REPAIRS the index.
-    // The marker still brackets the append, so probes (load) refuse the
-    // torn state instead of silently missing near-duplicates in the
-    // half-landed bands.
-    val fresh = Checkpoints.checkpoint(
-      freshSigs(loadImpl(spark, path, tolerateTornAppend = true),
-        signatures(newDocs)))
-    Artifact.save(spark, path, op = "append") {
-      fresh.write.mode("append").partitionBy("band").parquet(s"$path/sigs")
+    Artifact.append(spark, path) { staged =>
+      freshSigs(load(spark, path), signatures(newDocs))
+        .write.partitionBy("band").parquet(s"$staged/sigs")
     }
   }
 

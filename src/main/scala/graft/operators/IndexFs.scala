@@ -5,10 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Filesystem discipline for every rewrite of a saved index (through
   * [[Artifact.replace]]/[[Artifact.open]]): staged-sibling rewrites
   * committed by atomic directory rename, with open-time repair of any
-  * interrupted swap. The parquet sink log ([[graft.sources.ParquetSink]])
-  * compacts through its own commit records and never swaps; it calls
-  * the two repairs only to open a log that an earlier build's
-  * compaction swap left interrupted.
+  * interrupted swap. Everything that only adds files — saved-index
+  * appends, the parquet sink log's appends and compactions — commits
+  * through the one record-and-roll-forward protocol of [[Commits]]
+  * instead and never swaps; the sink log calls the two repairs below
+  * only to open a log that an earlier build's compaction swap left
+  * interrupted.
   *
   * Repair comes in two strengths. A reader ([[recoverSwap]]) acts only
   * when the live directory is missing, so it never removes a staged copy

@@ -27,14 +27,12 @@ import graft.{Caches, Checkpoints}
   * batches under BOTH pinned models (coarse centroids + residual
   * codebook) — the FAISS operational posture: retrain is a rebuild.
   *
-  * Durability is [[PqIndex]]'s: marker-bracketed multi-frame
-  * mutations; a torn save refuses to load; a torn append is repairable
-  * by replaying the batch (vectors land first — an orphan vector row is
-  * inert — and each frame anti-joins its own landed rows, so replay
-  * converges to the never-crashed state); [[retire]]/[[compact]] write
-  * a staged sibling and commit by atomic directory rename
-  * ([[Artifact.replace]]), so a crash mid-rewrite leaves a complete
-  * index, and [[load]] finishes any swap a crash interrupted.
+  * Durability is [[PqIndex]]'s: a marker-bracketed save, and a torn
+  * one refuses to load; an append is one commit ([[Artifact.append]]);
+  * [[retire]]/[[compact]] write a staged sibling and commit by atomic
+  * directory rename ([[Artifact.replace]]), so a crash mid-rewrite
+  * leaves a complete index, and [[load]] finishes any swap or recorded
+  * append a crash interrupted.
   */
 object IvfPqIndex {
 
@@ -132,14 +130,8 @@ object IvfPqIndex {
     }
   }
 
-  def load(spark: SparkSession, path: String): Index =
-    loadImpl(spark, path, tolerateTornAppend = false)
-
-  private def loadImpl(
-      spark: SparkSession, path: String,
-      tolerateTornAppend: Boolean): Index = {
-    Artifact.open(spark, path, "IvfPqIndex",
-      tolerateTornAppend = tolerateTornAppend)
+  def load(spark: SparkSession, path: String): Index = {
+    Artifact.open(spark, path, "IvfPqIndex")
     val meta = spark.read.parquet(s"$path/meta").head()
     Index(
       spark.read.parquet(s"$path/codes")
@@ -152,31 +144,22 @@ object IvfPqIndex {
   }
 
   /** Append a batch to a saved index under the PINNED coarse centroids
-    * and residual codebook: replayed ids fold in as no-ops (each frame
-    * anti-joins its own landed rows), vectors land before codes, and
-    * the whole append is marker-bracketed with `op=append` so probes
-    * refuse a torn state while a replayed append() reads through it and
-    * repairs.
+    * and residual codebook, as one commit ([[Artifact.append]]): the
+    * batch's not-yet-indexed vectors and their cell-partitioned codes
+    * are staged, then moved in, so a replayed batch stages no rows.
     */
   def append(path: String, newVecs: DataFrame): Unit = {
     val spark = newVecs.sparkSession
-    val idx = loadImpl(spark, path, tolerateTornAppend = true)
-    val e = AnnOps.withNormDf(newVecs)
-    val freshV = Checkpoints.checkpoint(AnnIndex.freshVecs(idx.vectors, e))
-    val landedC = idx.codes
-      .join(broadcast(e.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_semi")
-      .select(col("vec_id")).distinct()
-    val res = AnnOps.ivfPqResiduals(e, idx.centroids)
-    val freshC = Checkpoints.checkpoint(
-      res.select(col("vec_id"), col("cell"),
-        call_function("pql_encode", col("rv"),
-          typedLit(idx.codebook.toSeq), lit(AnnOps.PQ_SUBDIM)).as("codes"))
-        .join(broadcast(landedC), Seq("vec_id"), "left_anti"))
-    Artifact.save(spark, path, op = "append") {
-      freshV.write.mode("append").parquet(s"$path/vectors")
-      freshC.withColumn("cell", col("cell").cast("int"))
-        .write.mode("append").partitionBy("cell").parquet(s"$path/codes")
+    Artifact.append(spark, path) { staged =>
+      val idx = load(spark, path)
+      val freshV = Checkpoints.checkpoint(
+        AnnIndex.freshVecs(idx.vectors, AnnOps.withNormDf(newVecs)))
+      freshV.write.parquet(s"$staged/vectors")
+      AnnOps.ivfPqResiduals(freshV, idx.centroids)
+        .select(col("vec_id"), col("cell").cast("int").as("cell"),
+          call_function("pql_encode", col("rv"),
+            typedLit(idx.codebook.toSeq), lit(AnnOps.PQ_SUBDIM)).as("codes"))
+        .write.partitionBy("cell").parquet(s"$staged/codes")
     }
   }
 

@@ -24,10 +24,10 @@ import graft.functions.Portable._
   * Mutations follow the family contract:
   *  - [[append]] assigns the batch under the PINNED quantizer and
   *    re-knns ONLY the affected cells (edges never cross cells, so the
-  *    rewrite is exactly the closure of the change); dynamic partition
-  *    overwrite touches only those cell directories, the whole append
-  *    is marker-bracketed, and a torn append repairs by replaying the
-  *    batch (members recompute from current state — idempotent).
+  *    rewrite is exactly the closure of the change); it is one commit
+  *    ([[Artifact.append]]) that replaces only those cell directories
+  *    and the seed table, and a replayed batch rewrites the same rows
+  *    (members recompute from current state — idempotent).
   *  - [[retire]] drops members and every edge TOUCHING a retired id
   *    (the stored graph keeps k edges, so the (k+1)-th neighbor a true
   *    re-knn would promote is not reconstructible — stated contract,
@@ -133,28 +133,6 @@ object KnnIndex {
       rounds, sub, k, div)
   }
 
-  /** A batch fingerprint (count, min vec_id, max vec_id) — persisted in
-    * an append's incomplete marker so a torn append can only be
-    * repaired by replaying the SAME batch (r18 advisory: replaying a
-    * DIFFERENT batch under tolerateTornAppend would flip the marker to
-    * complete while the first batch's cells hold vectors whose
-    * edges/seeds were never rebuilt).
-    */
-  private[graft] case class BatchFp(
-      n: Long, mn: Long, mx: Long, dig: Option[Long]) {
-    /** Endpoint fields must agree; the content digest (order-insensitive
-      * xor of xxhash64(vec_id), r18 advisory: endpoints alone would
-      * accept a different batch sharing count/min/max) is compared only
-      * when BOTH sides carry one — a pre-digest marker falls back to
-      * the endpoint check rather than refusing every repair.
-      */
-    def matches(o: BatchFp): Boolean =
-      n == o.n && mn == o.mn && mx == o.mx &&
-        (for (a <- dig; b <- o.dig) yield a == b).getOrElse(true)
-    override def toString: String =
-      s"(n=$n, min=$mn, max=$mx, digest=${dig.getOrElse("-")})"
-  }
-
   /** Persist: marker bracket around meta (pinned quantizer + dials),
     * the cell-partitioned member and edge frames, and the seed table.
     */
@@ -194,29 +172,8 @@ object KnnIndex {
     }
   }
 
-  def load(spark: SparkSession, path: String): Index =
-    loadImpl(spark, path, tolerateTornAppend = false)._1
-
-  /** Loads the index; when a torn append was tolerated, also returns
-    * the interrupted batch's fingerprint so [[append]] can refuse a
-    * repair attempt with a DIFFERENT batch.
-    */
-  private def loadImpl(
-      spark: SparkSession, path: String,
-      tolerateTornAppend: Boolean): (Index, Option[BatchFp]) = {
-    // pre-r18 markers carry no fingerprint fields (r18 advisory: don't
-    // refuse to load an old artifact) — a torn pre-r18 append falls
-    // back to the original "replay the batch" contract, unchecked
-    val tornFp: Option[BatchFp] =
-      Artifact.open(spark, path, "KnnIndex",
-        tolerateTornAppend = tolerateTornAppend).collect {
-        case m if m.schema.fieldNames.contains("batch_n") =>
-          BatchFp(m.getAs[Long]("batch_n"),
-            m.getAs[Long]("batch_min"), m.getAs[Long]("batch_max"),
-            if (m.schema.fieldNames.contains("batch_dig"))
-              Some(m.getAs[Long]("batch_dig"))
-            else None)
-      }
+  def load(spark: SparkSession, path: String): Index = {
+    Artifact.open(spark, path, "KnnIndex")
     val metaDf = spark.read.parquet(s"$path/meta")
     val meta = metaDf.head()
     val dim = meta.getAs[Int]("dim")
@@ -231,7 +188,7 @@ object KnnIndex {
     require(micros.length == cells,
       s"centroid rows ${micros.length} != $cells")
     val st = meta.getAs[Int]("sub_tables")
-    (Index(
+    Index(
       spark.read.parquet(s"$path/edges")
         .withColumn("cell", col("cell").cast(LongType)),
       spark.read.parquet(s"$path/vectors")
@@ -244,74 +201,48 @@ object KnnIndex {
       // read of the persisted artifact) — default to plain edges
       if (metaDf.schema.fieldNames.contains("div"))
         meta.getAs[Boolean]("div")
-      else false),
-      tornFp)
+      else false)
   }
 
   /** Append a batch under the PINNED quantizer: re-knn ONLY the cells
-    * the batch lands in. Members of those cells recompute from current
-    * state (anti-join folds a replayed batch in as a no-op), edges and
-    * seeds of untouched cells are never read or written — dynamic
-    * partition overwrite rewrites exactly the affected directories.
+    * the batch lands in, as one commit ([[Artifact.append]]). Members
+    * of those cells recompute from current state (anti-join folds a
+    * replayed batch in as a no-op); the staged members, edges and seeds
+    * replace exactly the cell directories they write and the seed
+    * table, so edges and seeds of untouched cells are never read or
+    * written.
     */
   def append(path: String, newVecs: DataFrame): Unit = {
     val spark = newVecs.sparkSession
-    val (idx, tornFp) = loadImpl(spark, path, tolerateTornAppend = true)
-    val cent = AnnOps.centroidFrame(spark, idx.micros)
-    val newE = AnnOps.withNormDf(newVecs)
-    val newAssigned = Checkpoints.checkpoint(
-      AnnOps.assignCells(newE, cent).join(newE, "vec_id")
-        .select(col("vec_id"), col("embedding"), col("nm"), col("cell")))
-    val fpRow = newAssigned
-      .agg(count(lit(1)).as("n"), min(col("vec_id")).as("mn"),
-        max(col("vec_id")).as("mx"),
-        bit_xor(xxhash64(col("vec_id"))).as("dig")).head()
-    val fp: BatchFp = BatchFp(fpRow.getAs[Long]("n"),
-      Option(fpRow.get(1)).map(_ => fpRow.getAs[Long]("mn")).getOrElse(-1L),
-      Option(fpRow.get(2)).map(_ => fpRow.getAs[Long]("mx")).getOrElse(-1L),
-      Some(Option(fpRow.get(3)).map(_ => fpRow.getAs[Long]("dig"))
-        .getOrElse(0L)))
-    // a torn append repairs ONLY by replaying the same batch: the
-    // incomplete marker carries the in-flight batch's fingerprint
-    // (endpoints + order-insensitive id digest), and appending anything
-    // else would mark the index complete while the first batch's cells
-    // still hold un-knn'd vectors (r18 advisories)
-    tornFp.foreach { t =>
-      if (!t.matches(fp))
-        throw new IllegalStateException(
-          s"KnnIndex at $path has a torn append of batch $t; the " +
-            s"batch being appended fingerprints as $fp — replay the " +
-            "interrupted batch first")
-    }
-    val affected = newAssigned.select(col("cell")).distinct()
-      .collect().map(_.getAs[Long]("cell")).toSeq
-    // current members of the affected cells (partition-pruned read),
-    // batch ids anti-joined out so replay converges, batch unioned in —
-    // checkpointed because the write below overwrites what it reads
-    val members = Checkpoints.checkpoint(
-      idx.vectors.filter(col("cell").isin(affected: _*))
-        .join(broadcast(newAssigned.select(col("vec_id")).distinct()),
-          Seq("vec_id"), "left_anti")
-        .unionByName(newAssigned))
-    val pairs2 = AnnOps.bucketedPairsFromAssigned(members, idx.sub)
-    val edges2 = (if (idx.div)
-        EmbeddingOps.divKnnEdges(pairs2, members, idx.k)
-      else EmbeddingOps.knnEdges(pairs2, idx.k))
-      .join(members.select(col("vec_id"), col("cell")), "vec_id")
-    val seedsAll = Checkpoints.checkpoint(
-      idx.seeds.filter(!col("cell").isin(affected: _*))
-        .unionByName(seedRanks(members)))
-    val dyn = Map("partitionOverwriteMode" -> "dynamic")
-    Artifact.save(spark, path, op = "append", extra = Seq(
-      lit(fp.n).as("batch_n"), lit(fp.mn).as("batch_min"),
-      lit(fp.mx).as("batch_max"), lit(fp.dig.getOrElse(0L)).as("batch_dig"))) {
+    Artifact.append(spark, path, replacing = Seq("vectors", "edges", "seeds")) { staged =>
+      val idx = load(spark, path)
+      val cent = AnnOps.centroidFrame(spark, idx.micros)
+      val newE = AnnOps.withNormDf(newVecs)
+      // both feed several jobs below: each is computed once
+      val newAssigned = Checkpoints.checkpoint(
+        AnnOps.assignCells(newE, cent).join(newE, "vec_id")
+          .select(col("vec_id"), col("embedding"), col("nm"), col("cell")))
+      val affected = newAssigned.select(col("cell")).distinct()
+        .collect().map(_.getAs[Long]("cell")).toSeq
+      // current members of the affected cells (partition-pruned read),
+      // batch ids anti-joined out so replay converges, batch unioned in
+      val members = Checkpoints.checkpoint(
+        idx.vectors.filter(col("cell").isin(affected: _*))
+          .join(broadcast(newAssigned.select(col("vec_id")).distinct()),
+            Seq("vec_id"), "left_anti")
+          .unionByName(newAssigned))
+      val pairs2 = AnnOps.bucketedPairsFromAssigned(members, idx.sub)
+      val edges2 = (if (idx.div)
+          EmbeddingOps.divKnnEdges(pairs2, members, idx.k)
+        else EmbeddingOps.knnEdges(pairs2, idx.k))
+        .join(members.select(col("vec_id"), col("cell")), "vec_id")
       members.withColumn("cell", col("cell").cast("int"))
-        .write.mode("overwrite").options(dyn).partitionBy("cell")
-        .parquet(s"$path/vectors")
+        .write.partitionBy("cell").parquet(s"$staged/vectors")
       edges2.withColumn("cell", col("cell").cast("int"))
-        .write.mode("overwrite").options(dyn).partitionBy("cell")
-        .parquet(s"$path/edges")
-      seedsAll.write.mode("overwrite").parquet(s"$path/seeds")
+        .write.partitionBy("cell").parquet(s"$staged/edges")
+      idx.seeds.filter(!col("cell").isin(affected: _*))
+        .unionByName(seedRanks(members))
+        .write.parquet(s"$staged/seeds")
     }
   }
 

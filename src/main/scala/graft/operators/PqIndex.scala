@@ -25,15 +25,11 @@ import graft.{Caches, Checkpoints}
   * distribution degrades recall gracefully and is re-measured at
   * rebuild time).
   *
-  * Durability mirrors AnnIndex r12 semantics: every multi-frame
-  * mutation is completion-marker-bracketed; a torn save refuses to
-  * load; retire/compact stage and swap ([[Artifact.replace]]), so a
-  * torn rewrite leaves the previous index; a torn APPEND is repairable —
-  * vectors land first (an orphan vector row is inert: nothing nominates
-  * it until its codes row exists) and codes second (an orphan codes row
-  * would burn shortlist slots on a candidate the refine join then
-  * drops), and each frame anti-joins its OWN landed rows so replaying
-  * the interrupted batch converges to the never-crashed state.
+  * Durability is [[AnnIndex]]'s: a save is completion-marker-bracketed
+  * and a torn one refuses to load; retire/compact stage and swap
+  * ([[Artifact.replace]]), so a torn rewrite leaves the previous index;
+  * an append is one commit ([[Artifact.append]]), so a crash leaves the
+  * previous index or, after the next load, the whole append.
   */
 object PqIndex {
 
@@ -87,14 +83,8 @@ object PqIndex {
     }
   }
 
-  def load(spark: SparkSession, path: String): Index =
-    loadImpl(spark, path, tolerateTornAppend = false)
-
-  private def loadImpl(
-      spark: SparkSession, path: String,
-      tolerateTornAppend: Boolean): Index = {
-    Artifact.open(spark, path, "PqIndex",
-      tolerateTornAppend = tolerateTornAppend)
+  def load(spark: SparkSession, path: String): Index = {
+    Artifact.open(spark, path, "PqIndex")
     val meta = spark.read.parquet(s"$path/meta").head()
     Index(spark.read.parquet(s"$path/codes"),
       spark.read.parquet(s"$path/vectors"),
@@ -102,28 +92,19 @@ object PqIndex {
       meta.getAs[Int]("k"), meta.getAs[Int]("rerank"))
   }
 
-  /** Append a batch to a saved index under the PINNED codebook:
-    * replayed ids fold in as no-ops (each frame anti-joins its own
-    * landed rows), vectors land before codes (see object note on which
-    * orphan is harmless), and the whole append is marker-bracketed with
-    * `op=append` so probes refuse a torn state while a replayed
-    * append() reads through it and repairs.
+  /** Append a batch to a saved index under the PINNED codebook, as one
+    * commit ([[Artifact.append]]): the batch's not-yet-indexed vectors
+    * and their codes are staged, then moved in, so a replayed batch
+    * stages no rows.
     */
   def append(path: String, newVecs: DataFrame): Unit = {
     val spark = newVecs.sparkSession
-    val idx = loadImpl(spark, path, tolerateTornAppend = true)
-    val e = AnnOps.withNormDf(newVecs)
-    val freshV = Checkpoints.checkpoint(AnnIndex.freshVecs(idx.vectors, e))
-    val landedC = idx.codes
-      .join(broadcast(e.select(col("vec_id")).distinct()),
-        Seq("vec_id"), "left_semi")
-      .select(col("vec_id")).distinct()
-    val freshC = Checkpoints.checkpoint(
-      AnnOps.pqEncodeDf(e, idx.codebook)
-        .join(broadcast(landedC), Seq("vec_id"), "left_anti"))
-    Artifact.save(spark, path, op = "append") {
-      freshV.write.mode("append").parquet(s"$path/vectors")
-      freshC.write.mode("append").parquet(s"$path/codes")
+    Artifact.append(spark, path) { staged =>
+      val idx = load(spark, path)
+      val freshV = Checkpoints.checkpoint(
+        AnnIndex.freshVecs(idx.vectors, AnnOps.withNormDf(newVecs)))
+      freshV.write.parquet(s"$staged/vectors")
+      AnnOps.pqEncodeDf(freshV, idx.codebook).write.parquet(s"$staged/codes")
     }
   }
 

@@ -1,18 +1,14 @@
 package graft.sources
 
-import java.io.{EOFException, FileNotFoundException, IOException}
-import java.nio.charset.StandardCharsets.UTF_8
-import java.security.MessageDigest
-import java.util.UUID
-import java.util.concurrent.ConcurrentHashMap
+import java.io.IOException
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Checkpoints
-import graft.operators.IndexFs
+import graft.operators.{Commits, IndexFs}
 
 /** Sink abstractions (SURVEY.md §4): the write-side twin of the
   * reference's `ModelBaseSink.send_item` / dump-id idempotency contract
@@ -94,11 +90,12 @@ object Sinks {
   * the batch — it reads none of the log's data files or footers, and
   * its cost does not grow with the committed history; the append is
   * one Spark job, and compaction rewrites the part files only, never
-  * the manifest. [[ExternalSink]] pushes `SELECT DISTINCT dump_id` to
-  * the database and anti-joins the batch against the few ids it
-  * returns (a broadcast join). The latest-state view is one shuffle on
-  * the unique key and is the same plan as the `sink_latest_state`
-  * operator (A1).
+  * the manifest. Both are commits of the one protocol saved-index
+  * appends use too ([[graft.operators.Commits]]). [[ExternalSink]]
+  * pushes `SELECT DISTINCT dump_id` to the database and anti-joins the
+  * batch against the few ids it returns (a broadcast join). The
+  * latest-state view is one shuffle on the unique key and is the same
+  * plan as the `sink_latest_state` operator (A1).
   */
 trait SinkLog {
 
@@ -151,22 +148,19 @@ trait SinkLog {
   }
 }
 
-/** Append-only parquet sink log — the lake-native [[SinkLog]], with its
-  * own commit protocol so an append is one Spark job and its dump-id
-  * check never reads the log. Files, for a log at `path`:
-  *   - `path/part-*.parquet`: the committed rows, all a reader sees.
-  *   - `path/_manifest/<sha-256 of the dump_id>`: one marker per
-  *     committed dump_id, holding the id. Spark's file index skips
-  *     `_`-prefixed names, so the marker directory is invisible to reads.
-  *   - `path.pending/<txn>/`: one commit's staged write, and
-  *     `path.pending/<txn>.commit`: its commit record (the dump_ids to
-  *     mark; for a compaction, the part files it replaces).
+/** Append-only parquet sink log — the lake-native [[SinkLog]], so an
+  * append is one Spark job and its dump-id check never reads the log.
+  * It commits through the engine's one commit protocol for in-place
+  * writes ([[graft.operators.Commits]], which saved-index appends share):
+  * `path/part-*.parquet` are the committed rows, all a reader sees;
+  * `path/_manifest/` holds one marker per committed dump_id (Spark's
+  * file index skips `_`-prefixed names); `path.pending/` holds staged
+  * writes and their commit records.
   *
   * An append writes the batch once, unfiltered, into its staging
   * directory; `Dataset.observe` on that write yields the row count and
   * the dump_ids. The Spark driver then looks up each dump_id's marker
-  * and, under the log's lock, commits: the record (written aside, then
-  * renamed into place, so it is whole or absent), then the markers,
+  * and, under the log's lock, commits: the record, then the markers,
   * then the staged part files renamed into the log. A dump already
   * committed is dropped after its write, so a re-delivered streaming
   * epoch still executes its plan once and its state-store version
@@ -186,25 +180,17 @@ trait SinkLog {
   * first write to it marks the log's dump_ids from one scan, so its
   * earlier dumps stay replay-safe.
   *
-  * ASSUMES atomic rename of files and directories, like `IndexFs`:
-  * true on HDFS and local POSIX file systems, NOT on object stores (S3A
-  * rename is copy+delete, so a crash mid-move can tear a dump); an
-  * object-store deployment wants a table format's commit protocol
-  * instead. Commits of one log are serialized per JVM, so one process
-  * writes a log; readers may live in any process.
+  * ASSUMES atomic rename, like `IndexFs`: an object-store deployment
+  * wants a table format's commit protocol instead. Commits of one log
+  * are serialized per JVM, so one process writes a log; readers may
+  * live in any process.
   */
 final case class ParquetSink(path: String) extends SinkLog {
-  import ParquetSink._
 
   private def root = new Path(path)
-  private def manifest = new Path(root, ManifestDir)
-  private def pending = new Path(path + ".pending")
-  private def record(txn: Path) = new Path(pending, txn.getName + ".commit")
+  private def manifest = new Path(root, Commits.ManifestDir)
 
   private def fsOf(spark: SparkSession): FileSystem = IndexFs.hfs(spark, path)._1
-
-  private def lockOf(fs: FileSystem): AnyRef =
-    locks.computeIfAbsent(fs.makeQualified(root).toString, _ => new Object)
 
   protected def exists(spark: SparkSession): Boolean = {
     val fs = fsOf(spark)
@@ -228,28 +214,24 @@ final case class ParquetSink(path: String) extends SinkLog {
   def appendIdempotent(spark: SparkSession, batch: DataFrame): Long = {
     val fs = fsOf(spark)
     recover(spark, fs, writer = true)
-    val txn = new Path(pending, UUID.randomUUID().toString)
+    val txn = Commits.newTxn(root)
     val fresh = new Path(txn.toString + "-fresh")
     try {
       val (n, ids) = stage(batch, txn)
-      failpoint(path, "staged")
-      lockOf(fs).synchronized {
-        val seen = ids.filter(id => fs.exists(marker(manifest, id)))
+      Commits.failpoint(path, "staged")
+      Commits.lockOf(fs, root).synchronized {
+        val seen = ids.filter(id => fs.exists(Commits.marker(manifest, id)))
         if (n == 0 || (seen.nonEmpty && seen.size == ids.size)) 0L
-        else if (seen.isEmpty) { commit(fs, txn, ids); n }
+        else if (seen.isEmpty) { Commits.commit(fs, root, txn, ids); n }
         else {
           // a batch mixing committed and new dumps restages its new rows
           val (n2, ids2) = stage(spark.read.parquet(txn.toString)
             .filter(!coalesce(col("dump_id").isin(seen: _*), lit(false))), fresh)
-          commit(fs, fresh, ids2)
+          Commits.commit(fs, root, fresh, ids2)
           n2
         }
       }
-    } finally {
-      // staging that never got a commit record is dropped; a recorded
-      // one is rolled forward by the next open
-      Seq(txn, fresh).foreach(d => if (!fs.exists(record(d))) fs.delete(d, true))
-    }
+    } finally Seq(txn, fresh).foreach(Commits.dropUnrecorded(fs, _))
   }
 
   /** Write `df` to `dir` — the append's one Spark job — observing its
@@ -263,57 +245,6 @@ final case class ParquetSink(path: String) extends SinkLog {
     (m("n").asInstanceOf[Long], m("ids").asInstanceOf[Seq[String]])
   }
 
-  /** Commit a staged write: the record, atomically, then the
-    * roll-forward. The record is the dump_ids to mark (`int n`, then `n`
-    * UTF ids), then, for a compaction only, the part files to remove in
-    * the same form.
-    */
-  private def commit(fs: FileSystem, txn: Path, dumpIds: Seq[String],
-      removals: Seq[String] = Nil): Unit = {
-    val tmp = new Path(txn, "_commit")
-    val out = fs.create(tmp, false)
-    try {
-      out.writeInt(dumpIds.size); dumpIds.foreach(out.writeUTF)
-      if (removals.nonEmpty) { out.writeInt(removals.size); removals.foreach(out.writeUTF) }
-    } finally out.close()
-    if (!fs.rename(tmp, record(txn)))
-      throw new IOException(s"could not write commit record for $txn")
-    failpoint(path, "recorded")
-    rollForward(fs, txn, dumpIds, removals)
-  }
-
-  /** Finish a recorded commit: markers, then the part files moved into
-    * the log, then the removed part files deleted, then the staging and
-    * the record dropped — only once every file is in. Idempotent, so a
-    * crash anywhere in it is repaired by running it again, and a reader
-    * in another process may run it alongside the writer: a part file
-    * already in the log counts as moved, one already gone as removed. A
-    * move that fails otherwise throws, leaving the record for the next
-    * open to retry.
-    */
-  private def rollForward(fs: FileSystem, txn: Path, dumpIds: Seq[String],
-      removals: Seq[String]): Unit = {
-    fs.mkdirs(manifest)
-    dumpIds.foreach { id =>
-      val m = marker(manifest, id)
-      if (!fs.exists(m)) writeMarker(fs, m, id)
-    }
-    failpoint(path, "marked")
-    dataFiles(fs, txn).foreach { f =>
-      val dst = new Path(root, f.getPath.getName)
-      val moved = try fs.rename(f.getPath, dst) catch { case _: FileNotFoundException => false }
-      if (!moved && !fs.exists(dst))
-        throw new IOException(s"could not move ${f.getPath} into $path")
-      failpoint(path, "moved")
-    }
-    removals.foreach { name =>
-      fs.delete(new Path(root, name), false)
-      failpoint(path, "removed")
-    }
-    fs.delete(txn, true)
-    fs.delete(record(txn), false)
-  }
-
   /** Repair on open: a compaction swap that a build before compactions
     * committed through records left interrupted, then every commit
     * record a crash left behind, then — for a writer — the manifest of
@@ -321,24 +252,12 @@ final case class ParquetSink(path: String) extends SinkLog {
     * missing live log; dropping swap debris is left to writers.
     */
   private def recover(spark: SparkSession, fs: FileSystem, writer: Boolean): Unit =
-    lockOf(fs).synchronized {
+    Commits.lockOf(fs, root).synchronized {
+      // an earlier build wrote `_COMPACTED` last into its compaction copy
       IndexFs.recoverSwap(spark, path,
-        fs.exists(new Path(IndexFs.stagedPath(path), CompactedMarker)))
+        fs.exists(new Path(IndexFs.stagedPath(path), "_COMPACTED")))
       if (writer) IndexFs.dropSwapDebris(spark, path)
-      if (fs.exists(pending))
-        fs.listStatus(pending).map(_.getPath)
-          .filter(_.getName.endsWith(".commit")).sortBy(_.getName)
-          .foreach { rec =>
-            // gone if a concurrent open finished it first
-            val parsed = try {
-              val in = fs.open(rec)
-              def strings() = Seq.fill(in.readInt())(in.readUTF())
-              try Some((strings(), try strings() catch { case _: EOFException => Nil }))
-              finally in.close()
-            } catch { case _: FileNotFoundException => None }
-            parsed.foreach { case (ids, removals) => rollForward(fs,
-              new Path(pending, rec.getName.stripSuffix(".commit")), ids, removals) }
-          }
+      Commits.recover(fs, root)
       if (writer && fs.exists(root) && !fs.exists(manifest)) markHistory(spark, fs)
     }
 
@@ -348,12 +267,12 @@ final case class ParquetSink(path: String) extends SinkLog {
     * starts over.
     */
   private def markHistory(spark: SparkSession, fs: FileSystem): Unit = {
-    val tmp = new Path(pending, ManifestDir)
+    val tmp = new Path(Commits.pending(root), Commits.ManifestDir)
     fs.delete(tmp, true)
     fs.mkdirs(tmp)
     spark.read.parquet(path).select("dump_id").distinct().collect()
       .flatMap(r => Option(r.getString(0)))
-      .foreach(id => writeMarker(fs, marker(tmp, id), id))
+      .foreach(id => Commits.writeMarker(fs, Commits.marker(tmp, id), id))
     if (!fs.rename(tmp, manifest))
       throw new IOException(s"could not install the manifest of $path")
   }
@@ -378,58 +297,22 @@ final case class ParquetSink(path: String) extends SinkLog {
   def compact(spark: SparkSession, keyCols: Seq[String]): Unit = {
     val fs = fsOf(spark)
     recover(spark, fs, writer = true)
-    val snapshot = dataFiles(fs, root).map(_.getPath)
+    val snapshot = Commits.dataFiles(fs, root)
     require(snapshot.nonEmpty, s"nothing to compact at $path")
-    val txn = new Path(pending, UUID.randomUUID().toString)
+    val txn = Commits.newTxn(root)
     try {
       latestOf(spark.read.option("mergeSchema", "true")
-          .parquet(snapshot.map(_.toString): _*), keyCols)
+          .parquet(snapshot.map(f => new Path(root, f).toString): _*), keyCols)
         .write.parquet(txn.toString)
-      failpoint(path, "compact-staged")
-      lockOf(fs).synchronized {
-        if (!snapshot.forall(fs.exists))
+      Commits.failpoint(path, "compact-staged")
+      Commits.lockOf(fs, root).synchronized {
+        if (!snapshot.forall(f => fs.exists(new Path(root, f))))
           throw new IllegalStateException(
             s"another compaction of $path committed first; the log is unchanged")
-        commit(fs, txn, Nil, snapshot.map(_.getName))
+        Commits.commit(fs, root, txn, Nil, snapshot)
       }
-    } finally if (!fs.exists(record(txn))) fs.delete(txn, true)
+    } finally Commits.dropUnrecorded(fs, txn)
   }
-}
-
-object ParquetSink {
-  private val ManifestDir = "_manifest"
-  /** Written last into an earlier build's compaction copy: it is whole. */
-  private val CompactedMarker = "_COMPACTED"
-
-  /** Per-log commit lock, one per qualified path. */
-  private val locks = new ConcurrentHashMap[String, AnyRef]()
-
-  private def marker(dir: Path, dumpId: String): Path = new Path(dir,
-    MessageDigest.getInstance("SHA-256").digest(dumpId.getBytes(UTF_8))
-      .map(b => f"${b & 0xff}%02x").mkString)
-
-  private def writeMarker(fs: FileSystem, m: Path, dumpId: String): Unit = {
-    val out = fs.create(m, true)
-    try out.write(dumpId.getBytes(UTF_8)) finally out.close()
-  }
-
-  /** The visible part files of a log directory (Spark's own rule:
-    * `_`- and `.`-prefixed names are not data); none if the directory
-    * is gone, also when a concurrent roll-forward just removed it.
-    */
-  private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
-    try fs.listStatus(dir).toSeq.filter { f =>
-      val n = f.getPath.getName
-      f.isFile && !n.startsWith("_") && !n.startsWith(".")
-    } catch { case _: FileNotFoundException => Nil }
-
-  /** Fault-injection hook for the crash specs: called with (log path,
-    * step) after each commit step — "staged", "recorded", "marked",
-    * "moved" (per file), "removed" (per file), "compact-staged". A throw
-    * leaves the log as a crash at that step would; only the unrecorded
-    * staging a crash leaves behind (invisible to reads) is dropped.
-    */
-  @volatile private[graft] var failpoint: (String, String) => Unit = (_, _) => ()
 }
 
 /** External-database sink over JDBC — the [[SinkLog]] twin of the

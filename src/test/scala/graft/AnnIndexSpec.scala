@@ -248,56 +248,6 @@ class AnnIndexSpec extends SparkSpec {
     assert(r.nonEmpty && r.head.getLong(2) == 10L)
   }
 
-  test("a torn append refuses to load; the replayed append converges to the clean-run state") {
-    import org.apache.spark.sql.functions.lit
-    val base = vecs(10L -> unit(0), 11L -> unit(0, 2f))
-    val batch = vecs(20L -> unit(0, 3f), 21L -> unit(7))
-    // the clean run this crash must converge to
-    val cleanDir = Files.createTempDirectory("graft_annclean").toString + "/index"
-    AnnIndex.save(AnnIndex.build(base), cleanDir)
-    AnnIndex.append(cleanDir, batch)
-    val clean = AnnIndex.load(spark, cleanDir)
-
-    // simulate append dying between its two writes. Vectors land FIRST
-    // (an orphan vector is inert: it never nominates candidates and
-    // never counts toward occupancy), so the one torn state the write
-    // order can produce is: marker (false, append) + the batch's vector
-    // rows appended + NO bucket rows.
-    val dir = Files.createTempDirectory("graft_anntorn").toString + "/index"
-    AnnIndex.save(AnnIndex.build(base), dir)
-    spark.range(1)
-      .select(lit(false).as("complete"), lit("append").as("op"))
-      .write.mode("overwrite").parquet(s"$dir/complete")
-    // build(batch).vectors IS the normed vector frame append writes
-    AnnIndex.build(batch).vectors.write.mode("append").parquet(s"$dir/vectors")
-
-    val e = intercept[IllegalStateException] { AnnIndex.load(spark, dir) }
-    assert(e.getMessage.contains("partial append"),
-      s"probes must refuse the torn state: ${e.getMessage}")
-
-    // the replay reads through the torn-append marker and appends
-    // exactly the missing rows (vectors already landed -> only buckets)
-    AnnIndex.append(dir, batch)
-    val healed = AnnIndex.load(spark, dir)
-    def multiset(df: DataFrame, cols: String*) =
-      df.groupBy(cols.map(org.apache.spark.sql.functions.col): _*)
-        .count().collect().map(_.toSeq).toSet
-    assert(multiset(healed.vectors, "vec_id") == multiset(clean.vectors, "vec_id"),
-      "no duplicate or missing vector rows after crash+replay")
-    assert(multiset(healed.buckets, "vec_id", "tbl", "bucket") ==
-      multiset(clean.buckets, "vec_id", "tbl", "bucket"),
-      "no duplicate or missing bucket rows after crash+replay")
-    // the judge's criterion: bucket occupancy after crash+replay equals
-    // the clean run's (duplicated bucket rows would inflate it and
-    // silently saturate healthy buckets)
-    assert(multiset(healed.buckets, "tbl", "bucket") ==
-      multiset(clean.buckets, "tbl", "bucket"),
-      "bucket_occ after crash+replay must equal the clean-run occupancy")
-    val q = vecs(99L -> unit(0))
-    assert(AnnIndex.probe(healed, q).collect().map(_.toSeq).toSeq ==
-      AnnIndex.probe(clean, q).collect().map(_.toSeq).toSeq)
-  }
-
   test("compact bounds the file count; probes identical before/after; idempotent") {
     val dir = Files.createTempDirectory("graft_anncomp").toString + "/index"
     AnnIndex.save(AnnIndex.build(vecs(10L -> unit(0), 11L -> unit(7))), dir)

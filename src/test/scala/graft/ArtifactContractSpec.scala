@@ -9,7 +9,8 @@ import graft.operators._
 /** The shared artifact contract ([[operators.Artifact]]), pinned once
   * for every writer: a directory with no completion marker, or with an
   * incomplete one, refuses to load with the same wording whichever
-  * artifact reads it.
+  * artifact reads it — also the `op=append` marker an earlier build's
+  * in-place append left behind.
   */
 class ArtifactContractSpec extends SparkSpec {
 
@@ -49,7 +50,9 @@ class ArtifactContractSpec extends SparkSpec {
       assert(torn.contains("partial save") && torn.contains(kind), torn)
       spark.range(1).select(lit(false).as("complete"), lit("append").as("op"))
         .write.mode("overwrite").parquet(s"$bare/complete")
-      assert(refusal(load, bare).contains("partial append"))
+      val legacy = refusal(load, bare)
+      assert(legacy.contains("partial append") && legacy.contains("rebuild or re-save it"),
+        legacy)
     }
   }
 
@@ -57,16 +60,16 @@ class ArtifactContractSpec extends SparkSpec {
       "fails, and closes it only after every write") {
     val d = dir("bracket")
     intercept[RuntimeException] {
-      Artifact.save(spark, d, op = "retire") { throw new RuntimeException("crash") }
+      Artifact.save(spark, d) { throw new RuntimeException("crash") }
     }
     val e = intercept[IllegalStateException](Artifact.open(spark, d, "Thing"))
-    assert(e.getMessage.contains("partial retire"), e.getMessage)
+    assert(e.getMessage.contains("partial save"), e.getMessage)
     Artifact.save(spark, d) {
       Artifact.inParallel(
         () => spark.range(3).write.mode("overwrite").parquet(s"$d/a"),
         () => spark.range(5).write.mode("overwrite").parquet(s"$d/b"))
     }
-    assert(Artifact.open(spark, d, "Thing").isEmpty)
+    Artifact.open(spark, d, "Thing")
     assert(spark.read.parquet(s"$d/a").count() == 3 &&
       spark.read.parquet(s"$d/b").count() == 5)
     val failed = intercept[IllegalStateException] {

@@ -176,10 +176,7 @@ class CentroidIndexSpec extends SparkSpec {
     // this takes the driver-local engine
     val local = AnnOps.ivfTrainMicros(e, 16, AnnOps.IVF_ROUNDS)
     // localMax = 0 disables the local engine (the LocalWalk convention)
-    spark.conf.set(AnnOps.TrainLocalMaxKey, "0")
-    val dist =
-      try AnnOps.ivfTrainMicros(e, 16, AnnOps.IVF_ROUNDS)
-      finally spark.conf.unset(AnnOps.TrainLocalMaxKey)
+    val dist = AnnOps.ivfTrainMicros(e, 16, AnnOps.IVF_ROUNDS, localMax = 0)
     assert(local.length == dist.length)
     local.zip(dist).zipWithIndex.foreach { case ((a, b), c) =>
       assert(a.sameElements(b),

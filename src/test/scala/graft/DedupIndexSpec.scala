@@ -232,46 +232,6 @@ class DedupIndexSpec extends SparkSpec {
     assert(pairs == Set((0L, 9L)), s"got $pairs")
   }
 
-  test("a torn append refuses to load; the replayed append converges to the clean-run state") {
-    import org.apache.spark.sql.functions.{col, lit}
-    val baseDocs = docs(0L -> base, 1L -> other)
-    val batch = docs(2L -> base.replace("idx9", "edited"), 3L -> "tiny text here")
-    val cleanDir = Files.createTempDirectory("graft_lshclean").toString + "/index"
-    DedupIndex.save(DedupIndex.build(baseDocs), cleanDir)
-    DedupIndex.append(cleanDir, batch)
-    val clean = DedupIndex.load(spark, cleanDir)
-
-    // simulate append dying mid-write: marker (false, append) on disk
-    // and only SOME of the batch's band partitions committed
-    val dir = Files.createTempDirectory("graft_lshtorn").toString + "/index"
-    DedupIndex.save(DedupIndex.build(baseDocs), dir)
-    spark.range(1)
-      .select(lit(false).as("complete"), lit("append").as("op"))
-      .write.mode("overwrite").parquet(s"$dir/complete")
-    DedupIndex.build(batch).filter(col("band") < DedupIndex.Bands / 2)
-      .write.mode("append").partitionBy("band").parquet(s"$dir/sigs")
-
-    val e = intercept[IllegalStateException] { DedupIndex.load(spark, dir) }
-    assert(e.getMessage.contains("partial append"),
-      s"probes must refuse the torn state: ${e.getMessage}")
-
-    // the replay reads through the torn-append marker; the per-(doc_id,
-    // band) anti-join lands exactly the missing band rows — a per-doc
-    // key would read the half-landed docs as "already indexed" and skip
-    // their missing bands forever
-    DedupIndex.append(dir, batch)
-    val healed = DedupIndex.load(spark, dir)
-    def multiset(df: DataFrame) =
-      df.groupBy(col("doc_id"), col("band"), col("bkey"))
-        .count().collect().map(_.toSeq).toSet
-    assert(multiset(healed) == multiset(clean),
-      "crash+replay must converge to the clean run's rows, no dups, no holes")
-    val pairs = DedupIndex.probe(healed, docs(9L -> base)).collect()
-      .map(r => (r.getAs[Long]("first_id"), r.getAs[Long]("new_id"))).toSet
-    assert(pairs == DedupIndex.probe(clean, docs(9L -> base)).collect()
-      .map(r => (r.getAs[Long]("first_id"), r.getAs[Long]("new_id"))).toSet)
-  }
-
   test("compact bounds the file count; probes identical before/after; idempotent") {
     val dir = Files.createTempDirectory("graft_lshcomp").toString + "/index"
     DedupIndex.save(DedupIndex.build(docs(0L -> base)), dir)

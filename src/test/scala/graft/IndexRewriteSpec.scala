@@ -8,27 +8,39 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.util.Try
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit, udf}
 
 import graft.operators._
 
-/** Fault hook of the spec's retirement frames: the ids UDF runs it on
-  * every evaluation that happens once the rewrite's staged copy exists,
-  * i.e. while the staged copy is being written.
+/** Fault hook of the spec's retirement and append frames: the ids UDF
+  * runs it on every evaluation that happens once the rewrite's staged
+  * copy exists, i.e. while the staged copy is being written, and on
+  * every evaluation of an appended batch.
   */
 object RewriteFault {
   @volatile var action: () => Unit = () => ()
 }
 
-/** The one rewrite path of the saved indexes ([[Artifact.replace]]),
-  * pinned once for every index that retires or compacts a saved path:
+/** The two in-place writes of the saved indexes, pinned once for every
+  * index that retires, compacts or appends to a saved path.
+  *
+  * The rewrite ([[Artifact.replace]]):
   *  - a rewrite that dies after opening its staged copy leaves the
   *    previous index loadable and probe-identical;
   *  - an open beside an intact live directory leaves the staged copy in
   *    place (it may be a rewrite another thread is still writing), also
   *    while that rewrite runs;
   *  - the next rewrite drops the debris and lands.
+  *
+  * The append, one commit of the sink log's protocol ([[Artifact.append]],
+  * faults injected through the batch's ids UDF and [[Commits.failpoint]]):
+  *  - a crash before the commit record leaves the previous index, and
+  *    the next write leaves no staging behind;
+  *  - from the record on, the next load finishes the commit;
+  *  - either way the index ends equal to a clean append, and a replay
+  *    of the batch leaves every frame's rows unchanged;
+  *  - an append and a retire of one path both land, in turn.
   */
 class IndexRewriteSpec extends SparkSpec {
 
@@ -54,32 +66,63 @@ class IndexRewriteSpec extends SparkSpec {
       save: String => Unit,
       probe: String => DataFrame,
       retire: (String, DataFrame) => Unit,
-      compact: Option[String => Unit])
+      compact: Option[String => Unit],
+      append: (String, DataFrame) => Unit,
+      batch: (Column => Column) => DataFrame,
+      frames: String => Seq[DataFrame])
+
+  /** New vectors (ids past the corpus') and new documents to append,
+    * their ids passed through `gate`.
+    */
+  private def newVecs(gate: Column => Column): DataFrame =
+    embeddings.filter(col("vec_id") < 24)
+      .select(gate(col("vec_id") + 100000L).as("vec_id"), col("embedding"))
+  private def newDocs(gate: Column => Column): DataFrame =
+    docs(5L -> textA.replace("idx9", "new"), 6L -> (1 to 40).map(i => s"app$i").mkString(" "))
+      .select(gate(col("doc_id")).as("doc_id"), col("text"))
 
   private val indexes = Seq(
     Rewritable("AnnIndex", "vec_id", "vec_id",
       AnnIndex.save(AnnIndex.build(embeddings), _),
       p => AnnIndex.probe(AnnIndex.load(spark, p), queries),
-      AnnIndex.retire, Some(AnnIndex.compact(_, 2))),
+      AnnIndex.retire, Some(AnnIndex.compact(_, 2)),
+      AnnIndex.append, newVecs,
+      p => { val i = AnnIndex.load(spark, p); Seq(i.buckets, i.vectors) }),
     Rewritable("PqIndex", "vec_id", "vec_id",
       PqIndex.save(PqIndex.build(embeddings), _),
       p => PqIndex.probe(PqIndex.load(spark, p), queries),
-      PqIndex.retire, Some(PqIndex.compact(_, 2))),
+      PqIndex.retire, Some(PqIndex.compact(_, 2)),
+      PqIndex.append, newVecs,
+      p => { val i = PqIndex.load(spark, p); Seq(i.codes, i.vectors) }),
     Rewritable("IvfPqIndex", "vec_id", "vec_id",
       IvfPqIndex.save(IvfPqIndex.build(embeddings), _),
       p => IvfPqIndex.probe(IvfPqIndex.load(spark, p), queries),
-      IvfPqIndex.retire, Some(IvfPqIndex.compact(_, 2))),
+      IvfPqIndex.retire, Some(IvfPqIndex.compact(_, 2)),
+      IvfPqIndex.append, newVecs,
+      p => { val i = IvfPqIndex.load(spark, p); Seq(i.codes, i.vectors) }),
     Rewritable("DedupIndex", "doc_id", "first_id",
       DedupIndex.save(DedupIndex.build(docs(0L -> textA, 1L -> textB, 2L -> textC)), _),
       p => DedupIndex.probe(DedupIndex.load(spark, p),
         docs(9L -> textA, 8L -> textB)),
-      DedupIndex.retire, Some(DedupIndex.compact(_, 2))),
+      DedupIndex.retire, Some(DedupIndex.compact(_, 2)),
+      DedupIndex.append, newDocs,
+      p => Seq(DedupIndex.load(spark, p))),
     Rewritable("KnnIndex", "vec_id", "nbr_id",
       KnnIndex.save(KnnIndex.build(embeddings), _),
       p => KnnIndex.neighbors(KnnIndex.load(spark, p)),
-      KnnIndex.retire, None))
+      KnnIndex.retire, None,
+      KnnIndex.append, newVecs,
+      p => { val i = KnnIndex.load(spark, p); Seq(i.edges, i.vectors, i.seeds) }))
 
   private def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+
+  /** Each persisted frame's rows, with their multiplicities (binary
+    * values compared by content).
+    */
+  private def multisets(ix: Rewritable, path: String): Seq[Map[Seq[Any], Int]] =
+    ix.frames(path).map(_.collect().toSeq
+      .map(_.toSeq.map { case b: Array[Byte] => b.toSeq; case v => v })
+      .groupBy(identity).map { case (r, rs) => r -> rs.size })
 
   private def hits(ix: Rewritable, path: String): Set[Long] =
     ix.probe(path).select(ix.hit).collect().map(_.getLong(0)).toSet
@@ -117,12 +160,48 @@ class IndexRewriteSpec extends SparkSpec {
   private def ids(ix: Rewritable, victim: Long): DataFrame =
     spark.range(1).select(lit(victim).as(ix.id))
 
+  /** One saved index per kind, built once; tests write to copies. */
+  private val built = scala.collection.mutable.Map[String, String]()
+
+  private def copyOf(path: String): String = {
+    val copy = Files.createTempDirectory("graft_rewrite").toString + "/index"
+    copyTree(Paths.get(path), Paths.get(copy))
+    copy
+  }
+
   /** A saved index, its probe rows and one id its probe returns. */
   private def saved(ix: Rewritable): (String, Set[Seq[Any]], Long) = {
-    val path = Files.createTempDirectory("graft_rewrite").toString + "/index"
-    ix.save(path)
+    val path = copyOf(built.getOrElseUpdate(ix.name, {
+      val p = Files.createTempDirectory("graft_rewrite").toString + "/index"
+      ix.save(p)
+      p
+    }))
     val before = rows(ix.probe(path))
     (path, before, hits(ix, path).min)
+  }
+
+  /** Runs [[RewriteFault]] on every evaluation of an appended batch. */
+  private val appendGate: Column => Column = {
+    val gate = udf { (id: Long) => RewriteFault.action(); id }.asNondeterministic()
+    c => gate(c)
+  }
+
+  /** Run `body` with a crash injected the first time an append of
+    * `path` passes commit step `step`.
+    */
+  private def crashingAt(path: String, step: String)(body: => Unit): Try[Unit] = {
+    val root = new org.apache.hadoop.fs.Path(path).toString
+    val seen = new AtomicBoolean(false)
+    Commits.failpoint = (p, s) =>
+      if (p == root && s == step && seen.compareAndSet(false, true))
+        throw new IllegalStateException(s"injected crash at $step")
+    try Try(body) finally Commits.failpoint = (_, _) => ()
+  }
+
+  /** Nothing staged or recorded is left beside `path`. */
+  private def nothingPending(path: String): Boolean = {
+    val pending = Paths.get(path + ".pending")
+    !Files.exists(pending) || Files.list(pending).count() == 0
   }
 
   indexes.foreach { ix =>
@@ -222,5 +301,92 @@ class IndexRewriteSpec extends SparkSpec {
       assert(!staged(path), "both rewrites swapped in")
       assert(rows(ix.probe(path)) == inTurn, "the second retire starts from the first's result")
     }
+
+    // a crash while the batch stages, then after each commit step; only
+    // KnnIndex's append removes files (the cell directories it replaces)
+    (Seq("staging", "staged", "recorded", "moved") ++
+        (if (ix.name == "KnnIndex") Seq("removed") else Nil)).foreach { step =>
+      val recorded = !Set("staging", "staged")(step)
+      test(s"${ix.name}: an append crash " +
+          (if (step == "staging") "while staging" else s"after '$step'") +
+          (if (recorded) ": the next load finishes it" else ": the previous index serves") +
+          "; a replay changes no rows") {
+        val (path, before, _) = saved(ix)
+        val clean = copyOf(path)
+        ix.append(clean, ix.batch(identity))
+        val want = multisets(ix, clean)
+        val attempt =
+          if (step == "staging") {
+            RewriteFault.action = () => throw new IllegalStateException("injected fault")
+            try Try(ix.append(path, ix.batch(appendGate)))
+            finally RewriteFault.action = () => ()
+          } else crashingAt(path, step)(ix.append(path, ix.batch(identity)))
+        assert(attempt.isFailure, "the injected crash must fail the append")
+        if (!recorded) {
+          assert(rows(ix.probe(path)) == before, "before the record the previous index serves")
+          ix.append(path, ix.batch(identity))
+          assert(nothingPending(path), "the next write leaves no staging behind")
+        }
+        assert(multisets(ix, path) == want, "the index equals a clean append")
+        assert(nothingPending(path), "the next load finishes the commit")
+        if (ix.name == "KnnIndex")
+          assert(KnnIndex.load(spark, path).vectors.groupBy("cell", "vec_id").count()
+            .filter(col("count") > 1).isEmpty, "no member is held twice in a cell")
+        ix.append(path, ix.batch(identity))
+        assert(multisets(ix, path) == want, "a replayed batch changes no rows")
+      }
+    }
+
+    test(s"${ix.name}: an append and a retire of one path both land, as if run in turn") {
+      val (path, _, victim) = saved(ix)
+      val inTurn = {
+        val copy = copyOf(path)
+        ix.append(copy, ix.batch(identity))
+        ix.retire(copy, ids(ix, victim))
+        rows(ix.probe(copy))
+      }
+      val staging = new CountDownLatch(1)
+      val release = new CountDownLatch(1)
+      val held = new AtomicBoolean(false)
+      RewriteFault.action = () =>
+        if (held.compareAndSet(false, true)) {
+          staging.countDown()
+          release.await(1, TimeUnit.MINUTES)
+          ()
+        }
+      val append = Future(ix.append(path, ix.batch(appendGate)))(ExecutionContext.global)
+      @volatile var retired: Try[Unit] = null
+      val racer = new Thread(() => retired = Try(ix.retire(path, ids(ix, victim))))
+      try {
+        assert(staging.await(1, TimeUnit.MINUTES), "the append never staged its batch")
+        racer.start()
+        val deadline = System.nanoTime + 2.minutes.toNanos
+        while (racer.isAlive && !waitsOnRewrite(racer) && System.nanoTime < deadline)
+          Thread.sleep(20)
+      } finally {
+        release.countDown()
+        Try(Await.result(append, 5.minutes))
+        racer.join(5.minutes.toMillis)
+        RewriteFault.action = () => ()
+      }
+      Await.result(append, 1.second)
+      retired.get
+      assert(rows(ix.probe(path)) == inTurn, "the retire starts from the append's result")
+    }
+  }
+
+  test("DedupIndex: retiring every document leaves an index that loads and " +
+      "probes empty; appending them back equals a fresh build") {
+    val all = docs(0L -> textA, 1L -> textB, 2L -> textC)
+    val q = docs(9L -> textA, 8L -> textB)
+    val path = Files.createTempDirectory("graft_rewrite").toString + "/index"
+    DedupIndex.save(DedupIndex.build(all), path)
+    DedupIndex.retire(path, all.select("doc_id"))
+    assert(DedupIndex.probe(DedupIndex.load(spark, path), q).isEmpty)
+    DedupIndex.append(path, all)
+    val fresh = Files.createTempDirectory("graft_rewrite").toString + "/index"
+    DedupIndex.save(DedupIndex.build(all), fresh)
+    val got = rows(DedupIndex.probe(DedupIndex.load(spark, path), q))
+    assert(got.nonEmpty && got == rows(DedupIndex.probe(DedupIndex.load(spark, fresh), q)))
   }
 }

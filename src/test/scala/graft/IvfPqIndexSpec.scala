@@ -88,8 +88,7 @@ class IvfPqIndexSpec extends SparkSpec {
     }
   }
 
-  test("torn save refuses to load; torn append repairs by replay with " +
-      "no duplicate rows") {
+  test("torn save refuses to load") {
     val dir = Files.createTempDirectory("graft_ivfpq3").toString + "/index"
     val base = corpus.filter(col("vec_id") < 400)
     IvfPqIndex.save(IvfPqIndex.build(base), dir)
@@ -98,30 +97,6 @@ class IvfPqIndexSpec extends SparkSpec {
         org.apache.spark.sql.functions.lit("save").as("op"))
       .write.mode("overwrite").parquet(s"$dir/complete")
     intercept[IllegalStateException] { IvfPqIndex.load(spark, dir) }
-    spark.range(1)
-      .select(org.apache.spark.sql.functions.lit(true).as("complete"),
-        org.apache.spark.sql.functions.lit("save").as("op"))
-      .write.mode("overwrite").parquet(s"$dir/complete")
-    val batch = corpus.filter(col("vec_id") >= 400)
-    // simulate a torn append: vectors landed, codes not
-    val e = batch.repartition(col("vec_id"))
-      .select(col("vec_id"), col("embedding"),
-        org.apache.spark.sql.functions.expr(
-          "dot_micros(embedding, embedding)").as("nm"))
-    spark.range(1)
-      .select(org.apache.spark.sql.functions.lit(false).as("complete"),
-        org.apache.spark.sql.functions.lit("append").as("op"))
-      .write.mode("overwrite").parquet(s"$dir/complete")
-    e.write.mode("append").parquet(s"$dir/vectors")
-    intercept[IllegalStateException] { IvfPqIndex.load(spark, dir) }
-    IvfPqIndex.append(dir, batch)
-    val idx = IvfPqIndex.load(spark, dir)
-    val n = corpus.count()
-    assert(idx.vectors.count() == n, "no duplicate vector rows after replay")
-    assert(idx.codes.count() == n, "codes complete after replay")
-    IvfPqIndex.append(dir, batch)
-    val idx2 = IvfPqIndex.load(spark, dir)
-    assert(idx2.vectors.count() == n && idx2.codes.count() == n)
   }
 
   test("a foreachBatch stream lands vectors via append under the PINNED " +

@@ -140,76 +140,6 @@ class KnnIndexSpec extends SparkSpec {
     Caches.releaseScope()
   }
 
-  test("a torn append repairs ONLY with the same batch — a different " +
-      "batch is refused by fingerprint (r18 advisory)") {
-    val all = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    val a = all.filter(col("vec_id") < 150)
-    val b = all.filter(col("vec_id") >= 150 && col("vec_id") < 200)
-    val c = all.filter(col("vec_id") >= 200)
-    val eA = Caches.persist(AnnOps.withNormDf(a))
-    val micros = CentroidIndex.trainMicros(eA, AnnOps.CENTROIDS)
-    val dir = Files.createTempDirectory("graft_knn_fp").toString + "/knn"
-    KnnIndex.save(KnnIndex.buildFrom(eA, micros, AnnOps.CENTROIDS,
-      AnnOps.IVF_ROUNDS, None), dir)
-    // simulate a crash mid-append of batch b: incomplete marker
-    // carrying b's fingerprint
-    val fp = b.agg(count(lit(1)), min(col("vec_id")), max(col("vec_id")))
-      .head()
-    spark.range(1)
-      .select(lit(false).as("complete"), lit("append").as("op"),
-        lit(fp.getLong(0)).as("batch_n"),
-        lit(fp.getLong(1)).as("batch_min"),
-        lit(fp.getLong(2)).as("batch_max"))
-      .write.mode("overwrite").parquet(s"$dir/complete")
-    val err = intercept[IllegalStateException](KnnIndex.append(dir, c))
-    assert(err.getMessage.contains("torn append"),
-      s"a different batch must be refused, got: ${err.getMessage}")
-    // replaying the SAME batch repairs to the frozen-quantizer rebuild
-    KnnIndex.append(dir, b)
-    val want = KnnIndex.buildFrom(
-      Caches.persist(AnnOps.withNormDf(a.unionAll(b))), micros,
-      AnnOps.CENTROIDS, AnnOps.IVF_ROUNDS, None)
-    assert(edgeRows(KnnIndex.neighbors(KnnIndex.load(spark, dir))) ==
-      edgeRows(KnnIndex.neighbors(want)),
-      "the same-batch replay must complete the torn append")
-    Caches.releaseScope()
-  }
-
-  test("the torn-append fingerprint digest refuses a batch that " +
-      "collides on (count, min, max) but differs inside (r18 advisory)") {
-    val all = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding"))
-    val a = all.filter(col("vec_id") < 150)
-    // same count, same endpoints (150 and 200), different interiors
-    val b = all.filter(col("vec_id") >= 150 && col("vec_id") <= 200 &&
-      col("vec_id") =!= 151)
-    val b2 = all.filter(col("vec_id") >= 150 && col("vec_id") <= 200 &&
-      col("vec_id") =!= 152)
-    val eA = Caches.persist(AnnOps.withNormDf(a))
-    val micros = CentroidIndex.trainMicros(eA, AnnOps.CENTROIDS)
-    val dir = Files.createTempDirectory("graft_knn_dig").toString + "/knn"
-    KnnIndex.save(KnnIndex.buildFrom(eA, micros, AnnOps.CENTROIDS,
-      AnnOps.IVF_ROUNDS, None), dir)
-    // crash mid-append of b: the marker carries b's FULL fingerprint
-    // including the content digest
-    val fp = b.agg(count(lit(1)), min(col("vec_id")), max(col("vec_id")),
-      bit_xor(xxhash64(col("vec_id")))).head()
-    spark.range(1)
-      .select(lit(false).as("complete"), lit("append").as("op"),
-        lit(fp.getLong(0)).as("batch_n"),
-        lit(fp.getLong(1)).as("batch_min"),
-        lit(fp.getLong(2)).as("batch_max"),
-        lit(fp.getLong(3)).as("batch_dig"))
-      .write.mode("overwrite").parquet(s"$dir/complete")
-    val err = intercept[IllegalStateException](KnnIndex.append(dir, b2))
-    assert(err.getMessage.contains("torn append"),
-      "an endpoint-colliding different batch must be refused by the " +
-        s"digest, got: ${err.getMessage}")
-    KnnIndex.append(dir, b) // same batch still repairs
-    Caches.releaseScope()
-  }
-
   test("a pre-r18 artifact (no div column, no fingerprint marker " +
       "fields) still loads, defaulting div=false (r18 advisory)") {
     val dir = Files.createTempDirectory("graft_knn_old").toString + "/knn"

@@ -66,8 +66,7 @@ class PqIndexSpec extends SparkSpec {
     assert(p.contains(dir), "probe must read the saved index frames")
   }
 
-  test("torn save refuses to load; torn append repairs by replay with " +
-      "no duplicate rows") {
+  test("torn save refuses to load") {
     val dir = Files.createTempDirectory("graft_pqidx3").toString + "/index"
     val base = corpus.filter(col("vec_id") < 400)
     PqIndex.save(PqIndex.build(base), dir)
@@ -77,33 +76,6 @@ class PqIndexSpec extends SparkSpec {
         org.apache.spark.sql.functions.lit("save").as("op"))
       .write.mode("overwrite").parquet(s"$dir/complete")
     intercept[IllegalStateException] { PqIndex.load(spark, dir) }
-    // restore, then simulate a torn append: vectors landed, codes not
-    spark.range(1)
-      .select(org.apache.spark.sql.functions.lit(true).as("complete"),
-        org.apache.spark.sql.functions.lit("save").as("op"))
-      .write.mode("overwrite").parquet(s"$dir/complete")
-    val batch = corpus.filter(col("vec_id") >= 400)
-    // the same (vec_id, embedding, nm) rows append() itself would land
-    val e = batch.repartition(col("vec_id"))
-      .select(col("vec_id"), col("embedding"),
-        org.apache.spark.sql.functions.expr(
-          "dot_micros(embedding, embedding)").as("nm"))
-    spark.range(1)
-      .select(org.apache.spark.sql.functions.lit(false).as("complete"),
-        org.apache.spark.sql.functions.lit("append").as("op"))
-      .write.mode("overwrite").parquet(s"$dir/complete")
-    e.write.mode("append").parquet(s"$dir/vectors")
-    intercept[IllegalStateException] { PqIndex.load(spark, dir) }
-    // replaying the append repairs: converges to the never-crashed state
-    PqIndex.append(dir, batch)
-    val idx = PqIndex.load(spark, dir)
-    val n = corpus.count()
-    assert(idx.vectors.count() == n, "no duplicate vector rows after replay")
-    assert(idx.codes.count() == n, "codes complete after replay")
-    // and a SECOND replay of the same batch is a no-op
-    PqIndex.append(dir, batch)
-    val idx2 = PqIndex.load(spark, dir)
-    assert(idx2.vectors.count() == n && idx2.codes.count() == n)
   }
 
   test("append under the pinned codebook: appended vectors become " +

@@ -10,13 +10,14 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.operators.Commits
 import graft.sources.{FileSources, ParquetSink, SinkLog, Sinks}
 import graft.streaming.EventIngest
 
 /** The parquet sink's commit protocol: a per-dump_id manifest instead of
   * a read of the log, one Spark job per append, and crash safety of the
   * append and of compaction at every step (faults injected through
-  * [[ParquetSink.failpoint]]).
+  * [[Commits.failpoint]]).
   */
 class SinkCommitSpec extends SparkSpec {
 
@@ -40,10 +41,10 @@ class SinkCommitSpec extends SparkSpec {
   /** Run `body` with a crash injected the first time `sink` passes `step`. */
   private def crashAt(sink: ParquetSink, step: String)(body: => Any): Unit = {
     val seen = new AtomicInteger(0)
-    ParquetSink.failpoint = (p, s) =>
+    Commits.failpoint = (p, s) =>
       if (p == sink.path && s == step && seen.incrementAndGet() == 1) throw new Crash(s)
     try intercept[Crash](body)
-    finally ParquetSink.failpoint = (_, _) => ()
+    finally Commits.failpoint = (_, _) => ()
   }
 
   private val d1 = Seq((1L, "v1"), (2L, "v1"))
@@ -172,13 +173,13 @@ class SinkCommitSpec extends SparkSpec {
     val rewrites = new AtomicInteger(0)
     var left = Set.empty[String]
     // the other compaction runs while this one's rewrite waits for its commit
-    ParquetSink.failpoint = (p, s) =>
+    Commits.failpoint = (p, s) =>
       if (p == sink.path && s == "compact-staged" && rewrites.incrementAndGet() == 1) {
         sink.compact(spark, Seq("pk"))
         left = listing()
       }
     try intercept[IllegalStateException](sink.compact(spark, Seq("pk")))
-    finally ParquetSink.failpoint = (_, _) => ()
+    finally Commits.failpoint = (_, _) => ()
     assert(left.nonEmpty && listing() == left, "the log is as the other compaction left it")
     assert(noStaging(sink), "the refused rewrite is dropped")
     assert(view(sink) == compacted)
@@ -211,7 +212,7 @@ class SinkCommitSpec extends SparkSpec {
       val before = markers()
       assert(before.keys.count(!_.startsWith(".")) == dumps)
       val steps = scala.collection.mutable.Set[String]()
-      ParquetSink.failpoint = (p, s) =>
+      Commits.failpoint = (p, s) =>
         if (p == sink.path) {
           steps += s
           assert(exists(sink.path), s"the log directory is gone at '$s'")
@@ -219,7 +220,7 @@ class SinkCommitSpec extends SparkSpec {
             s"a swap sibling exists at '$s'")
         }
       try sink.compact(spark, Seq("pk"))
-      finally ParquetSink.failpoint = (_, _) => ()
+      finally Commits.failpoint = (_, _) => ()
       assert(Set("compact-staged", "recorded", "marked", "moved", "removed").subsetOf(steps),
         s"steps seen: $steps")
       assert(markers() == before, "compaction must not touch the manifest")
@@ -244,14 +245,14 @@ class SinkCommitSpec extends SparkSpec {
   test("an append committed while compaction rewrites survives the compaction") {
     val sink = compactable()
     var racer: Option[Long] = None
-    ParquetSink.failpoint = (p, s) =>
+    Commits.failpoint = (p, s) =>
       if (p == sink.path && s == "compact-staged") {
         val t = new Thread(() =>
           racer = Some(sink.appendIdempotent(spark, batch(Seq((5L, "v3")), "d3", 3000L))))
         t.start(); t.join()
       }
     try sink.compact(spark, Seq("pk"))
-    finally ParquetSink.failpoint = (_, _) => ()
+    finally Commits.failpoint = (_, _) => ()
     assert(racer.contains(1L))
     assert(view(sink) == compacted + (5L -> "v3"))
     assert(sink.appendIdempotent(spark, batch(Seq((5L, "v3")), "d3", 3000L)) == 0)
