@@ -172,7 +172,7 @@ object BenchProbe {
           if (f.isDirectory) f.listFiles().foreach(rmTree)
           f.delete(); ()
         }
-        Seq("", ".staged", ".old").foreach(sfx =>
+        Seq("", ".pending").foreach(sfx =>
           rmTree(new java.io.File(drillPath + sfx)))
         val emb = Tables.embeddings(spark, sfDir)
           .select(col("vec_id"), col("embedding"))

@@ -68,54 +68,35 @@ object AnnIndex {
   /** Persist / reopen. Buckets partition by `tbl` (a probe of t tables
     * prunes to those directories); vectors are plain parquet; the
     * geometry rides a one-row meta frame so a reopened index hashes its
-    * probes identically.
-    *
-    * Multi-frame saves are not atomic, so save brackets the frames with
-    * a completion marker (r10 advisory): `complete=false` lands FIRST —
-    * invalidating any previous save's marker before a byte of the old
-    * frames is overwritten — then geometry, buckets, vectors, then
-    * `complete=true`. A crash anywhere inside the bracket leaves
-    * `complete=false` on disk and [[load]] refuses the index, instead
-    * of silently reloading a non-default-geometry index at the default
-    * and probing with mismatched bucket ids (near-empty results).
+    * probes identically. A save is one commit ([[Artifact.save]]): a
+    * crash leaves the previous index or the whole new one, never a
+    * non-default-geometry index reloaded at the default (probing with
+    * mismatched bucket ids: near-empty results).
     */
-  def save(index: Index, path: String): Unit = {
-    val spark = index.buckets.sparkSession
-    Artifact.save(spark, path) {
-      spark.range(0L, 1L, 1L, 1)
-        .select(lit(index.geometry.tables).as("tables"),
-          lit(index.geometry.planes).as("planes"))
-        .write.mode("overwrite").parquet(s"$path/geometry")
-      // repartition on the partition column before the partitioned write
-      // (r20, guide §6 small files — the KnnIndex.save finding): without
-      // it every compute task writes a slice of every tbl directory
-      index.buckets.repartition(col("tbl"))
-        .write.mode("overwrite").partitionBy("tbl")
-        .parquet(s"$path/buckets")
-      index.vectors.write.mode("overwrite").parquet(s"$path/vectors")
-    }
+  def save(index: Index, path: String): Unit =
+    Artifact.save(index.buckets.sparkSession, path)(write(index, _))
+
+  /** Write the frames of `index` under `dir`. */
+  private def write(index: Index, dir: String): Unit = {
+    index.buckets.sparkSession.range(0L, 1L, 1L, 1)
+      .select(lit(index.geometry.tables).as("tables"),
+        lit(index.geometry.planes).as("planes"))
+      .write.mode("overwrite").parquet(s"$dir/geometry")
+    // repartition on the partition column before the partitioned write
+    // (r20, guide §6 small files — the KnnIndex.save finding): without
+    // it every compute task writes a slice of every tbl directory
+    index.buckets.repartition(col("tbl"))
+      .write.mode("overwrite").partitionBy("tbl")
+      .parquet(s"$dir/buckets")
+    index.vectors.write.mode("overwrite").parquet(s"$dir/vectors")
   }
 
   def load(spark: SparkSession, path: String): Index = {
-    def readable(sub: String): Option[org.apache.spark.sql.Row] =
-      try Some(spark.read.parquet(s"$path/$sub").head())
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    // No marker at all is a pre-r10 layout: with a geometry frame (r9)
-    // the save order was buckets→vectors→geometry, so geometry-present
-    // implies the frames landed too; without one it is a pre-r9
-    // default-geometry index — the ONLY case the default fallback below
-    // is for.
-    Artifact.open(spark, path, "AnnIndex",
-      unmarkedLayout = {
-        val (fs, b) = IndexFs.hfs(spark, s"$path/buckets"); fs.exists(b)
-      })
-    val g = readable("geometry") match {
-      case Some(r) =>
-        AnnOps.LshGeometry(r.getAs[Int]("tables"), r.getAs[Int]("planes"))
-      case None => AnnOps.LshGeometry.default
-    }
+    Artifact.open(spark, path, "AnnIndex")
+    val g = spark.read.parquet(s"$path/geometry").head()
     Index(spark.read.parquet(s"$path/buckets"),
-      spark.read.parquet(s"$path/vectors"), g)
+      spark.read.parquet(s"$path/vectors"),
+      AnnOps.LshGeometry(g.getAs[Int]("tables"), g.getAs[Int]("planes")))
   }
 
   /** Top-k indexed neighbors of each query vector:
@@ -258,16 +239,16 @@ object AnnIndex {
   }
 
   /** Retire ids from a SAVED index: the anti-join rewrite of both
-    * frames, geometry preserved, is written to a staged sibling and
-    * swapped in ([[Artifact.replace]]), so a crash leaves the previous
-    * or the rewritten index, never a partial one. A rewrite prices at
+    * frames, geometry preserved, is saved over the live one as one
+    * commit ([[Artifact.save]]), so a crash leaves the previous or the
+    * rewritten index, never a partial one. A rewrite prices at
     * one pass over the index — at lake scale, batch retirements per
     * compaction window (the reference's retirement is itself a periodic
     * batch task), not per request.
     */
   def retire(path: String, ids: DataFrame): Unit = {
     val spark = ids.sparkSession
-    Artifact.replace(spark, path)(save(retire(load(spark, path), ids), _))
+    Artifact.save(spark, path)(write(retire(load(spark, path), ids), _))
   }
 
   /** Persist an ingest: append ONLY the batch's not-yet-indexed vector
@@ -276,9 +257,9 @@ object AnnIndex {
     * the commit record moves them in, so a crash leaves either the
     * previous index or, after the next load, the whole append — never
     * orphan bucket rows, which would inflate the occupancy count of
-    * probe/probePairs. A replayed batch stages no rows. (A plain save()
-    * of ingest's returned union over a load()ed index would fail —
-    * Spark refuses to overwrite a path being read.)
+    * probe/probePairs. A replayed batch stages no rows. (A save() of
+    * ingest's returned union over the load()ed path also lands, but
+    * rewrites the whole index.)
     */
   def append(path: String, newVecs: DataFrame): Unit = {
     val spark = newVecs.sparkSession
@@ -296,7 +277,7 @@ object AnnIndex {
     * target-sized files — the lakehouse small-file compaction every
     * long-running ingest loop needs: [[append]] adds files per batch
     * forever, and a thousand-batch index is a thousand-file scan. The
-    * rewrite swaps in like [[retire]], is idempotent, and is
+    * rewrite commits like [[retire]], is idempotent, and is
     * probe-identical before/after (AnnIndexSpec). File-count bound:
     * `partitions` files under vectors and per-tbl bucket directory
     * (buckets repartition on (tbl, bucket) so one output file holds
@@ -306,9 +287,9 @@ object AnnIndex {
     */
   def compact(path: String, partitions: Int = 8): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    Artifact.replace(spark, path) { staged =>
+    Artifact.save(spark, path) { staged =>
       val idx = load(spark, path)
-      save(Index(
+      write(Index(
         idx.buckets.repartition(partitions, col("tbl"), col("bucket")),
         idx.vectors.repartition(partitions, col("vec_id")), idx.geometry), staged)
     }

@@ -6,7 +6,7 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue,
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.lit
 
@@ -14,26 +14,22 @@ import org.apache.spark.sql.functions.lit
   * ([[AnnIndex]], [[CentroidIndex]], [[DedupIndex]], [[IvfPqIndex]],
   * [[KnnIndex]], [[LangIndex]], [[LmIndex]], [[PqIndex]],
   * [[QualityIndex]], [[TokenizerIndex]], [[UnigramLm]]) saves, opens
-  * and memoizes through it. A saved artifact changes in place in one of
-  * two ways, both under one per-path lock ([[Commits.lockOf]]): a
-  * rewrite (retire, compact, a model merge) stages a whole copy and
-  * swaps it in ([[replace]], [[IndexFs]]); an append stages only its new
-  * files and commits them through the sink log's commit protocol
-  * ([[append]], [[Commits]]). Only `save` and a commit's roll-forward
-  * write the live directory.
+  * and memoizes through it. Every write to a saved artifact — a save,
+  * a rewrite (retire, compact, a model merge) or an append — is one
+  * commit of the sink log's protocol ([[Commits]]) under the path's
+  * lock: the writer stages its frames in `path.pending/<txn>`, and the
+  * commit record moves them in and removes the files they replace. Only
+  * a commit's roll-forward writes the live directory.
   *
-  *  - **The save bracket** ([[save]]): a one-row `complete` marker lands
-  *    with `complete=false` FIRST, invalidating any previous state
-  *    before a byte of it is touched, then the caller's frames, then
-  *    `complete=true`. A crash anywhere inside leaves `complete=false`
-  *    on disk.
-  *  - **The open check** ([[open]]): repair an interrupted swap
-  *    (reader strength: only a missing live directory, see
-  *    [[IndexFs.recoverSwap]]), roll forward an append a crash left
+  *  - **The save** ([[save]]): the frames and a one-row `complete=true`
+  *    marker, staged whole; a crash before the record leaves the
+  *    previous artifact (or none) serving.
+  *  - **The open check** ([[open]]): roll forward a commit a crash left
   *    recorded, then refuse a directory with no marker or with a
-  *    partial one: a torn save must be rebuilt or re-saved. A marker
-  *    an earlier build left at `op=append` (it wrote appends in place)
-  *    is refused the same way.
+  *    partial one. A `complete=false` marker is an earlier build's torn
+  *    in-place save or append (`op=append`); a directory an earlier
+  *    build left mid-swap has no marker. Either must be rebuilt or
+  *    re-saved.
   *  - **Per-corpus memos** ([[Memo]]): a trained model or saved path
   *    keyed by the corpus fingerprint ([[CorpusKey]]). A memo is an
   *    artifact: it survives [[graft.Caches.releaseScope]] and is dropped
@@ -41,62 +37,67 @@ import org.apache.spark.sql.functions.lit
   */
 private[graft] object Artifact {
 
-  // ---- the save bracket ----
+  // ---- the writes ----
 
-  private def mark(spark: SparkSession, path: String, complete: Boolean): Unit =
-    spark.range(0L, 1L, 1L, 1).select(lit(complete).as("complete"))
-      .write.mode("overwrite").parquet(s"$path/complete")
-
-  /** Bracket `writes` with the completion marker. */
-  def save(spark: SparkSession, path: String)(writes: => Unit): Unit = {
-    mark(spark, path, complete = false)
-    writes
-    mark(spark, path, complete = true)
-  }
-
-  /** Write a rewritten artifact to `path`'s staged sibling, then commit
-    * it by [[IndexFs.swapInto]]: a crash at any point leaves a complete
-    * artifact (the previous or the rewritten one) for [[open]] to serve.
-    * `write` may read the live directory lazily — it writes elsewhere.
-    * Stale siblings of an earlier torn rewrite are dropped first
-    * (writer-strength repair).
-    * Rewrites and appends of one path are serialized per JVM, so callers
-    * load the live index inside `write`: a second rewrite starts from
-    * the first's result and never drops its staged copy.
+  /** Write the artifact at `path` as one commit: `stage` writes its
+    * frames, laid out as under `path`, into the staging directory it is
+    * given, then the save adds the `complete` marker. The record removes
+    * the live files under each top-level directory the staging holds —
+    * what overwriting those frames deletes, an empty frame's too — and
+    * nothing else under `path`. `stage` may read the live artifact: a
+    * rewrite loads it inside the lock, so a second rewrite starts from
+    * the first's result.
     */
-  def replace(spark: SparkSession, path: String)(write: String => Unit): Unit = {
-    val (fs, p) = IndexFs.hfs(spark, path)
-    Commits.lockOf(fs, p).synchronized {
-      IndexFs.dropSwapDebris(spark, path)
-      write(IndexFs.stagedPath(path))
-      IndexFs.swapInto(spark, path)
+  def save(spark: SparkSession, path: String)(stage: String => Unit): Unit =
+    commit(spark, path) { (fs, txn) =>
+      stage(txn.toString)
+      spark.range(0L, 1L, 1L, 1).select(lit(true).as("complete"))
+        .write.parquet(s"$txn/complete")
+      Commits.dataDirs(fs, txn).filterNot(_.contains('/'))
     }
-  }
 
-  /** Add files to the saved artifact at `path` as one commit
-    * ([[Commits]]): under the path's lock, `stage` loads the live
-    * artifact and writes its new frames, laid out as under `path`, into
-    * the staging directory it is given; the commit record then moves
-    * them in. Each live directory that a staged file of a `replacing`
-    * frame lands in is replaced whole — the record removes its live
-    * files (a dynamic partition overwrite). A crash before the record
-    * leaves the artifact as it was; from the record on, the next
-    * [[open]] finishes the commit.
+  /** Add files to the saved artifact at `path` as one commit: `stage`
+    * loads the live artifact and writes its new frames, laid out as
+    * under `path`, into the staging directory it is given. Each live
+    * directory that a staged file of a `replacing` frame lands in is
+    * replaced whole — the record removes its live files (a dynamic
+    * partition overwrite).
     */
   def append(spark: SparkSession, path: String, replacing: Seq[String] = Nil)(
-      stage: String => Unit): Unit = {
-    val (fs, p) = IndexFs.hfs(spark, path)
+      stage: String => Unit): Unit =
+    commit(spark, path) { (fs, txn) =>
+      stage(txn.toString)
+      Commits.dataFiles(fs, txn)
+        .filter(f => replacing.exists(r => f.startsWith(r + "/")))
+        .map(f => f.substring(0, f.lastIndexOf('/'))).distinct
+    }
+
+  /** The one commit body: under the path's lock, finish a recorded
+    * commit and drop staging no record names (a dead writer's: one JVM
+    * writes an artifact), then open the staging and stage into it, then
+    * commit the record removing the live files of the directories
+    * `stage` returns. A crash before the record leaves the artifact as
+    * it was; from the record on, the next [[open]] finishes the commit.
+    * Frames cached over `path` are refreshed after it: Spark matches a
+    * cached scan by its root paths, not by the files under them.
+    */
+  private def commit(spark: SparkSession, path: String)(
+      stage: (FileSystem, Path) => Seq[String]): Unit = {
+    val (fs, p) = Commits.hfs(spark, path)
     Commits.lockOf(fs, p).synchronized {
+      Commits.recover(fs, p)
+      fs.delete(Commits.pending(p), true)
       val txn = Commits.newTxn(p)
       try {
-        stage(txn.toString)
+        fs.mkdirs(txn)
+        val replaced = stage(fs, txn)
         Commits.failpoint(p.toString, "staged")
-        val replaced = Commits.dataFiles(fs, txn)
-          .filter(f => replacing.exists(r => f.startsWith(r + "/")))
-          .map(f => f.substring(0, f.lastIndexOf('/'))).distinct
         Commits.commit(fs, p, txn, Nil, replaced.flatMap(d =>
           Commits.dataFiles(fs, new Path(p, d)).map(d + "/" + _)))
-      } finally Commits.dropUnrecorded(fs, txn)
+      } finally {
+        Commits.dropUnrecorded(fs, txn)
+        spark.catalog.refreshByPath(path)
+      }
     }
   }
 
@@ -115,8 +116,8 @@ private[graft] object Artifact {
   /** Run independent writes of one save concurrently and return when
     * all have finished, then rethrow the first failure — a failed save
     * leaves no write running behind its caller. The save prices as its
-    * slowest write instead of their sum. Call it inside the [[save]]
-    * bracket, which stays strictly ordered around it.
+    * slowest write instead of their sum. Call it inside a [[save]]'s
+    * stage, which the marker and the commit follow.
     */
   def inParallel(writes: (() => Unit)*): Unit = {
     val running = writes.map(w => Future(w())(writers))
@@ -126,34 +127,23 @@ private[graft] object Artifact {
 
   // ---- the open check ----
 
-  /** True iff the marker at `path` reads complete (false when absent). */
-  private def isComplete(spark: SparkSession, path: String): Boolean =
-    try spark.read.parquet(s"$path/complete").head().getAs[Boolean]("complete")
-    catch { case _: Exception => false }
-
   /** Check the marker of the `kind` artifact at `path` before its frames
-    * are read, after repairing an interrupted [[replace]] swap and
-    * rolling forward a recorded [[append]] (one `exists` call when
-    * none is pending). `unmarkedLayout`: asked only when there is no
-    * marker at all — true accepts a pre-marker layout the caller still
-    * reads ([[AnnIndex]]).
+    * are read, after rolling forward a recorded commit (one `exists`
+    * call when none is pending).
     */
-  def open(spark: SparkSession, path: String, kind: String,
-      unmarkedLayout: => Boolean = false): Unit = {
-    val (fs, p) = IndexFs.hfs(spark, path)
-    IndexFs.recoverSwap(spark, path, isComplete(spark, IndexFs.stagedPath(path)))
+  def open(spark: SparkSession, path: String, kind: String): Unit = {
+    val (fs, p) = Commits.hfs(spark, path)
     Commits.recover(fs, p)
     val marker =
       try Some(spark.read.parquet(s"$path/complete").head())
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     marker match {
-      case None if unmarkedLayout => ()
       case None =>
         throw new IllegalStateException(
           s"$kind at $path has no completion marker — not a saved $kind")
       case Some(m) if m.getAs[Boolean]("complete") => ()
       case Some(m) =>
-        // a marker without an `op` column is this build's save bracket
+        // an earlier build's in-place save bracket wrote no `op` column
         val op =
           if (m.schema.fieldNames.contains("op")) m.getAs[String]("op")
           else "save"

@@ -53,21 +53,21 @@ object CentroidIndex {
   // ---- persistence (the artifact contract, [[Artifact]]) ----
 
   /** Persist the trained micros + the geometry that makes them
-    * meaningful (cells, rounds, dim), bracketed by the standard
-    * completion marker — a crash mid-save refuses to load instead of
-    * assigning cells under a half-written centroid set.
+    * meaningful (cells, rounds, dim), as one commit ([[Artifact.save]])
+    * — a crash mid-save never leaves cells to assign under a
+    * half-written centroid set.
     */
   def save(
       spark: SparkSession, micros: Array[Array[Long]], rounds: Int,
       path: String): Unit = {
     val dim = micros.headOption.map(_.length).getOrElse(0)
-    Artifact.save(spark, path) {
+    Artifact.save(spark, path) { dir =>
       spark.range(0L, 1L, 1L, 1).select(
         typedLit(micros.map(_.toSeq).toSeq).as("micros"),
         lit(micros.length).as("cells"),
         lit(rounds).as("rounds"),
         lit(dim).as("dim"))
-        .write.mode("overwrite").parquet(s"$path/model")
+        .write.mode("overwrite").parquet(s"$dir/model")
     }
   }
 

@@ -7,11 +7,13 @@ import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
-/** The one commit protocol for adding files to a directory that readers
-  * see: the parquet sink log's appends and compactions
-  * ([[graft.sources.ParquetSink]]) and every saved-index append
-  * ([[Artifact.append]]). Files, for a root directory `root`:
+/** The one commit protocol for changing a directory that readers see:
+  * the parquet sink log's appends and compactions
+  * ([[graft.sources.ParquetSink]]) and every write to a saved artifact
+  * — save, retire, compact, append ([[Artifact.save]],
+  * [[Artifact.append]]). Files, for a root directory `root`:
   *   - `root.pending/<txn>/`: one commit's staged files, laid out as they
   *     will sit under `root`;
   *   - `root.pending/<txn>.commit`: its commit record — the dump_ids to
@@ -26,15 +28,20 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * and the record dropped. Every open rolls forward a record a crash
   * left behind, so a commit is either absent (staging without a record
   * is dropped) or, after the next open, whole. Commits of one root are
-  * serialized per JVM by [[lockOf]], the same lock every rewrite of a
-  * saved index holds ([[Artifact.replace]]).
+  * serialized per JVM by [[lockOf]].
   *
-  * ASSUMES atomic rename of files, like [[IndexFs]]: true on HDFS and
-  * local POSIX file systems, NOT on object stores.
+  * ASSUMES atomic rename of files: true on HDFS and local POSIX file
+  * systems, NOT on object stores.
   */
 private[graft] object Commits {
 
   val ManifestDir = "_manifest"
+
+  /** The file system of `path`, and `path` as a Hadoop path. */
+  def hfs(spark: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+  }
 
   /** One lock per qualified root path. */
   private val locks = new ConcurrentHashMap[String, AnyRef]()
@@ -64,27 +71,43 @@ private[graft] object Commits {
     try out.write(dumpId.getBytes(UTF_8)) finally out.close()
   }
 
-  /** The visible data files under `dir`, as paths relative to it (Spark's
-    * own rule, at every level: `_`- and `.`-prefixed names are not data);
-    * none if the directory is gone, also when a concurrent roll-forward
-    * just removed it.
+  /** The visible entries under `dir`, as paths relative to it, each
+    * with whether it is a directory (Spark's own rule, at every level:
+    * `_`- and `.`-prefixed names are not data); none if the directory is
+    * gone, also when a concurrent roll-forward just removed it.
     */
-  def dataFiles(fs: FileSystem, dir: Path): Seq[String] = {
-    def under(d: Path, prefix: String): Seq[String] =
+  private def entries(fs: FileSystem, dir: Path): Seq[(String, Boolean)] = {
+    def under(d: Path, prefix: String): Seq[(String, Boolean)] =
       (try fs.listStatus(d).toSeq catch { case _: FileNotFoundException => Nil })
         .filterNot { f => val n = f.getPath.getName; n.startsWith("_") || n.startsWith(".") }
         .flatMap { f =>
           val rel = prefix + f.getPath.getName
-          if (f.isDirectory) under(f.getPath, rel + "/") else Seq(rel)
+          if (f.isDirectory) (rel, true) +: under(f.getPath, rel + "/") else Seq((rel, false))
         }
     under(dir, "")
   }
 
+  /** The visible data files under `dir`, relative to it. */
+  def dataFiles(fs: FileSystem, dir: Path): Seq[String] =
+    entries(fs, dir).collect { case (f, false) => f }
+
+  /** The visible directories under `dir`, relative to it, at every depth
+    * — also those that hold no file, like an empty frame's.
+    */
+  def dataDirs(fs: FileSystem, dir: Path): Seq[String] =
+    entries(fs, dir).collect { case (d, true) => d }
+
   /** Commit `txn`'s staged files to `root`: the record, atomically, then
-    * the roll-forward. Call it holding [[lockOf]].
+    * the roll-forward. Call it holding [[lockOf]]. A commit may not
+    * remove a file it stages: the roll-forward counts a file already in
+    * place as moved, so the removal would delete the staged one.
     */
   def commit(fs: FileSystem, root: Path, txn: Path, dumpIds: Seq[String],
       removals: Seq[String] = Nil): Unit = {
+    if (removals.nonEmpty) {
+      val clash = dataFiles(fs, txn).intersect(removals)
+      require(clash.isEmpty, s"a commit to $root stages files it removes: ${clash.mkString(", ")}")
+    }
     val tmp = new Path(txn, "_commit")
     val out = fs.create(tmp, false)
     try {
@@ -97,14 +120,15 @@ private[graft] object Commits {
     rollForward(fs, root, txn, dumpIds, removals)
   }
 
-  /** Finish a recorded commit: markers, then each staged file moved to
-    * the same relative path under `root` (parent directories created),
-    * then the removals deleted, then the staging and the record dropped
-    * — only once every file is in. Idempotent, so a crash anywhere in it
-    * is repaired by running it again, and a reader in another process
-    * may run it alongside the writer: a file already in place counts as
-    * moved, one already gone as removed. A move that fails otherwise
-    * throws, leaving the record for the next open to retry.
+  /** Finish a recorded commit: markers, then each staged directory
+    * created under `root` (an empty one too) and each staged file moved
+    * to the same relative path, then the removals deleted, then the
+    * staging and the record dropped — only once every file is in.
+    * Idempotent, so a crash anywhere in it is repaired by running it
+    * again, and a reader in another process may run it alongside the
+    * writer: a file already in place counts as moved, one already gone
+    * as removed. A move that fails otherwise throws, leaving the record
+    * for the next open to retry.
     */
   private def rollForward(fs: FileSystem, root: Path, txn: Path,
       dumpIds: Seq[String], removals: Seq[String]): Unit = {
@@ -117,9 +141,9 @@ private[graft] object Commits {
       }
     }
     failpoint(root.toString, "marked")
-    val files = dataFiles(fs, txn)
-    files.map(f => new Path(root, f).getParent).distinct.foreach(fs.mkdirs)
-    files.foreach { f =>
+    val staged = entries(fs, txn)
+    (root +: staged.collect { case (d, true) => new Path(root, d) }).foreach(fs.mkdirs)
+    staged.collect { case (f, false) => f }.foreach { f =>
       val dst = new Path(root, f)
       val moved = try fs.rename(new Path(txn, f), dst) catch { case _: FileNotFoundException => false }
       if (!moved && !fs.exists(dst))

@@ -69,25 +69,21 @@ object DedupIndex {
 
   /** Persist / reopen the index. Signature rows live under `sigs/`,
     * partitioned by band: a probe of b bands prunes to those
-    * directories, and one band's buckets co-locate.
-    *
-    * Saves are not atomic (a band-partitioned multi-file write), so —
-    * like [[AnnIndex.save]] — every save brackets the data with a
-    * completion marker: `complete=false` lands FIRST, invalidating the
-    * previous save before a byte of it is touched, then the signature
-    * rows, then `complete=true`. A crash inside the bracket leaves
-    * `complete=false` and [[load]] refuses the index instead of
-    * silently reading a partial signature store (missing bands ⇒
+    * directories, and one band's buckets co-locate. A save is one
+    * commit ([[Artifact.save]]): a crash leaves the previous signature
+    * store or the whole new one, never a partial one (missing bands ⇒
     * silently missed near-duplicates, the worst failure mode a dedup
     * index can have).
     */
   def save(index: DataFrame, path: String): Unit =
-    Artifact.save(index.sparkSession, path) {
-      // repartition on the partition column before the partitioned write
-      // (r20, guide §6 small files — the KnnIndex.save finding)
-      index.repartition(col("band"))
-        .write.mode("overwrite").partitionBy("band").parquet(s"$path/sigs")
-    }
+    Artifact.save(index.sparkSession, path)(write(index, _))
+
+  /** Write the signature rows under `dir`. */
+  private def write(index: DataFrame, dir: String): Unit =
+    // repartition on the partition column before the partitioned write
+    // (r20, guide §6 small files — the KnnIndex.save finding)
+    index.repartition(col("band"))
+      .write.mode("overwrite").partitionBy("band").parquet(s"$dir/sigs")
 
   /** The stored signature rows, read with their schema: a retire of
     * every document leaves a `sigs` directory without part files, whose
@@ -187,8 +183,8 @@ object DedupIndex {
     index.join(broadcast(ids.select(col("doc_id")).distinct()),
       Seq("doc_id"), "left_anti")
 
-  /** Retire ids from a SAVED index: the anti-join rewrite is written to
-    * a staged sibling and swapped in ([[Artifact.replace]]), so a crash
+  /** Retire ids from a SAVED index: the anti-join rewrite is saved over
+    * the live one as one commit ([[Artifact.save]]), so a crash
     * mid-rewrite leaves the previous signature store whole instead of a
     * silently-truncated one. One pass over the index per retirement
     * batch — at lake scale, batch retirements per compaction window (the
@@ -197,16 +193,16 @@ object DedupIndex {
     */
   def retire(path: String, ids: DataFrame): Unit = {
     val spark = ids.sparkSession
-    Artifact.replace(spark, path)(save(retire(load(spark, path), ids), _))
+    Artifact.save(spark, path)(write(retire(load(spark, path), ids), _))
   }
 
   /** Persist an ingest: append ONLY the batch's not-yet-indexed
     * signature rows to a saved index path, as one commit
     * ([[Artifact.append]]): the band-partitioned rows are staged, then
     * moved in, so probes never see a document with some of its bands
-    * missing (silently missed near-duplicates). (A plain save() of
-    * ingest's returned union over a load()ed index would fail — Spark
-    * refuses to overwrite a path that is also being read.)
+    * missing (silently missed near-duplicates). (A save() of ingest's
+    * returned union over the load()ed path also lands, but rewrites the
+    * whole index.)
     */
   def append(path: String, newDocs: DataFrame): Unit = {
     val spark = newDocs.sparkSession
@@ -220,7 +216,7 @@ object DedupIndex {
     * target-sized files — [[append]] adds files per batch forever (the
     * lakehouse small-file problem; the reference's batched bulk insert
     * exists for the same reason, base_sink.py:251-282). The rewrite
-    * swaps in like [[retire]], is idempotent, and is probe-identical
+    * commits like [[retire]], is idempotent, and is probe-identical
     * before/after (DedupIndexSpec). File-count bound:
     * ≤ `partitions` files per band directory (rows repartition on
     * (band, bkey) so one output file holds whole buckets). Size
@@ -229,7 +225,7 @@ object DedupIndex {
     */
   def compact(path: String, partitions: Int = 8): Unit = {
     val spark = SparkSession.active
-    Artifact.replace(spark, path)(save(
+    Artifact.save(spark, path)(write(
       load(spark, path).repartition(partitions, col("band"), col("bkey")), _))
   }
 }

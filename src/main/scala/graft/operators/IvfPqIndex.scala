@@ -27,12 +27,10 @@ import graft.{Caches, Checkpoints}
   * batches under BOTH pinned models (coarse centroids + residual
   * codebook) — the FAISS operational posture: retrain is a rebuild.
   *
-  * Durability is [[PqIndex]]'s: a marker-bracketed save, and a torn
-  * one refuses to load; an append is one commit ([[Artifact.append]]);
-  * [[retire]]/[[compact]] write a staged sibling and commit by atomic
-  * directory rename ([[Artifact.replace]]), so a crash mid-rewrite
-  * leaves a complete index, and [[load]] finishes any swap or recorded
-  * append a crash interrupted.
+  * Durability is [[PqIndex]]'s: a save, [[retire]], [[compact]] and
+  * [[append]] are each one commit ([[Artifact.save]],
+  * [[Artifact.append]]), so a crash leaves a complete index, and
+  * [[load]] finishes any commit a crash left recorded.
   */
 object IvfPqIndex {
 
@@ -102,32 +100,32 @@ object IvfPqIndex {
       index.vectors, q, probeList = Some(probeLit))
   }
 
-  /** Persist: marker bracket around meta (codebook + dials), centroids,
-    * vectors, and the cell-partitioned codes — `complete=false` first,
-    * so a crash mid-save refuses to load instead of probing codes under
-    * a half-written model.
+  /** Persist meta (codebook + dials), centroids, vectors and the
+    * cell-partitioned codes as one commit ([[Artifact.save]]): a crash
+    * never leaves codes under a half-written model.
     */
-  def save(index: Index, path: String): Unit = {
-    val spark = index.codes.sparkSession
-    Artifact.save(spark, path) {
-      spark.range(0L, 1L, 1L, 1)
-        .select(lit(index.cells).as("cells"), lit(index.nprobe).as("nprobe"),
-          lit(index.k).as("k"), lit(index.rerank).as("rerank"),
-          typedLit(index.codebook.toSeq).as("codebook"))
-        .write.mode("overwrite").parquet(s"$path/meta")
-      index.centroids.write.mode("overwrite").parquet(s"$path/centroids")
-      index.vectors.write.mode("overwrite").parquet(s"$path/vectors")
-      // the inverted file: one directory per coarse cell (cells ≤ 65536
-      // by the ivfCellsFor clamp, so the partition count is bounded);
-      // cell values are ints on disk and widen back to the engine's long
-      // ids at load
-      index.codes
-        .withColumn("cell", col("cell").cast("int"))
-        // repartition on the partition column before the partitioned
-        // write (r20, guide §6 small files — the KnnIndex.save finding)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
-    }
+  def save(index: Index, path: String): Unit =
+    Artifact.save(index.codes.sparkSession, path)(write(index, _))
+
+  /** Write the frames of `index` under `dir`. */
+  private def write(index: Index, dir: String): Unit = {
+    index.codes.sparkSession.range(0L, 1L, 1L, 1)
+      .select(lit(index.cells).as("cells"), lit(index.nprobe).as("nprobe"),
+        lit(index.k).as("k"), lit(index.rerank).as("rerank"),
+        typedLit(index.codebook.toSeq).as("codebook"))
+      .write.mode("overwrite").parquet(s"$dir/meta")
+    index.centroids.write.mode("overwrite").parquet(s"$dir/centroids")
+    index.vectors.write.mode("overwrite").parquet(s"$dir/vectors")
+    // the inverted file: one directory per coarse cell (cells ≤ 65536
+    // by the ivfCellsFor clamp, so the partition count is bounded);
+    // cell values are ints on disk and widen back to the engine's long
+    // ids at load
+    index.codes
+      .withColumn("cell", col("cell").cast("int"))
+      // repartition on the partition column before the partitioned
+      // write (r20, guide §6 small files — the KnnIndex.save finding)
+      .repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
   }
 
   def load(spark: SparkSession, path: String): Index = {
@@ -175,25 +173,24 @@ object IvfPqIndex {
   }
 
   /** Retire ids on a saved path: the rewrite, centroids preserved, is
-    * staged and swapped in ([[Artifact.replace]]).
+    * saved over the live index as one commit ([[Artifact.save]]).
     */
   def retire(path: String, ids: DataFrame): Unit = {
     val spark = ids.sparkSession
-    Artifact.replace(spark, path)(save(retire(load(spark, path), ids), _))
+    Artifact.save(spark, path)(write(retire(load(spark, path), ids), _))
   }
 
   /** Small-file compaction of the accumulated append files: clustering
     * the codes by cell leaves each cell directory with one file per
     * holding task (a cell lives in exactly one task after the
-    * repartition), probe-identical before/after, staged-sibling +
-    * atomic rename like [[retire]] — a crash preserves the
-    * pre-compaction index intact.
+    * repartition), probe-identical before/after, one commit like
+    * [[retire]] — a crash preserves the pre-compaction index intact.
     */
   def compact(path: String, partitions: Int = 8): Unit = {
     val spark = SparkSession.active
-    Artifact.replace(spark, path) { staged =>
+    Artifact.save(spark, path) { staged =>
       val idx = load(spark, path)
-      save(idx.copy(
+      write(idx.copy(
         codes = idx.codes.repartition(partitions, col("cell")),
         vectors = idx.vectors.repartition(partitions, col("vec_id"))), staged)
     }

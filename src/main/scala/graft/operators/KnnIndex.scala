@@ -31,10 +31,10 @@ import graft.functions.Portable._
   *  - [[retire]] drops members and every edge TOUCHING a retired id
   *    (the stored graph keeps k edges, so the (k+1)-th neighbor a true
   *    re-knn would promote is not reconstructible — stated contract,
-  *    same as DedupIndex retire); on disk it rewrites to a staged
-  *    sibling committed by atomic rename ([[IndexFs]]).
-  * A crash mid-save refuses to load instead of probing a half-written
-  * graph (KnnIndexSpec pins all three).
+  *    same as DedupIndex retire); on disk it is one commit that saves
+  *    the rewrite over the live index ([[Artifact.save]]).
+  * A crash mid-save leaves the previous graph or the whole new one,
+  * never a half-written one.
   *
   * Scale shape: the build is E14's (one bucket shuffle, occupancy-
   * bounded in-task pairs, bounded-heap top-k); a warm consumer reads
@@ -133,43 +133,45 @@ object KnnIndex {
       rounds, sub, k, div)
   }
 
-  /** Persist: marker bracket around meta (pinned quantizer + dials),
-    * the cell-partitioned member and edge frames, and the seed table.
+  /** Persist meta (pinned quantizer + dials), the cell-partitioned
+    * member and edge frames, and the seed table as one commit
+    * ([[Artifact.save]]).
     */
-  def save(index: Index, path: String): Unit = {
-    val spark = index.edges.sparkSession
-    Artifact.save(spark, path) {
-      spark.range(0L, 1L, 1L, 1).select(
-        lit(index.cells).as("cells"), lit(index.rounds).as("rounds"),
-        lit(index.k).as("k"), lit(SEEDS).as("seeds_per_cell"),
-        lit(index.sub.map(_.tables).getOrElse(0)).as("sub_tables"),
-        lit(index.sub.map(_.planes).getOrElse(0)).as("sub_planes"),
-        lit(index.div).as("div"),
-        lit(index.micros.headOption.map(_.length).getOrElse(0)).as("dim"),
-        typedLit(index.micros.map(_.toSeq).toSeq).as("micros"))
-        .write.mode("overwrite").parquet(s"$path/meta")
-      // repartition on the partition column before the partitioned write
-      // (r20, guide §6 small files): the member/edge frames arrive on the
-      // engine's compute partitioning, so every task held a slice of
-      // every cell — 518 parquet files for a 2000-row gate index, and
-      // commit overhead dominated the save (5.8 s measured). Keyed on
-      // cell, each cell's rows land in one task (locally: one file per
-      // cell; at scale the same hash spread across the conf width).
-      //
-      // The three data writes are INDEPENDENT, so they overlap (guide
-      // §2.6) — the save prices as the slowest write instead of their
-      // sum, inside the strictly ordered marker bracket.
-      Artifact.inParallel(
-        () => index.vectors.withColumn("cell", col("cell").cast("int"))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$path/vectors"),
-        () => index.edges.withColumn("cell", col("cell").cast("int"))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$path/edges"),
-        () => index.seeds.write.mode("overwrite").parquet(s"$path/seeds"))
-    }
+  def save(index: Index, path: String): Unit =
+    Artifact.save(index.edges.sparkSession, path)(write(index, _))
+
+  /** Write the frames of `index` under `dir`. */
+  private def write(index: Index, dir: String): Unit = {
+    index.edges.sparkSession.range(0L, 1L, 1L, 1).select(
+      lit(index.cells).as("cells"), lit(index.rounds).as("rounds"),
+      lit(index.k).as("k"), lit(SEEDS).as("seeds_per_cell"),
+      lit(index.sub.map(_.tables).getOrElse(0)).as("sub_tables"),
+      lit(index.sub.map(_.planes).getOrElse(0)).as("sub_planes"),
+      lit(index.div).as("div"),
+      lit(index.micros.headOption.map(_.length).getOrElse(0)).as("dim"),
+      typedLit(index.micros.map(_.toSeq).toSeq).as("micros"))
+      .write.mode("overwrite").parquet(s"$dir/meta")
+    // repartition on the partition column before the partitioned write
+    // (r20, guide §6 small files): the member/edge frames arrive on the
+    // engine's compute partitioning, so every task held a slice of
+    // every cell — 518 parquet files for a 2000-row gate index, and
+    // commit overhead dominated the save (5.8 s measured). Keyed on
+    // cell, each cell's rows land in one task (locally: one file per
+    // cell; at scale the same hash spread across the conf width).
+    //
+    // The three data writes are INDEPENDENT, so they overlap (guide
+    // §2.6) — the save prices as the slowest write instead of their
+    // sum.
+    Artifact.inParallel(
+      () => index.vectors.withColumn("cell", col("cell").cast("int"))
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$dir/vectors"),
+      () => index.edges.withColumn("cell", col("cell").cast("int"))
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$dir/edges"),
+      () => index.seeds.write.mode("overwrite").parquet(s"$dir/seeds"))
   }
 
   def load(spark: SparkSession, path: String): Index = {
@@ -278,12 +280,13 @@ object KnnIndex {
       seeds = seeds2)
   }
 
-  /** Retire ids on a saved path: staged sibling + atomic rename — a
-    * crash leaves a complete index (previous or rewritten) on disk.
+  /** Retire ids on a saved path: the rewrite is saved over the live
+    * index as one commit ([[Artifact.save]]) — a crash leaves a complete
+    * index (previous or rewritten) on disk.
     */
   def retire(path: String, ids: DataFrame): Unit = {
     val spark = ids.sparkSession
-    Artifact.replace(spark, path)(save(retire(load(spark, path), ids), _))
+    Artifact.save(spark, path)(write(retire(load(spark, path), ids), _))
   }
 
   // ---- board consumption (build-once per corpus) ----

@@ -8,7 +8,7 @@ import graft.Caches
 /** Persistent learned-langid artifact — the [[QualityIndex]] pattern
   * applied to [[LangClassifier]] (the r14 verdict's top ask): train the
   * multiclass char-trigram model ONCE per corpus, persist it
-  * marker-bracketed, and let every scoring consumer run a single
+  * in one commit, and let every scoring consumer run a single
   * map-only corpus scan under the literal weight arrays instead of
   * re-paying [[QualityClassifier.Epochs]] treeAggregate training epochs
   * inline. Langid is the FIRST gate of the CCNet-style deployment shape
@@ -79,18 +79,18 @@ object LangIndex {
 
   /** Persist the per-language weight vectors + biases plus the
     * feature/training config that makes them meaningful (bucket count,
-    * epoch/step dials, the class order), bracketed by the standard
-    * completion marker. One row per language keyed by class index, so
+    * epoch/step dials, the class order), as one commit
+    * ([[Artifact.save]]). One row per language keyed by class index, so
     * the artifact is self-describing about its own argmax order.
     */
   def save(spark: SparkSession, model: Model, path: String): Unit = {
     import spark.implicits._
-    Artifact.save(spark, path) {
+    Artifact.save(spark, path) { dir =>
       langs.zipWithIndex.map { case (l, i) =>
         (i, l, model.weights(i).toSeq, model.bias(i))
       }.toDF("lang_idx", "lang", "weights", "bias")
         .coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/model")
+        .write.mode("overwrite").parquet(s"$dir/model")
       spark.range(0L, 1L, 1L, 1).select(
         lit(QualityClassifier.NumBuckets).as("num_buckets"),
         lit(QualityClassifier.Epochs).as("epochs"),
@@ -98,7 +98,7 @@ object LangIndex {
         lit(QualityClassifier.BetaNum).as("beta_num"),
         lit(QualityClassifier.BetaDen).as("beta_den"),
         typedLit(langs).as("langs"))
-        .write.mode("overwrite").parquet(s"$path/config")
+        .write.mode("overwrite").parquet(s"$dir/config")
     }
   }
 

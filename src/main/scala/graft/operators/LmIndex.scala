@@ -19,8 +19,8 @@ import graft.Caches
   * Unlike [[QualityIndex]] (whose model is 2 KB of weights) this
   * artifact is FRAME-shaped: the model is the reference's distinct
   * (w1, w2) bigram counts — Zipf-bounded far below corpus size, but
-  * not driver-sized — so it persists as parquet frames under the
-  * standard completion-marker bracket, and scoring joins against it
+  * not driver-sized — so it persists as parquet frames saved in one
+  * commit ([[Artifact.save]]), and scoring joins against it
   * exactly as the inline path joins against its in-session aggregate.
   * Unigram (prefix) totals and the continuation vocabulary are DERIVED
   * from the bigram frame at load, never stored beside it, so the three
@@ -228,18 +228,20 @@ object LmIndex {
   def score3(docs: DataFrame, ref: Ref3): DataFrame =
     scoreCounts3(trigramCounts(docs), ref)
 
-  /** Persist a trigram model marker-bracketed (the [[save]] contract,
-    * one more frame).
+  /** Persist a trigram model as one commit (the [[save]] contract, one
+    * more frame).
     */
   def save3(spark: SparkSession, ref: Ref3, path: String): Unit =
+    Artifact.save(spark, path)(write3(ref, _))
+
+  /** Write the frames of `ref` under `dir`. */
+  private def write3(ref: Ref3, dir: String): Unit =
     // the three data writes are independent — overlapped (r20, guide
-    // §2.6, the KnnIndex.save recipe) inside the ordered marker bracket
-    Artifact.save(spark, path) {
-      Artifact.inParallel(
-        () => ref.trigrams.write.mode("overwrite").parquet(s"$path/trigrams"),
-        () => ref.bigrams.write.mode("overwrite").parquet(s"$path/bigrams"),
-        () => ref.vocab.write.mode("overwrite").parquet(s"$path/vocab"))
-    }
+    // §2.6, the KnnIndex.save recipe)
+    Artifact.inParallel(
+      () => ref.trigrams.write.mode("overwrite").parquet(s"$dir/trigrams"),
+      () => ref.bigrams.write.mode("overwrite").parquet(s"$dir/bigrams"),
+      () => ref.vocab.write.mode("overwrite").parquet(s"$dir/vocab"))
 
   /** Reopen a saved trigram model. Refuses partial saves, a vocab that
     * disagrees with the bigram frame, and a trigram frame whose
@@ -301,36 +303,39 @@ object LmIndex {
   }
 
   /** Fold new reference documents into a saved trigram model — both
-    * count frames merge by summed union ([[append]]'s discipline,
-    * staged sibling + atomic rename; append ≡ retraining on the union,
-    * LmIndexSpec-pinned for the trigram frame too).
+    * count frames merge by summed union ([[append]]'s discipline, one
+    * commit; append ≡ retraining on the union, LmIndexSpec-pinned for
+    * the trigram frame too).
     */
   def append3(spark: SparkSession, path: String, newDocs: DataFrame): Unit = {
     val add = train3(newDocs)
-    Artifact.replace(spark, path) { staged =>
+    Artifact.save(spark, path) { staged =>
       val live = load3(spark, path)
       val mtg = live.trigrams.unionByName(add.trigrams)
         .groupBy("w1", "w2", "w3").agg(sum(col("cnt")).as("cnt"))
       val mbg = Caches.persist(live.bigrams.unionByName(add.bigrams)
         .groupBy("w1", "w2").agg(sum(col("cnt")).as("cnt")))
-      try save3(spark, Ref3(mtg, mbg, mbg.select(countDistinct(col("w2")).as("v"))), staged)
+      try write3(Ref3(mtg, mbg, mbg.select(countDistinct(col("w2")).as("v"))), staged)
       finally mbg.unpersist(false)
     }
   }
 
   // ---- persistence (the artifact contract, [[Artifact]]) ----
 
-  /** Persist the model marker-bracketed: `complete=false`, the bigram
-    * frame, the 1-row vocab meta, `complete=true`. A crash mid-save
-    * refuses to load rather than scoring under half a model.
+  /** Persist the bigram frame and the 1-row vocab meta as one commit
+    * ([[Artifact.save]]): a crash never leaves half a model to score
+    * under.
     */
   def save(spark: SparkSession, ref: Ref, path: String): Unit =
-    Artifact.save(spark, path) {
-      ref.bigrams.write.mode("overwrite").parquet(s"$path/bigrams")
-      ref.vocab.write.mode("overwrite").parquet(s"$path/vocab")
-    }
+    Artifact.save(spark, path)(write(ref, _))
 
-  /** Reopen a saved model (repairing an interrupted [[append]] swap
+  /** Write the frames of `ref` under `dir`. */
+  private def write(ref: Ref, dir: String): Unit = {
+    ref.bigrams.write.mode("overwrite").parquet(s"$dir/bigrams")
+    ref.vocab.write.mode("overwrite").parquet(s"$dir/vocab")
+  }
+
+  /** Reopen a saved model (finishing a commit a crash left recorded
     * first). Refuses a partial save, and refuses a vocab meta that
     * disagrees with the bigram frame it rides with — a model whose
     * smoothing denominator drifted from its counts would score
@@ -353,19 +358,18 @@ object LmIndex {
 
   /** Fold new reference documents into a saved model: bigram counts
     * are mergeable (summed union), the vocabulary re-derives from the
-    * merged frame, and the merge is staged and swapped in
-    * ([[Artifact.replace]]) — append ≡ retraining on the union, which
-    * LmIndexSpec pins frame-exact. The merge is cached for the bigram
-    * and vocab writes, then uncached: a later query over the swapped
-    * path would match a stale entry.
+    * merged frame, and the merge is saved over the live model as one
+    * commit ([[Artifact.save]]) — append ≡ retraining on the union,
+    * which LmIndexSpec pins frame-exact. The merge is cached for the
+    * bigram and vocab writes only.
     */
   def append(spark: SparkSession, path: String, newDocs: DataFrame): Unit = {
     val add = train(newDocs)
-    Artifact.replace(spark, path) { staged =>
+    Artifact.save(spark, path) { staged =>
       val live = load(spark, path)
       val merged = Caches.persist(live.bigrams.unionByName(add.bigrams)
         .groupBy("w1", "w2").agg(sum(col("cnt")).as("cnt")))
-      try save(spark, Ref(merged, merged.select(countDistinct(col("w2")).as("v"))), staged)
+      try write(Ref(merged, merged.select(countDistinct(col("w2")).as("v"))), staged)
       finally merged.unpersist(false)
     }
   }

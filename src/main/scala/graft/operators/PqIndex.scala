@@ -25,11 +25,10 @@ import graft.{Caches, Checkpoints}
   * distribution degrades recall gracefully and is re-measured at
   * rebuild time).
   *
-  * Durability is [[AnnIndex]]'s: a save is completion-marker-bracketed
-  * and a torn one refuses to load; retire/compact stage and swap
-  * ([[Artifact.replace]]), so a torn rewrite leaves the previous index;
-  * an append is one commit ([[Artifact.append]]), so a crash leaves the
-  * previous index or, after the next load, the whole append.
+  * Durability is [[AnnIndex]]'s: a save, a retire and a compact are
+  * each one commit ([[Artifact.save]]), an append too
+  * ([[Artifact.append]]), so a crash leaves the previous index or,
+  * after the next load, the whole write.
   */
 object PqIndex {
 
@@ -66,21 +65,21 @@ object PqIndex {
     AnnOps.pqSearch(index.codebook, index.k, index.rerank, topK,
       index.codes, index.vectors, AnnOps.withNormDf(queries))
 
-  /** Persist: marker bracket around meta (codebook + dials), vectors,
-    * codes — `complete=false` first, so a crash mid-save refuses to
-    * load instead of probing stored codes under a half-written
-    * codebook.
+  /** Persist meta (codebook + dials), vectors and codes as one commit
+    * ([[Artifact.save]]): a crash never leaves stored codes under a
+    * half-written codebook.
     */
-  def save(index: Index, path: String): Unit = {
-    val spark = index.codes.sparkSession
-    Artifact.save(spark, path) {
-      spark.range(0L, 1L, 1L, 1)
-        .select(lit(index.k).as("k"), lit(index.rerank).as("rerank"),
-          typedLit(index.codebook.toSeq).as("codebook"))
-        .write.mode("overwrite").parquet(s"$path/meta")
-      index.vectors.write.mode("overwrite").parquet(s"$path/vectors")
-      index.codes.write.mode("overwrite").parquet(s"$path/codes")
-    }
+  def save(index: Index, path: String): Unit =
+    Artifact.save(index.codes.sparkSession, path)(write(index, _))
+
+  /** Write the frames of `index` under `dir`. */
+  private def write(index: Index, dir: String): Unit = {
+    index.codes.sparkSession.range(0L, 1L, 1L, 1)
+      .select(lit(index.k).as("k"), lit(index.rerank).as("rerank"),
+        typedLit(index.codebook.toSeq).as("codebook"))
+      .write.mode("overwrite").parquet(s"$dir/meta")
+    index.vectors.write.mode("overwrite").parquet(s"$dir/vectors")
+    index.codes.write.mode("overwrite").parquet(s"$dir/codes")
   }
 
   def load(spark: SparkSession, path: String): Index = {
@@ -119,22 +118,22 @@ object PqIndex {
   }
 
   /** Retire ids on a saved path: the rewrite, codebook preserved, is
-    * staged and swapped in ([[Artifact.replace]]).
+    * saved over the live index as one commit ([[Artifact.save]]).
     */
   def retire(path: String, ids: DataFrame): Unit = {
     val spark = ids.sparkSession
-    Artifact.replace(spark, path)(save(retire(load(spark, path), ids), _))
+    Artifact.save(spark, path)(write(retire(load(spark, path), ids), _))
   }
 
   /** Small-file compaction of the accumulated append files — bounded
-    * file count, probe-identical before/after, staged and swapped like
+    * file count, probe-identical before/after, committed like
     * [[retire]] (the AnnIndex/DedupIndex compaction contract).
     */
   def compact(path: String, partitions: Int = 8): Unit = {
     val spark = SparkSession.active
-    Artifact.replace(spark, path) { staged =>
+    Artifact.save(spark, path) { staged =>
       val idx = load(spark, path)
-      save(idx.copy(
+      write(idx.copy(
         codes = idx.codes.repartition(partitions, col("vec_id")),
         vectors = idx.vectors.repartition(partitions, col("vec_id"))), staged)
     }

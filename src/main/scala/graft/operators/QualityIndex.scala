@@ -9,7 +9,7 @@ import graft.{Caches, Tables}
 /** Persistent learned-quality-model artifact — the [[TokenizerIndex]]
   * pattern applied to C18's classifier (the r13 verdict's highest-
   * leverage ask): train ONCE, persist the weights + feature config
-  * marker-bracketed, and let every consumer (the C18 report, D16's
+  * in one commit, and let every consumer (the C18 report, D16's
   * quality-aware canonicals, G12b's quality-aware funnel) SCORE against
   * the artifact instead of re-running the 16 treeAggregate training
   * epochs inline. At 100 TB the difference is a full corpus training
@@ -83,10 +83,10 @@ object QualityIndex {
 
   /** Persist weights + bias + the feature/training config that makes
     * the weights meaningful (bucket count, epoch/step dials, decision
-    * threshold), bracketed by the standard completion marker.
+    * threshold), as one commit ([[Artifact.save]]).
     */
   def save(spark: SparkSession, model: Model, path: String): Unit =
-    Artifact.save(spark, path) {
+    Artifact.save(spark, path) { dir =>
       spark.range(0L, 1L, 1L, 1).select(
         typedLit(model.weights.toSeq).as("weights"),
         lit(model.bias).as("bias"),
@@ -96,7 +96,7 @@ object QualityIndex {
         lit(QualityClassifier.BetaNum).as("beta_num"),
         lit(QualityClassifier.BetaDen).as("beta_den"),
         lit(QualityClassifier.PredThreshold).as("pred_threshold"))
-        .write.mode("overwrite").parquet(s"$path/model")
+        .write.mode("overwrite").parquet(s"$dir/model")
     }
 
   /** Reopen a saved model. Refuses a partial save, and refuses a model

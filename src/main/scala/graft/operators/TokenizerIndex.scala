@@ -471,18 +471,17 @@ object TokenizerIndex {
 
   // ---- persistence (the artifact contract, [[Artifact]]) ----
 
-  /** Persist the artifact: merge table + vocab frame, bracketed by the
-    * same completion marker as [[AnnIndex.save]] (complete=false lands
-    * first, true last) so a crash mid-save can never be mistaken for a
-    * loadable tokenizer.
+  /** Persist the artifact: merge table + vocab frame, as one commit
+    * ([[Artifact.save]]), so a crash mid-save can never be mistaken for
+    * a loadable tokenizer.
     */
   def save(learned: Learned, path: String): Unit = {
     val spark = learned.vocab.sparkSession
-    Artifact.save(spark, path) {
-      learned.mergesDf(spark).write.mode("overwrite").parquet(s"$path/merges")
-      learned.vocab.write.mode("overwrite").parquet(s"$path/vocab")
+    Artifact.save(spark, path) { dir =>
+      learned.mergesDf(spark).write.mode("overwrite").parquet(s"$dir/merges")
+      learned.vocab.write.mode("overwrite").parquet(s"$dir/vocab")
       spark.range(0L, 1L, 1L, 1).select(lit(learned.base).as("base"))
-        .write.mode("overwrite").parquet(s"$path/config")
+        .write.mode("overwrite").parquet(s"$dir/config")
     }
   }
 

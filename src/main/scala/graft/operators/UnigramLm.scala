@@ -315,19 +315,19 @@ object UnigramLm {
   // ---- persistence (the artifact contract, [[Artifact]]) ----
 
   /** Persist pieces + vocabulary segmentations + the config that makes
-    * them meaningful, marker-bracketed.
+    * them meaningful, as one commit ([[Artifact.save]]).
     */
   def save(spark: SparkSession, model: Model, path: String): Unit = {
     import spark.implicits._
-    Artifact.save(spark, path) {
+    Artifact.save(spark, path) { dir =>
       model.pieces.toDF("piece", "usage", "cost_q16")
-        .write.mode("overwrite").parquet(s"$path/pieces")
+        .write.mode("overwrite").parquet(s"$dir/pieces")
       model.vocab.map { case (w, seg) => (w, seg.mkString(Sep.toString)) }
         .toDF("w", "seg")
-        .write.mode("overwrite").parquet(s"$path/vocab")
+        .write.mode("overwrite").parquet(s"$dir/vocab")
       spark.range(0L, 1L, 1L, 1).select(lit(model.tot).as("tot"), lit(model.v).as("v"),
         lit(MaxPiece).as("max_piece"), lit(Rounds).as("rounds"))
-        .write.mode("overwrite").parquet(s"$path/config")
+        .write.mode("overwrite").parquet(s"$dir/config")
     }
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Checkpoints
-import graft.operators.{Commits, IndexFs}
+import graft.operators.Commits
 
 /** Sink abstractions (SURVEY.md §4): the write-side twin of the
   * reference's `ModelBaseSink.send_item` / dump-id idempotency contract
@@ -172,15 +172,13 @@ trait SinkLog {
   * or whole and marked (its retry appends nothing); only a reader that
   * goes around `log` can see a half-moved dump before the next open.
   * Earlier builds compacted by swapping a `path.staged` copy in through
-  * `path.old`; opens still repair such a swap ([[graft.operators.IndexFs]]):
-  * a read only when the live log is missing, and never deleting; a
-  * write ([[appendIdempotent]], [[compact]]) also drops the debris.
+  * `path.old`; opens still repair such a swap ([[repairSwap]]).
   *
   * A log written before the manifest existed has no `_manifest`; the
   * first write to it marks the log's dump_ids from one scan, so its
   * earlier dumps stay replay-safe.
   *
-  * ASSUMES atomic rename, like `IndexFs`: an object-store deployment
+  * ASSUMES atomic rename ([[Commits]]): an object-store deployment
   * wants a table format's commit protocol instead. Commits of one log
   * are serialized per JVM, so one process writes a log; readers may
   * live in any process.
@@ -190,7 +188,7 @@ final case class ParquetSink(path: String) extends SinkLog {
   private def root = new Path(path)
   private def manifest = new Path(root, Commits.ManifestDir)
 
-  private def fsOf(spark: SparkSession): FileSystem = IndexFs.hfs(spark, path)._1
+  private def fsOf(spark: SparkSession): FileSystem = Commits.hfs(spark, path)._1
 
   protected def exists(spark: SparkSession): Boolean = {
     val fs = fsOf(spark)
@@ -253,13 +251,27 @@ final case class ParquetSink(path: String) extends SinkLog {
     */
   private def recover(spark: SparkSession, fs: FileSystem, writer: Boolean): Unit =
     Commits.lockOf(fs, root).synchronized {
-      // an earlier build wrote `_COMPACTED` last into its compaction copy
-      IndexFs.recoverSwap(spark, path,
-        fs.exists(new Path(IndexFs.stagedPath(path), "_COMPACTED")))
-      if (writer) IndexFs.dropSwapDebris(spark, path)
+      repairSwap(fs, writer)
       Commits.recover(fs, root)
       if (writer && fs.exists(root) && !fs.exists(manifest)) markHistory(spark, fs)
     }
+
+  /** Repair a compaction swap an earlier build left interrupted. With the
+    * live log missing: promote the staged copy when it is complete (that
+    * build wrote `_COMPACTED` last into it), else restore the displaced
+    * log, then drop both siblings. Beside a live log, only a writer
+    * drops them — for a reader the staged copy may be a rewrite another
+    * process is still writing.
+    */
+  private def repairSwap(fs: FileSystem, writer: Boolean): Unit = {
+    val (staged, old) = (new Path(path + ".staged"), new Path(path + ".old"))
+    val missing = !fs.exists(root)
+    if (missing) {
+      if (fs.exists(new Path(staged, "_COMPACTED"))) fs.rename(staged, root)
+      else if (fs.exists(old)) fs.rename(old, root)
+    }
+    if ((missing || writer) && fs.exists(root)) { fs.delete(staged, true); fs.delete(old, true) }
+  }
 
   /** Build the manifest of a log written before manifests existed, from
     * one scan of its dump_ids. The markers are written aside and renamed

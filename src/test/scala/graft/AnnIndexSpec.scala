@@ -188,6 +188,24 @@ class AnnIndexSpec extends SparkSpec {
       "the appended batch must be probeable")
   }
 
+  test("rows an ingest cached over a saved path do not outlive an append: " +
+      "two appends of one batch land it once") {
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("graft_anncache").toString + "/index"
+    AnnIndex.save(AnnIndex.build(vecs(10L -> unit(0))), dir)
+    val batch = vecs(20L -> unit(7))
+    val (probed, folded) = AnnIndex.ingest(AnnIndex.load(spark, dir), batch)
+    try {
+      probed.collect(); folded.vectors.collect()
+      AnnIndex.append(dir, batch)
+      AnnIndex.append(dir, batch)
+      val idx = AnnIndex.load(spark, dir)
+      assert(idx.vectors.count() == 2, "the batch grows the vectors once")
+      assert(idx.buckets.groupBy("vec_id", "tbl", "bucket").count()
+        .filter(col("count") > 1).isEmpty, "no bucket row repeats")
+    } finally Caches.releaseScope()
+  }
+
   test("retire: probes never return a retired id; replayed retire is a no-op") {
     import spark.implicits._
     val index = AnnIndex.build(
@@ -225,16 +243,15 @@ class AnnIndexSpec extends SparkSpec {
     import org.apache.spark.sql.functions.lit
     val dir = Files.createTempDirectory("graft_annpart").toString + "/index"
     AnnIndex.save(AnnIndex.build(vecs(10L -> unit(0))), dir)
-    // simulate a crash inside the save bracket: the first thing save
-    // writes is complete=false, and nothing reset it to true
+    // an earlier build's torn in-place save: the first thing it wrote
+    // was complete=false, and nothing reset it to true
     spark.range(1).select(lit(false).as("complete"))
       .write.mode("overwrite").parquet(s"$dir/complete")
     val e = intercept[IllegalStateException] { AnnIndex.load(spark, dir) }
     assert(e.getMessage.contains("partial save"))
   }
 
-  test("pre-r9 layout (no geometry, no marker) still loads at default geometry") {
-    import graft.operators.AnnOps
+  test("a pre-marker layout (no geometry, no marker) is refused") {
     val dir = Files.createTempDirectory("graft_annold").toString + "/index"
     AnnIndex.save(AnnIndex.build(vecs(10L -> unit(0), 11L -> unit(7))), dir)
     def rmrf(f: java.io.File): Unit = {
@@ -242,10 +259,8 @@ class AnnIndexSpec extends SparkSpec {
     }
     rmrf(new java.io.File(s"$dir/geometry"))
     rmrf(new java.io.File(s"$dir/complete"))
-    val reloaded = AnnIndex.load(spark, dir)
-    assert(reloaded.geometry == AnnOps.LshGeometry.default)
-    val r = AnnIndex.probe(reloaded, vecs(99L -> unit(0))).collect()
-    assert(r.nonEmpty && r.head.getLong(2) == 10L)
+    val e = intercept[IllegalStateException] { AnnIndex.load(spark, dir) }
+    assert(e.getMessage.contains("no completion marker"), e.getMessage)
   }
 
   test("compact bounds the file count; probes identical before/after; idempotent") {

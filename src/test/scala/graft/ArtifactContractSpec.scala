@@ -56,22 +56,31 @@ class ArtifactContractSpec extends SparkSpec {
     }
   }
 
-  test("the save bracket leaves the op's incomplete marker when a write " +
-      "fails, and closes it only after every write") {
-    val d = dir("bracket")
-    intercept[RuntimeException] {
-      Artifact.save(spark, d) { throw new RuntimeException("crash") }
-    }
-    val e = intercept[IllegalStateException](Artifact.open(spark, d, "Thing"))
-    assert(e.getMessage.contains("partial save"), e.getMessage)
-    Artifact.save(spark, d) {
+  test("a save lands its writes in one commit; one whose write fails " +
+      "leaves the previous artifact and nothing staged") {
+    val d = dir("commit")
+    def save(a: Long, b: Long): Unit = Artifact.save(spark, d) { staged =>
       Artifact.inParallel(
-        () => spark.range(3).write.mode("overwrite").parquet(s"$d/a"),
-        () => spark.range(5).write.mode("overwrite").parquet(s"$d/b"))
+        () => spark.range(a).write.parquet(s"$staged/a"),
+        () => spark.range(b).write.parquet(s"$staged/b"))
     }
-    Artifact.open(spark, d, "Thing")
-    assert(spark.read.parquet(s"$d/a").count() == 3 &&
-      spark.read.parquet(s"$d/b").count() == 5)
+    def counts = {
+      Artifact.open(spark, d, "Thing")
+      (spark.read.parquet(s"$d/a").count(), spark.read.parquet(s"$d/b").count())
+    }
+    save(3, 5)
+    assert(counts == ((3L, 5L)))
+    intercept[RuntimeException] {
+      Artifact.save(spark, d) { staged =>
+        spark.range(7).write.parquet(s"$staged/a")
+        throw new RuntimeException("crash")
+      }
+    }
+    assert(counts == ((3L, 5L)), "the previous artifact serves")
+    assert(Files.list(java.nio.file.Paths.get(d + ".pending")).count() == 0,
+      "nothing is left staged")
+    save(4, 6)
+    assert(counts == ((4L, 6L)), "a save over an artifact replaces its frames")
     val failed = intercept[IllegalStateException] {
       Artifact.inParallel(() => (), () => throw new IllegalStateException("w"))
     }

@@ -190,9 +190,8 @@ class DedupIndexSpec extends SparkSpec {
     import org.apache.spark.sql.functions.lit
     val dir = Files.createTempDirectory("graft_lshpart").toString + "/index"
     DedupIndex.save(DedupIndex.build(docs(0L -> base)), dir)
-    // simulate a crash inside any mutation bracket (save, append, or
-    // the in-place retire rewrite): the first thing each writes is
-    // complete=false, and nothing reset it to true
+    // an earlier build's torn in-place save: the first thing it wrote
+    // was complete=false, and nothing reset it to true
     spark.range(1).select(lit(false).as("complete"))
       .write.mode("overwrite").parquet(s"$dir/complete")
     val e = intercept[IllegalStateException] { DedupIndex.load(spark, dir) }
@@ -212,8 +211,9 @@ class DedupIndexSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_lshcrash").toString + "/index"
     val full = DedupIndex.build(docs(0L -> base, 1L -> other))
     DedupIndex.save(full, dir)
-    // simulate retire(path) dying between its complete=false and the
-    // band rewrite: marker false, band dirs half-gone
+    // an earlier build's in-place retire dying between its
+    // complete=false and the band rewrite: marker false, band dirs
+    // half-gone
     spark.range(1).select(org.apache.spark.sql.functions.lit(false)
       .as("complete")).write.mode("overwrite").parquet(s"$dir/complete")
     def rmrf(f: java.io.File): Unit = {

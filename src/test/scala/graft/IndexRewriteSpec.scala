@@ -14,33 +14,28 @@ import org.apache.spark.sql.functions.{col, lit, udf}
 import graft.operators._
 
 /** Fault hook of the spec's retirement and append frames: the ids UDF
-  * runs it on every evaluation that happens once the rewrite's staged
-  * copy exists, i.e. while the staged copy is being written, and on
-  * every evaluation of an appended batch.
+  * runs it on every evaluation that happens once a commit's staging
+  * exists, i.e. while a rewrite stages its frames, and on every
+  * evaluation of an appended batch.
   */
 object RewriteFault {
   @volatile var action: () => Unit = () => ()
 }
 
-/** The two in-place writes of the saved indexes, pinned once for every
-  * index that retires, compacts or appends to a saved path.
-  *
-  * The rewrite ([[Artifact.replace]]):
-  *  - a rewrite that dies after opening its staged copy leaves the
-  *    previous index loadable and probe-identical;
-  *  - an open beside an intact live directory leaves the staged copy in
-  *    place (it may be a rewrite another thread is still writing), also
-  *    while that rewrite runs;
-  *  - the next rewrite drops the debris and lands.
-  *
-  * The append, one commit of the sink log's protocol ([[Artifact.append]],
-  * faults injected through the batch's ids UDF and [[Commits.failpoint]]):
-  *  - a crash before the commit record leaves the previous index, and
-  *    the next write leaves no staging behind;
-  *  - from the record on, the next load finishes the commit;
-  *  - either way the index ends equal to a clean append, and a replay
-  *    of the batch leaves every frame's rows unchanged;
-  *  - an append and a retire of one path both land, in turn.
+/** Every write to a saved index is one commit ([[Commits]]): a save over
+  * it, a retire, a compact ([[Artifact.save]]) and an append
+  * ([[Artifact.append]]), pinned once for every index that retires,
+  * compacts or appends to a saved path, and for LmIndex's merge append.
+  * Faults are injected through the frames' ids UDF and
+  * [[Commits.failpoint]]:
+  *  - a write that dies while staging, or once staged, leaves the
+  *    previous index, probe-identical, and nothing pending; a load
+  *    beside a staging leaves it, and the next write drops what a dead
+  *    writer staged;
+  *  - from the commit record on, the next load finishes the commit and
+  *    equals the clean write;
+  *  - a replayed append leaves every frame's rows unchanged;
+  *  - writes of one path land in turn.
   */
 class IndexRewriteSpec extends SparkSpec {
 
@@ -55,15 +50,17 @@ class IndexRewriteSpec extends SparkSpec {
   // never probed: retiring both probed documents leaves a non-empty index
   private val textC = (1 to 40).map(i => s"unp$i").mkString(" ")
 
-  /** One rewrite-capable index: save a fresh one at a path, probe the
-    * saved one (`hit` names the column holding indexed ids), retire ids
-    * (`id` names their column) and compact, both on the saved path.
+  /** One rewrite-capable index: save a fresh one at a path, save over
+    * a saved one its own loaded frames less some ids (`resave`), probe
+    * the saved one (`hit` names the column holding indexed ids), retire
+    * ids (`id` names their column) and compact, both on the saved path.
     */
   private final case class Rewritable(
       name: String,
       id: String,
       hit: String,
       save: String => Unit,
+      resave: (String, DataFrame) => Unit,
       probe: String => DataFrame,
       retire: (String, DataFrame) => Unit,
       compact: Option[String => Unit],
@@ -84,24 +81,28 @@ class IndexRewriteSpec extends SparkSpec {
   private val indexes = Seq(
     Rewritable("AnnIndex", "vec_id", "vec_id",
       AnnIndex.save(AnnIndex.build(embeddings), _),
+      (p, ids) => AnnIndex.save(AnnIndex.retire(AnnIndex.load(spark, p), ids), p),
       p => AnnIndex.probe(AnnIndex.load(spark, p), queries),
       AnnIndex.retire, Some(AnnIndex.compact(_, 2)),
       AnnIndex.append, newVecs,
       p => { val i = AnnIndex.load(spark, p); Seq(i.buckets, i.vectors) }),
     Rewritable("PqIndex", "vec_id", "vec_id",
       PqIndex.save(PqIndex.build(embeddings), _),
+      (p, ids) => PqIndex.save(PqIndex.retire(PqIndex.load(spark, p), ids), p),
       p => PqIndex.probe(PqIndex.load(spark, p), queries),
       PqIndex.retire, Some(PqIndex.compact(_, 2)),
       PqIndex.append, newVecs,
       p => { val i = PqIndex.load(spark, p); Seq(i.codes, i.vectors) }),
     Rewritable("IvfPqIndex", "vec_id", "vec_id",
       IvfPqIndex.save(IvfPqIndex.build(embeddings), _),
+      (p, ids) => IvfPqIndex.save(IvfPqIndex.retire(IvfPqIndex.load(spark, p), ids), p),
       p => IvfPqIndex.probe(IvfPqIndex.load(spark, p), queries),
       IvfPqIndex.retire, Some(IvfPqIndex.compact(_, 2)),
       IvfPqIndex.append, newVecs,
       p => { val i = IvfPqIndex.load(spark, p); Seq(i.codes, i.vectors) }),
     Rewritable("DedupIndex", "doc_id", "first_id",
       DedupIndex.save(DedupIndex.build(docs(0L -> textA, 1L -> textB, 2L -> textC)), _),
+      (p, ids) => DedupIndex.save(DedupIndex.retire(DedupIndex.load(spark, p), ids), p),
       p => DedupIndex.probe(DedupIndex.load(spark, p),
         docs(9L -> textA, 8L -> textB)),
       DedupIndex.retire, Some(DedupIndex.compact(_, 2)),
@@ -109,6 +110,7 @@ class IndexRewriteSpec extends SparkSpec {
       p => Seq(DedupIndex.load(spark, p))),
     Rewritable("KnnIndex", "vec_id", "nbr_id",
       KnnIndex.save(KnnIndex.build(embeddings), _),
+      (p, ids) => KnnIndex.save(KnnIndex.retire(KnnIndex.load(spark, p), ids), p),
       p => KnnIndex.neighbors(KnnIndex.load(spark, p)),
       KnnIndex.retire, None,
       KnnIndex.append, newVecs,
@@ -127,23 +129,27 @@ class IndexRewriteSpec extends SparkSpec {
   private def hits(ix: Rewritable, path: String): Set[Long] =
     ix.probe(path).select(ix.hit).collect().map(_.getLong(0)).toSet
 
-  private def staged(path: String): Boolean =
-    Files.exists(Paths.get(IndexFs.stagedPath(path)))
+  /** Some commit of `path` is staged, or a dead writer's staging is left. */
+  private def staging(path: String): Boolean =
+    Option(new java.io.File(path + ".pending").list()).exists(_.nonEmpty)
 
-  /** The staged copy is still the one the rewrite opened: its marker,
-    * the first thing the rewrite wrote, is there.
-    */
-  private def stagedIntact(path: String): Boolean =
-    Files.exists(Paths.get(IndexFs.stagedPath(path), "complete"))
+  /** `attempt` failed with the injected fault, however Spark wrapped it. */
+  private def injected(attempt: Try[Unit]): Boolean =
+    attempt.failed.toOption.exists(e =>
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("injected"))))
+
+  /** Nothing staged or recorded is left beside `path`. */
+  private def nothingPending(path: String): Boolean = !staging(path)
 
   /** A one-row retirement frame whose ids UDF runs [[RewriteFault]]
-    * once the staged copy of `path` exists. Nondeterministic, so it is
+    * while a commit of `path` stages. Nondeterministic, so it is
     * evaluated where the rewrite reads it, never folded or reused.
     */
   private def faulty(ix: Rewritable, path: String, victim: Long): DataFrame = {
-    val stagedDir = IndexFs.stagedPath(path)
+    val pending = new java.io.File(path + ".pending")
     val gate = udf { (id: Long) =>
-      if (Files.exists(Paths.get(stagedDir))) RewriteFault.action()
+      if (Option(pending.list()).exists(_.nonEmpty)) RewriteFault.action()
       id
     }.asNondeterministic()
     spark.range(1).select(gate(lit(victim)).as(ix.id))
@@ -160,8 +166,10 @@ class IndexRewriteSpec extends SparkSpec {
   private def ids(ix: Rewritable, victim: Long): DataFrame =
     spark.range(1).select(lit(victim).as(ix.id))
 
-  /** One saved index per kind, built once; tests write to copies. */
-  private val built = scala.collection.mutable.Map[String, String]()
+  /** One saved index per kind, built once with its probe rows and one id
+    * its probe returns; tests write to copies.
+    */
+  private val built = scala.collection.mutable.Map[String, (String, Set[Seq[Any]], Long)]()
 
   private def copyOf(path: String): String = {
     val copy = Files.createTempDirectory("graft_rewrite").toString + "/index"
@@ -171,14 +179,16 @@ class IndexRewriteSpec extends SparkSpec {
 
   /** A saved index, its probe rows and one id its probe returns. */
   private def saved(ix: Rewritable): (String, Set[Seq[Any]], Long) = {
-    val path = copyOf(built.getOrElseUpdate(ix.name, {
+    val (path, before, victim) = built.getOrElseUpdate(ix.name, {
       val p = Files.createTempDirectory("graft_rewrite").toString + "/index"
       ix.save(p)
-      p
-    }))
-    val before = rows(ix.probe(path))
-    (path, before, hits(ix, path).min)
+      (p, rows(ix.probe(p)), hits(ix, p).min)
+    })
+    (copyOf(path), before, victim)
   }
+
+  /** Each frame's multisets of the saved index, once per kind. */
+  private val savedSets = scala.collection.mutable.Map[String, Seq[Map[Seq[Any], Int]]]()
 
   /** Runs [[RewriteFault]] on every evaluation of an appended batch. */
   private val appendGate: Column => Column = {
@@ -186,8 +196,8 @@ class IndexRewriteSpec extends SparkSpec {
     c => gate(c)
   }
 
-  /** Run `body` with a crash injected the first time an append of
-    * `path` passes commit step `step`.
+  /** Run `body` with a crash injected the first time a write of `path`
+    * passes commit step `step`.
     */
   private def crashingAt(path: String, step: String)(body: => Unit): Try[Unit] = {
     val root = new org.apache.hadoop.fs.Path(path).toString
@@ -198,11 +208,13 @@ class IndexRewriteSpec extends SparkSpec {
     try Try(body) finally Commits.failpoint = (_, _) => ()
   }
 
-  /** Nothing staged or recorded is left beside `path`. */
-  private def nothingPending(path: String): Boolean = {
-    val pending = Paths.get(path + ".pending")
-    !Files.exists(pending) || Files.list(pending).count() == 0
-  }
+  /** The commit steps a crash is injected after: "staged" is before the
+    * record, the others after it.
+    */
+  private val steps = Seq("staged", "recorded", "moved", "removed")
+
+  /** Each frame's multisets after a clean write, once per (index, write). */
+  private val clean = scala.collection.mutable.Map[(String, String), Seq[Map[Seq[Any], Int]]]()
 
   indexes.foreach { ix =>
     test(s"${ix.name}: a rewrite that dies in its staged copy leaves the " +
@@ -212,21 +224,22 @@ class IndexRewriteSpec extends SparkSpec {
       val attempt =
         try Try(ix.retire(path, faulty(ix, path, victim)))
         finally RewriteFault.action = () => ()
-      val reloaded = rows(ix.probe(path))
-      assert(stagedIntact(path),
-        "a load beside the live index must leave the staged copy in place")
-      assert(attempt.isFailure, "the injected fault must fail the rewrite")
-      assert(reloaded == before, "the previous index must serve unchanged")
+      assert(injected(attempt), s"the injected fault must fail the rewrite: $attempt")
+      assert(nothingPending(path), "a rewrite that throws drops its staging")
+      // a writer that dies with its process leaves its staging: the
+      // live index copied under a commit id no record names
+      copyTree(Paths.get(path), Paths.get(path + ".pending", "dead-writer"))
+      assert(rows(ix.probe(path)) == before, "the previous index must serve unchanged")
+      assert(staging(path), "a load must leave the staging in place")
 
       ix.retire(path, ids(ix, victim))
-      assert(!staged(path), "the next retire drops the debris")
+      assert(nothingPending(path), "the next retire drops the debris")
       assert(!hits(ix, path).contains(victim), "the retire must land")
       ix.compact.foreach { compact =>
         val retired = rows(ix.probe(path))
         compact(path)
         assert(rows(ix.probe(path)) == retired, "compaction is probe-invisible")
-        assert(!staged(path) &&
-          !Files.exists(Paths.get(path + ".old")), "a swap leaves no siblings")
+        assert(nothingPending(path), "a commit leaves nothing pending")
       }
     }
 
@@ -249,14 +262,14 @@ class IndexRewriteSpec extends SparkSpec {
       try {
         assert(writing.await(1, TimeUnit.MINUTES), "the retire never reached its staged copy")
         assert(rows(ix.probe(path)) == before, "a load mid-rewrite serves the previous index")
-        assert(stagedIntact(path), "a load must not remove a rewrite in progress")
+        assert(staging(path), "a load must not remove a rewrite in progress")
       } finally {
         release.countDown()
         Try(Await.result(retire, 5.minutes))
         RewriteFault.action = () => ()
       }
       Await.result(retire, 1.second)
-      assert(!staged(path) && !hits(ix, path).contains(victim),
+      assert(nothingPending(path) && !hits(ix, path).contains(victim),
         "the rewrite lands whole after the concurrent load")
     }
 
@@ -298,8 +311,52 @@ class IndexRewriteSpec extends SparkSpec {
       }
       Await.result(first, 1.second)
       second.get
-      assert(!staged(path), "both rewrites swapped in")
+      assert(nothingPending(path), "both rewrites committed")
       assert(rows(ix.probe(path)) == inTurn, "the second retire starts from the first's result")
+    }
+
+    // a save over the index, a retire and a compact, each crashed after
+    // every commit step
+    val rewrites: Seq[(String, (String, Long) => Unit)] = Seq(
+      "save over the index" -> ((p: String, v: Long) => ix.resave(p, ids(ix, v))),
+      "retire" -> ((p: String, v: Long) => ix.retire(p, ids(ix, v)))) ++
+      ix.compact.map(c => "compact" -> ((p: String, _: Long) => c(p)))
+    for ((op, write) <- rewrites; step <- steps) {
+      val recorded = step != "staged"
+      test(s"${ix.name}: a crash after '$step' in a $op: " +
+          (if (recorded) "the next load equals the clean rewrite"
+           else "the previous index serves, nothing pending")) {
+        val (path, before, victim) = saved(ix)
+        val want = clean.getOrElseUpdate((ix.name, op), {
+          val copy = copyOf(path)
+          write(copy, victim)
+          multisets(ix, copy)
+        })
+        val was = savedSets.getOrElseUpdate(ix.name, multisets(ix, path))
+        val attempt = crashingAt(path, step)(write(path, victim))
+        assert(injected(attempt), s"the injected crash must fail the write: $attempt")
+        if (recorded) assert(multisets(ix, path) == want, "the next load finishes the commit")
+        else {
+          assert(rows(ix.probe(path)) == before && multisets(ix, path) == was,
+            "before the record the previous index serves")
+          assert(nothingPending(path), "nothing is left pending")
+        }
+        assert(nothingPending(path))
+      }
+    }
+
+    test(s"${ix.name}: a save over the index whose write throws mid-frame " +
+        "leaves the previous index serving") {
+      val (path, before, victim) = saved(ix)
+      val was = savedSets.getOrElseUpdate(ix.name, multisets(ix, path))
+      RewriteFault.action = () => throw new IllegalStateException("injected fault")
+      val attempt =
+        try Try(ix.resave(path, faulty(ix, path, victim)))
+        finally RewriteFault.action = () => ()
+      assert(injected(attempt), s"the injected fault must fail the save: $attempt")
+      assert(rows(ix.probe(path)) == before && multisets(ix, path) == was,
+        "the previous index serves")
+      assert(nothingPending(path))
     }
 
     // a crash while the batch stages, then after each commit step; only
@@ -321,7 +378,7 @@ class IndexRewriteSpec extends SparkSpec {
             try Try(ix.append(path, ix.batch(appendGate)))
             finally RewriteFault.action = () => ()
           } else crashingAt(path, step)(ix.append(path, ix.batch(identity)))
-        assert(attempt.isFailure, "the injected crash must fail the append")
+        assert(injected(attempt), s"the injected crash must fail the append: $attempt")
         if (!recorded) {
           assert(rows(ix.probe(path)) == before, "before the record the previous index serves")
           ix.append(path, ix.batch(identity))
@@ -388,5 +445,62 @@ class IndexRewriteSpec extends SparkSpec {
     DedupIndex.save(DedupIndex.build(all), fresh)
     val got = rows(DedupIndex.probe(DedupIndex.load(spark, path), q))
     assert(got.nonEmpty && got == rows(DedupIndex.probe(DedupIndex.load(spark, fresh), q)))
+  }
+
+  test("DedupIndex: retiring every document then compacting leaves an " +
+      "index that loads and probes empty") {
+    val all = docs(0L -> textA, 1L -> textB, 2L -> textC)
+    val path = Files.createTempDirectory("graft_rewrite").toString + "/index"
+    DedupIndex.save(DedupIndex.build(all), path)
+    DedupIndex.retire(path, all.select("doc_id"))
+    DedupIndex.compact(path, 2)
+    assert(DedupIndex.load(spark, path).isEmpty)
+    assert(DedupIndex.probe(DedupIndex.load(spark, path), docs(9L -> textA)).isEmpty)
+  }
+
+  test("DedupIndex: an index built from zero documents saves and loads") {
+    val path = Files.createTempDirectory("graft_rewrite").toString + "/index"
+    DedupIndex.save(DedupIndex.build(docs(0L -> textA).filter(lit(false))), path)
+    assert(DedupIndex.load(spark, path).isEmpty)
+    DedupIndex.append(path, docs(0L -> textA))
+    assert(rows(DedupIndex.probe(DedupIndex.load(spark, path), docs(9L -> textA)))
+      .map(_.take(2)) == Set(Seq(0L, 9L)))
+  }
+
+  // LmIndex's append merges into a rewrite of the whole model
+  private def lmFrames(path: String): Seq[Set[Seq[Any]]] = {
+    val m = LmIndex.load(spark, path)
+    Seq(rows(m.bigrams), rows(m.vocab))
+  }
+
+  private lazy val lmSaved: String = {
+    val p = Files.createTempDirectory("graft_rewrite").toString + "/model"
+    LmIndex.save(spark, LmIndex.train(Tables.documents(spark, sf).filter(col("doc_id") % 2 === 0)), p)
+    p
+  }
+
+  /** The saved model's frames, and those after a clean append. */
+  private lazy val lmExpected: (Seq[Set[Seq[Any]]], Seq[Set[Seq[Any]]]) = {
+    val copy = copyOf(lmSaved)
+    val was = lmFrames(copy)
+    lmAppend(copy)
+    (was, lmFrames(copy))
+  }
+
+  private def lmAppend(path: String): Unit =
+    LmIndex.append(spark, path, Tables.documents(spark, sf).filter(col("doc_id") % 2 === 1))
+
+  steps.foreach { step =>
+    val recorded = step != "staged"
+    test(s"LmIndex: an append crash after '$step': " +
+        (if (recorded) "the next load equals the clean merge"
+         else "the previous model serves, nothing pending")) {
+      val path = copyOf(lmSaved)
+      val (was, want) = lmExpected
+      val attempt = crashingAt(path, step)(lmAppend(path))
+      assert(injected(attempt), s"the injected crash must fail the append: $attempt")
+      assert(lmFrames(path) == (if (recorded) want else was))
+      assert(nothingPending(path))
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -168,56 +168,24 @@ class IvfPqIndexSpec extends SparkSpec {
     }
     assert(probeRows(IvfPqIndex.probe(compacted, q)) == afterRetire,
       "compaction must be probe-invisible")
-    // a completed swap leaves no sibling debris
-    val parent = new java.io.File(dir).getParentFile
-    assert(!new java.io.File(parent, "index.staged").exists() &&
-      !new java.io.File(parent, "index.old").exists(),
-      "swap must clean up its staged/old siblings")
+    // a finished commit leaves nothing staged
+    assert(Option(new java.io.File(dir + ".pending").listFiles()).forall(_.isEmpty),
+      "a commit must drop its staging")
   }
 
-  test("an interrupted retire/compact swap always leaves a COMPLETE " +
-      "index: load promotes a finished staged copy, restores a " +
-      "displaced live copy, and rolls back a torn staged copy") {
-    import org.apache.hadoop.fs.Path
+  test("an index an earlier build left mid-swap is refused; its " +
+      "siblings are never read or deleted") {
     val dir = Files.createTempDirectory("graft_ivfpq5").toString + "/index"
     IvfPqIndex.save(IvfPqIndex.build(corpus.filter(col("vec_id") < 400)), dir)
-    val q = corpus.filter(col("vec_id") < 8)
-    val before = probeRows(IvfPqIndex.probe(IvfPqIndex.load(spark, dir), q))
-    val fs = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // window A: staged sibling fully written, live dir displaced, crash
-    // before the promotion rename — load must finish the swap
-    IvfPqIndex.save(IvfPqIndex.load(spark, dir), dir + ".staged")
-    assert(fs.rename(new Path(dir), new Path(dir + ".old")))
-    val promoted = probeRows(IvfPqIndex.probe(IvfPqIndex.load(spark, dir), q))
-    assert(promoted == before, "recovered swap must serve the staged copy")
-    assert(!fs.exists(new Path(dir + ".staged")) &&
-      !fs.exists(new Path(dir + ".old")), "recovery must clear siblings")
-    // window B: staged copy TORN (its save died mid-write), live intact —
-    // load serves the untouched live index and leaves the staged copy
-    // (beside a live index it may be a rewrite still being written);
-    // the next write drops it
-    IvfPqIndex.save(IvfPqIndex.load(spark, dir), dir + ".staged")
-    spark.range(1)
-      .select(org.apache.spark.sql.functions.lit(false).as("complete"),
-        org.apache.spark.sql.functions.lit("save").as("op"))
-      .write.mode("overwrite").parquet(s"$dir.staged/complete")
-    assert(probeRows(IvfPqIndex.probe(IvfPqIndex.load(spark, dir), q))
-      == before, "torn staged copy must roll back to the live index")
-    assert(fs.exists(new Path(dir + ".staged")), "a load must not delete it")
-    IvfPqIndex.compact(dir)
-    assert(!fs.exists(new Path(dir + ".staged")), "the next write drops it")
-    assert(probeRows(IvfPqIndex.probe(IvfPqIndex.load(spark, dir), q))
-      == before)
-    // window C: live displaced AND staged torn — load restores the
-    // displaced previous index rather than promoting garbage
-    IvfPqIndex.save(IvfPqIndex.load(spark, dir), dir + ".staged")
-    spark.range(1)
-      .select(org.apache.spark.sql.functions.lit(false).as("complete"),
-        org.apache.spark.sql.functions.lit("save").as("op"))
-      .write.mode("overwrite").parquet(s"$dir.staged/complete")
-    assert(fs.rename(new Path(dir), new Path(dir + ".old")))
-    assert(probeRows(IvfPqIndex.probe(IvfPqIndex.load(spark, dir), q))
-      == before, "displaced live index must be restored")
+    // that build's swap, between its two renames: the live index
+    // displaced to .old, a complete staged copy not yet promoted
+    val live = Paths.get(dir)
+    Files.walk(live).forEach(p =>
+      Files.copy(p, Paths.get(dir + ".staged").resolve(live.relativize(p))))
+    Files.move(live, Paths.get(dir + ".old"))
+    val e = intercept[IllegalStateException] { IvfPqIndex.load(spark, dir) }
+    assert(e.getMessage.contains("no completion marker"), e.getMessage)
+    assert(Files.exists(Paths.get(dir + ".staged")) && Files.exists(Paths.get(dir + ".old")),
+      "a load must leave both siblings")
   }
 }

@@ -48,7 +48,7 @@ class KnnIndexSpec extends SparkSpec {
     val index = KnnIndex.build(
       Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding")))
     KnnIndex.save(index, dir)
-    // simulate a crash mid-save: the marker never flipped back
+    // an earlier build's torn in-place save: the marker never flipped back
     spark.range(1)
       .select(lit(false).as("complete"), lit("save").as("op"))
       .write.mode("overwrite").parquet(s"$dir/complete")

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -208,56 +208,39 @@ class LmIndexSpec extends SparkSpec {
     spark.read.parquet(s"$dir/bigrams")
       .agg(countDistinct(col("w2")).as("v"))
       .write.mode("overwrite").parquet(s"$dir/vocab")
-    // uncommitted append debris: the next load serves the intact live
-    // model and leaves the torn staged sibling (beside a live model it
-    // may be an append still being written); the next append drops it
-    LmIndex.save(spark, ref, dir + ".staged")
-    spark.range(1).select(lit(false).as("complete"))
-      .write.mode("overwrite").parquet(s"$dir.staged/complete")
-    val recovered = LmIndex.load(spark, dir)
-    assert(recovered.bigrams.count() == before,
+    // an append that dies once its merge is staged: the next load
+    // serves the intact live model and nothing is left staged; the
+    // next append lands
+    val root = new org.apache.hadoop.fs.Path(dir).toString
+    graft.operators.Commits.failpoint = (p, s) =>
+      if (p == root && s == "staged") throw new IllegalStateException("injected crash")
+    try intercept[IllegalStateException] {
+      LmIndex.append(spark, dir, docs.filter(col("doc_id") % 2 === 1))
+    } finally graft.operators.Commits.failpoint = (_, _) => ()
+    assert(LmIndex.load(spark, dir).bigrams.count() == before,
       "interrupted append must leave the previous complete model")
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stagedDir = new org.apache.hadoop.fs.Path(dir + ".staged")
-    assert(fs.exists(stagedDir), "a load must not delete the staged sibling")
+    assert(Files.list(Paths.get(dir + ".pending")).count() == 0,
+      "an interrupted append leaves nothing staged")
     LmIndex.append(spark, dir, docs.filter(col("doc_id") % 2 === 1))
-    assert(!fs.exists(stagedDir), "the next append drops the staged sibling")
     assert(LmIndex.load(spark, dir).bigrams.count() > before,
       "the next append lands")
     Caches.releaseScope()
   }
 
-  test("an interrupted append swap always leaves a COMPLETE model: " +
-      "load promotes a finished staged copy over a displaced live one, " +
-      "and restores the displaced live copy when the staged one is torn") {
-    import org.apache.hadoop.fs.Path
+  test("a model an earlier build left mid-swap is refused; its " +
+      "siblings are never read or deleted") {
     val dir = tmp("swap")
-    val base = LmIndex.train(docs.filter(col("doc_id") % 2 === 0))
-    val grown = LmIndex.train(docs)
-    LmIndex.save(spark, base, dir)
-    val before = LmIndex.load(spark, dir).bigrams.count()
-    val after = grown.bigrams.count()
-    assert(after > before, "the staged model must be distinguishable")
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // window A: staged copy fully written, live displaced, crash before
-    // the promotion rename — load must finish the swap
-    LmIndex.save(spark, grown, dir + ".staged")
-    assert(fs.rename(new Path(dir), new Path(dir + ".old")))
-    assert(LmIndex.load(spark, dir).bigrams.count() == after,
-      "a complete staged copy must be promoted")
-    assert(!fs.exists(new Path(dir + ".staged")) &&
-      !fs.exists(new Path(dir + ".old")), "recovery must clear siblings")
-    // window C: live displaced AND staged torn — load restores the
-    // displaced previous model rather than promoting a partial one
-    LmIndex.save(spark, base, dir + ".staged")
-    spark.range(1).select(lit(false).as("complete"))
-      .write.mode("overwrite").parquet(s"$dir.staged/complete")
-    assert(fs.rename(new Path(dir), new Path(dir + ".old")))
-    assert(LmIndex.load(spark, dir).bigrams.count() == after,
-      "a torn staged copy must restore the displaced live model")
-    assert(!fs.exists(new Path(dir + ".staged")) &&
-      !fs.exists(new Path(dir + ".old")), "recovery must clear siblings")
+    LmIndex.save(spark, LmIndex.train(docs.filter(col("doc_id") % 2 === 0)), dir)
+    // that build's swap, between its two renames: the live model
+    // displaced to .old, a complete staged copy not yet promoted
+    val live = Paths.get(dir)
+    Files.walk(live).forEach(p =>
+      Files.copy(p, Paths.get(dir + ".staged").resolve(live.relativize(p))))
+    Files.move(live, Paths.get(dir + ".old"))
+    val e = intercept[IllegalStateException] { LmIndex.load(spark, dir) }
+    assert(e.getMessage.contains("no completion marker"), e.getMessage)
+    assert(Files.exists(Paths.get(dir + ".staged")) && Files.exists(Paths.get(dir + ".old")),
+      "a load must leave both siblings")
     Caches.releaseScope()
   }
 

@@ -236,7 +236,7 @@ class TokenizerIndexSpec extends SparkSpec {
     val a = TokenizerIndex.priceDocuments(docs, learned).collect().map(_.toSeq)
     val b = TokenizerIndex.priceDocuments(docs, loaded).collect().map(_.toSeq)
     assert(a.toSeq == b.toSeq && a.nonEmpty)
-    // a crash inside the save bracket leaves complete=false: refuse
+    // an earlier build's torn in-place save left complete=false: refuse
     spark.range(1).select(lit(false).as("complete"))
       .write.mode("overwrite").parquet(s"$dir/complete")
     val e = intercept[IllegalStateException] { TokenizerIndex.load(spark, dir) }
