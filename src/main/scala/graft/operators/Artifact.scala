@@ -1,10 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue,
-  Executors}
-
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
@@ -72,8 +68,8 @@ private[graft] object Artifact {
         .map(f => f.substring(0, f.lastIndexOf('/'))).distinct
     }
 
-  /** The one commit body: under the path's lock, finish a recorded
-    * commit and drop staging no record names (a dead writer's: one JVM
+  /** The one commit body: under the path's lock, recover as a writer
+    * (finish a recorded commit, drop a dead writer's staging: one JVM
     * writes an artifact), then open the staging and stage into it, then
     * commit the record removing the live files of the directories
     * `stage` returns. A crash before the record leaves the artifact as
@@ -85,44 +81,15 @@ private[graft] object Artifact {
       stage: (FileSystem, Path) => Seq[String]): Unit = {
     val (fs, p) = Commits.hfs(spark, path)
     Commits.lockOf(fs, p).synchronized {
-      Commits.recover(fs, p)
-      fs.delete(Commits.pending(p), true)
-      val txn = Commits.newTxn(p)
-      try {
+      Commits.recover(fs, p, writer = true)
+      try Commits.staging(fs, p) { txn =>
         fs.mkdirs(txn)
         val replaced = stage(fs, txn)
         Commits.failpoint(p.toString, "staged")
         Commits.commit(fs, p, txn, Nil, replaced.flatMap(d =>
           Commits.dataFiles(fs, new Path(p, d)).map(d + "/" + _)))
-      } finally {
-        Commits.dropUnrecorded(fs, txn)
-        spark.catalog.refreshByPath(path)
-      }
+      } finally spark.catalog.refreshByPath(path)
     }
-  }
-
-  /** Pool for [[inParallel]]: a constant size, daemon threads that
-    * inherit no thread-locals (a write never runs under the Spark job
-    * properties of whichever caller happened to start its thread).
-    */
-  private val WriteThreads = 4
-  private lazy val writers = ExecutionContext.fromExecutorService(
-    Executors.newFixedThreadPool(WriteThreads, (r: Runnable) => {
-      val t = new Thread(null, r, "graft-artifact-write", 0L, false)
-      t.setDaemon(true)
-      t
-    }))
-
-  /** Run independent writes of one save concurrently and return when
-    * all have finished, then rethrow the first failure — a failed save
-    * leaves no write running behind its caller. The save prices as its
-    * slowest write instead of their sum. Call it inside a [[save]]'s
-    * stage, which the marker and the commit follow.
-    */
-  def inParallel(writes: (() => Unit)*): Unit = {
-    val running = writes.map(w => Future(w())(writers))
-    running.foreach(Await.ready(_, Duration.Inf))
-    running.foreach(Await.result(_, Duration.Inf))
   }
 
   // ---- the open check ----

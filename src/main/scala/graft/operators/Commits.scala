@@ -27,8 +27,9 @@ import org.apache.spark.sql.SparkSession
   * staged files moved in, then the removals deleted, then the staging
   * and the record dropped. Every open rolls forward a record a crash
   * left behind, so a commit is either absent (staging without a record
-  * is dropped) or, after the next open, whole. Commits of one root are
-  * serialized per JVM by [[lockOf]].
+  * is dropped: by its writer, or by the next writer's open once no live
+  * txn owns it) or, after the next open, whole. Commits of one root are
+  * serialized per JVM by [[lockOf]]; staging may run concurrently.
   *
   * ASSUMES atomic rename of files: true on HDFS and local POSIX file
   * systems, NOT on object stores.
@@ -51,15 +52,30 @@ private[graft] object Commits {
 
   def pending(root: Path): Path = new Path(root.toString + ".pending")
 
-  /** A fresh staging directory for one commit to `root`. */
-  def newTxn(root: Path): Path = new Path(pending(root), UUID.randomUUID().toString)
-
   def record(txn: Path): Path = new Path(txn.getParent, txn.getName + ".commit")
 
-  /** Drop `txn`'s staging unless it got a commit record (the next open
-    * rolls a recorded one forward).
+  /** Per qualified root, the txns a writer of this JVM is staging. */
+  private val live = new ConcurrentHashMap[String, java.util.Set[String]]()
+
+  private def liveOf(fs: FileSystem, root: Path): java.util.Set[String] =
+    live.computeIfAbsent(fs.makeQualified(root).toString,
+      _ => ConcurrentHashMap.newKeySet[String]())
+
+  /** Stage one commit to `root`: `body` gets a fresh staging directory
+    * `root.pending/<txn>`, which a writer's [[recover]] leaves alone
+    * while `body` runs. The staging is dropped after it unless it got a
+    * commit record (the next open rolls a recorded one forward).
     */
-  def dropUnrecorded(fs: FileSystem, txn: Path): Unit =
+  def staging[A](fs: FileSystem, root: Path)(body: Path => A): A = {
+    val txn = new Path(pending(root), UUID.randomUUID().toString)
+    val owned = liveOf(fs, root)
+    owned.add(txn.getName)
+    try body(txn)
+    finally { dropUnrecorded(fs, txn); owned.remove(txn.getName) }
+  }
+
+  /** Drop `txn`'s staging unless it got a commit record. */
+  private def dropUnrecorded(fs: FileSystem, txn: Path): Unit =
     if (!fs.exists(record(txn))) fs.delete(txn, true)
 
   def marker(dir: Path, dumpId: String): Path = new Path(dir,
@@ -159,15 +175,19 @@ private[graft] object Commits {
   }
 
   /** Roll forward, in record-name order, every commit record a crash
-    * left behind. One `exists` call when nothing is pending; the lock is
-    * taken only when a record is there.
+    * left behind; then, for a `writer`, drop the staging of writers that
+    * died before their record: every unrecorded entry of `root.pending`
+    * that no txn of this JVM is [[staging]] (one process writes a root).
+    * Readers drop nothing. One `exists` call when nothing is pending; a
+    * reader takes the lock only when a record is there.
     */
-  def recover(fs: FileSystem, root: Path): Unit = {
+  def recover(fs: FileSystem, root: Path, writer: Boolean = false): Unit = {
     val dir = pending(root)
+    def listed = (try fs.listStatus(dir).toSeq catch { case _: FileNotFoundException => Nil })
+      .map(_.getPath)
     if (fs.exists(dir)) {
-      val records = (try fs.listStatus(dir).toSeq catch { case _: FileNotFoundException => Nil })
-        .map(_.getPath).filter(_.getName.endsWith(".commit")).sortBy(_.getName)
-      if (records.nonEmpty) lockOf(fs, root).synchronized {
+      val records = listed.filter(_.getName.endsWith(".commit")).sortBy(_.getName)
+      if (records.nonEmpty || writer) lockOf(fs, root).synchronized {
         records.foreach { rec =>
           // gone if a concurrent open finished it first
           val parsed = try {
@@ -178,6 +198,13 @@ private[graft] object Commits {
           } catch { case _: FileNotFoundException => None }
           parsed.foreach { case (ids, removals) => rollForward(fs, root,
             new Path(dir, rec.getName.stripSuffix(".commit")), ids, removals) }
+        }
+        if (writer) {
+          // list, then look the owners up: a txn registers before it
+          // creates its staging, so every live one listed is owned
+          val owned = liveOf(fs, root)
+          listed.filterNot(e => e.getName.endsWith(".commit") || owned.contains(e.getName))
+            .foreach(dropUnrecorded(fs, _))
         }
       }
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.{Caches, Checkpoints, Tables}
+import graft.{Caches, Checkpoints, DriverPool, Tables}
 import graft.functions.Portable._
 
 /** Persistent k-NN GRAPH artifact (r17, the r16 verdict's ask #4): E14
@@ -162,7 +162,7 @@ object KnnIndex {
     // The three data writes are INDEPENDENT, so they overlap (guide
     // §2.6) — the save prices as the slowest write instead of their
     // sum.
-    Artifact.inParallel(
+    DriverPool.inParallel(index.edges.sparkSession)(
       () => index.vectors.withColumn("cell", col("cell").cast("int"))
         .repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Caches
+import graft.{Caches, DriverPool}
 
 /** Persistent reference bigram-LM artifact — the [[QualityIndex]]
   * pattern applied to C19b/C20's held-out language model. The board
@@ -238,7 +238,7 @@ object LmIndex {
   private def write3(ref: Ref3, dir: String): Unit =
     // the three data writes are independent — overlapped (r20, guide
     // §2.6, the KnnIndex.save recipe)
-    Artifact.inParallel(
+    DriverPool.inParallel(ref.trigrams.sparkSession)(
       () => ref.trigrams.write.mode("overwrite").parquet(s"$dir/trigrams"),
       () => ref.bigrams.write.mode("overwrite").parquet(s"$dir/bigrams"),
       () => ref.vocab.write.mode("overwrite").parquet(s"$dir/vocab"))

@@ -1,11 +1,12 @@
 package graft.sources
 
+import scala.annotation.tailrec
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Checkpoints
+import graft.{Checkpoints, DriverPool}
 
 /** What one backfill run did — the Spark twin of the reference command's
   * submitted/skipped report (`dump_data_to_clickhouse` logs the skipped
@@ -44,6 +45,20 @@ final case class BackfillReport(
   *     Django's Paginator re-sorts and re-skips per page.
   *   - The driver loop touches only batch IDS (count ≈ items/batchSize);
   *     item rows never reach the driver.
+  *   - A run lands its batches concurrently, on the engine's one driver
+  *     pool ([[graft.DriverPool]]): each batch's chain is a few
+  *     latency-bound jobs of few tasks, so batches in flight together
+  *     fill the cores one chain leaves idle. `limit` runs them in waves:
+  *     a wave is the shortest prefix of the remaining batches whose
+  *     counts reach the rest of the limit, and a failed batch counts for
+  *     nothing — exactly the batches a one-at-a-time loop would run.
+  *     Without a limit one wave runs every batch.
+  *
+  * The per-batch contract does not depend on that concurrency: within a
+  * batch the nested cascades land before the parent append; each batch
+  * succeeds or fails on its own, and a failed one is reported while the
+  * others land; the report lists batches in id order; and the planned
+  * frame is released only after every batch has finished.
   *
   * Idempotency is two-layer, matching the sink contract:
   *   - The gate skips items whose latest sink state is newer than their
@@ -140,56 +155,62 @@ object Backfill {
         .agg(count_if(col("__dump")).as("n"), count_if(!col("__dump")).as("skipped"))
         .collect()
         .map(r => (r.getAs[Long]("__batch"), r.getAs[Long]("n"), r.getAs[Long]("skipped")))
-      val batches = counts.collect { case (b, n, _) if n > 0 => b -> n }.sortBy(_._1)
+      val batches = counts.collect { case (b, n, _) if n > 0 => b -> n }.sortBy(_._1).toSeq
 
-      var submitted = 0L
-      var appended = 0L
-      var nestedAppended = 0L
-      val landed = Seq.newBuilder[Long]
-      val failed = Seq.newBuilder[Long]
-      val run = Seq.newBuilder[Long]
-
-      batches.foreach { case (batchId, n) =>
-        if (!limit.exists(submitted >= _)) {
-          run += batchId
-          val dumpId = s"$runId-b$batchId"
-          val batchRows = planned.filter(col("__dump") && col("__batch") === batchId)
-            .drop("__dump", "__batch")
-          Try {
-            // Nested sinks land FIRST: the eligibility gate reads only the
-            // PARENT sink's latest state, so the parent append must be the
-            // commit point it observes. If a nested append fails here the
-            // parent never lands, the gate still sees the batch as
-            // undumped, and a re-run retries it — nested rows that DID
-            // land are re-delivered under the same dump_id and dropped by
-            // the sink's dump-id check. (Parent-first would strand a
-            // nested failure forever: the gate would skip the batch.)
-            val nNested = nested.map { case (related, nsink) =>
-              nsink.appendIdempotent(spark,
-                Sinks.stamped(related(batchRows), dumpId, dumpTimeUs))
-            }.sum
-            val nParent = sink.appendIdempotent(spark,
-              Sinks.stamped(batchRows, dumpId, dumpTimeUs))
-            (nParent, nNested)
-          } match {
-            case Success((nParent, nNested)) =>
-              landed += batchId
-              appended += nParent
-              nestedAppended += nNested
-              submitted += n
-            case Failure(_) =>
-              // the reference tolerates a failing batch: report it, keep
-              // going; a re-run with the same runId retries ONLY this
-              // batch (its dump_id never reached the PARENT sink, so the
-              // gate re-selects it; any nested rows that landed before
-              // the failure are deduped by the dump-id check)
-              failed += batchId
-          }
-        }
+      // One batch: its cascades, then the parent append; the rows each
+      // appended.
+      def land(batchId: Long): (Long, Long) = {
+        val dumpId = s"$runId-b$batchId"
+        val batchRows = planned.filter(col("__dump") && col("__batch") === batchId)
+          .drop("__dump", "__batch")
+        // Nested sinks land FIRST: the eligibility gate reads only the
+        // PARENT sink's latest state, so the parent append must be the
+        // commit point it observes. If a nested append fails here the
+        // parent never lands, the gate still sees the batch as
+        // undumped, and a re-run retries it — nested rows that DID
+        // land are re-delivered under the same dump_id and dropped by
+        // the sink's dump-id check. (Parent-first would strand a
+        // nested failure forever: the gate would skip the batch.)
+        val nNested = nested.map { case (related, nsink) =>
+          nsink.appendIdempotent(spark,
+            Sinks.stamped(related(batchRows), dumpId, dumpTimeUs))
+        }.sum
+        val nParent = sink.appendIdempotent(spark,
+          Sinks.stamped(batchRows, dumpId, dumpTimeUs))
+        (nParent, nNested)
       }
 
-      BackfillReport(run.result(), landed.result(), failed.result(),
-        counts.map(_._2).sum, counts.map(_._3).sum, appended, nestedAppended)
+      // Each wave lands its batches concurrently. Without a limit one
+      // wave runs every batch; with one, a wave is the shortest prefix
+      // of the remaining batches whose counts reach the rest of the
+      // limit — exactly the batches a one-at-a-time loop would run
+      // before it could next stop, since a failed batch submits nothing.
+      @tailrec def waves(rest: Seq[(Long, Long)], submitted: Long,
+          done: Seq[(Long, Try[(Long, Long)])]): Seq[(Long, Try[(Long, Long)])] =
+        if (rest.isEmpty || limit.exists(submitted >= _)) done
+        else {
+          val size = limit.fold(rest.size) { l =>
+            val reach = rest.map(_._2).scanLeft(0L)(_ + _).indexWhere(_ >= l - submitted)
+            if (reach < 0) rest.size else reach
+          }
+          val (wave, later) = rest.splitAt(size)
+          val outcomes = DriverPool.attempt(spark)(wave.map { case (b, _) => () => land(b) })
+          waves(later,
+            submitted + wave.zip(outcomes).collect { case ((_, n), Success(_)) => n }.sum,
+            done ++ wave.map(_._1).zip(outcomes))
+        }
+
+      // the reference tolerates a failing batch: report it, keep going; a
+      // re-run with the same runId retries ONLY the failed batches (their
+      // dump_ids never reached the PARENT sink, so the gate re-selects
+      // them; nested rows that landed before a failure are deduped by the
+      // dump-id check)
+      val outcomes = waves(batches, 0L, Vector.empty)
+      val landed = outcomes.collect { case (b, Success(n)) => b -> n }
+      BackfillReport(outcomes.map(_._1), landed.map(_._1),
+        outcomes.collect { case (b, Failure(_)) => b },
+        counts.map(_._2).sum, counts.map(_._3).sum,
+        landed.map(_._2._1).sum, landed.map(_._2._2).sum)
     } finally Checkpoints.release(planned)
   }
 

@@ -113,7 +113,11 @@ trait SinkLog {
 
   /** Append `batch` (already stamped with `dump_id`), dropping every row
     * whose dump_id already reached the sink. Returns the number of rows
-    * actually appended.
+    * actually appended. Appends of disjoint dump_ids may be called
+    * concurrently ([[Backfill]] lands its batches so): [[ParquetSink]]
+    * stages each in its own directory and serializes only the dump-id
+    * check and the commit; [[ExternalSink]] serializes only the append
+    * that creates its table.
     */
   def appendIdempotent(spark: SparkSession, batch: DataFrame): Long
 
@@ -212,16 +216,14 @@ final case class ParquetSink(path: String) extends SinkLog {
   def appendIdempotent(spark: SparkSession, batch: DataFrame): Long = {
     val fs = fsOf(spark)
     recover(spark, fs, writer = true)
-    val txn = Commits.newTxn(root)
-    val fresh = new Path(txn.toString + "-fresh")
-    try {
+    Commits.staging(fs, root) { txn =>
       val (n, ids) = stage(batch, txn)
       Commits.failpoint(path, "staged")
       Commits.lockOf(fs, root).synchronized {
         val seen = ids.filter(id => fs.exists(Commits.marker(manifest, id)))
         if (n == 0 || (seen.nonEmpty && seen.size == ids.size)) 0L
         else if (seen.isEmpty) { Commits.commit(fs, root, txn, ids); n }
-        else {
+        else Commits.staging(fs, root) { fresh =>
           // a batch mixing committed and new dumps restages its new rows
           val (n2, ids2) = stage(spark.read.parquet(txn.toString)
             .filter(!coalesce(col("dump_id").isin(seen: _*), lit(false))), fresh)
@@ -229,7 +231,7 @@ final case class ParquetSink(path: String) extends SinkLog {
           n2
         }
       }
-    } finally Seq(txn, fresh).foreach(Commits.dropUnrecorded(fs, _))
+    }
   }
 
   /** Write `df` to `dir` — the append's one Spark job — observing its
@@ -252,7 +254,7 @@ final case class ParquetSink(path: String) extends SinkLog {
   private def recover(spark: SparkSession, fs: FileSystem, writer: Boolean): Unit =
     Commits.lockOf(fs, root).synchronized {
       repairSwap(fs, writer)
-      Commits.recover(fs, root)
+      Commits.recover(fs, root, writer)
       if (writer && fs.exists(root) && !fs.exists(manifest)) markHistory(spark, fs)
     }
 
@@ -311,8 +313,7 @@ final case class ParquetSink(path: String) extends SinkLog {
     recover(spark, fs, writer = true)
     val snapshot = Commits.dataFiles(fs, root)
     require(snapshot.nonEmpty, s"nothing to compact at $path")
-    val txn = Commits.newTxn(root)
-    try {
+    Commits.staging(fs, root) { txn =>
       latestOf(spark.read.option("mergeSchema", "true")
           .parquet(snapshot.map(f => new Path(root, f).toString): _*), keyCols)
         .write.parquet(txn.toString)
@@ -323,7 +324,7 @@ final case class ParquetSink(path: String) extends SinkLog {
             s"another compaction of $path committed first; the log is unchanged")
         Commits.commit(fs, root, txn, Nil, snapshot)
       }
-    } finally Commits.dropUnrecorded(fs, txn)
+    }
   }
 }
 
@@ -411,9 +412,21 @@ final case class ExternalSink(
   def log(spark: SparkSession): DataFrame =
     spark.read.jdbc(url, table, props)
 
-  def appendIdempotent(spark: SparkSession, batch: DataFrame): Long = {
+  /** Spark's JDBC append checks that the table exists and then creates
+    * it, so two first appends racing into a fresh table would both try
+    * to create it. An append that finds no table runs under a per-(url,
+    * table) lock of this JVM and checks again inside it; appends into an
+    * existing table run concurrently.
+    */
+  def appendIdempotent(spark: SparkSession, batch: DataFrame): Long =
+    if (exists(spark)) appendFresh(spark, batch, created = true)
+    else ExternalSink.creating.computeIfAbsent((url, table), _ => new Object).synchronized {
+      appendFresh(spark, batch, exists(spark))
+    }
+
+  private def appendFresh(spark: SparkSession, batch: DataFrame, created: Boolean): Long = {
     val fresh =
-      if (!exists(spark)) batch
+      if (!created) batch
       else batch.join(broadcast(seenDumpIds(spark)), Seq("dump_id"), "left_anti")
     // one pass: count and append without recomputing the anti-join;
     // the checkpoint is freed here, not at the scope's end, so a stream
@@ -445,6 +458,9 @@ final case class ExternalSink(
 }
 
 object ExternalSink {
+  /** One lock per (url, table) for the append that creates the table. */
+  private val creating = new java.util.concurrent.ConcurrentHashMap[(String, String), AnyRef]()
+
   /** SQLStates that mean "table/view does not exist" across the dialects
     * Spark's JDBC source ships: Derby 42X05, MySQL/SQL Server/ODBC 42S02,
     * Postgres 42P01, H2 42102/42S02, DB2 42704, legacy MySQL S0002.

@@ -60,7 +60,7 @@ class ArtifactContractSpec extends SparkSpec {
       "leaves the previous artifact and nothing staged") {
     val d = dir("commit")
     def save(a: Long, b: Long): Unit = Artifact.save(spark, d) { staged =>
-      Artifact.inParallel(
+      DriverPool.inParallel(spark)(
         () => spark.range(a).write.parquet(s"$staged/a"),
         () => spark.range(b).write.parquet(s"$staged/b"))
     }
@@ -82,7 +82,7 @@ class ArtifactContractSpec extends SparkSpec {
     save(4, 6)
     assert(counts == ((4L, 6L)), "a save over an artifact replaces its frames")
     val failed = intercept[IllegalStateException] {
-      Artifact.inParallel(() => (), () => throw new IllegalStateException("w"))
+      DriverPool.inParallel(spark)(() => (), () => throw new IllegalStateException("w"))
     }
     assert(failed.getMessage == "w", "a failed parallel write must surface")
   }

@@ -116,6 +116,48 @@ class SinkCommitSpec extends SparkSpec {
   private def noStaging(sink: ParquetSink): Boolean = !exists(sink.path + ".pending") ||
     Files.list(java.nio.file.Paths.get(sink.path + ".pending")).count() == 0
 
+  test("a writer's open drops a dead writer's staging, never a live append's") {
+    val sink = newSink()
+    assert(sink.appendIdempotent(spark, batch(d1, "d1", 1000L)) == 2)
+    // a writer that died after staging and before its record leaves its
+    // staged parquet under a txn no record names
+    val dead = s"${sink.path}.pending/${java.util.UUID.randomUUID()}"
+    Seq(dead, s"$dead-fresh").foreach(batch(Seq((9L, "dead")), "dead", 9000L).write.parquet(_))
+    val before = view(sink)
+    assert(before == d1.toMap, "unrecorded staging is invisible")
+    val pending = new java.io.File(sink.path + ".pending")
+
+    // an append held after staging, in another thread
+    val held = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    Commits.failpoint = (p, s) =>
+      if (p == sink.path && s == "staged" && Thread.currentThread.getName == "held-append") {
+        held.countDown()
+        release.await()
+      }
+    @volatile var heldResult: scala.util.Try[Long] = null
+    val t = new Thread(() =>
+      heldResult = scala.util.Try(sink.appendIdempotent(spark, batch(d2, "d2", 2000L))), "held-append")
+    try {
+      t.start()
+      assert(held.await(2, java.util.concurrent.TimeUnit.MINUTES), "the held append must stage")
+      val heldTxn = pending.list().toSet -- Set(dead, s"$dead-fresh").map(new java.io.File(_).getName)
+      assert(heldTxn.size == 1, s"pending: ${pending.list().toSeq}")
+      assert(sink.appendIdempotent(spark, batch(Seq((5L, "v3")), "d3", 3000L)) == 1)
+      assert(pending.list().toSet == heldTxn,
+        s"the dead staging goes, the held append's stays: ${pending.list().toSeq}")
+      assert(view(sink) == before + (5L -> "v3"))
+    } finally {
+      release.countDown()
+      t.join()
+      Commits.failpoint = (_, _) => ()
+    }
+    assert(heldResult.get == 3L, "the held append lands")
+    assert(noStaging(sink))
+    assert(view(sink) == before ++ d2.toMap + (5L -> "v3"))
+    assert(sink.log(spark).count() == 6)
+  }
+
   /** The latest-state view of the part files as they lie on disk, read
     * around the log's open-time repair.
     */

@@ -497,17 +497,16 @@ class SourcesSpec extends SparkSpec {
     // a nested sink with one transient outage: the first append attempt
     // throws, every later one delegates to a real parquet log
     val flaky = new SinkLog {
-      var failuresLeft = 1
+      // batches land concurrently: exactly one append may fail
+      val failuresLeft = new java.util.concurrent.atomic.AtomicInteger(1)
       protected def exists(s: SparkSession): Boolean =
         flakyInner.initialized(s)
       protected def append(df: DataFrame): Unit =
         throw new IllegalStateException("unreachable: appendIdempotent overridden")
       def log(s: SparkSession): DataFrame = flakyInner.log(s)
       override def appendIdempotent(s: SparkSession, b: DataFrame): Long = {
-        if (failuresLeft > 0) {
-          failuresLeft -= 1
+        if (failuresLeft.getAndDecrement() > 0)
           throw new RuntimeException("transient nested sink outage")
-        }
         flakyInner.appendIdempotent(s, b)
       }
     }
@@ -519,7 +518,7 @@ class SourcesSpec extends SparkSpec {
     val nested: Seq[(DataFrame => DataFrame, SinkLog)] =
       Seq(related -> (goodNested: SinkLog), related -> (flaky: SinkLog))
 
-    // run 1: batch 0 (pks 1-4 share __batch 0 with batchSize 5) hits the
+    // run 1: one batch (batchSize 5 cuts pks 1-4, 5-9 and 10) hits the
     // outage AFTER goodNested landed but BEFORE the parent append — the
     // parent sink must stay untouched for that batch (it is the commit
     // point the eligibility gate reads)
