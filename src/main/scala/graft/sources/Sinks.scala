@@ -419,14 +419,14 @@ final case class ExternalSink(
     * existing table run concurrently.
     */
   def appendIdempotent(spark: SparkSession, batch: DataFrame): Long =
-    if (exists(spark)) appendFresh(spark, batch, created = true)
+    if (exists(spark)) appendNew(spark, batch, tableExists = true)
     else ExternalSink.creating.computeIfAbsent((url, table), _ => new Object).synchronized {
-      appendFresh(spark, batch, exists(spark))
+      appendNew(spark, batch, exists(spark))
     }
 
-  private def appendFresh(spark: SparkSession, batch: DataFrame, created: Boolean): Long = {
+  private def appendNew(spark: SparkSession, batch: DataFrame, tableExists: Boolean): Long = {
     val fresh =
-      if (!created) batch
+      if (!tableExists) batch
       else batch.join(broadcast(seenDumpIds(spark)), Seq("dump_id"), "left_anti")
     // one pass: count and append without recomputing the anti-join;
     // the checkpoint is freed here, not at the scope's end, so a stream
